@@ -1,7 +1,7 @@
 package graft.log
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Entry, Record, SegmentStatus}
@@ -24,9 +24,9 @@ import graft.operators.EventOps
   * Single-writer-per-SEGMENT is assumed (same as the reference, where
   * the segment leader serializes writes — sequence validation enforces
   * it); concurrent producers to DIFFERENT spaces/segments of one log
-  * are safe: every append stages under a per-call directory and
-  * renames in, so no two jobs ever share committer staging (see
-  * [[appendEntries]]).
+  * are safe: every append goes through the staged publish of
+  * [[LogFs]] under a per-call directory, so no two jobs ever share
+  * committer staging.
   */
 final class EventLog(
     val spark: SparkSession,
@@ -120,31 +120,11 @@ final class EventLog(
       chunkSize: Int,
       lastSeq: Long,
       lastTrx: Long): Seq[SegmentStatus] = {
-    val stats = records
-      .agg(
-        count(lit(1)).as("n"),
-        min("sequence").as("lo"),
-        max("sequence").as("hi"),
-        count_distinct(col("sequence")).as("nd"))
-      .head()
-    val n = stats.getLong(0)
-    if (n == 0) return Seq.empty // before getLong on lo/hi: both null here
-    val (lo, hi, nd) = (stats.getLong(1), stats.getLong(2), stats.getLong(3))
-    require(
-      lo == lastSeq + 1 && hi == lastSeq + n && nd == n,
-      s"sequence mismatch: expected contiguous [${lastSeq + 1}, ${lastSeq + n}], " +
-        s"got [$lo, $hi] with $nd distinct of $n")
-
-    val entries = records
-      .select(
-        lit(space).as("space"),
-        lit(segment).as("segment"),
-        col("sequence"),
-        lit(timestampUs).as("timestamp"),
-        expr(s"CAST($lastTrx + 1 + (sequence - $lo) DIV $chunkSize AS BIGINT)")
-          .as("trxNumber"),
-        col("payload"),
-        col("metadata"))
+    val entries = stampValidated(space, segment, records, timestampUs, lastSeq)(lo =>
+      expr(s"CAST($lastTrx + 1 + (sequence - $lo) DIV $chunkSize AS BIGINT)")) match {
+      case Some((_, _, e)) => e
+      case None            => return Seq.empty
+    }
     appendEntries(entries)
 
     // From here the data IS durably appended: if ANYTHING below fails
@@ -203,18 +183,49 @@ final class EventLog(
     statuses
   }
 
-  /** Collision-safe multi-file append: entries are written to a
-    * per-call staging directory — so the Hadoop committer's
-    * `_temporary` tree is private to this call — then each part file
-    * is renamed into its live space partition under a call-unique
-    * prefix. Two producers appending CONCURRENTLY (other threads or
-    * other processes) therefore never clobber each other's committer
-    * staging, which is exactly how a shared-output-dir
-    * `SaveMode.Append` loses files (both jobs write+clean the same
-    * `<dataDir>/_temporary`). Visibility is per-file rename, identical
-    * to the direct append (a produce is not transactional across part
-    * files; the sequence validation + peek-cache guards already handle
-    * that window). A hard crash can leave an inert staging dir under
+  /** The produce checks shared with [[TxnLog.write]]: one aggregate
+    * (count/min/max/distinct — distributed, not a per-record loop)
+    * proves `records` continue `lastSeq` contiguously, then the rows are
+    * stamped as entries of `space`/`segment` at `timestampUs`, with the
+    * trxNumber column `trx` builds from the batch's first sequence.
+    * Returns `(lo, hi, entries)`, or None for an empty batch. */
+  private[log] def stampValidated(
+      space: String,
+      segment: String,
+      records: Dataset[Record],
+      timestampUs: Long,
+      lastSeq: Long)(trx: Long => Column): Option[(Long, Long, DataFrame)] = {
+    val stats = records
+      .agg(
+        count(lit(1)).as("n"),
+        min("sequence").as("lo"),
+        max("sequence").as("hi"),
+        count_distinct(col("sequence")).as("nd"))
+      .head()
+    val n = stats.getLong(0)
+    if (n == 0) return None // before getLong on lo/hi: both null here
+    val (lo, hi, nd) = (stats.getLong(1), stats.getLong(2), stats.getLong(3))
+    require(
+      lo == lastSeq + 1 && hi == lastSeq + n && nd == n,
+      s"sequence mismatch: expected contiguous [${lastSeq + 1}, ${lastSeq + n}], " +
+        s"got [$lo, $hi] with $nd distinct of $n")
+    val entries = records.select(
+      lit(space).as("space"),
+      lit(segment).as("segment"),
+      col("sequence"),
+      lit(timestampUs).as("timestamp"),
+      trx(lo).as("trxNumber"),
+      col("payload"),
+      col("metadata"))
+    Some((lo, hi, entries))
+  }
+
+  /** Multi-file append through the staged publish of [[LogFs]], under a
+    * call-unique `<token>-` prefix. Staging per call is what makes
+    * producers to different segments safe to run concurrently (other
+    * threads or other processes). A produce is not transactional across
+    * part files; the sequence validation + peek-cache guards handle
+    * that window. A hard crash can leave an inert staging dir under
     * `produce-staging/` — swept here, age-gated so an in-flight
     * concurrent produce is never touched. */
   private def appendEntries(entries: DataFrame): Unit = {
@@ -222,16 +233,7 @@ final class EventLog(
     val stagingRoot = s"$path/produce-staging"
     val staging = s"$stagingRoot/$token"
     entries.write.mode(SaveMode.Overwrite).partitionBy("space").parquet(staging)
-    val stagingQ = hfs.makeQualified(new HPath(staging)).toString
-    try
-      LogFs.walkParquet(hfs, staging).foreach { p =>
-        val rel = new HPath(p.toString.stripPrefix(stagingQ).stripPrefix("/"))
-        val destDir = Option(rel.getParent)
-          .filterNot(_.toString.isEmpty)
-          .map(par => s"$dataDir/$par")
-          .getOrElse(dataDir)
-        LogFs.move(hfs, p, new HPath(destDir, s"$token-${rel.getName}"))
-      }
+    try LogFs.publish(hfs, staging, dataDir, s"$token-")
     finally {
       LogFs.deleteRecursive(hfs, staging)
       // age-gated sweep of staging dirs a crashed producer left behind.

@@ -2,49 +2,39 @@ package graft.log
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Dataset, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 
 import graft.model.{Record, SegmentStatus}
 
 /** Two-phase write staging on top of [[EventLog]] — the reference's
   * Write / Commit / Rollback protocol (reference: pebble/service.go:
-  * 414-530) mapped onto directory-staged parquet:
+  * 414-530) mapped onto the staged publish of [[LogFs]]:
   *
   *  - `write` stages a validated batch under `path/staged/<trxId>/`
   *    (invisible to readers — `EventLog.load` only reads `path/data`)
   *    and rejects a trxId that is already staged (the reference's
   *    checkExistingTransaction),
-  *  - `commit` publishes the staged files into the data dir by renames
-  *    (no rewrite). Each rename is atomic, but the batch as a whole is
-  *    not: a reader between renames can see a prefix of the
-  *    transaction, and a crash leaves one — re-calling `commit` with
-  *    the same trxId resumes where it stopped (target names are
-  *    deterministic), so the publish is idempotent and recoverable.
-  *    The reference applies the whole batch atomically inside Pebble;
-  *    matching that on a filesystem log would need an fs/object store
-  *    with multi-file atomic commit or a manifest-based reader.
+  *  - `commit` publishes the staged files into the data dir under the
+  *    `trx-<id>.` prefix ([[LogFs.publish]]): re-calling `commit` with
+  *    the same trxId after a crash resumes the publish. The reference
+  *    applies the whole batch atomically inside Pebble; matching that on
+  *    a filesystem log would need an fs/object store with multi-file
+  *    atomic commit or a manifest-based reader.
   *  - `rollback` deletes the staged directory — mirrors the reference
-  *    deleting the staged transaction key.
+  *    deleting the staged transaction key; `abort` also deletes the
+  *    files a half-finished commit published, found by their prefix.
   *
-  * On a real cluster the same protocol runs against an object store with
-  * a manifest commit (the staged-dir rename becomes a manifest swap);
-  * single-writer-per-segment is assumed, as in the reference.
+  * Single-writer-per-segment is assumed, as in the reference.
   */
 final class TxnLog(val log: EventLog) {
-  private val spark = log.spark
   private val hfs = log.hfs
   private val stagedRoot = s"${log.path}/staged"
   private val dataDir = s"${log.path}/data"
 
-  /** trxIds are restricted to [A-Za-z0-9_-]: they appear in file names
-    * delimited by '.', so excluding '.' makes the `trx-<id>.` prefix
-    * unambiguous — abort("job1") can never match files of "job1-retry"
-    * or of any other id. */
-  private def validateTrxId(trxId: String): Unit =
-    require(
-      trxId.nonEmpty && trxId.forall(c =>
-        c.isLetterOrDigit || c == '_' || c == '-'),
-      s"invalid trxId (allowed: letters, digits, _, -): $trxId")
+  /** trxIds go into the `trx-<id>.` prefix: the '.' delimiter, which
+    * [[LogFs.requireId]] keeps out of ids, makes it unambiguous —
+    * abort("job1") can never match files of "job1-retry". */
+  private def validateTrxId(trxId: String): Unit = LogFs.requireId("trxId", trxId)
 
   /** Whether `trxId` currently has a staged directory. */
   def isStaged(trxId: String): Boolean = {
@@ -63,36 +53,16 @@ final class TxnLog(val log: EventLog) {
       trxNumber: Long): Unit = {
     require(!isStaged(trxId), s"transaction already staged: $trxId")
     val last = log.peek(space, segment)
-    val lastSeq = last.map(_.sequence).getOrElse(0L)
     val lastTrx = last.map(_.trxNumber).getOrElse(0L)
     require(
       trxNumber == lastTrx + 1,
       s"transaction number mismatch: expected ${lastTrx + 1}, got $trxNumber")
-    val stats = records
-      .agg(
-        count(lit(1)).as("n"),
-        min("sequence").as("lo"),
-        max("sequence").as("hi"),
-        count_distinct(col("sequence")).as("nd"))
-      .head()
-    val n = stats.getLong(0)
-    // before reading lo/hi: min/max over zero rows are null, and the
-    // designed diagnostic beats a NullPointerException
-    require(n > 0, s"empty batch staging trx $trxId")
-    val (lo, hi, nd) = (stats.getLong(1), stats.getLong(2), stats.getLong(3))
-    require(
-      lo == lastSeq + 1 && hi == lastSeq + n && nd == n,
-      s"sequence mismatch staging trx $trxId")
-    records
-      .select(
-        lit(space).as("space"),
-        lit(segment).as("segment"),
-        col("sequence"),
-        lit(timestampUs).as("timestamp"),
-        lit(trxNumber).as("trxNumber"),
-        col("payload"),
-        col("metadata"))
-      .write
+    val stamped = log.stampValidated(
+      space, segment, records, timestampUs, last.map(_.sequence).getOrElse(0L))(
+      _ => lit(trxNumber))
+    require(stamped.nonEmpty, s"empty batch staging trx $trxId")
+    val (lo, hi, entries) = stamped.get
+    entries.write
       .mode(SaveMode.Overwrite)
       .partitionBy("space")
       .parquet(s"$stagedRoot/$trxId")
@@ -134,17 +104,12 @@ final class TxnLog(val log: EventLog) {
       }
   }
 
-  /** Publish a staged transaction: move its parquet files under the data
-    * dir. Each move is atomic (readers only ever see complete files) and
-    * target names are deterministic, so an interrupted commit is resumed
-    * by calling commit(trxId) again — already-moved files are skipped,
-    * the rest move, and the staged dir is dropped last. See the class
-    * doc for the visibility caveat during the move window. */
+  /** Publish a staged transaction into the data dir (see the class doc);
+    * an interrupted commit is resumed by calling commit(trxId) again. */
   def commit(trxId: String): Unit = {
     validateTrxId(trxId)
     val stagedDir = s"$stagedRoot/$trxId"
     require(LogFs.exists(hfs, stagedDir), s"transaction not found: $trxId")
-    val stagedBase = new HPath(stagedDir)
     // read the ack sidecar BEFORE the move (the staged dir is deleted on
     // success) — pushed to the bus only after the publish completes
     val ack = stagedStatus(trxId)
@@ -153,16 +118,7 @@ final class TxnLog(val log: EventLog) {
     // position would let a later produce validate against a stale
     // high-water mark
     try {
-      LogFs.walkParquet(hfs, stagedDir).foreach { p =>
-        // parent dir relative to the staged root = the partition subpath
-        val rel = p.getParent.toString.stripPrefix(
-          hfs.makeQualified(stagedBase).toString).stripPrefix("/")
-        val dest = new HPath(
-          if (rel.isEmpty) dataDir else s"$dataDir/$rel",
-          s"trx-$trxId.${p.getName}")
-        if (hfs.exists(dest)) LogFs.deleteFile(hfs, p) // resumed: already published
-        else LogFs.move(hfs, p, dest)
-      }
+      LogFs.publish(hfs, stagedDir, dataDir, s"trx-$trxId.")
       LogFs.deleteRecursive(hfs, stagedDir)
     } finally log.invalidateCache()
     // after the cache drop: a subscriber peeking from its callback

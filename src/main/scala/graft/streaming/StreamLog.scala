@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.log.EventLog
+import graft.log.{EventLog, LogFs}
 
 /** Streaming-side of the engine: the reference's live produce/subscribe
   * surface (reference: client.go:188-206, consumer_context.go) mapped
@@ -1180,14 +1180,14 @@ object StreamLog {
     *     rows append to `archive/shingles` / `archive/bands` — so the
     *     NEXT batch probes an archive that already knows this one.
     *
-    * Exactly-once: the three appends follow the [[appendSink]] staged
-    * publish (stage under `_neardup_staging/<sinkId>-batch-<id>/`, move
-    * files under deterministic prefixed names, touch the
-    * `_neardup_commits/` marker last; replay sweeps by prefix and
-    * republishes), and near-dup DECISIONS are deterministic given the
-    * archive state, so a replayed batch reproduces its own decisions
-    * exactly. `sinkId` namespaces the idempotence state — the
-    * (sinkId, checkpoint) reuse contract is [[appendSink]]'s.
+    * Exactly-once: the three tiers go through the staged publish of
+    * [[graft.log.LogFs.exactlyOnce]] (staging under `_neardup_staging/`,
+    * markers in `_neardup_commits/`). A replay re-runs the near-dup
+    * decisions after the sweep has removed the batch's own rows, and
+    * the decisions are deterministic given the archive state, so a
+    * replayed batch reproduces them exactly. `sinkId` namespaces the
+    * idempotence state — the (sinkId, checkpoint) reuse contract is
+    * [[appendSink]]'s.
     *
     * Archive layout: `docs/` `(doc_id, event_time, clean_text, score)`,
     * `shingles/` `(doc_id, s)`, `bands/` `(doc_id, band_id,
@@ -1207,79 +1207,53 @@ object StreamLog {
       numHashes: Int = 16,
       bands: Int = 8,
       threshold: Double = 0.8): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(
-      sinkId.nonEmpty && sinkId.forall(c =>
-        c.isLetterOrDigit || c == '_' || c == '-'),
-      s"sinkId must be [A-Za-z0-9_-]+: '$sinkId'")
+    LogFs.requireId("sinkId", sinkId)
     import graft.dedup.Dedup
     prepareStream(docs, watermark).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.log.LogFs
-        import org.apache.hadoop.fs.{Path => HPath}
         val session = batch.sparkSession
-        val conf = session.sessionState.newHadoopConf()
-        val fs = new HPath(archive).getFileSystem(conf)
-        val marker = s"$archive/_neardup_commits/$sinkId-batch-$batchId.done"
-        val staging = s"$archive/_neardup_staging/$sinkId-batch-$batchId"
-        val prefix = s"$sinkId-batch-$batchId-"
-        val tiers = Seq("docs", "shingles", "bands")
-        if (LogFs.exists(fs, marker)) {
-          LogFs.deleteRecursive(fs, staging) // committed replay: sweep
-        } else if (!batch.isEmpty) {
-          // half-published previous attempt: sweep this batch's
-          // prefixed files from the live tiers (gated on staging
-          // existence — the common path costs one exists())
-          if (LogFs.exists(fs, staging))
-            for (tier <- tiers if LogFs.exists(fs, s"$archive/$tier"))
-              fs.listStatus(new HPath(s"$archive/$tier"))
-                .filter(_.getPath.getName.startsWith(prefix))
-                .foreach(st => LogFs.deleteFile(fs, st.getPath))
+        val fs = LogFs.fs(session, archive)
+        if (!batch.isEmpty)
+          LogFs.exactlyOnce(
+            fs, archive, s"$archive/_neardup_commits", s"$archive/_neardup_staging",
+            sinkId, batchId) { staging =>
+            // 1. batch-internal near-dup keep-one (batch-sized work)
+            val clusters = Dedup.duplicateClusters(
+              Dedup.minhashLsh(
+                batch, "doc_id", "clean_text", k, numHashes, bands, threshold))
+            val internal = Dedup.keepCanonical(batch, clusters)
 
-          // 1. batch-internal near-dup keep-one (batch-sized work)
-          val clusters = Dedup.duplicateClusters(
-            Dedup.minhashLsh(
-              batch, "doc_id", "clean_text", k, numHashes, bands, threshold))
-          val internal = Dedup.keepCanonical(batch, clusters)
+            // 2. survivors vs the archive: batch bands broadcast against
+            // the persisted corpus band table (row-64 contract); a replay
+            // of the first batch can find the band dir swept empty
+            val shSurv = graft.operators.Materialize.cut(
+              Dedup.shingled(internal, "doc_id", "clean_text", k))
+            val kept =
+              if (LogFs.listParquet(fs, s"$archive/bands").nonEmpty) {
+                val dupIds = Dedup
+                  .minhashLshAgainstTables(
+                    shSurv,
+                    session.read.parquet(s"$archive/bands"),
+                    session.read.parquet(s"$archive/shingles"),
+                    "doc_id", numHashes, bands, threshold)
+                  .select(col("new_id").as("doc_id"))
+                  .distinct()
+                internal.join(dupIds, Seq("doc_id"), "left_anti")
+              } else internal
 
-          // 2. survivors vs the archive: batch bands broadcast against
-          // the persisted corpus band table (row-64 contract)
-          val shSurv = graft.operators.Materialize.cut(
-            Dedup.shingled(internal, "doc_id", "clean_text", k))
-          val kept =
-            if (LogFs.exists(fs, s"$archive/bands")) {
-              val dupIds = Dedup
-                .minhashLshAgainstTables(
-                  shSurv,
-                  session.read.parquet(s"$archive/bands"),
-                  session.read.parquet(s"$archive/shingles"),
-                  "doc_id", numHashes, bands, threshold)
-                .select(col("new_id").as("doc_id"))
-                .distinct()
-              internal.join(dupIds, Seq("doc_id"), "left_anti")
-            } else internal
-
-          // 3. staged publish of docs + their shingle/band rows
-          val keptCut = graft.operators.Materialize.cut(kept)
-          val shKept = graft.operators.Materialize.cut(
-            shSurv.join(keptCut.select("doc_id"), Seq("doc_id"), "left_semi"))
-          keptCut.write.mode("overwrite").parquet(s"$staging/docs")
-          shKept.write.mode("overwrite").parquet(s"$staging/shingles")
-          Dedup
-            .bandTable(shKept, "doc_id", numHashes, bands)
-            .write.mode("overwrite").parquet(s"$staging/bands")
-          val stagedBase = fs.makeQualified(new HPath(staging)).toString
-          LogFs.walkParquet(fs, staging).foreach { p =>
-            val rel =
-              p.getParent.toString.stripPrefix(stagedBase).stripPrefix("/")
-            LogFs.move(
-              fs, p, new HPath(s"$archive/$rel", s"$prefix${p.getName}"))
+            // 3. stage docs + their shingle/band rows
+            val keptCut = graft.operators.Materialize.cut(kept)
+            val shKept = graft.operators.Materialize.cut(
+              shSurv.join(keptCut.select("doc_id"), Seq("doc_id"), "left_semi"))
+            keptCut.write.mode("overwrite").parquet(s"$staging/docs")
+            shKept.write.mode("overwrite").parquet(s"$staging/shingles")
+            Dedup
+              .bandTable(shKept, "doc_id", numHashes, bands)
+              .write.mode("overwrite").parquet(s"$staging/bands")
           }
-          LogFs.touch(fs, marker)
-          LogFs.deleteRecursive(fs, staging)
-          ()
-        }
+        ()
       }
       .start()
   }
@@ -1312,15 +1286,13 @@ object StreamLog {
     * [[EventLog]]). Returns a started query writing to `log.path/data`.
     *
     * foreachBatch is at-least-once — after a failure Structured
-    * Streaming replays the last micro-batch — so the write is made
-    * idempotent on `batchId`: each batch is staged, published under
-    * deterministic `<sinkId>-batch-<id>-` file names, and sealed with a
-    * marker in `log.path/stream-commits/`. A replayed batch whose marker
-    * exists is skipped outright; a replay of a half-published batch
-    * first deletes that batch's partial files (recognizable by prefix)
-    * and publishes cleanly. Net effect: each micro-batch lands in the
-    * log exactly once, preserving the per-segment contiguous-sequence
-    * invariant produce/peek rely on.
+    * Streaming replays the last micro-batch — so the write goes through
+    * the exactly-once staged publish of [[graft.log.LogFs.exactlyOnce]]
+    * (staging under `log.path/stream-staging/`, markers in
+    * `log.path/stream-commits/`): each micro-batch lands in the log
+    * exactly once, preserving the per-segment contiguous-sequence
+    * invariant produce/peek rely on. The log's peek cache is dropped
+    * around the publish, which bypasses `EventLog.produce`.
     *
     * `sinkId` namespaces the idempotence state: batchIds restart at 0
     * for every new checkpoint, so WITHOUT a distinct sinkId a second
@@ -1333,74 +1305,22 @@ object StreamLog {
       log: EventLog,
       checkpoint: String,
       sinkId: String = "sink0"): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(
-      sinkId.nonEmpty && sinkId.forall(c =>
-        c.isLetterOrDigit || c == '_' || c == '-'),
-      s"sinkId must be [A-Za-z0-9_-]+: '$sinkId'")
+    LogFs.requireId("sinkId", sinkId)
     entries.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.log.LogFs
-        import org.apache.hadoop.fs.{Path => HPath}
-        val hfs = log.hfs
-        val dataDir = s"${log.path}/data"
-        val marker = s"${log.path}/stream-commits/$sinkId-batch-$batchId.done"
-        val staging = s"${log.path}/stream-staging/$sinkId-batch-$batchId"
-        if (LogFs.exists(hfs, marker)) {
-          // replayed committed batch: nothing to publish — but a crash
-          // between marker-touch and staging-cleanup leaves the staging
-          // dir behind, so sweep it here or it leaks forever
-          LogFs.deleteRecursive(hfs, staging)
-        } else {
-          // A failed previous attempt can only have left partial files
-          // if it got past the staging write — in which case its staging
-          // dir still exists (it is deleted only after the marker). Gate
-          // the full data-dir sweep on that, so the common path costs
-          // one exists() instead of an O(log-size) recursive listing
-          // per micro-batch.
-          if (LogFs.exists(hfs, staging) && LogFs.exists(hfs, dataDir))
-            LogFs
-              .walkParquet(hfs, dataDir)
-              .filter(_.getName.startsWith(s"$sinkId-batch-$batchId-"))
-              .foreach(p => LogFs.deleteFile(hfs, p))
+        LogFs.exactlyOnce(
+          log.hfs, s"${log.path}/data", s"${log.path}/stream-commits",
+          s"${log.path}/stream-staging", sinkId, batchId) { staging =>
           // invalidate BEFORE publishing, not only after: a crash
           // mid-publish leaves visible files, and a cache entry from
           // before this batch would under-report the high-water mark
           log.invalidateCache()
-          batch.write
-            .mode("overwrite")
-            .partitionBy("space")
-            .parquet(staging)
-          val stagedBase = hfs.makeQualified(new HPath(staging)).toString
-          LogFs.walkParquet(hfs, staging).foreach { p =>
-            val rel =
-              p.getParent.toString.stripPrefix(stagedBase).stripPrefix("/")
-            val target = if (rel.isEmpty) dataDir else s"$dataDir/$rel"
-            LogFs.move(
-              hfs, p, new HPath(target, s"$sinkId-batch-$batchId-${p.getName}"))
-          }
-          LogFs.touch(hfs, marker)
-          LogFs.deleteRecursive(hfs, staging)
-          // published outside EventLog.produce → its peek cache is stale
-          log.invalidateCache()
-          // marker GC (own sinkId only): replay only ever concerns
-          // batches the streaming checkpoint has not committed past,
-          // which trails by at most one — a deep horizon keeps the dir
-          // bounded without racing it
-          val horizon = batchId - 128
-          if (horizon >= 0 && LogFs.exists(hfs, s"${log.path}/stream-commits")) {
-            val Done = (raw"\Q$sinkId\E-batch-(\d+)\.done").r
-            hfs
-              .listStatus(new HPath(s"${log.path}/stream-commits"))
-              .foreach(st =>
-                st.getPath.getName match {
-                  case Done(id) if id.toLong < horizon =>
-                    LogFs.deleteFile(hfs, st.getPath)
-                  case _ => ()
-                })
-          }
+          batch.write.mode("overwrite").partitionBy("space").parquet(staging)
         }
+        // published outside EventLog.produce → its peek cache is stale
+        log.invalidateCache()
       }
       .start()
   }
@@ -1413,32 +1333,17 @@ object StreamLog {
     * Structured Streaming sink (the recommender shape: embeddings
     * stream in, probes never retrain, skew never accumulates).
     *
-    * EXACTLY-ONCE, the [[appendSink]] protocol applied to both index
-    * tiers: the batch is STAGED under
-    * `_ingest_staging/<sinkId>-batch-<id>/{lists,codes}`
-    * ([[graft.similarity.Ann.ivfPqStage]]), every staged file is
-    * published into its live partition by rename under a deterministic
-    * `<sinkId>-batch-<id>-` prefix, and only then is the commit marker
-    * touched. A replayed committed batch is a no-op; a replay of a
-    * half-published batch first sweeps exactly this batch's prefixed
-    * files from the partitions the staged `cent_id=` dirs name (no
-    * index-wide listing), re-stages, and republishes — so each vector
-    * lands in each tier exactly once through any crash window, closing
-    * the append-then-marker duplicate gap the previous at-least-once
-    * contract documented. Maintenance runs AFTER the commit point
-    * (crash between marker and maintenance just defers the rebalance
-    * to the next batch's fence check;
+    * Exactly-once: both index tiers go through the staged publish of
+    * [[graft.log.LogFs.exactlyOnce]] (staging under `_ingest_staging/`
+    * by [[graft.similarity.Ann.ivfPqStage]], markers in
+    * `_ingest_commits/`), so each vector lands in each tier exactly
+    * once through any crash window. Maintenance runs AFTER the commit
+    * point (a crash between marker and maintenance just defers the
+    * rebalance to the next batch's fence check;
     * [[graft.similarity.Ann.ivfRecover]] keeps the index consistent
-    * through any maintenance crash).
-    *
-    * `sinkId` namespaces markers and staging exactly like
-    * [[appendSink]]'s: Structured Streaming batchIds restart at 0 for
-    * every NEW checkpoint, so a fresh checkpoint (or a second pipeline
-    * pointed at the same index) without its own sinkId would read the
-    * old pipeline's `batch-N.done` markers and silently drop its first
-    * N batches. Contract: a restart of the same logical pipeline
-    * reuses the same (sinkId, checkpoint) pair; a NEW pipeline gets a
-    * new sinkId.
+    * through any maintenance crash). `sinkId` namespaces markers and
+    * staging — the (sinkId, checkpoint) reuse contract is
+    * [[appendSink]]'s.
     *
     * Codebook drift is the operator's axis: sample batches through
     * [[graft.similarity.Ann.ivfPqStaleness]] and retrain past
@@ -1454,97 +1359,34 @@ object StreamLog {
       iters: Int = 2,
       dim: Int = 64,
       maxRounds: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(
-      sinkId.nonEmpty && sinkId.forall(c =>
-        c.isLetterOrDigit || c == '_' || c == '-'),
-      s"sinkId must be [A-Za-z0-9_-]+: '$sinkId'")
+    LogFs.requireId("sinkId", sinkId)
+    import graft.similarity.Ann
     vectors.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.log.LogFs
-        import org.apache.hadoop.fs.{Path => HPath}
         val session = batch.sparkSession
-        val conf = session.sessionState.newHadoopConf()
-        val fs = new HPath(path).getFileSystem(conf)
-        val marker = s"$path/_ingest_commits/$sinkId-batch-$batchId.done"
-        val staging = s"$path/_ingest_staging/$sinkId-batch-$batchId"
-        val prefix = s"$sinkId-batch-$batchId-"
-        if (LogFs.exists(fs, marker)) {
-          // committed replay: nothing to publish — but a crash between
-          // marker-touch and staging-cleanup leaves the staging dir
-          // behind, so sweep it here (the appendSink rule)
-          LogFs.deleteRecursive(fs, staging)
-        } else if (!batch.isEmpty) {
-          // A failed attempt can only have published files if it got
-          // past the staging write — in which case its staging dir
-          // still exists, and its cent_id= subdirs name EXACTLY the
-          // live partitions that may hold this batch's files (bounded
-          // sweep, no index-wide listing).
-          if (LogFs.exists(fs, staging))
-            for (tier <- Seq("lists", "codes")) {
-              val tdir = new HPath(s"$staging/$tier")
-              if (fs.exists(tdir))
-                fs.listStatus(tdir)
-                  .filter(_.isDirectory)
-                  .map(_.getPath.getName)
-                  .filter(_.startsWith("cent_id="))
-                  .foreach { cell =>
-                    val live = new HPath(s"$path/$tier/$cell")
-                    if (fs.exists(live))
-                      fs.listStatus(live)
-                        .filter(_.getPath.getName.startsWith(prefix))
-                        .foreach(st => LogFs.deleteFile(fs, st.getPath))
-                  }
-            }
-          graft.similarity.Ann.ivfPqStage(
-            session,
-            graft.similarity.Ann.withNorm(batch, "c_v", "c_nrm"),
-            path, staging)
-          // publish: move every staged file into its live partition
-          // under the deterministic prefixed name
-          val stagedBase = fs.makeQualified(new HPath(staging)).toString
-          LogFs.walkParquet(fs, staging).foreach { p =>
-            val rel =
-              p.getParent.toString.stripPrefix(stagedBase).stripPrefix("/")
-            LogFs.move(fs, p, new HPath(s"$path/$rel", s"$prefix${p.getName}"))
+        val fs = LogFs.fs(session, path)
+        val committed = !batch.isEmpty &&
+          LogFs.exactlyOnce(
+            fs, path, s"$path/_ingest_commits", s"$path/_ingest_staging",
+            sinkId, batchId) { staging =>
+            Ann.ivfPqStage(session, Ann.withNorm(batch, "c_v", "c_nrm"), path, staging)
           }
-          LogFs.touch(fs, marker)
-          LogFs.deleteRecursive(fs, staging)
-          // maintenance after the commit point — the self-balancing loop
-          var rounds = 0
-          while (rounds < maxRounds &&
-            graft.similarity.Ann.ivfImbalance(session, path) > fence &&
-            graft.similarity.Ann
-              .ivfPqMaintain(session, path, fence, splitInto, iters, dim))
-            rounds += 1
-          // bounded metadata: a restart can only replay batches at/after
-          // the checkpoint's last uncommitted offset, so markers far in
-          // the past are dead weight — keep a generous window instead of
-          // one file per batch forever (millions at 100 TB ingest
-          // rates). Own sinkId only; unparseable names are skipped, not
-          // thrown on (one stray file must never fail the query).
-          val gcPrefix = s"$sinkId-batch-"
-          if (batchId >= IngestMarkerKeep &&
-            LogFs.exists(fs, s"$path/_ingest_commits"))
-            fs.listStatus(new HPath(s"$path/_ingest_commits")).foreach { st =>
-              val n = st.getPath.getName
-              if (n.startsWith(gcPrefix) && n.endsWith(".done"))
-                n.stripPrefix(gcPrefix).stripSuffix(".done").toLongOption match {
-                  case Some(id) if id < batchId - IngestMarkerKeep =>
-                    LogFs.deleteFile(fs, st.getPath)
-                  case _ => ()
-                }
-            }
-          ()
-        }
+        // maintenance after the commit point — the self-balancing loop
+        var rounds = 0
+        while (committed && rounds < maxRounds &&
+          Ann.ivfImbalance(session, path) > fence &&
+          Ann.ivfPqMaintain(session, path, fence, splitInto, iters, dim))
+          rounds += 1
       }
       .start()
   }
 
-  /** Commit markers retained behind the latest batch by [[ivfPqIngest]]
-    * — far more than any restart can replay (replay reaches back only
-    * to the checkpoint's last uncommitted batch), small enough that the
-    * marker listing stays a trivial metadata op forever. */
+  /** Commit markers each streaming sink ([[appendSink]],
+    * [[nearDupIngest]], [[ivfPqIngest]]) retains behind its latest
+    * batch — far more than any restart can replay (replay reaches back
+    * only to the checkpoint's last uncommitted batch), small enough
+    * that the marker listing stays a trivial metadata op forever. */
   val IngestMarkerKeep = 1000L
 }

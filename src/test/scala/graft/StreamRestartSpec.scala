@@ -202,6 +202,130 @@ class StreamRestartSpec extends SparkSpec {
     }
   }
 
+  /** Forge the crash state between publish and marker for batch 0 of
+    * the staged-publish sink `sinkId` writing into `root`: the batch's
+    * prefixed files stay published, its staging dir under `stagingDir`
+    * comes back holding the (now empty) dirs those files were published
+    * from, its marker in `markerDir` is gone, and the streaming commit
+    * log loses batch 0 so a restart REPLAYS it. `stagingDir` and
+    * `markerDir` are relative to `root`, the files are looked for
+    * under `root/liveDir`. */
+  private def forgeHalfPublished(
+      root: String,
+      stagingDir: String,
+      markerDir: String,
+      sinkId: String,
+      ckpt: String,
+      liveDir: String = ""): Unit = {
+    import scala.jdk.CollectionConverters._
+    def fsf(p: String) = new java.io.File(p)
+    val batch = s"$sinkId-batch-0"
+    assert(fsf(s"$root/$markerDir/$batch.done").delete())
+    val live = java.nio.file.Paths.get(root, liveDir)
+    val walk = Files.walk(live)
+    val published =
+      try walk.iterator().asScala.filter(_.getFileName.toString.startsWith(s"$batch-")).toList
+      finally walk.close()
+    assert(published.nonEmpty)
+    published.foreach(p =>
+      fsf(s"$root/$stagingDir/$batch/${live.relativize(p.getParent)}").mkdirs())
+    assert(fsf(s"$ckpt/commits/0").delete())
+    fsf(s"$ckpt/commits/.0.crc").delete()
+  }
+
+  test("appendSink is exactly-once through the publish/marker crash window") {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graft_append_eo").toString
+    val ckpt = s"$dir/ckpt"
+    val log = new graft.log.EventLog(spark, dir)
+    val mem = MemoryStream[InEntry](spark)
+    def start() = StreamLog.appendSink(
+      mem.toDF()
+        .withColumn("trxNumber", lit(1L))
+        .withColumn("metadata", map().cast("map<string,string>")),
+      log, ckpt)
+    val q1 = start()
+    try {
+      mem.addData(
+        InEntry("s0", "a", 1, 1000, "p1"), InEntry("s0", "a", 2, 2000, "p2"),
+        InEntry("s1", "a", 1, 1000, "q1"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    forgeHalfPublished(dir, "stream-staging", "stream-commits", "sink0", ckpt, liveDir = "data")
+    val q2 = start()
+    try q2.processAllAvailable()
+    finally q2.stop()
+    assert(log.consumeSegment("s0", "a").count() == 2L)
+    assert(log.consumeSegment("s1", "a").count() == 1L)
+    assert(log.peek("s0", "a").get.sequence == 2L)
+    assert(new java.io.File(s"$dir/stream-commits/sink0-batch-0.done").exists)
+    assert(!new java.io.File(s"$dir/stream-staging/sink0-batch-0").exists)
+  }
+
+  test("nearDupIngest is exactly-once through the publish/marker crash window") {
+    val mem = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
+    val archive = Files.createTempDirectory("graft_neardup_eo").toString
+    val ckpt = Files.createTempDirectory("graft_neardup_eo_ck").toString
+    def start() = StreamLog.nearDupIngest(
+      mem.toDF().toDF("doc_id", "text", "event_time"), archive, ckpt)
+    val tiers = Seq("docs", "shingles", "bands")
+    def rows() = tiers.map(t =>
+      spark.read.parquet(s"$archive/$t").collect().map(_.toString).sorted.toSeq)
+    // no state-flush batch after batch 0: constructing one commits
+    // offset 0 to the MemoryStream, which then drops the data the replay
+    // needs (a durable source keeps it)
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val before =
+      try {
+        val q1 = start()
+        try {
+          mem.addData(
+            (1L, "completely different words about seven yellow submarines " +
+              "sailing under nine crimson bridges toward quiet harbors at dawn tide",
+              java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
+            (2L, "fresh material concerning twelve silver rivers crossing " +
+              "green valleys where old stone mills grind amber wheat all summer",
+              java.sql.Timestamp.valueOf("2024-01-01 00:00:05")))
+          q1.processAllAvailable()
+        } finally q1.stop()
+        val before = rows()
+        assert(before.head.size == 2, s"both docs archived: ${before.head}")
+        forgeHalfPublished(archive, "_neardup_staging", "_neardup_commits", "neardup0", ckpt)
+        val q2 = start()
+        try q2.processAllAvailable()
+        finally q2.stop()
+        before
+      } finally spark.conf.unset(noData)
+    assert(rows() == before, "the replay must re-archive each row exactly once")
+    assert(new java.io.File(s"$archive/_neardup_commits/neardup0-batch-0.done").exists)
+    assert(!new java.io.File(s"$archive/_neardup_staging/neardup0-batch-0").exists)
+  }
+
+  test("exactlyOnce marker GC drops only its own sinkId's markers past IngestMarkerKeep") {
+    import graft.log.LogFs
+    val root = Files.createTempDirectory("graft_marker_gc").toString
+    val markers = s"$root/_commits"
+    val fs = LogFs.fs(spark, root)
+    val keep = StreamLog.IngestMarkerKeep
+    val batchId = keep + 2 // GC horizon: ids below batchId - keep = 2 go
+    val own = Seq(0L, 1L, 2L, keep, keep + 1).map(i => s"sinkA-batch-$i.done")
+    val foreign = Seq("sinkB-batch-0.done", "sinkB-batch-1.done", "sinkA-batch-junk.done")
+    (own ++ foreign).foreach(n => LogFs.touch(fs, s"$markers/$n"))
+    def commit() = LogFs.exactlyOnce(
+      fs, s"$root/live", markers, s"$root/_staging", "sinkA", batchId) { staging =>
+      Seq(1, 2).toDF("x").write.parquet(s"$staging/tier")
+    }
+    assert(commit())
+    val left = new java.io.File(markers).list().filterNot(_.startsWith(".")).toSet
+    assert(left == (own.drop(2) ++ foreign).toSet + s"sinkA-batch-$batchId.done")
+    // the batch landed under its prefix, and its replay is a no-op
+    val published = new java.io.File(s"$root/live/tier").list().filter(_.endsWith(".parquet"))
+    assert(published.nonEmpty && published.forall(_.startsWith(s"sinkA-batch-$batchId-")))
+    assert(!commit())
+    assert(spark.read.parquet(s"$root/live/tier").count() == 2L)
+  }
+
   test("ivfPqIngest is exactly-once through the publish/marker crash window; a second sinkId never drops batches") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFns
@@ -236,24 +360,10 @@ class StreamRestartSpec extends SparkSpec {
     } finally q1.stop()
     assert(counts("lists").keySet.contains(301L))
 
-    // forge the EXACT crash-between-publish-and-marker state: published
-    // prefixed files present, staging dir present (its cent_id= subdirs
-    // name the touched partitions — files already moved out), marker
-    // absent, and the streaming commit log missing batch 0 so the
-    // restart REPLAYS it
+    // forge the EXACT crash-between-publish-and-marker state (its
+    // staging cent_id= subdirs name the touched partitions)
     def fsf(p: String) = new java.io.File(p)
-    assert(fsf(s"$path/_ingest_commits/ivfpq0-batch-0.done").delete())
-    for (tier <- Seq("lists", "codes")) {
-      val touched = fsf(s"$path/$tier").listFiles()
-        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cent_id="))
-        .filter(cell => fsf(s"$path/$tier/$cell").listFiles()
-          .exists(_.getName.startsWith("ivfpq0-batch-0-")))
-      touched.foreach(cell =>
-        fsf(s"$path/_ingest_staging/ivfpq0-batch-0/$tier/$cell").mkdirs())
-    }
-    assert(fsf(s"$ckpt/commits/0").delete())
-    Option(fsf(s"$ckpt/commits").listFiles()).foreach(
-      _.filter(_.getName == ".0.crc").foreach(_.delete()))
+    forgeHalfPublished(path, "_ingest_staging", "_ingest_commits", "ivfpq0", ckpt)
 
     // restart from the same (sinkId, checkpoint): batch 0 replays, the
     // sweep removes the half-published files, the republish lands each
