@@ -23,21 +23,31 @@ import graft.model.SegmentStatus
   * remote subscribers hold a connection open and receive each ack the
   * moment the bus fans it out.
   *
-  * Wire format is the mailbox's, framed on a stream instead of files:
-  * newline-delimited [[PushBridge.encode]] lines, one batch closed by
-  * the [[PushBridge.sentinel]] `#n` line (URL-encoding guarantees no
-  * ack line starts with '#', so control lines are unambiguous — same
+  * Wire format is the mailbox's, framed on a stream instead of files,
+  * in ONE mode: the client registers channels (`#sub <id> <space>
+  * <segment>`, answered by `#ok <id>`), and the server filters each ack
+  * per channel and sends it as a `#c <id> <ack>` line carrying the
+  * [[PushBridge.encode]] form; one batch is closed by the
+  * [[PushBridge.sentinel]] `#n` line (URL-encoding guarantees no ack
+  * line starts with '#', so control lines are unambiguous — same
   * argument as the mailbox). TCP replaces the rename-atomicity story:
   * in-order, no torn frames, per-publisher FIFO for free.
+  *
+  * One client class, [[PushNetSubscriber]], three entry points:
+  * [[connect]] (one channel, one session), [[dial]] (one channel,
+  * re-dials) and [[mux]] (channels added with `subscribe`, re-dials).
+  * A session is ready once the `#hello` greeting is read AND every
+  * channel registered on it has its `#ok` — from then on every
+  * matching ack is delivered.
   *
   * Delivery contract (mirrors [[NotificationBus]] / [[PushBridge]]):
   *  - '''per-publisher FIFO''': one writer thread per connection drains
   *    a per-connection queue in bus-publish order.
-  *  - '''live feed, at-most-once''': a subscriber receives acks
-  *    published after the server registers its connection (`#hello`
-  *    greeting = registered); no replay — resume-from-offset readers
-  *    belong to `StreamLog.follow` / `ConsumerContext`, exactly as the
-  *    reference routes replay through Consume, not the ack bus.
+  *  - '''live feed, at-most-once''': a channel receives acks
+  *    published after the server registers it (`#ok` = registered);
+  *    no replay — resume-from-offset readers belong to
+  *    `StreamLog.follow` / `ConsumerContext`, exactly as the reference
+  *    routes replay through Consume, not the ack bus.
   *  - '''post-commit''': the bus publishes after the write is durably
   *    visible, so a delivered ack is always readable from the log.
   *  - '''slow subscribers drop, counted''': a connection that stops
@@ -83,12 +93,15 @@ object PushNet {
     java.security.MessageDigest.isEqual(d(expected), d(presented))
   }
 
-  // ---- channel-mux control lines (reference: wsstream/muxer.go:22 —
-  // many logical streams over ONE connection, each keyed by a channel
-  // id; wsstream/bus.go:63 — every channel re-registers over a freshly
+  // ---- channel control lines (reference: wsstream/muxer.go:22 — many
+  // logical streams over ONE connection, each keyed by a channel id;
+  // wsstream/bus.go:63 — every channel re-registers over a freshly
   // dialed stream). All control lines start with '#', which an encoded
   // ack line never does (URLEncoder escapes '#'), so the wire stays
-  // unambiguous and a legacy subscriber simply ignores them.
+  // unambiguous. `#mux` opens every client session (after `#auth`);
+  // the server ignores it like any unknown control line, but it means
+  // a token-less client's FIRST line is always a control line, which an
+  // auth-required server refuses at once instead of at its deadline.
   private[log] val CtlMux = "#mux"
   private[log] val WildFilter = "*"
   private[log] def encFilter(v: Option[String]): String =
@@ -137,10 +150,15 @@ object PushNet {
     srv
   }
 
-  /** Dial a [[PushServer]] from THIS process — no filesystem, no Spark
-    * session, no shared state with the producing JVM beyond the route.
-    * `space`/`segment` filter like the bus's subscribeToSpace /
-    * subscribeToSegment; both-None is the firehose. */
+  /** One-session client: dial a [[PushServer]] from THIS process — no
+    * filesystem, no Spark session, no shared state with the producing
+    * JVM beyond the route — and register one channel. `space`/`segment`
+    * filter like the bus's subscribeToSpace / subscribeToSegment
+    * (enforced server-side); both-None is the firehose. Runs ONE
+    * session and never re-dials: a refused dial or a rejected token
+    * gives a client that never becomes ready, and a dropped session
+    * delivers nothing more — nothing is thrown. Ready per
+    * [[PushNetSubscriber]]'s readiness rule. */
   def connect(
       host: String,
       port: Int,
@@ -148,21 +166,25 @@ object PushNet {
       segment: Option[String] = None,
       tokenFunc: Option[() => String] = None,
       socketFactory: Option[javax.net.SocketFactory] = None)(
-      cb: SegmentStatus => Unit): PushNetSubscriber =
-    new PushNetSubscriber(host, port, space, segment, tokenFunc, socketFactory, cb)
+      cb: SegmentStatus => Unit): PushNetSubscriber = {
+    val c = new PushNetSubscriber(host, port, redial = false, 0L, 0L, tokenFunc, socketFactory)
+    c.subscribe(space, segment)(cb)
+    c.start()
+  }
 
-  /** Resilient variant of [[connect]]: a dialer that re-dials with
-    * capped exponential backoff whenever the connection drops (server
-    * restart, network blip) and resubscribes on reconnect — the
-    * reference's client holds its feed through a dialer for the same
-    * reason (reference: wsstream/dialer.go:1, wsstream/bus.go:63 —
-    * subscriptions re-register over a freshly dialed stream). The
-    * delivery contract per SESSION is [[PushNetSubscriber]]'s
-    * (live-feed, at-most-once); acks published while disconnected are
-    * NOT replayed — continuity is the subscriber's offset re-poll,
-    * exactly the recovery path a dropped slow-subscriber tickle already
-    * takes. Backoff starts at `backoffMs`, doubles per failed dial, and
-    * caps at `maxBackoffMs`; a successful subscribe resets it. */
+  /** Resilient variant of [[connect]]: the same one-channel client, but
+    * it re-dials with capped exponential backoff whenever the
+    * connection drops (server restart, network blip) and re-registers
+    * its channel on reconnect — the reference's client holds its feed
+    * through a dialer for the same reason (reference:
+    * wsstream/dialer.go:1, wsstream/bus.go:63 — subscriptions
+    * re-register over a freshly dialed stream). The delivery contract
+    * per SESSION is the live feed, at-most-once; acks published while
+    * disconnected are NOT replayed — continuity is the subscriber's
+    * offset re-poll, exactly the recovery path a dropped
+    * slow-subscriber tickle already takes. Backoff starts at
+    * `backoffMs`, doubles per failed dial, and caps at `maxBackoffMs`;
+    * a session that becomes ready resets it. */
   def dial(
       host: String,
       port: Int,
@@ -172,9 +194,12 @@ object PushNet {
       maxBackoffMs: Long = 2000L,
       tokenFunc: Option[() => String] = None,
       socketFactory: Option[javax.net.SocketFactory] = None)(
-      cb: SegmentStatus => Unit): PushNetDialer =
-    new PushNetDialer(
-      host, port, space, segment, backoffMs, maxBackoffMs, tokenFunc, socketFactory, cb)
+      cb: SegmentStatus => Unit): PushNetSubscriber = {
+    val c = new PushNetSubscriber(
+      host, port, redial = true, backoffMs, maxBackoffMs, tokenFunc, socketFactory)
+    c.subscribe(space, segment)(cb)
+    c.start()
+  }
 
   /** Channel-multiplexed resilient client: MANY space/segment
     * subscriptions over ONE dialed connection, each keyed by a channel
@@ -183,11 +208,11 @@ object PushNet {
     * consuming N spaces holds 1 socket, not N; filters are enforced
     * SERVER-side, so a narrow channel costs the wire only its own acks
     * — the bandwidth shape that matters when one driver serves hundreds
-    * of consumers. Reconnects like [[dial]] (capped backoff) and
-    * re-registers EVERY channel over the fresh connection
+    * of consumers. Starts with no channels and re-dials like [[dial]],
+    * re-registering EVERY channel over the fresh connection
     * (wsstream/bus.go:63); per-channel delivery contract is the
     * at-most-once live feed. Channels may be added/removed while
-    * connected or disconnected ([[PushNetMux.subscribe]] /
+    * connected or disconnected ([[PushNetSubscriber.subscribe]] /
     * [[PushNetMuxChannel.close]]). */
   def mux(
       host: String,
@@ -195,8 +220,9 @@ object PushNet {
       backoffMs: Long = 50L,
       maxBackoffMs: Long = 2000L,
       tokenFunc: Option[() => String] = None,
-      socketFactory: Option[javax.net.SocketFactory] = None): PushNetMux =
-    new PushNetMux(host, port, backoffMs, maxBackoffMs, tokenFunc, socketFactory)
+      socketFactory: Option[javax.net.SocketFactory] = None): PushNetSubscriber =
+    new PushNetSubscriber(
+      host, port, redial = true, backoffMs, maxBackoffMs, tokenFunc, socketFactory).start()
 }
 
 /** Producer side: accepts subscriber connections and fans each bus ack
@@ -256,9 +282,6 @@ final class PushServer private[log] (
     private val ctl = new LinkedBlockingQueue[String]()
     private val out = new BufferedWriter(
       new OutputStreamWriter(socket.getOutputStream, UTF_8))
-    // muxed = the client sent #mux: bare-firehose lines stop and only
-    // #c-tagged lines for registered channels go out
-    @volatile private var muxed = false
     // authed = no hook configured, or the hook accepted this
     // connection's #auth line. Until then the connection receives
     // NOTHING (no greeting, no acks) and offer() discards — safe,
@@ -305,16 +328,15 @@ final class PushServer private[log] (
             batch.clear()
             batch.add(head)
             queue.drainTo(batch)
+            // server-side filtering: each ack goes out once per
+            // registered channel it matches, tagged with the channel id
             batch.forEach { st =>
-              if (!muxed) { out.write(PushBridge.encode(st)); out.newLine() }
-              else
-                channels.forEach { (id, f) =>
-                  if (f._1.forall(_ == st.space) && f._2.forall(_ == st.segment)) {
-                    out.write(PushNet.ctlChan(id, PushBridge.encode(st)))
-                    out.newLine()
-                  }
+              channels.forEach { (id, f) =>
+                if (f._1.forall(_ == st.space) && f._2.forall(_ == st.segment)) {
+                  out.write(PushNet.ctlChan(id, PushBridge.encode(st)))
+                  out.newLine()
                 }
-              ()
+              }
             }
             out.write(PushBridge.sentinel(batch.size())); out.newLine()
             wrote = true
@@ -330,9 +352,9 @@ final class PushServer private[log] (
     }, "graft-push-server-conn")
     writer.setDaemon(true)
 
-    // Client reader: mux clients send control lines; legacy clients
-    // send nothing, so a read returning EOF (or erroring) stays the
-    // prompt peer-gone signal — a one-batch write to a closed loopback
+    // Client reader: clients send control lines and then stay quiet,
+    // so a read returning EOF (or erroring) is the prompt peer-gone
+    // signal — a one-batch write to a closed loopback
     // socket lands in the kernel buffer without an error, so write
     // failures alone detect a dead peer only on the SECOND batch.
     private val clientReader = new Thread(() => {
@@ -405,7 +427,6 @@ final class PushServer private[log] (
         while (line != null && open.get()) {
           val parts = line.split(' ')
           line match {
-            case PushNet.CtlMux => muxed = true
             case l if l.startsWith("#sub ") && parts.length == 4 =>
               channels.put(
                 parts(1),
@@ -472,190 +493,14 @@ final class PushServer private[log] (
   }
 }
 
-/** Consumer side: one socket, one reader thread, callbacks in wire
-  * order. Ready = the server's `#hello` greeting has been read, i.e.
-  * the connection is registered and the live feed has begun. */
-final class PushNetSubscriber private[log] (
-    host: String,
-    port: Int,
-    space: Option[String],
-    segment: Option[String],
-    tokenFunc: Option[() => String],
-    socketFactory: Option[javax.net.SocketFactory],
-    cb: SegmentStatus => Unit)
-    extends AutoCloseable {
-
-  private val open = new AtomicBoolean(true)
-  private val deliveredCount = new AtomicLong(0L)
-  private val ready = new CountDownLatch(1)
-  private val socket = socketFactory
-    .map(_.createSocket(host, port))
-    .getOrElse(new Socket(host, port))
-  socket.setTcpNoDelay(true)
-  // bearer token rides as the connection's first line (reference:
-  // wsstream/dialer.go:40 — the dialer evaluates tokenFunc per dial)
-  tokenFunc.foreach { tf =>
-    val w = new BufferedWriter(new OutputStreamWriter(socket.getOutputStream, UTF_8))
-    w.write(PushNet.ctlAuth(tf())); w.newLine(); w.flush()
-  }
-
-  /** Acks that passed the filter and were handed to the callback. */
-  def delivered: Long = deliveredCount.get()
-
-  /** True once the live feed is registered server-side. */
-  def awaitReady(timeoutMs: Long = 10000L): Boolean =
-    ready.await(timeoutMs, TimeUnit.MILLISECONDS)
-
-  private val reader = new Thread(() => {
-    try {
-      val in = new BufferedReader(
-        new InputStreamReader(socket.getInputStream, UTF_8))
-      var line = in.readLine()
-      while (open.get() && line != null) {
-        if (line == PushNet.Hello) ready.countDown()
-        else if (!line.startsWith("#")) // sentinel = batch frame, no-op here
-          PushBridge.decode(line).foreach { st =>
-            if (space.forall(_ == st.space) && segment.forall(_ == st.segment)) {
-              try cb(st)
-              catch { case NonFatal(_) => () } // subscriber isolation, as on the bus
-              deliveredCount.incrementAndGet()
-              ()
-            }
-          }
-        line = in.readLine()
-      }
-    } catch { case NonFatal(_) => () } // socket closed: exit
-  }, "graft-push-client")
-  reader.setDaemon(true)
-  reader.start()
-
-  def close(): Unit = if (open.getAndSet(false)) {
-    try socket.close()
-    catch { case NonFatal(_) => () }
-    reader.join(5000)
-  }
-}
-
-/** Reconnecting consumer side (see [[PushNet.dial]]): one daemon thread
-  * owns the dial → read-until-drop → backoff → re-dial loop. Each
-  * successful session is a fresh server-side registration (greeting
-  * read = subscribed); `sessionCount` counts them so callers can await
-  * the re-subscribe after a server restart. */
-final class PushNetDialer private[log] (
-    host: String,
-    port: Int,
-    space: Option[String],
-    segment: Option[String],
-    backoffMs: Long,
-    maxBackoffMs: Long,
-    tokenFunc: Option[() => String],
-    socketFactory: Option[javax.net.SocketFactory],
-    cb: SegmentStatus => Unit)
-    extends AutoCloseable {
-
-  private val open = new AtomicBoolean(true)
-  private val deliveredCount = new AtomicLong(0L)
-  private val sessions = new AtomicLong(0L)
-  private val ready = new CountDownLatch(1)
-  @volatile private var current: Socket = null
-
-  /** Acks that passed the filter and were handed to the callback. */
-  def delivered: Long = deliveredCount.get()
-
-  /** Completed server-side registrations (greetings read); increments
-    * on every reconnect. */
-  def sessionCount: Long = sessions.get()
-
-  /** True once the FIRST session is registered server-side. */
-  def awaitReady(timeoutMs: Long = 10000L): Boolean =
-    ready.await(timeoutMs, TimeUnit.MILLISECONDS)
-
-  /** Await the `n`-th completed registration — `awaitSessions(2)` =
-    * "the dialer has resubscribed after a drop". */
-  def awaitSessions(n: Long, timeoutMs: Long = 30000L): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (sessions.get() < n && System.currentTimeMillis() < deadline)
-      Thread.sleep(10)
-    sessions.get() >= n
-  }
-
-  private val runner = new Thread(() => {
-    var backoff = backoffMs
-    while (open.get()) {
-      try {
-        // Unconnected socket + bounded connect: close() cannot unblock
-        // socket I/O via interrupt(), so the connect window must bound
-        // itself — and close() can only tear down a socket it can SEE,
-        // so publish to `current` first and re-check `open` after, which
-        // catches a close() that raced the dial (its `current` snapshot
-        // was null); the finally below then closes the socket and the
-        // loop exits instead of reading past close().
-        val s = socketFactory.map(_.createSocket()).getOrElse(new Socket())
-        try {
-          s.setTcpNoDelay(true)
-          s.connect(new InetSocketAddress(host, port), 1000)
-          current = s
-          if (open.get()) {
-            // re-dial re-auths: tokenFunc is evaluated PER SESSION, so
-            // a rotated credential rides the next reconnect
-            tokenFunc.foreach { tf =>
-              val w = new BufferedWriter(
-                new OutputStreamWriter(s.getOutputStream, UTF_8))
-              w.write(PushNet.ctlAuth(tf())); w.newLine(); w.flush()
-            }
-            val in = new BufferedReader(
-              new InputStreamReader(s.getInputStream, UTF_8))
-            var line = in.readLine()
-            while (open.get() && line != null) {
-              if (line == PushNet.Hello) {
-                sessions.incrementAndGet()
-                ready.countDown()
-                backoff = backoffMs // healthy session: reset the backoff
-              } else if (!line.startsWith("#"))
-                PushBridge.decode(line).foreach { st =>
-                  if (space.forall(_ == st.space) && segment.forall(_ == st.segment)) {
-                    try cb(st)
-                    catch { case NonFatal(_) => () }
-                    deliveredCount.incrementAndGet()
-                    ()
-                  }
-                }
-              line = in.readLine()
-            }
-          }
-        } finally {
-          try s.close()
-          catch { case NonFatal(_) => () }
-        }
-      } catch { case NonFatal(_) => () } // dial failed or read dropped
-      if (open.get()) {
-        try Thread.sleep(backoff)
-        catch { case _: InterruptedException => () }
-        backoff = math.min(backoff * 2, maxBackoffMs)
-      }
-    }
-  }, "graft-push-dialer")
-  runner.setDaemon(true)
-  runner.start()
-
-  def close(): Unit = if (open.getAndSet(false)) {
-    val s = current
-    if (s != null) {
-      try s.close()
-      catch { case NonFatal(_) => () }
-    }
-    runner.interrupt()
-    runner.join(5000)
-  }
-}
-
-/** One logical subscription riding a [[PushNetMux]] connection. Ready =
-  * the server acknowledged the registration (`#ok`) for the CURRENT
-  * session; acks published after that are matched against this channel
-  * server-side. `close()` unregisters (live sessions stop sending
-  * immediately; the mux also forgets it for future reconnects). */
+/** One logical subscription riding a [[PushNetSubscriber]] session.
+  * Ready = the server acknowledged the registration (`#ok`) for the
+  * CURRENT session; acks published after that are matched against this
+  * channel server-side. `close()` unregisters (live sessions stop
+  * sending immediately; the client also forgets it for future
+  * re-dials). */
 final class PushNetMuxChannel private[log] (
-    mux: PushNetMux,
+    client: PushNetSubscriber,
     private[log] val id: String,
     private[log] val space: Option[String],
     private[log] val segment: Option[String],
@@ -672,45 +517,65 @@ final class PushNetMuxChannel private[log] (
   def awaitReady(timeoutMs: Long = 10000L): Boolean =
     ready.await(timeoutMs, TimeUnit.MILLISECONDS)
 
-  def close(): Unit = mux.unsubscribe(this)
+  def close(): Unit = client.unsubscribe(this)
 }
 
-/** Channel-multiplexed reconnecting subscriber (see [[PushNet.mux]]):
-  * one daemon thread owns the dial → `#mux` → register-all-channels →
-  * read-until-drop → backoff → re-dial loop, so EVERY channel re-registers
-  * over a freshly dialed connection after a server restart (reference:
-  * wsstream/bus.go:63) with no caller intervention. Channel callbacks
-  * run on the reader thread in wire order — per-publisher FIFO per
-  * channel, same as the single-subscription clients. */
-final class PushNetMux private[log] (
+/** Consumer side, the one client behind [[PushNet.connect]],
+  * [[PushNet.dial]] and [[PushNet.mux]]: one daemon thread owns the
+  * dial → `#auth` → `#mux` → register-every-channel → read-until-drop
+  * loop, followed by capped backoff and a re-dial when `redial` is set
+  * (the entry point fixes it: `connect` runs one session, `dial` and
+  * `mux` re-dial). Every channel re-registers over each freshly dialed
+  * connection (reference: wsstream/bus.go:63) with no caller
+  * intervention. Channel callbacks run on the reader thread in wire
+  * order — per-publisher FIFO per channel.
+  *
+  * Readiness: a session counts (`sessionCount`, `awaitSessions`,
+  * `awaitReady`) once the `#hello` greeting has been read AND every
+  * channel whose `#sub` went out on that session before then has its
+  * `#ok`. The server writes `#hello` as soon as a connection is authed,
+  * without waiting for the client's `#sub` lines, so the greeting alone
+  * does not prove a channel is matched; with both, every later matching
+  * ack is delivered. */
+final class PushNetSubscriber private[log] (
     host: String,
     port: Int,
+    redial: Boolean,
     backoffMs: Long,
     maxBackoffMs: Long,
-    tokenFunc: Option[() => String] = None,
-    socketFactory: Option[javax.net.SocketFactory] = None)
+    tokenFunc: Option[() => String],
+    socketFactory: Option[javax.net.SocketFactory])
     extends AutoCloseable {
 
   private val open = new AtomicBoolean(true)
+  private val deliveredCount = new AtomicLong(0L)
   private val sessions = new AtomicLong(0L)
   private val ready = new CountDownLatch(1)
   private val channels = new ConcurrentHashMap[String, PushNetMuxChannel]()
   @volatile private var current: Socket = null
   @volatile private var writer: BufferedWriter = null
+  // channel ids registered on the live session whose #ok is still due
+  @volatile private var pending: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
   private val writeLock = new Object
 
-  /** Completed server-side greetings; increments on every reconnect. */
+  /** Acks handed to any channel's callback — the sum over its channels,
+    * closed ones included. */
+  def delivered: Long = deliveredCount.get()
+
+  /** Completed sessions (see the readiness rule above); increments on
+    * every re-dial. */
   def sessionCount: Long = sessions.get()
 
-  /** Live channels registered on this mux. */
+  /** Live channels registered on this client. */
   def channelCount: Int = channels.size()
 
-  /** True once the FIRST session is registered server-side. */
+  /** True once the FIRST session is ready. */
   def awaitReady(timeoutMs: Long = 10000L): Boolean =
     ready.await(timeoutMs, TimeUnit.MILLISECONDS)
 
-  /** Await the `n`-th completed greeting — `awaitSessions(2)` = "the mux
-    * has reconnected and re-registered after a drop". */
+  /** Await the `n`-th completed session — `awaitSessions(2)` = "the
+    * client has re-dialed and re-registered every channel after a
+    * drop". */
   def awaitSessions(n: Long, timeoutMs: Long = 30000L): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (sessions.get() < n && System.currentTimeMillis() < deadline)
@@ -718,7 +583,7 @@ final class PushNetMux private[log] (
     sessions.get() >= n
   }
 
-  /** Register a channel. Safe whether the mux is currently connected
+  /** Register a channel. Safe whether the client is currently connected
     * (registration line goes out immediately) or mid-backoff (the next
     * session registers it with the rest). */
   def subscribe(
@@ -727,15 +592,24 @@ final class PushNetMux private[log] (
     val ch = new PushNetMuxChannel(
       this, java.util.UUID.randomUUID().toString, space, segment, cb)
     channels.put(ch.id, ch)
-    send(PushNet.ctlSub(ch.id, space, segment))
+    register(ch)
     ch
   }
 
   private[log] def unsubscribe(ch: PushNetMuxChannel): Unit =
     if (channels.remove(ch.id) != null) send(PushNet.ctlUnsub(ch.id))
 
+  /** `#sub` on the live session, if any. The id joins the session's
+    * pending set BEFORE the line goes out, so its `#ok` cannot race it. */
+  private def register(ch: PushNetMuxChannel): Unit = writeLock.synchronized {
+    if (writer != null) {
+      pending.add(ch.id)
+      send(PushNet.ctlSub(ch.id, ch.space, ch.segment))
+    }
+  }
+
   /** Best-effort write to the live session; a broken/absent connection
-    * is fine — the re-dial loop re-registers everything anyway. */
+    * is fine — the next session re-registers everything anyway. */
   private def send(line: String): Unit = writeLock.synchronized {
     val w = writer
     if (w != null) {
@@ -744,12 +618,34 @@ final class PushNetMux private[log] (
     }
   }
 
+  /** Route one `#c <id> <ack>` payload to its channel's callback. */
+  private def deliver(tagged: String): Unit = {
+    val sp = tagged.indexOf(' ')
+    if (sp > 0) {
+      val ch = channels.get(tagged.substring(0, sp))
+      if (ch != null)
+        PushBridge.decode(tagged.substring(sp + 1)).foreach { st =>
+          try ch.cb(st)
+          catch { case NonFatal(_) => () } // channel isolation, as on the bus
+          ch.deliveredCount.incrementAndGet()
+          deliveredCount.incrementAndGet()
+          ()
+        }
+    }
+  }
+
   private val runner = new Thread(() => {
     var backoff = backoffMs
-    while (open.get()) {
+    var again = true
+    while (again && open.get()) {
       try {
-        // same bounded-connect + publish-then-recheck shape as
-        // PushNetDialer: close() can only tear down a socket it can see
+        // Unconnected socket + bounded connect: close() cannot unblock
+        // socket I/O via interrupt(), so the connect window must bound
+        // itself — and close() can only tear down a socket it can SEE,
+        // so publish to `current` first and re-check `open` after, which
+        // catches a close() that raced the dial (its `current` snapshot
+        // was null); the finally below then closes the socket and the
+        // loop exits instead of reading past close().
         val s = socketFactory.map(_.createSocket()).getOrElse(new Socket())
         try {
           s.setTcpNoDelay(true)
@@ -757,13 +653,13 @@ final class PushNetMux private[log] (
           current = s
           if (open.get()) {
             // this session: auth first (re-dial re-auths with a fresh
-            // tokenFunc() evaluation) + mux mode on, written INSIDE the
+            // tokenFunc() evaluation) + `#mux`, written INSIDE the
             // writer-publish lock — a concurrent subscribe()'s #sub
             // could otherwise win the lock between the publish and the
             // auth send and reach an auth-required server as the FIRST
             // line (one counted rejection + a needless re-dial); the
             // auth-before-anything ordering must hold against every
-            // client thread, not just this one. Channels re-register
+            // client thread, not just this one. Channels register
             // after, through the normal send path.
             writeLock.synchronized {
               val w = new BufferedWriter(
@@ -771,43 +667,37 @@ final class PushNetMux private[log] (
               // deliberately NOT caught: a tokenFunc() throw or a broken
               // pipe here must propagate to the outer re-dial loop
               // (fresh backoff, fresh token) — publishing a writer for a
-              // session that never authed/muxed would look healthy while
+              // session that never authed would look healthy while
               // every channel silently starves
               tokenFunc.foreach { tf =>
                 w.write(PushNet.ctlAuth(tf())); w.newLine()
               }
               w.write(PushNet.CtlMux); w.newLine()
               w.flush()
+              pending = ConcurrentHashMap.newKeySet[String]()
               writer = w
             }
             val in = new BufferedReader(
               new InputStreamReader(s.getInputStream, UTF_8))
-            channels.forEach { (_, ch) =>
-              send(PushNet.ctlSub(ch.id, ch.space, ch.segment))
-            }
+            channels.forEach((_, ch) => register(ch))
+            var hello = false
+            var counted = false
             var line = in.readLine()
             while (open.get() && line != null) {
-              if (line == PushNet.Hello) {
+              if (line == PushNet.Hello) hello = true
+              else if (line.startsWith("#ok ")) {
+                val id = line.substring(4)
+                pending.remove(id)
+                val ch = channels.get(id)
+                if (ch != null) ch.ready.countDown()
+              } else if (line.startsWith("#c ")) deliver(line.substring(3))
+              // else: sentinel/unknown control — ignore
+              if (!counted && hello && pending.isEmpty) {
+                counted = true
                 sessions.incrementAndGet()
                 ready.countDown()
                 backoff = backoffMs // healthy session: reset the backoff
-              } else if (line.startsWith("#ok ")) {
-                val ch = channels.get(line.substring(4))
-                if (ch != null) ch.ready.countDown()
-              } else if (line.startsWith("#c ")) {
-                val rest = line.substring(3)
-                val sp = rest.indexOf(' ')
-                if (sp > 0) {
-                  val ch = channels.get(rest.substring(0, sp))
-                  if (ch != null)
-                    PushBridge.decode(rest.substring(sp + 1)).foreach { st =>
-                      try ch.cb(st)
-                      catch { case NonFatal(_) => () } // channel isolation
-                      ch.deliveredCount.incrementAndGet()
-                      ()
-                    }
-                }
-              } // else: sentinel/unknown control — ignore
+              }
               line = in.readLine()
             }
           }
@@ -817,15 +707,19 @@ final class PushNetMux private[log] (
           catch { case NonFatal(_) => () }
         }
       } catch { case NonFatal(_) => () } // dial failed or read dropped
-      if (open.get()) {
+      again = redial
+      if (again && open.get()) {
         try Thread.sleep(backoff)
         catch { case _: InterruptedException => () }
         backoff = math.min(backoff * 2, maxBackoffMs)
       }
     }
-  }, "graft-push-mux")
+  }, "graft-push-client")
   runner.setDaemon(true)
-  runner.start()
+
+  /** Called by the entry point once its initial channel (if any) is
+    * registered, so the first session already counts that channel. */
+  private[log] def start(): this.type = { runner.start(); this }
 
   def close(): Unit = if (open.getAndSet(false)) {
     val s = current

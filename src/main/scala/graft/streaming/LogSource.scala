@@ -50,6 +50,10 @@ import graft.model.Entry
   *    aggregate per `pollMs`) that bootstraps and recovers dropped
   *    tickles. With a push transport configured there is NO polling
   *    interval in the latency path: produce → ack → next trigger reads.
+  *    The TCP feed is a [[PushNet.dial]] client: it re-dials (capped
+  *    backoff) after a server restart, and a push host that is down
+  *    when the stream starts only delays the feed; acks missed while
+  *    it is down are recovered by the poll reconcile.
   *  - '''planInputPartitions''' lists only the spaces with a delta and
   *    emits one partition per data file; readers push the per-segment
   *    `(from, to]` sequence ranges into parquet as a FilterPredicate,
@@ -300,7 +304,7 @@ private[streaming] class GraftLogMicroBatchStream(
   private val pushClient =
     (Option(options.get("pushHost")), Option(options.get("pushPort"))) match {
       case (Some(h), Some(p)) =>
-        Some(PushNet.connect(h, p.toInt, spaceFilter) { st =>
+        Some(PushNet.dial(h, p.toInt, spaceFilter) { st =>
           tickle(st.space, st.segment, st.lastSequence, st.lastTimestamp)
           GraftLogSource.recordTickle(logPath)
         })

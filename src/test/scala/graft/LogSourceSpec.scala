@@ -187,6 +187,60 @@ class LogSourceSpec extends SparkSpec {
     }
   }
 
+  test("the push feed re-dials after a PushServer restart: rows and tickles resume without the poll") {
+    val log = new EventLog(spark, Files.createTempDirectory("graft-src-redial").toString)
+    val srv1 = PushNet.server(log, bindHost = "127.0.0.1")
+    val port = srv1.boundPort
+    val ckpt = Files.createTempDirectory("graft-src-redial-ckpt").toString
+    val got = mutable.Set.empty[Long]
+    val q = spark.newSession().readStream
+      .format("graft-log")
+      .option("path", log.path)
+      .option("pushHost", "127.0.0.1")
+      .option("pushPort", port.toString)
+      .option("pollMs", "3600000") // far above every wait below: only push advances
+      .load()
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val seqs = batch.select("sequence").collect().map(_.getLong(0))
+        got.synchronized { got ++= seqs; () }
+      }
+      .start()
+    // The push feed registers asynchronously and a tickle published
+    // before that is lost by contract, so produce one record at a time
+    // until a tickle lands; every produced row must then arrive.
+    var produced = 0L
+    def produceUntilTickled(label: String): Unit = {
+      val tick0 = GraftLogSource.ticklesDelivered(log.path)
+      val deadline = System.currentTimeMillis() + 60000L
+      while (GraftLogSource.ticklesDelivered(log.path) == tick0 &&
+        System.currentTimeMillis() < deadline) {
+        log.produce("s0", "seg0", records(produced + 1, 1), 1000L + produced)
+        produced += 1
+        val wait = System.currentTimeMillis() + 1000L
+        while (GraftLogSource.ticklesDelivered(log.path) == tick0 &&
+          System.currentTimeMillis() < wait) Thread.sleep(20)
+      }
+      assert(GraftLogSource.ticklesDelivered(log.path) > tick0, s"$label: no push tickle delivered")
+      val want = produced.toInt
+      awaitUntil(60000L, s"$label got=${got.synchronized(got.size)} exc=${q.exception}")(
+        got.synchronized(got.size) == want)
+    }
+    try {
+      produceUntilTickled("before restart")
+      srv1.close()
+      val srv2 = PushNet.server(log, port = port, bindHost = "127.0.0.1")
+      try {
+        produceUntilTickled("after restart")
+        assert(got.synchronized(got.toSet) == (1L to produced).toSet)
+      } finally srv2.close()
+    } finally {
+      q.stop()
+      srv1.close()
+    }
+  }
+
   test("spaceWatermark offset codec roundtrips hostile space names, stable json") {
     val m = Map("sp a/ce" -> 42L, "z;x" -> 7L, "a\tb" -> 1L)
     val json = GraftLogSource.encodeSpaceOffset(m)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import graft.log.{EventLog, PushNet}
+import graft.log.{EventLog, PushNet, PushNetSubscriber}
 import graft.model.{Record, SegmentStatus}
 
 /** Network push transport: produce acks cross the process boundary over
@@ -639,5 +639,61 @@ class PushNetSpec extends SparkSpec {
       awaitUntil()(got.synchronized(got.size) == 1)
       assert(srv.rejectedCount == 0L)
     } finally { sub.close(); srv.close() }
+  }
+
+  // ---- readiness: the greeting alone does not prove a channel is
+  // matched server-side; a session counts once every channel has its #ok
+
+  /** Run `open` against a fake server that greets at once, reads the
+    * client's `#sub <id>`, and holds back `#ok` until the not-ready
+    * assertions are done. */
+  private def assertReadyOnlyAfterOk(label: String)(open: Int => PushNetSubscriber): Unit = {
+    val fake = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    fake.setSoTimeout(10000)
+    val client = open(fake.getLocalPort)
+    try {
+      val s = fake.accept()
+      try {
+        s.setSoTimeout(10000)
+        val in = new java.io.BufferedReader(
+          new java.io.InputStreamReader(s.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
+        val out = new java.io.BufferedWriter(
+          new java.io.OutputStreamWriter(s.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
+        def send(line: String): Unit = { out.write(line); out.newLine(); out.flush() }
+        send("#hello")
+        val id = Iterator.continually(in.readLine()).takeWhile(_ != null)
+          .find(_.startsWith("#sub ")).map(_.split(' ')(1))
+        assert(id.isDefined, s"$label: the client never registered its channel")
+        assert(!client.awaitReady(300), s"$label: ready on #hello before #ok")
+        assert(client.sessionCount == 0L, s"$label: session counted before #ok")
+        send(s"#ok ${id.get}")
+        assert(client.awaitReady(), s"$label: #ok must complete the session")
+        assert(client.awaitSessions(1) && client.sessionCount == 1L)
+      } finally s.close()
+    } finally { client.close(); fake.close() }
+  }
+
+  test("readiness: a session counts only after #hello AND every registered channel's #ok") {
+    assertReadyOnlyAfterOk("connect")(port => PushNet.connect("127.0.0.1", port) { _ => () })
+    assertReadyOnlyAfterOk("mux") { port =>
+      val mux = PushNet.mux("127.0.0.1", port)
+      mux.subscribe(Some("s0")) { _ => () }
+      mux
+    }
+  }
+
+  test("a refused connect returns a client that is never ready and closes promptly") {
+    val dead = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val port = dead.getLocalPort
+    dead.close() // nothing listens on `port` now
+    val sub = PushNet.connect("127.0.0.1", port) { _ => () }
+    try {
+      assert(!sub.awaitReady(500))
+      assert(sub.sessionCount == 0L)
+    } finally {
+      val t0 = System.nanoTime()
+      sub.close()
+      assert((System.nanoTime() - t0) / 1000000L < 5000L, "close() must not hang")
+    }
   }
 }
