@@ -1,145 +1,143 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.log.EventLog
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
+import scala.collection.mutable
+
+/** Benchmark main: runs every registered query except
+  * [[Bench.Excluded]], in name order, on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}. Each query is
   * executed to completion through the noop sink (full plan, no driver
   * collect, no disk write skew). */
 object Bench {
 
-  /** Every registered query, streams-core first (SURVEY §6).
-    * (q_dedup_clusters is intentionally absent: its clustering fixpoint
-    * is measured inside q_pipeline_e2e, which also covers shingling,
-    * minhash, quality, and sampling in one composed plan — expect that
-    * line to cost roughly the sum of its stages.) */
-  val Headline: Seq[String] = Seq(
-    "q_get_spaces", "q_get_segments", "q_peek", "q_segment_status",
-    "q_consume_segment", "q_consume_space", "q_consume_space_offset",
-    "q_enumerate_space", "q_consume_multi", "q_offsets",
-    "q_produce_validate", "q_trx_chunks",
-    "q1_agg", "q3_join", "q5_join",
-    "q_sessionize", "q_debounce", "q_window_tumbling", "q_window_sliding",
-    "q_asof_join",
-    "q_range_join", "q_running_sum",
-    "q_topk_per_group", "q_semi_join", "q_anti_join", "q_distinct_users",
-    "q_approx_distinct", "q_percentiles", "q_approx_percentiles",
-    "q_hll_rollup",
-    "q_event_deltas", "q_ohlc_bars", "q_twap", "q_ema", "q_transitions",
-    "q_attribution", "q_attribution_u", "q_rfm", "q_benford", "q_regression", "q_cume_dist", "q_retention", "q_group_stats",
-    "q_json_extract", "q_funnel", "q_rollup", "q_cube", "q_grouping_sets",
-    "q_share", "q_scd2", "q_pivot",
-    "q_ntile", "q_nearest_event", "q_resample", "q_key_profile",
-    "q_rolling_count", "q_winsorize", "q_mad",
-    "q_streaks", "q_concurrency", "q_autocorr", "q_cusum", "q_pettitt", "q_spc_days",
-    "q_seasonality", "q_ab_test", "q_interpolate", "q_funnel_latency",
-    "q_ks_test", "q_psi_drift", "q_mwu_drift", "q_basket_pairs", "q_fulfillment",
-    "q_small_qty", "q_chi2_independence", "q_source_entropy", "q_rolling_active",
-    "q_skyline", "q_ref_integrity", "q_gini",
-    "q_new_returning", "q_stickiness", "q_hhi", "q_holt", "q_theta_forecast",
-    "q_audience_overlap",
-    "q_funnel_window", "q_wow_growth", "q_cohort_ltv", "q_seasonal_decompose",
-    "q_stl_anomaly", "q_top_supplier", "q_waiting_suppliers",
-    "q_bootstrap_ci", "q_abc_analysis", "q_decile_migration",
-    "q_custdist", "q_returned_revenue", "q_nation_trade", "q_market_share",
-    "q_profit", "q_promo_share", "q_priority_exists", "q_large_orders",
-    "q_disjunct_revenue", "q_min_cost_supplier", "q_important_parts",
-    "q_idle_rich", "q_dominant_supplier", "q_late_lines",
-    "q_welch_ttest", "q_nelson_aalen", "q_mann_kendall", "q_theil_sen", "q_churn_rate",
-    "q_token_fertility", "q_forecast_eval", "q_cuped", "q_kcore",
-    "q_hazard_curve", "q_embed_cov", "q_pca_top",
-    "q_mix_shift", "q_runs_test", "q_mahalanobis", "q_entry_exit",
-    "q_funnel_any", "q_dup_token_share", "q_temp_mix", "q_heaps_law",
-    "q_customer_lifespan", "q_elasticity", "q_attribution_decay",
-    "q_attribution_markov", "q_attribution_shapley",
-    "q_cluster_sizes", "q_seasonal_strength",
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_ngram", "q_dedup_simhash", "q_dedup_simhash_wide", "q_dup_rate_by_source",
-    "q_dedup_embed", "q_dedup_embed_hi", "q_dedup_keep_best", "q_quality_shrunk",
-    "q_ann_topk", "q_ann_lsh", "q_ann_mips", "q_ann_filtered", "q_ann_ivf", "q_ann_ivf_stored",
-    "q_hard_negatives",
-    "q_ann_recall", "q_ann_recall_pq", "q_ann_recall_ivf", "q_ann_recall_mips",
-    "q_ann_pq", "q_ann_ivfpq", "q_ann_ivfpq_stored", "q_ann_ivfpq_deleted",
-    "q_ann_recall_ivfpq",
-    "q_ann_recall_ivfpq_drift",
-    "q_ivf_probe_curve", "q_ivfpq_shortlist_curve",
-    "q_seq_patterns",
-    "q_lang_id", "q_text_quality", "q_gopher_rules", "q_token_count", "q_domain_report",
-    "q_url_dedup", "q_mirror_detect", "q_lang_purity",
-    "q_normalize",
-    "q_vocab_topk",
-    "q_inverted_index", "q_bm25", "q_rrf_fusion", "q_pii_audit", "q_journeys",
-    "q_tfidf_terms", "q_fingerprint", "q_winnow", "q_winnow_eval",
-    "q_winnow_eval_sampled", "q_repetition", "q_ngram_counts",
-    "q_heavy_hitters", "q_cms_counts", "q_passage_dedup", "q_line_dedup", "q_dup_rank",
-    "q_quality_model", "q_score_auc", "q_corpus_shuffle", "q_quantize_embed", "q_html_strip",
-    "q_profile", "q_source_overlap", "q_source_divergence", "q_script_profile", "q_lm_score",
-    "q_fix_mojibake",
-    "q_token_budget", "q_pack", "q_chunk", "q_bpe_tokens", "q_bpe_train",
-    "q_pmi_terms",
-    "q_compress_ratio",
-    "q_source_report",
-    "q_kmeans", "q_semdedup", "q_dup_spans", "q_dedup_incr", "q_dup_degree",
-    "q_triangles", "q_lsh_eval", "q_containment", "q_label_sim", "q_shard_rendezvous",
-    "q_asset_stats", "q_doc_sample", "q_weighted_sample", "q_snapshot_diff",
-    "q_merge_upsert", "q_vocab_coverage", "q_syllables", "q_embed_stats",
-    "q_split_leakage", "q_stratified_sample",
-    "q_len_histogram",
-    "q_source_mix", "q_contamination", "q_contamination_bloom", "q_zorder",
-    "q_hilbert",
-    "q_lift_table", "q_calibration", "q_langid_eval", "q_expectations",
-    "q_graph_bfs", "q_distinctive_terms", "q_snm_dedup", "q_embed_outliers",
-    "q_dup_graph_report", "q_dup_source_overlap", "q_dup_jaccard_hist",
-    "q_ndcg", "q_basket_rules", "q_cc_bigstar",
-    "q_kmv_sketch", "q_kmv_overlap", "q_kaplan_meier", "q_mutual_info", "q_holt_winters",
-    "q_filtered_revenue", "q_supplier_part_types",
-    "q_anova", "q_kruskal_wallis", "q_cochran_armitage",
-    "q_page_hinkley", "q_ccf", "q_fano",
-    "q_gtest_terms", "q_graph_assortativity", "q_spearman",
-    "q_cohens_kappa", "q_fuzzy_join",
-    "q_kendall_tau", "q_power_law", "q_theil_index", "q_binseg",
-    "q_tukey_pairs", "q_levene", "q_mk_seasonal", "q_logrank", "q_dup_modularity",
-    "q_fdr_bh", "q_granger", "q_uplift_ipw",
-    "q_ewma_chart", "q_jonckheere", "q_friedman", "q_did", "q_croston",
-    "q_ccnet_buckets", "q_contam_overlap", "q_ivf_balance", "q_common_neighbors", "q_common_neighbors_wide",
-    "q_jl_project", "q_simhash_eval", "q_simhash_eval_wide",
-    "q_simhash_eval_sampled",
-    "q_pipeline_e2e")
+  /** Registered queries the board does not run. q_dedup_clusters: its
+    * clustering fixpoint is measured inside q_pipeline_e2e, which also
+    * covers shingling, minhash, quality, and sampling in one composed
+    * plan — expect that line to cost roughly the sum of its stages. */
+  val Excluded: Set[String] = Set("q_dedup_clusters")
+
+  /** SparkContext local property naming the metric pass a job runs for;
+    * [[Counters]] attributes scheduler events by it. */
+  val TagProperty = "graft.bench.tag"
+
+  /** Scheduler counters of one tag. */
+  final case class Stats(
+      jobs: Long = 0L,
+      stages: Long = 0L,
+      tasks: Long = 0L,
+      taskMs: Long = 0L,
+      shuffleWriteBytes: Long = 0L,
+      shuffleReadBytes: Long = 0L,
+      spillBytes: Long = 0L)
+
+  /** Listener summing jobs, completed stages, tasks, executor run time,
+    * shuffle bytes and disk spill per [[TagProperty]] value: the
+    * "overhead-bound or compute-bound?" breakdown next to each wall time.
+    * A job carries the tag of the thread that submitted it (Spark copies
+    * local properties into the threads AQE broadcasts and subqueries run
+    * on); its stages and their tasks inherit the tag of the job that
+    * first lists them. Events arrive on the async listener bus, so a
+    * tag's counts are final only once the bus has drained — Bench reads
+    * them after `spark.stop()`. */
+  final class Counters extends SparkListener {
+    private val stageTag = mutable.HashMap.empty[Int, String]
+    private val byTag = mutable.HashMap.empty[String, Stats]
+
+    private def update(tag: String)(f: Stats => Stats): Unit =
+      byTag(tag) = f(byTag.getOrElse(tag, Stats()))
+
+    def apply(tag: String): Stats = synchronized(byTag.getOrElse(tag, Stats()))
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      Option(j.properties).flatMap(p => Option(p.getProperty(TagProperty))).foreach { tag =>
+        update(tag)(c => c.copy(jobs = c.jobs + 1))
+        j.stageIds.foreach(id => stageTag.getOrElseUpdate(id, tag))
+      }
+    }
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
+      stageTag.get(s.stageInfo.stageId).foreach(update(_)(c => c.copy(stages = c.stages + 1)))
+    }
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
+      stageTag.get(t.stageId).foreach { tag =>
+        val m = t.taskMetrics
+        update(tag) { c =>
+          if (m == null) c.copy(tasks = c.tasks + 1)
+          else
+            c.copy(
+              tasks = c.tasks + 1,
+              taskMs = c.taskMs + m.executorRunTime,
+              shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+              shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+              spillBytes = c.spillBytes + m.diskBytesSpilled)
+        }
+      }
+    }
+  }
+
+  /** The best pass of one metric: wall seconds, the GC time and process
+    * CPU of that same pass, and its [[TagProperty]] tag. */
+  final case class Best(seconds: Double, gcMs: Long, cpuMs: Long, tag: String)
+
+  /** Best-of-passes record per metric name. Per-query GC time and process
+    * CPU ride along with the wall time, from the SAME pass that produced
+    * the best-of wall number: the marathon-vs-quiet gap question ("host
+    * steal or plan regression?") becomes mechanical — a query whose wall
+    * inflates while cpu_ms stays flat was descheduled, one whose cpu_ms
+    * inflates grew work. */
+  final class Board(sc: SparkContext) {
+    private val best = mutable.HashMap.empty[String, Best]
+    private var runs = 0
+    private val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+    private val osBean =
+      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+        case b: com.sun.management.OperatingSystemMXBean => Some(b)
+        case _ => None
+      }
+    private def gcMsNow(): Long = {
+      var s = 0L
+      gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
+      s
+    }
+    private def cpuNsNow(): Long = osBean.map(_.getProcessCpuTime).getOrElse(0L)
+
+    /** Best pass of `name`; None = no successful pass yet. */
+    def apply(name: String): Option[Best] = best.get(name)
+
+    /** Times one pass of `name` with its jobs tagged for [[Counters]].
+      * Returns whether `body` completed. A FAILED pass never records a
+      * wall time: a fast failure would masquerade as the best-of minimum
+      * (observed: an OOM'd sf100 pass recorded 0.011 s over a successful
+      * 229 s pass). */
+    def time(name: String)(body: => Unit): Boolean = {
+      runs += 1
+      val tag = s"$name#$runs"
+      val g0 = gcMsNow()
+      val c0 = cpuNsNow()
+      val t0 = System.nanoTime()
+      sc.setLocalProperty(TagProperty, tag)
+      val ok =
+        try { body; true }
+        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
+        finally sc.setLocalProperty(TagProperty, null)
+      val wall = (System.nanoTime() - t0) / 1e9
+      if (ok && best.get(name).forall(wall < _.seconds))
+        best(name) = Best(wall, gcMsNow() - g0, (cpuNsNow() - c0) / 1000000L, tag)
+      ok
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions ∝ input bytes by default (fixed partitions over
-    // 100× the rows make every per-partition hash build / sort run 100×
-    // oversized — the measured sf100 OOM class): one metadata walk of
-    // the input dir, floor = cores, so the whole four-leg board
-    // (sf0.01…sf10) keeps its measured all-cores plans and the 19 GiB
-    // fifth decade lands at ≥ the probe convention's 256 without anyone
-    // knowing the env var. The env var stays as the explicit override.
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      graft.operators.AutoPartitions
-        .derive(graft.operators.AutoPartitions.dirBytes(sfDir), cpus.toInt)
-        .toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      // n-scaling joins (the PPJoin prefix/freq joins) are UNHINTED:
-      // sort-merge in the static plan (spills — survives any decade),
-      // converted back to the fast shuffled-hash join at runtime only
-      // when AQE measures every partition's map output under this
-      // threshold. A pinned shuffle_hash hint here OOM'd at sf100
-      // ("Can't acquire 256 MiB to build hash relation").
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // local single-file tables: smaller splits so the scan stage uses
-      // the cores (the 128m default gives these files 1-3 tasks). A real
-      // cluster against TB-scale inputs keeps the default.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, sfDir)
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
+    val board = new Board(spark.sparkContext)
 
     // JVM/codegen warmup on the smallest table so the first measured
     // query does not pay one-time session costs.
@@ -157,45 +155,11 @@ object Bench {
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
     def keep(name: String): Boolean =
       filter.forall(_.pattern.matcher(name).matches())
-    // Per-query GC time and process CPU ride along with the wall time,
-    // from the SAME pass that produced the best-of wall number: the
-    // marathon-vs-quiet gap question ("host steal or plan regression?")
-    // becomes mechanical — a query whose wall inflates while cpu_ms
-    // stays flat was descheduled, one whose cpu_ms inflates grew work.
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMsNow(): Long = {
-      var s = 0L
-      gcBeans.forEach(b => s += math.max(0L, b.getCollectionTime))
-      s
-    }
-    val osBean =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean => Some(b)
-        case _ => None
-      }
-    def cpuNsNow(): Long = osBean.map(_.getProcessCpuTime).getOrElse(0L)
 
-    val names = Headline.filter(SparkEntry.queries.contains).filter(keep)
-    val times = Array.fill(names.size)(Double.MaxValue)
-    val gcMs = Array.fill(names.size)(0L)
-    val cpuMs = Array.fill(names.size)(0L)
-    for (_ <- 1 to passes; (name, i) <- names.zipWithIndex) {
+    val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(Excluded).filter(keep)
+    for (_ <- 1 to passes; name <- names) {
       val fn = SparkEntry.queries(name)
-      val g0 = gcMsNow()
-      val c0 = cpuNsNow()
-      val t0 = System.nanoTime()
-      // a FAILED pass must never record a wall time: a fast failure
-      // would masquerade as the best-of minimum (observed: an OOM'd
-      // sf100 pass recorded 0.011 s over a successful 229 s pass)
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (ok && wall < times(i)) {
-        times(i) = wall
-        gcMs(i) = gcMsNow() - g0
-        cpuMs(i) = (cpuNsNow() - c0) / 1000000L
-      }
+      board.time(name) { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
     }
     // Storage-layer throughput (the reference is an event store — its
     // core metric is produce/consume, not just the query layer): produce
@@ -210,34 +174,6 @@ object Bench {
     // store tier's scaling evidence, not a per-round regression row —
     // best-of-3 at 10M rows would dominate the round bench's wall time.
     val store10m = sys.env.contains("SPARK_GRAFT_STORE_10M")
-    val storeNames = Seq(
-      "store_produce_100k", "store_consume_segment", "store_consume_space",
-      "store_peek_hot", "store_compact_100k",
-      "store_produce_1m", "store_consume_segment_1m", "store_consume_space_1m",
-      "store_compact_1m") ++
-      (if (store10m)
-        Seq(
-          "store_produce_10m", "store_consume_segment_10m",
-          "store_consume_space_10m", "store_compact_10m")
-      else Seq.empty)
-    val storeTimes = Array.fill(storeNames.size)(Double.MaxValue)
-    val storeGcMs = Array.fill(storeNames.size)(0L)
-    val storeCpuMs = Array.fill(storeNames.size)(0L)
-    def timeStore(i: Int)(body: => Unit): Unit = {
-      val g0 = gcMsNow()
-      val c0 = cpuNsNow()
-      val t0 = System.nanoTime()
-      body
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (wall < storeTimes(i)) {
-        storeTimes(i) = wall
-        storeGcMs(i) = gcMsNow() - g0
-        storeCpuMs(i) = (cpuNsNow() - c0) / 1000000L
-      }
-    }
-    // consume depends on produce, so the block runs whole — the filter
-    // only selects which store metrics are reported (and whether the
-    // block runs at all).
     def storeRecords(n: Long) = {
       import spark.implicits._
       spark
@@ -250,58 +186,58 @@ object Bench {
           org.apache.spark.sql.functions.typedLit(Map.empty[String, String]).as("metadata"))
         .as[graft.model.Record]
     }
-    def rmTree(dir: String): Unit =
-      java.nio.file.Files
-        .walk(java.nio.file.Paths.get(dir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    for (_ <- 1 to passes; if storeNames.exists(keep)) {
+    def rmTree(dir: String): Unit = {
+      val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try
+        stream
+          .sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.delete(p))
+      finally stream.close()
+    }
+    // The store steps, each reading the log its block's produce wrote.
+    val consumeSegment: EventLog => Unit =
+      _.consumeSegment("bench", "seg0").write.format("noop").mode("overwrite").save()
+    val consumeSpace: EventLog => Unit =
+      _.consumeSpace("bench").write.format("noop").mode("overwrite").save()
+    // hot peek: served from the produce-warmed offset cache — zero Spark
+    // jobs (reference: server/cache.go); 1000 calls timed so the metric
+    // is measurable at all
+    val peekHot: EventLog => Unit = log => {
+      var i = 0
+      while (i < 1000) { log.peek("bench", "seg0"); i += 1 }
+    }
+    // compaction: the produce wrote one file per 10k-row chunk, so
+    // compact has real small-file work to do at every size
+    val compact: EventLog => Unit = _.compact("bench")
+    case class StoreBlock(rows: Long, produce: String, steps: Seq[(String, EventLog => Unit)]) {
+      val names: Seq[String] = produce +: steps.map(_._1)
+    }
+    val storeBlocks = Seq(
+      StoreBlock(100000L, "store_produce_100k", Seq(
+        "store_consume_segment" -> consumeSegment, "store_consume_space" -> consumeSpace,
+        "store_peek_hot" -> peekHot, "store_compact_100k" -> compact)),
+      StoreBlock(1000000L, "store_produce_1m", Seq(
+        "store_consume_segment_1m" -> consumeSegment, "store_consume_space_1m" -> consumeSpace,
+        "store_compact_1m" -> compact))) ++
+      (if (store10m)
+        Seq(StoreBlock(10000000L, "store_produce_10m", Seq(
+          "store_consume_segment_10m" -> consumeSegment,
+          "store_consume_space_10m" -> consumeSpace, "store_compact_10m" -> compact)))
+      else Nil)
+    // The steps depend on their block's produce, so a block runs whole —
+    // the filter only selects which store metrics are reported (and
+    // whether the block runs at all). A failed produce skips the rest of
+    // its pass, a failed step records nothing for itself, and the temp
+    // log is removed either way.
+    for (block <- storeBlocks if block.names.exists(keep); _ <- 1 to passes) {
       val dir = java.nio.file.Files.createTempDirectory("graft-bench-log").toString
-      val log = new graft.log.EventLog(spark, dir)
-      timeStore(0) { log.produce("bench", "seg0", storeRecords(100000), 1000000L) }
-      timeStore(1) {
-        log.consumeSegment("bench", "seg0").write.format("noop").mode("overwrite").save()
-      }
-      timeStore(2) {
-        log.consumeSpace("bench").write.format("noop").mode("overwrite").save()
-      }
-      // hot peek: served from the produce-warmed offset cache — zero
-      // Spark jobs (reference: server/cache.go); 1000 calls timed so the
-      // metric is measurable at all
-      timeStore(3) {
-        var i = 0
-        while (i < 1000) { log.peek("bench", "seg0"); i += 1 }
-      }
-      // compaction: the produce above wrote one file per 10k-row chunk,
-      // so compact has real small-file work to do at both sizes
-      timeStore(4) { log.compact("bench") }
-      rmTree(dir)
-    }
-    for (_ <- 1 to passes; if storeNames.slice(5, 9).exists(keep)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-bench-log1m").toString
-      val log = new graft.log.EventLog(spark, dir)
-      timeStore(5) { log.produce("bench", "seg0", storeRecords(1000000), 1000000L) }
-      timeStore(6) {
-        log.consumeSegment("bench", "seg0").write.format("noop").mode("overwrite").save()
-      }
-      timeStore(7) {
-        log.consumeSpace("bench").write.format("noop").mode("overwrite").save()
-      }
-      timeStore(8) { log.compact("bench") }
-      rmTree(dir)
-    }
-    for (_ <- 1 to passes; if store10m && storeNames.drop(9).exists(keep)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-bench-log10m").toString
-      val log = new graft.log.EventLog(spark, dir)
-      timeStore(9) { log.produce("bench", "seg0", storeRecords(10000000), 1000000L) }
-      timeStore(10) {
-        log.consumeSegment("bench", "seg0").write.format("noop").mode("overwrite").save()
-      }
-      timeStore(11) {
-        log.consumeSpace("bench").write.format("noop").mode("overwrite").save()
-      }
-      timeStore(12) { log.compact("bench") }
-      rmTree(dir)
+      try {
+        val log = new EventLog(spark, dir)
+        if (board.time(block.produce) {
+            log.produce("bench", "seg0", storeRecords(block.rows), 1000000L)
+          })
+          block.steps.foreach { case (name, step) => board.time(name)(step(log)) }
+      } finally rmTree(dir)
     }
 
     // k-core convergence audit at THIS SF: qKcore peels a FIXED number
@@ -329,34 +265,42 @@ object Bench {
         Some(v)
       } else None
 
-    val results =
-      names.zip(times) ++ storeNames.zip(storeTimes).filter(p => keep(p._1))
+    spark.stop() // drains the listener bus: every counter below is final
+
+    val reported = names ++ storeBlocks.flatMap(_.names).filter(keep)
     // a metric with NO successful pass reports JSON null (and its name in
     // "failed") — an explicit failure marker, never a 0.0 a reader could
     // mistake for a sub-millisecond timing (scaling_table.py /
-    // diff_bench.py both drop null/non-positive entries as unusable)
-    val failed = results.collect { case (k, v) if v == Double.MaxValue => k }
-    val qs = results
-      .map { case (k, v) =>
-        "\"" + k + "\":" + (if (v == Double.MaxValue) "null" else f"$v%.3f")
-      }
-      .mkString("{", ",", "}")
-    val auxNames = names ++ storeNames.filter(keep)
-    val gcJson = auxNames
-      .zip(gcMs ++ storeNames.zipWithIndex.filter(p => keep(p._1)).map(p => storeGcMs(p._2)))
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val cpuJson = auxNames
-      .zip(cpuMs ++ storeNames.zipWithIndex.filter(p => keep(p._1)).map(p => storeCpuMs(p._2)))
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v) if v != Double.MaxValue => v }.sum
+    // diff_bench.py both drop null/non-positive entries as unusable); its
+    // entries in the parallel maps below are null too
+    val failed = reported.filter(board(_).isEmpty)
+    def perMetric(value: Best => String): String =
+      reported
+        .map(k => "\"" + k + "\":" + board(k).fold("null")(value))
+        .mkString("{", ",", "}")
+    def mb(bytes: Long): String = f"${bytes / 1e6}%.3f"
+    val qs = perMetric(b => f"${b.seconds}%.3f")
+    val total = reported.flatMap(board(_)).map(_.seconds).sum
     // Full per-query map goes to a file: with ~100 metrics the one-line
     // form is several KB and the driver's tail capture truncates its
     // FRONT, leaving unparseable JSON (BENCH_r03 "parsed": null). The
     // stdout contract is a SHORT line — and it must be the LAST line.
     // "queries" stays name→seconds (the cross-round comparison format);
-    // gc_ms / cpu_ms are ADDITIVE parallel maps from the best-of pass.
+    // gc_ms / cpu_ms and the scheduler counters (jobs … spill_mb, from
+    // [[Counters]]) are ADDITIVE parallel maps from the best-of pass, and
+    // "cpus" sizes the core budget tools/overhead_share.py divides by.
+    val auxJson = Seq[(String, Best => String)](
+      "gc_ms" -> (_.gcMs.toString),
+      "cpu_ms" -> (_.cpuMs.toString),
+      "jobs" -> (b => counters(b.tag).jobs.toString),
+      "stages" -> (b => counters(b.tag).stages.toString),
+      "tasks" -> (b => counters(b.tag).tasks.toString),
+      "task_ms" -> (b => counters(b.tag).taskMs.toString),
+      "shuffle_write_mb" -> (b => mb(counters(b.tag).shuffleWriteBytes)),
+      "shuffle_read_mb" -> (b => mb(counters(b.tag).shuffleReadBytes)),
+      "spill_mb" -> (b => mb(counters(b.tag).spillBytes)))
+      .map { case (k, value) => s""","$k":${perMetric(value)}""" }
+      .mkString
     val kcJson =
       kcoreConverged.map(v => s""","kcore_converged":$v""").getOrElse("")
     val failedJson =
@@ -371,19 +315,18 @@ object Bench {
         ""","notes":{"store_peek_hot":"cache-hit: ~0s by design (warm driver peek), not a failure sentinel"}"""
       else ""
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"gc_ms":$gcJson,"cpu_ms":$cpuJson$kcJson$failedJson$notesJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$auxJson$kcJson$failedJson$notesJson,"sf":"$sfDir","cpus":$cpus}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
     // The stdout contract line now carries the per-query map itself
     // (round-15, additions-only): the round-14 PERF comparator had
     // per_query/scaling empty and geomean null because the map lived only
     // in BENCH_FULL.json, which the driver does not read. gc_ms/cpu_ms
-    // stay file-only to keep this line as short as possible; it is still
-    // the LAST stdout line.
+    // and the counter maps stay file-only to keep this line as short as
+    // possible; it is still the LAST stdout line.
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_metrics":${results.size},"queries":$qs$kcJson$failedJson$notesJson,"sf":"$sfDir","queries_file":"$outFile"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_metrics":${reported.size},"queries":$qs$kcJson$failedJson$notesJson,"sf":"$sfDir","queries_file":"$outFile"}""")
   }
 }

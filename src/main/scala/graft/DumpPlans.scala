@@ -1,26 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: dump the optimized physical plan of every registered query
-  * (AQE initial plan, SimpleMode) for PLANS.md regeneration:
+/** Dev tool: dump the optimized physical plan (AQE initial plan,
+  * SimpleMode) of every registered query for PLANS.md regeneration, one
+  * `########## <name>` block each (the format tools/merge_plans.py reads):
   *
   *   sbt "runMain graft.DumpPlans /root/testdata/sf0.01 /tmp/plans.txt"
+  *
+  * Query names after the output path dump exactly those queries instead
+  * (before/after plan pairs for one change); the skip list below applies
+  * only to the full dump. The session is [[GraftSession.local]] on 32
+  * cores.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outPath = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32, sfDir)
     val out = new java.io.PrintWriter(outPath)
     // q_dedup_clusters excluded: its driver loop executes eagerly during
     // construction; the per-round join plan is the interesting part and
@@ -62,7 +57,10 @@ object DumpPlans {
       "q_bpe_train", "q_split_leakage", "q_cluster_sizes",
       "q_dup_graph_report", "q_dup_source_overlap", "q_pca_top",
       "q_cc_bigstar", "q_dedup_embed", "q_attribution_markov")
-    for (name <- SparkEntry.queries.keys.toSeq.sorted if !skip(name)) {
+    val names =
+      if (args.length > 2) args.drop(2).toSeq
+      else SparkEntry.queries.keys.toSeq.sorted.filterNot(skip)
+    for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       out.println(s"########## $name")
       out.println(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,27 +19,7 @@ object Verify {
           "(stale oracle_sql.json would shrink the gate); use a fresh dir")
       sys.exit(1)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partitions ∝ input bytes, floor = cores (see Bench.scala — the
-    // same rule, so a deep-decade verify run is sized like its bench)
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      graft.operators.AutoPartitions
-        .derive(graft.operators.AutoPartitions.dirBytes(sfDir), cpus.toInt)
-        .toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // runtime SMJ→SHJ conversion for the unhinted n-scaling joins
-      // (see Bench.scala / Dedup.ngramJaccard)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as ns-Long, normalized
-      // to µs by graft.sources.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name)) {

@@ -8,9 +8,9 @@ package graft.operators
   * relation"), while partitions ∝ bytes keeps the per-task working set
   * in the regime every fence in this repo
   * ([[graft.dedup.Dedup.ShjDocsPerPartitionFence]] etc.) was measured
-  * in. The session builders call [[derive]] with the input directory's
-  * byte size; `SPARK_GRAFT_SHUFFLE_PARTITIONS` stays as the explicit
-  * override.
+  * in. [[graft.GraftSession]] calls [[derive]] with the input
+  * directory's byte size; `SPARK_GRAFT_SHUFFLE_PARTITIONS` stays as the
+  * explicit override.
   */
 object AutoPartitions {
 

@@ -9,24 +9,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
-  val SfDir = "/root/testdata/sf0.001"
+  val SfDir = SparkSpec.SfDir
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // runtime SMJ→SHJ conversion for the unhinted n-scaling joins
-      // (see Bench.scala / Dedup.ngramJaccard)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val SfDir = "/root/testdata/sf0.001"
+
+  /** The mains' session policy ([[GraftSession.local]]) on 4 cores, sized
+    * by the sf0.001 fixture: 4 shuffle partitions. */
+  lazy val session: SparkSession = GraftSession.local(4, SfDir)
 }
