@@ -903,64 +903,45 @@ object Dedup {
     * Returns `(id, comp)` where `comp` is the component's minimum id —
     * `filter(id === comp)` yields the canonical survivors.
     *
-    * Lineage cuts go through [[graft.operators.Materialize.cut]]
-    * (localCheckpoint by default — executor-local blocks, fast, but an
-    * executor loss kills the cached partitions; session checkpoint dir ⇒
-    * reliable). Passing `checkpointDir` here scopes a dir to THIS call:
-    * rounds then cut lineage with RELIABLE `checkpoint()`, surviving
-    * executor loss —
-    * the right 100 TB setting, at the price of one distributed write per
-    * round. Reliable mode leaves one label-table snapshot per round in
-    * `checkpointDir` unless `spark.cleaner.referenceTracking
-    * .cleanCheckpoints=true` lets Spark GC superseded ones — set it (or
-    * clear the dir after the run) for long jobs. The session's previous
-    * checkpoint dir is restored on exit. */
-  def duplicateClusters(
-      pairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.transform(Materialize.cut)
-    try {
-      val edges = cut(
-        pairs
-          .select(col("a_id").as("src"), col("b_id").as("dst"))
-          .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
-      var labels = cut(
-        edges
-          .select(col("src").as("id"))
-          .distinct()
-          .withColumn("comp", col("id")))
-      // the changed-count rides the cut's materialization job as an
-      // observed metric (r15, guide §2.4): one job + one pass per
-      // round instead of cut-then-recount
-      val reliableRound =
-        checkpointDir.isDefined || Materialize.reliableMode(pairs.sparkSession)
-      var changed = 1L
-      while (changed > 0) {
-        val propagated = edges
-          .join(labels.withColumnRenamed("id", "src"), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(min("comp").as("nbr_comp"))
-        val (updated, m) = Materialize.cutObserved(
-          labels
-            .join(propagated, Seq("id"), "left")
-            .select(
-              col("id"),
-              col("comp"),
-              least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("next")),
-          reliableRound,
-          "changed" -> count(when(col("next") < col("comp"), 1)))
-        changed = m("changed").asInstanceOf[Long]
-        labels = updated.select(col("id"), col("next").as("comp"))
-      }
-      labels
-    } finally {
-      if (checkpointDir.isDefined)
-        prevCheckpointDir.foreach(sc.setCheckpointDir)
+    * Lineage cuts (one per round) go through
+    * [[graft.operators.Materialize.cut]], so a session checkpoint dir
+    * makes the rounds survive executor loss — the right 100 TB setting,
+    * at the price of one distributed write per round. Reliable mode
+    * leaves one label-table snapshot per round in that dir unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` lets Spark
+    * GC superseded ones — set it (or clear the dir after the run) for
+    * long jobs. */
+  def duplicateClusters(pairs: DataFrame): DataFrame = {
+    val edges = Materialize.cut(
+      pairs
+        .select(col("a_id").as("src"), col("b_id").as("dst"))
+        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
+    var labels = Materialize.cut(
+      edges
+        .select(col("src").as("id"))
+        .distinct()
+        .withColumn("comp", col("id")))
+    // the changed-count rides the cut's materialization job as an
+    // observed metric (r15, guide §2.4): one job + one pass per
+    // round instead of cut-then-recount
+    var changed = 1L
+    while (changed > 0) {
+      val propagated = edges
+        .join(labels.withColumnRenamed("id", "src"), "src")
+        .groupBy(col("dst").as("id"))
+        .agg(min("comp").as("nbr_comp"))
+      val (updated, m) = Materialize.cutObserved(
+        labels
+          .join(propagated, Seq("id"), "left")
+          .select(
+            col("id"),
+            col("comp"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("next")),
+        "changed" -> count(when(col("next") < col("comp"), 1)))
+      changed = m("changed").asInstanceOf[Long]
+      labels = updated.select(col("id"), col("next").as("comp"))
     }
+    labels
   }
 
   /** Apply dedup decisions: keep only each component's canonical doc.
@@ -1503,9 +1484,8 @@ object Dedup {
             concat(col("a").cast("string"), lit(":"), col("b").cast("string")))
             % lit(1000000007L)),
         lit(0L)))
-    val reliableStat = Materialize.reliableMode(pairs.sparkSession)
     def cutStat(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val (out, m) = Materialize.cutObserved(e, reliableStat, statMetrics: _*)
+      val (out, m) = Materialize.cutObserved(e, statMetrics: _*)
       (out, (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long]))
     }
     val (edges0, prev0) = cutStat(

@@ -1,40 +1,34 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** The library's single lineage-cut / materialization primitive.
   *
   * Multi-stage operators (dedup candidate tables, tf/df tables, pipeline
   * stages) materialize an intermediate exactly once and fan it out to
-  * several consumers. Two modes:
+  * several consumers. The session alone picks the mode:
   *
-  *  - default: `localCheckpoint()` — executor-local blocks, no
-  *    distributed write. Fast, and right for single-node and short jobs,
-  *    but the blocks are pinned to executors and lineage is severed, so
-  *    ONE lost executor fails the job.
-  *  - reliable: when the session has a checkpoint directory configured
-  *    (`sc.setCheckpointDir(...)` on an HDFS/object-store path),
-  *    `checkpoint()` writes the cut to that directory and the job
-  *    survives executor loss — the right setting for long 100 TB runs,
-  *    at the price of one distributed write per cut. Opt out (keep a
-  *    checkpoint dir for other uses but cut locally) with
-  *    `spark.graft.reliableMaterialize=false`.
+  *  - no checkpoint directory: `localCheckpoint()` — executor-local
+  *    blocks, no distributed write. Fast, and right for single-node and
+  *    short jobs, but the blocks are pinned to executors and lineage is
+  *    severed, so ONE lost executor fails the job.
+  *  - a checkpoint directory (`sc.setCheckpointDir(...)` on an
+  *    HDFS/object-store path): `checkpoint()` writes the cut to that
+  *    directory and the job survives executor loss — the right setting
+  *    for long 100 TB runs, at the price of one distributed write per
+  *    cut.
   *
   * Superseded reliable snapshots are GC'd by Spark only with
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true`; otherwise
-  * clear the directory after the run (same contract as
-  * [[graft.dedup.Dedup.duplicateClusters]]).
+  * clear the directory after the run.
   */
 object Materialize {
 
-  /** True when [[cut]] would use a RELIABLE checkpoint for this
-    * session (checkpoint dir configured and not opted out). */
-  def reliableMode(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.sparkContext.getCheckpointDir.isDefined &&
-      spark.conf.get("spark.graft.reliableMaterialize", "true").toBoolean
+  private def reliable(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext.getCheckpointDir.isDefined
 
   def cut(df: DataFrame): DataFrame =
-    if (reliableMode(df.sparkSession)) df.checkpoint() else df.localCheckpoint()
+    if (reliable(df)) df.checkpoint() else df.localCheckpoint()
 
   /** [[cut]] + named aggregate metrics computed over the SAME
     * materialization job via `Dataset.observe` — the fixpoint-loop
@@ -43,28 +37,23 @@ object Materialize {
     * observed metrics ride the checkpoint pass for free (CollectMetrics
     * is a pass-through node whose accumulators are action-exact).
     *
-    * `reliable` selects the checkpoint mode explicitly (callers like
-    * duplicateClusters scope their own dir). In reliable mode the
-    * metrics come from a follow-up statistic job over the checkpointed
-    * result instead — a reliable RDD checkpoint may re-execute the
-    * plan to write its files, which would double-count observed
-    * accumulators; the follow-up job is the pre-r15 behavior there.
+    * The mode is [[cut]]'s. In reliable mode the metrics come from a
+    * follow-up statistic job over the checkpointed result instead — a
+    * reliable RDD checkpoint may re-execute the plan to write its
+    * files, which would double-count observed accumulators; the
+    * follow-up job is the pre-r15 behavior there.
     *
     * Metrics must be aggregates that yield non-null on empty input
     * (`count`, `coalesce(sum(..), 0)`), since the loop reads them as
     * bare longs. */
-  def cutObserved(
-      df: DataFrame,
-      reliable: Boolean,
-      metrics: (String, org.apache.spark.sql.Column)*)
-      : (DataFrame, Map[String, Any]) = {
+  def cutObserved(df: DataFrame, metrics: (String, Column)*): (DataFrame, Map[String, Any]) = {
     val named = metrics.map { case (n, c) => c.as(n) }
-    if (reliable) {
+    if (reliable(df)) {
       val out = df.checkpoint()
       val r = out.agg(named.head, named.tail: _*).head()
       (out, metrics.map(_._1).zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap)
     } else {
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val out = df.observe(obs, named.head, named.tail: _*).localCheckpoint()
       (out, obs.get)
     }

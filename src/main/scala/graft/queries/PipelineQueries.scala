@@ -348,43 +348,23 @@ object PipelineQueries {
         sum("sz").as("n_docs"))
       .transform(sortSmall(_, "cluster_size"))
 
-  /** The near-dup pair table as a first-class MATERIALIZED stage,
-    * built at most once per (session, sfDir): the production shape at
-    * corpus scale is pairs-once → many graph consumers, not one
-    * shingle→minhash→band rebuild per report. Consumers that model the
-    * composed dashboard ([[qDupGraphReport]], [[qDupSourceOverlap]])
-    * attach to this shared cut subtree; the standalone per-operator
-    * queries keep their own builds so each CORRECTNESS row stays an
-    * independent end-to-end check. */
-  private val dupPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Drop every memoized pair table. [[dupPairs]] assumes each sfDir is
-    * written at most once per session (true for the driver's fixed
-    * testdata); callers that REWRITE data under a cached path
-    * (regenerated fixtures, long-lived notebook sessions) must call this
-    * first or consumers silently read the stale cut — and clearing also
-    * releases the pinned localCheckpoint blocks. */
-  def clearDupPairsCache(): Unit = {
-    dupPairsCache.values.forEach { df =>
-      try df.unpersist(blocking = false)
-      catch { case _: Throwable => () } // session may already be stopped
-    }
-    dupPairsCache.clear()
-  }
-
+  /** The near-dup pair table as a first-class MATERIALIZED stage, cut
+    * once per call: the production shape is pairs-once → many graph
+    * consumers, not one shingle→minhash→band rebuild per consumer. The
+    * composed dashboard keys ([[qDupGraphReport]], [[qDupSourceOverlap]],
+    * [[qDupJaccardHist]]) and [[kcoreConverged]] each build it inside
+    * their own call, so a result is a function of the tables as they
+    * stand; the standalone per-operator queries keep their own builds so
+    * each CORRECTNESS row stays an independent end-to-end check. */
   private def dupPairs(s: SparkSession, d: String): DataFrame =
-    dupPairsCache.computeIfAbsent(
-      (s, d),
-      _ =>
-        Dedup
-          .minhashLsh(
-            docs(s, d),
-            k = 3,
-            numHashes = MinhashSeeds,
-            bands = MinhashBands,
-            threshold = 0.8)
-          .transform(graft.operators.Materialize.cut))
+    Dedup
+      .minhashLsh(
+        docs(s, d),
+        k = 3,
+        numHashes = MinhashSeeds,
+        bands = MinhashBands,
+        threshold = 0.8)
+      .transform(graft.operators.Materialize.cut)
 
   /** Composed duplicate-graph dashboard: degrees, per-node triangle
     * counts, k-core survivors (in-core degree), and the cluster-size
@@ -434,10 +414,10 @@ object PipelineQueries {
   /** Per-source duplicate-cluster overlap: for each source pair, how
     * many near-dup families contain documents from BOTH — the "which
     * feeds share templates with which" report a curation team reads
-    * before choosing per-source dedup policy. Rides the SAME
-    * materialized pair table as [[qDupGraphReport]] (no second minhash
-    * rebuild in-session); membership is (family, source)-distinct so
-    * the self-join is family-count-sized, never corpus-sized. */
+    * before choosing per-source dedup policy. Builds the same
+    * materialized pair table as [[qDupGraphReport]] ([[dupPairs]]);
+    * membership is (family, source)-distinct so the self-join is
+    * family-count-sized, never corpus-sized. */
   def qDupSourceOverlap(s: SparkSession, d: String): DataFrame = {
     val memb = Dedup
       .duplicateClusters(dupPairs(s, d))
@@ -462,7 +442,7 @@ object PipelineQueries {
     * the verified Jaccard): the "how near are my near-dups" intake
     * panel — a mass at 0.80–0.84 means threshold-sensitive marginal
     * pairs (tune bands before trusting counts); a mass at 0.96–1.00
-    * means true clones. Rides the memoized [[dupPairs]] table; binning
+    * means true clones. Reads the [[dupPairs]] table; binning
     * is integer percent (floor(j·100+0.5)) so bucket edges are exact in
     * both engines. */
   def qDupJaccardHist(s: SparkSession, d: String): DataFrame =
@@ -693,49 +673,37 @@ object PipelineQueries {
        |FROM ivftop
        |ORDER BY query_id, rank""".stripMargin
 
-  // one index build per (process, dataset): the serving shape builds
-  // ONCE and probes many times, so repeated calls (bench passes) must
-  // time the probe, not a rebuild. computeIfAbsent blocks a concurrent
-  // second builder; the process-unique token (pid@host) keeps two
-  // processes benching the same dataset from clobbering each other's
-  // overwrite-mode writes under the shared java.io.tmpdir.
-  private val ivfStoredBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val ivfRunToken =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "")
-
-  /** Tmpdir hygiene: the stored indexes are process-scoped scratch
-    * (keyed pid@host), so delete them at JVM exit — without this every
-    * bench/verify process leaves orphaned `graft_ivf_*` /
-    * `graft_ivfpq_*` trees under java.io.tmpdir. Best-effort (kill -9
-    * skips the hook; the pid@host token keeps a stale leftover from
-    * ever colliding with a live run). Referenced (hence registered)
-    * by the first stored-index build of the process. */
-  private lazy val ivfStoredCleanupHook: Unit = {
+  /** Process scratch root for the stored-index keys, created on first
+    * use; one shutdown hook deletes it at JVM exit (best-effort: kill -9
+    * skips the hook, and a leftover never collides with a live run,
+    * since the root and every index dir under it are fresh temp dirs). */
+  private lazy val storedIndexRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_ann_")
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete(); ()
     }
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      ivfStoredBuilt.keySet().forEach(p => rm(new java.io.File(p)))))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rm(root.toFile)))
+    root
   }
+
+  /** A fresh directory for one call's stored index. The stored-index
+    * keys build their index on every call, so a result always reflects
+    * the tables as they stand and a key's wall time is build + probe;
+    * the probe reads the index lazily, so the dir lives until exit. */
+  private def freshIndexDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(storedIndexRoot, prefix).toString
 
   /** IVF ANN against a PERSISTED index — the serving shape at 100 TB:
     * [[Ann.ivfBuild]] writes the quantizer + cell-partitioned lists to
-    * parquet ONCE PER PROCESS+DATASET (first call builds, later calls
-    * reuse the stored index); [[Ann.ivfProbe]] then plans against the
-    * stored index with no re-training and a scan pruned to the probed
-    * cells' files (a literal cell-id filter from a control-plane
-    * collect). Same quantizer + assignment rule as [[qAnnIvf]] →
-    * identical results, checked by the identical oracle. */
+    * parquet (a fresh index per call); [[Ann.ivfProbe]] then plans
+    * against the stored index with no re-training and a scan pruned to
+    * the probed cells' files (a literal cell-id filter from a
+    * control-plane collect). Same quantizer + assignment rule as
+    * [[qAnnIvf]] → identical results, checked by the identical oracle. */
   def qAnnIvfStored(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_ivf_${ivfRunToken}_${Hashing.md5LongJvm(d)}").getAbsolutePath
-    ivfStoredCleanupHook
-    ivfStoredBuilt.computeIfAbsent(
-      path,
-      p => { Ann.ivfBuild(corpusSide(s, d), ivfCents(s, d), p); p })
+    val path = freshIndexDir("graft_ivf_")
+    Ann.ivfBuild(corpusSide(s, d), ivfCents(s, d), path)
     Ann
       .ivfProbe(s, path, querySide(s, d), k = 5, nProbe = IvfProbes)
       .transform(sortSmall(_, "query_id", "rank"))
@@ -770,15 +738,10 @@ object PipelineQueries {
     * [[Ann.pqTrain]]) — fixed and replayed by the DuckDB oracle. */
   val PqTrainIters = 2
 
-  // train once per (process, dataset) — the serving convention: the
-  // codebook is the INDEX, scoring is the query. Pure driver-side state
-  // (no disk), so no process token is needed (unlike ivfStoredBuilt).
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Ann.PqCodebook]()
+  /** The trained PQ codebook — the serving convention's INDEX (scoring
+    * is the query), trained inside each call that scores with it. */
   private def pqCb(s: SparkSession, d: String): Ann.PqCodebook =
-    pqCbCache.computeIfAbsent(
-      d,
-      _ => Ann.pqTrain(corpusSide(s, d), PqM, PqKs, EmbDim, PqTrainIters))
+    Ann.pqTrain(corpusSide(s, d), PqM, PqKs, EmbDim, PqTrainIters)
 
   /** Product-quantization ANN with exact rerank — the third scale path
     * (codes are ~16 B/vector; the candidate scan never touches raw
@@ -884,19 +847,14 @@ object PipelineQueries {
   /** IVF-PQ against a PERSISTED index — the combined route's full
     * serving story: quantizer + cell-partitioned raw `lists/` + a
     * cell-partitioned ~16-byte `codes/` tier + the persisted codebook,
-    * built ONCE per process+dataset ([[Ann.ivfPqBuild]]); probes prune
+    * built fresh per call ([[Ann.ivfPqBuild]]); probes prune
     * BOTH tiers to the probed cells' files and retrain nothing
     * ([[Ann.ivfPqProbe]]). Same quantizer, codebook, and tie rules as
     * [[qAnnIvfPq]] → identical results, checked by the identical
     * oracle (the q_ann_ivf_stored convention). */
   def qAnnIvfPqStored(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_ivfpq_${ivfRunToken}_${Hashing.md5LongJvm(d)}").getAbsolutePath
-    ivfStoredCleanupHook
-    ivfStoredBuilt.computeIfAbsent(
-      path,
-      p => { Ann.ivfPqBuild(corpusSide(s, d), ivfCents(s, d), pqCb(s, d), p); p })
+    val path = freshIndexDir("graft_ivfpq_")
+    Ann.ivfPqBuild(corpusSide(s, d), ivfCents(s, d), pqCb(s, d), path)
     Ann
       .ivfPqProbe(
         s, path, querySide(s, d),
@@ -924,21 +882,13 @@ object PipelineQueries {
     * the output), so shortlist ranks re-close over survivors.
     * Deterministic end to end → full DuckDB oracle. */
   def qAnnIvfPqDeleted(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_ivfpqdel_${ivfRunToken}_${Hashing.md5LongJvm(d)}").getAbsolutePath
-    ivfStoredCleanupHook
-    ivfStoredBuilt.computeIfAbsent(
-      path,
-      p => {
-        Ann.ivfPqBuild(corpusSide(s, d), ivfCents(s, d), pqCb(s, d), p)
-        Ann.ivfPqDelete(
-          s, p,
-          corpusSide(s, d)
-            .select("neighbor_id")
-            .filter(col("neighbor_id") % AnnDeleteMod === AnnDeleteRem))
-        p
-      })
+    val path = freshIndexDir("graft_ivfpqdel_")
+    Ann.ivfPqBuild(corpusSide(s, d), ivfCents(s, d), pqCb(s, d), path)
+    Ann.ivfPqDelete(
+      s, path,
+      corpusSide(s, d)
+        .select("neighbor_id")
+        .filter(col("neighbor_id") % AnnDeleteMod === AnnDeleteRem))
     Ann
       .ivfPqProbe(
         s, path, querySide(s, d),
@@ -2663,9 +2613,9 @@ object PipelineQueries {
     * keeps the query a deterministic straight-line DAG, but at a larger
     * SF a longer degree-<k chain would silently leave non-core nodes in
     * the result — this check makes that observable (Bench runs it at
-    * the bench SF and flags the JSON). Both peel chains ride the
-    * memoized [[dupPairs]] table; the collected survivor sets are
-    * core-sized. */
+    * the bench SF and flags the JSON). Both peel chains read one
+    * [[dupPairs]] table cut inside this call; the collected survivor
+    * sets are core-sized. */
   def kcoreConverged(s: SparkSession, d: String): Boolean = {
     val pairs = dupPairs(s, d)
     def survivors(rounds: Int): Array[String] =

@@ -437,15 +437,18 @@ class DedupAnnApiSpec extends SparkSpec {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = asMap(Dedup.duplicateClusters(pairs))
-    val reliable = asMap(Dedup.duplicateClusters(pairs, Some(ckptDir)))
-    assert(reliable == local)
-    // the reliable mode really wrote cluster-durable round snapshots
-    val wrote = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
-      try s.filter(p => java.nio.file.Files.isRegularFile(p)).count() > 0
-      finally s.close()
-    }
-    assert(wrote)
+    spark.sparkContext.setCheckpointDir(ckptDir)
+    try {
+      val reliable = asMap(Dedup.duplicateClusters(pairs))
+      assert(reliable == local)
+      // the reliable mode really wrote cluster-durable round snapshots
+      val wrote = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
+        try s.filter(p => java.nio.file.Files.isRegularFile(p)).count() > 0
+        finally s.close()
+      }
+      assert(wrote)
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("duplicateClusters on real ngram pairs keeps one survivor per clique") {
@@ -517,17 +520,7 @@ class DedupAnnApiSpec extends SparkSpec {
       assert(reliable == local)
       val wrote = Files.walk(dir).filter(Files.isRegularFile(_)).count()
       assert(wrote > 0, "reliable mode must write checkpoint files")
-      // conf opt-out: dir stays set but cuts go back to localCheckpoint
-      spark.conf.set("spark.graft.reliableMaterialize", "false")
-      val before = Files.walk(dir).filter(Files.isRegularFile(_)).count()
-      val optOut = Dedup.ngramJaccard(docs, k = 3, threshold = 0.8)
-        .collect().map(_.toSeq).toSet
-      assert(optOut == local)
-      assert(Files.walk(dir).filter(Files.isRegularFile(_)).count() == before)
-    } finally {
-      spark.conf.unset("spark.graft.reliableMaterialize")
-      spark.sparkContext.setCheckpointDir(null)
-    }
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("embeddingCosine threshold is monotone") {

@@ -1,32 +1,52 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import scala.jdk.CollectionConverters._
 
 /** [[GraftSession]] is the one session policy: no other `src/main` code
-  * builds a session, and the spec harness's session carries every setting
-  * the factory owns. */
+  * builds a session, the spec harness's session carries every setting
+  * the factory owns, and no library code keeps state across queries or
+  * changes the session's checkpoint dir. */
 class GraftSessionSpec extends SparkSpec {
+
+  /** `(path relative to src/main/scala, code)` of every `src/main` source
+    * file; comment lines (scaladoc examples) are not code. */
+  private lazy val mainCode: List[(String, String)] = {
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root)
+    try
+      files.iterator().asScala.toList
+        .filter(_.toString.endsWith(".scala"))
+        .map { p =>
+          val code = Files.readAllLines(p).asScala
+            .filterNot { l =>
+              val t = l.trim
+              t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+            }
+            .mkString("\n")
+          root.relativize(p).toString -> code
+        }
+    finally files.close()
+  }
 
   test("src/main holds exactly one SparkSession.builder() call, in GraftSession") {
     val builder = "SparkSession\\s*\\.\\s*builder\\s*\\(\\s*\\)".r
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root)
-    val calls =
-      try
-        files.iterator().asScala.toSeq
-          .filter(_.toString.endsWith(".scala"))
-          .flatMap { p =>
-            // comment lines (scaladoc examples) are not calls
-            val code = java.nio.file.Files.readAllLines(p).asScala
-              .filterNot { l =>
-                val t = l.trim
-                t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-              }
-              .mkString("\n")
-            builder.findAllMatchIn(code).map(_ => root.relativize(p).toString)
-          }
-      finally files.close()
+    val calls = mainCode.flatMap { case (f, code) => builder.findAllMatchIn(code).map(_ => f) }
     assert(calls == Seq("graft/GraftSession.scala"), s"SparkSession.builder() calls: $calls")
+  }
+
+  test("no query file declares a memo map") {
+    val memo = "ConcurrentHashMap|TrieMap|computeIfAbsent".r
+    val memos = mainCode.collect {
+      case (f, code) if f.startsWith("graft/queries/") && memo.findFirstIn(code).isDefined => f
+    }
+    assert(memos.isEmpty, s"memo maps in: $memos")
+  }
+
+  test("src/main never sets the checkpoint dir") {
+    val setters = mainCode.collect { case (f, code) if code.contains("setCheckpointDir") => f }
+    assert(setters.isEmpty, s"setCheckpointDir in: $setters")
   }
 
   test("the spec session carries every factory setting, with 4 shuffle partitions") {
