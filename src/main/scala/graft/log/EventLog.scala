@@ -50,8 +50,10 @@ final class EventLog(
     * and produce-validation don't scan per call (reference:
     * server/cache.go:1). Correct under the store's
     * single-writer-per-segment rule: every mutation issued through THIS
-    * instance maintains it (produce/publish update the key in place from
-    * the batch's own aggregate; synchronize/compact/retain invalidate;
+    * instance maintains it (produce, and publish through it, puts the
+    * key from the batch's validated bounds once its append returns; an
+    * append that throws leaves the key dropped; synchronize/compact/
+    * retain invalidate;
     * [[TxnLog]] commits and [[graft.streaming.StreamLog.appendSink]]
     * batches invalidate). A writer outside this instance must call
     * [[invalidateCache]] — same contract as the reference, whose cache
@@ -92,7 +94,14 @@ final class EventLog(
     * validated with one aggregate (min/max/count/distinct) instead of a
     * sequential scan, then stamped and chunked into transactions of
     * `chunkSize`. Returns one [[SegmentStatus]] per chunk, in order.
-    * (reference: Produce, pebble/service.go:296-343) */
+    * (reference: Produce, pebble/service.go:296-343)
+    *
+    * The acks and the peek-cache entry come from the bounds validation
+    * has proven, not from the written rows: the batch is exactly
+    * `[lo, hi]`, so chunk `i` is `[lo + i·chunkSize, min(hi, lo +
+    * (i+1)·chunkSize − 1)]` with trxNumber `lastTrx + 1 + i` — the same
+    * arithmetic as the `trxNumber` column — and no Spark job runs after
+    * the write. */
   def produce(
       space: String,
       segment: String,
@@ -101,106 +110,59 @@ final class EventLog(
       chunkSize: Int = 10000): Seq[SegmentStatus] = {
     require(chunkSize > 0, "chunkSize must be positive")
     val last = peek(space, segment)
-    val lastSeq = last.map(_.sequence).getOrElse(0L)
     val lastTrx = last.map(_.trxNumber).getOrElse(0L)
 
-    // one materialization feeds validation, the write, AND the status
-    // aggregate: uncached, a nondeterministic plan could validate one
-    // set of rows, persist a second, and report statuses of a third
+    // one materialization feeds validation and the write: uncached, a
+    // nondeterministic plan could validate one set of rows and persist
+    // another
     val cached = records.cache()
-    try produceValidated(space, segment, cached, timestampUs, chunkSize, lastSeq, lastTrx)
-    finally cached.unpersist(false)
-  }
-
-  private def produceValidated(
-      space: String,
-      segment: String,
-      records: Dataset[Record],
-      timestampUs: Long,
-      chunkSize: Int,
-      lastSeq: Long,
-      lastTrx: Long): Seq[SegmentStatus] = {
-    val entries = stampValidated(space, segment, records, timestampUs, lastSeq)(lo =>
-      expr(s"CAST($lastTrx + 1 + (sequence - $lo) DIV $chunkSize AS BIGINT)")) match {
-      case Some((_, _, e)) => e
-      case None            => return Seq.empty
-    }
-    appendEntries(entries)
-
-    // From here the data IS durably appended: if ANYTHING below fails
-    // (the status job can die like any Spark job), the cached position
-    // must not stay at the PRE-write value — a later produce validating
-    // against the stale high-water mark would append duplicate
-    // sequences. Dropping the key makes the next peek re-scan.
-    def guarded[A](body: => A): A =
-      try body
-      catch {
-        case t: Throwable => peekCache.remove((space, segment)); throw t
+    try {
+      val stamped = stampValidated(
+        space, segment, cached, timestampUs, last.map(_.sequence).getOrElse(0L))(lo =>
+        expr(s"CAST($lastTrx + 1 + (sequence - $lo) DIV $chunkSize AS BIGINT)"))
+      stamped.fold(Seq.empty[SegmentStatus]) { b =>
+        appendEntries(b.entries, _ == ((space, segment)))
+        val statuses =
+          EventLog.chunkStatuses(space, segment, b.lo, b.hi, timestampUs, chunkSize)
+        peekCache.put(
+          (space, segment),
+          Some(Entry(
+            space = space,
+            segment = segment,
+            sequence = b.hi,
+            timestamp = timestampUs,
+            trxNumber = lastTrx + statuses.size,
+            payload = b.lastPayload,
+            metadata = b.lastMetadata)))
+        // push AFTER the cache reflects the commit, so a subscriber that
+        // peeks from its callback sees the acknowledged position
+        bus.publish(statuses)
+        statuses
       }
-
-    // Per-chunk statuses from the batch plan itself — never from a log
-    // readback: a produce must stay O(batch), not O(segment history).
-    // The same aggregate also carries the batch's final payload/metadata
-    // so the peek cache can be updated without ever re-reading the log.
-    val statusRows = guarded {
-      entries
-        .groupBy("trxNumber")
-        .agg(
-          min("sequence").as("firstSequence"),
-          min("timestamp").as("firstTimestamp"),
-          max("sequence").as("lastSequence"),
-          max("timestamp").as("lastTimestamp"),
-          max_by(col("payload"), col("sequence")).as("lastPayload"),
-          max_by(col("metadata"), col("sequence")).as("lastMetadata"))
-        .orderBy("trxNumber")
-        .collect()
-    }
-    val statuses = guarded {
-      val lastRow = statusRows.last // n > 0 ⇒ at least one chunk
-      peekCache.put(
-        (space, segment),
-        Some(Entry(
-          space = space,
-          segment = segment,
-          sequence = lastRow.getAs[Long]("lastSequence"),
-          timestamp = lastRow.getAs[Long]("lastTimestamp"),
-          trxNumber = lastRow.getAs[Long]("trxNumber"),
-          payload = lastRow.getAs[String]("lastPayload"),
-          metadata =
-            lastRow.getAs[scala.collection.Map[String, String]]("lastMetadata").toMap)))
-      statusRows.toSeq.map(r =>
-        SegmentStatus(
-          space = space,
-          segment = segment,
-          firstSequence = r.getAs[Long]("firstSequence"),
-          firstTimestamp = r.getAs[Long]("firstTimestamp"),
-          lastSequence = r.getAs[Long]("lastSequence"),
-          lastTimestamp = r.getAs[Long]("lastTimestamp")))
-    }
-    // push AFTER the cache reflects the commit, so a subscriber that
-    // peeks from its callback sees the acknowledged position
-    bus.publish(statuses)
-    statuses
+    } finally cached.unpersist(false)
   }
 
   /** The produce checks shared with [[TxnLog.write]]: one aggregate
     * (count/min/max/distinct — distributed, not a per-record loop)
     * proves `records` continue `lastSeq` contiguously, then the rows are
     * stamped as entries of `space`/`segment` at `timestampUs`, with the
-    * trxNumber column `trx` builds from the batch's first sequence.
-    * Returns `(lo, hi, entries)`, or None for an empty batch. */
+    * trxNumber column `trx` builds from the batch's first sequence. The
+    * same aggregate carries the payload and metadata at `hi` for the
+    * peek cache. None for an empty batch. */
   private[log] def stampValidated(
       space: String,
       segment: String,
       records: Dataset[Record],
       timestampUs: Long,
-      lastSeq: Long)(trx: Long => Column): Option[(Long, Long, DataFrame)] = {
+      lastSeq: Long)(trx: Long => Column): Option[EventLog.Stamped] = {
     val stats = records
       .agg(
         count(lit(1)).as("n"),
         min("sequence").as("lo"),
         max("sequence").as("hi"),
-        count_distinct(col("sequence")).as("nd"))
+        count_distinct(col("sequence")).as("nd"),
+        max_by(col("payload"), col("sequence")),
+        max_by(col("metadata"), col("sequence")))
       .head()
     val n = stats.getLong(0)
     if (n == 0) return None // before getLong on lo/hi: both null here
@@ -217,24 +179,30 @@ final class EventLog(
       trx(lo).as("trxNumber"),
       col("payload"),
       col("metadata"))
-    Some((lo, hi, entries))
+    Some(EventLog.Stamped(
+      lo, hi, stats.getString(4), stats.getMap[String, String](5).toMap, entries))
   }
 
   /** Multi-file append through the staged publish of [[LogFs]], under a
     * call-unique `<token>-` prefix. Staging per call is what makes
     * producers to different segments safe to run concurrently (other
-    * threads or other processes). A produce is not transactional across
-    * part files; the sequence validation + peek-cache guards handle
-    * that window. A hard crash can leave an inert staging dir under
-    * `produce-staging/` — swept here, age-gated so an in-flight
-    * concurrent produce is never touched. */
-  private def appendEntries(entries: DataFrame): Unit = {
+    * threads or other processes). An append is not transactional across
+    * part files, and a throw can leave some of them published, so every
+    * append, failed or not, drops the cached positions `written` selects:
+    * the next peek re-scans and validation sees what did land (produce
+    * then caches its new position from the batch bounds). A hard crash
+    * can leave an inert staging dir under `produce-staging/` — swept
+    * here, age-gated so an in-flight concurrent produce is never
+    * touched. */
+  private def appendEntries(entries: DataFrame, written: ((String, String)) => Boolean): Unit = {
     val token = java.util.UUID.randomUUID().toString
     val stagingRoot = s"$path/produce-staging"
     val staging = s"$stagingRoot/$token"
-    entries.write.mode(SaveMode.Overwrite).partitionBy("space").parquet(staging)
-    try LogFs.publish(hfs, staging, dataDir, s"$token-")
-    finally {
+    try {
+      entries.write.mode(SaveMode.Overwrite).partitionBy("space").parquet(staging)
+      LogFs.publish(hfs, staging, dataDir, s"$token-")
+    } finally {
+      peekCache.removeIf(written)
       LogFs.deleteRecursive(hfs, staging)
       // age-gated sweep of staging dirs a crashed producer left behind.
       // The age of a dir is the NEWEST mtime anywhere under it, not the
@@ -275,25 +243,19 @@ final class EventLog(
     newest
   }
 
-  /** One-off append at peek+1 (reference: Publish, client.go:149).
-    * Single peek: the sequence is derived and validated from the same
-    * lookup (produce would otherwise re-peek the segment — two full
-    * log scans for a one-row append). */
+  /** One-off append at peek+1 (reference: Publish, client.go:149):
+    * a one-record [[produce]], whose own peek is served from the cache
+    * this call's peek has just warmed. */
   def publish(
       space: String,
       segment: String,
       payload: String,
       timestampUs: Long,
       metadata: Map[String, String] = Map.empty): SegmentStatus = {
-    val last = peek(space, segment)
-    val next = last.map(_.sequence).getOrElse(0L) + 1
-    val cached =
-      spark.createDataset(Seq(Record(next, payload, metadata))).cache()
-    try produceValidated(
-      space, segment, cached, timestampUs, chunkSize = 10000,
-      lastSeq = next - 1,
-      lastTrx = last.map(_.trxNumber).getOrElse(0L)).head
-    finally cached.unpersist(false)
+    val next = peek(space, segment).map(_.sequence).getOrElse(0L) + 1
+    produce(
+      space, segment, spark.createDataset(Seq(Record(next, payload, metadata))),
+      timestampUs).head
   }
 
   /** Last entry of a segment (reference: Peek, pebble/service.go:224).
@@ -554,15 +516,39 @@ final class EventLog(
     val toWrite = missing.cache()
     try {
       val n = toWrite.count()
-      if (n > 0) {
-        appendEntries(toWrite)
-        // the pulled tail may advance any segment's high-water mark
-        space match {
-          case Some(sp) => invalidateCache(sp)
-          case None     => invalidateCache()
-        }
-      }
+      // the pulled tail may advance any segment's high-water mark
+      if (n > 0) appendEntries(toWrite, k => space.forall(_ == k._1))
       n
     } finally toWrite.unpersist()
   }
+}
+
+private[log] object EventLog {
+
+  /** A validated batch: its sequence bounds, the payload and metadata of
+    * the row at `hi`, and the rows stamped as entries. */
+  final case class Stamped(
+      lo: Long,
+      hi: Long,
+      lastPayload: String,
+      lastMetadata: Map[String, String],
+      entries: DataFrame)
+
+  /** The acks of a batch proven to be exactly `[lo, hi]`, stamped at
+    * `timestampUs`: one per `chunkSize` sequences, in order. */
+  def chunkStatuses(
+      space: String,
+      segment: String,
+      lo: Long,
+      hi: Long,
+      timestampUs: Long,
+      chunkSize: Long): Seq[SegmentStatus] =
+    (lo to hi by chunkSize).map(first =>
+      SegmentStatus(
+        space = space,
+        segment = segment,
+        firstSequence = first,
+        firstTimestamp = timestampUs,
+        lastSequence = math.min(hi, first + chunkSize - 1),
+        lastTimestamp = timestampUs))
 }

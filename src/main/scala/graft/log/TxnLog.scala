@@ -61,8 +61,8 @@ final class TxnLog(val log: EventLog) {
       space, segment, records, timestampUs, last.map(_.sequence).getOrElse(0L))(
       _ => lit(trxNumber))
     require(stamped.nonEmpty, s"empty batch staging trx $trxId")
-    val (lo, hi, entries) = stamped.get
-    entries.write
+    val batch = stamped.get
+    batch.entries.write
       .mode(SaveMode.Overwrite)
       .partitionBy("space")
       .parquet(s"$stagedRoot/$trxId")
@@ -74,7 +74,7 @@ final class TxnLog(val log: EventLog) {
     LogFs.writeText(
       hfs,
       s"$stagedRoot/$trxId/_status",
-      s"${enc(space)} ${enc(segment)} $lo $hi $timestampUs")
+      s"${enc(space)} ${enc(segment)} ${batch.lo} ${batch.hi} $timestampUs")
   }
 
   private def enc(s: String): String =
@@ -83,23 +83,20 @@ final class TxnLog(val log: EventLog) {
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** Parse the staged ack sidecar, if present (absent only for dirs
-    * staged by pre-sidecar versions — commit then skips the push). */
-  private def stagedStatus(trxId: String): Option[SegmentStatus] = {
+  /** The acks the staged sidecar records — one status for the whole
+    * batch — or none for dirs staged by pre-sidecar versions (commit
+    * then skips the push). */
+  private def stagedStatus(trxId: String): Seq[SegmentStatus] = {
     val p = s"$stagedRoot/$trxId/_status"
-    if (!LogFs.exists(hfs, p)) None
+    if (!LogFs.exists(hfs, p)) Seq.empty
     else
-      LogFs.readLines(hfs, p).headOption.flatMap { line =>
+      LogFs.readLines(hfs, p).headOption.toSeq.flatMap { line =>
         line.split(' ') match {
           case Array(sp, seg, lo, hi, ts) =>
-            Some(SegmentStatus(
-              space = dec(sp),
-              segment = dec(seg),
-              firstSequence = lo.toLong,
-              firstTimestamp = ts.toLong,
-              lastSequence = hi.toLong,
-              lastTimestamp = ts.toLong))
-          case _ => None
+            EventLog.chunkStatuses(
+              dec(sp), dec(seg), lo.toLong, hi.toLong, ts.toLong,
+              chunkSize = hi.toLong - lo.toLong + 1)
+          case _ => Seq.empty
         }
       }
   }
@@ -112,7 +109,7 @@ final class TxnLog(val log: EventLog) {
     require(LogFs.exists(hfs, stagedDir), s"transaction not found: $trxId")
     // read the ack sidecar BEFORE the move (the staged dir is deleted on
     // success) — pushed to the bus only after the publish completes
-    val ack = stagedStatus(trxId)
+    val acks = stagedStatus(trxId)
     // finally, not post-hoc: a commit dying MID-publish has already made
     // files visible, and a peek cache still holding the pre-commit
     // position would let a later produce validate against a stale
@@ -123,7 +120,7 @@ final class TxnLog(val log: EventLog) {
     } finally log.invalidateCache()
     // after the cache drop: a subscriber peeking from its callback
     // re-scans and sees the committed position, never the stale cache
-    ack.foreach(st => log.bus.publish(Seq(st)))
+    log.bus.publish(acks)
   }
 
   /** Drop a staged transaction (reference: Rollback — delete the staged

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import graft.log.{EventLog, TxnLog}
@@ -16,7 +14,7 @@ import graft.model.{Record, SegmentStatus}
 class BusSpec extends SparkSpec {
 
   private def freshLog(): EventLog =
-    new EventLog(spark, Files.createTempDirectory("graft-bus").toString)
+    new EventLog(spark, tempDir("graft-bus").toString)
 
   private def records(from: Long, n: Long): org.apache.spark.sql.Dataset[Record] = {
     import spark.implicits._

@@ -172,7 +172,7 @@ class DedupAnnApiSpec extends SparkSpec {
       .select(col("vec_id").as("neighbor_id"), col("v").as("c_v"), col("nrm").as("c_nrm"))
     val cents = embs.filter(col("vec_id") >= 10 && col("vec_id") < 18)
       .select(col("vec_id").as("cent_id"), col("v").as("cent_v"), col("nrm").as("cent_nrm"))
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    val path = tempDir("graft_ivf_spec").toString
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -279,7 +279,7 @@ class DedupAnnApiSpec extends SparkSpec {
     val skew = // 20 vectors, all routed to cell 1, 10 per sub-direction
       (101L to 110L).map(i => dirA(i, 0.001 * (i - 101))) ++
         (111L to 120L).map(i => dirB(i, 0.001 * (i - 111)))
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_maint").toString
+    val path = tempDir("graft_ivf_maint").toString
     Ann.ivfBuild(corpusDf(base), cents, path)
     assert(Ann.ivfImbalance(spark, path) == 1.0) // 4 cells × 4 members
     Ann.ivfAppend(spark, corpusDf(skew), path)
@@ -432,8 +432,7 @@ class DedupAnnApiSpec extends SparkSpec {
     import spark.implicits._
     val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L))
       .toDF("a_id", "b_id")
-    val ckptDir = java.nio.file.Files
-      .createTempDirectory("graft-cc-ckpt").toString
+    val ckptDir = tempDir("graft-cc-ckpt").toString
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = asMap(Dedup.duplicateClusters(pairs))
@@ -511,7 +510,7 @@ class DedupAnnApiSpec extends SparkSpec {
     import java.nio.file.Files
     val local = Dedup.ngramJaccard(docs, k = 3, threshold = 0.8)
       .collect().map(_.toSeq).toSet
-    val dir = Files.createTempDirectory("graft-reliable-ckpt")
+    val dir = tempDir("graft-reliable-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
       // reliable mode: same rows, and the cut actually wrote to the dir
@@ -897,7 +896,7 @@ class DedupAnnApiSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
       .toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec").toString
+    val dir = tempDir("graft_ivfpq_spec").toString
     Ann.ivfPqBuild(base, cents, cb, dir)
     // the persisted codebook round-trips bit-identically
     assert(Ann.ivfPqCodebook(spark, dir).cents == cb.cents)
@@ -1029,7 +1028,7 @@ class DedupAnnApiSpec extends SparkSpec {
     members += (next + 2) -> axis(8); members += (next + 3) -> axis(8, 1.01)
     val corpus = Ann.withNorm(
       members.result().toDF("neighbor_id", "c_v"), "c_v", "c_nrm")
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_batch").toString
+    val path = tempDir("graft_ivf_batch").toString
     Ann.ivfBuild(corpus, cents, path)
     (path, expected.toMap)
   }
@@ -1111,7 +1110,7 @@ class DedupAnnApiSpec extends SparkSpec {
     val hotB = (102L to 120L by 2).map(i => i -> vec(1, 0, 0.3 + 0.001 * (i % 10), 0))
     val corpus = Ann.withNorm(
       (base ++ hotA ++ hotB).toDF("neighbor_id", "c_v"), "c_v", "c_nrm")
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_empty").toString
+    val path = tempDir("graft_ivf_empty").toString
     Ann.ivfBuild(corpus, cents, path)
     assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2, dim = 4))
     val quant = spark.read.parquet(s"$path/centroids")
@@ -1136,7 +1135,7 @@ class DedupAnnApiSpec extends SparkSpec {
         30L -> vec(0, 0.01, 1, 0), 31L -> vec(0, 0.02, 1, 0))
         .toDF("neighbor_id", "c_v"),
       "c_v", "c_nrm")
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_rec").toString
+    val path = tempDir("graft_ivf_rec").toString
     Ann.ivfBuild(corpus, cents, path)
     def probe() = {
       val q = Ann.withNorm(
@@ -1183,8 +1182,8 @@ class DedupAnnApiSpec extends SparkSpec {
       Seq.tabulate(4)(j =>
         (i * 10L + j) -> Seq.tabulate(4)(k => if (k == i - 1) 1.0 else 0.01 * (j + 1))))
     val cb = Ann.pqTrain(corpusDf(base), m = 2, ks = 2, dim = 4, iters = 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_ingest").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivfpq_ingest_ck").toString
+    val path = tempDir("graft_ivfpq_ingest").toString
+    val ckpt = tempDir("graft_ivfpq_ingest_ck").toString
     Ann.ivfPqBuild(corpusDf(base), cents, cb, path)
 
     val mem = MemoryStream[(Long, Seq[Double])](spark)
@@ -1234,7 +1233,7 @@ class DedupAnnApiSpec extends SparkSpec {
     val cents = embs.filter(col("vec_id") >= 10 && col("vec_id") < 18)
       .select(col("vec_id").as("cent_id"), col("v").as("cent_v"), col("nrm").as("cent_nrm"))
     val cb = Ann.pqTrain(corpus, 8, 8, 64, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_stale").toString
+    val dir = tempDir("graft_ivfpq_stale").toString
     Ann.ivfPqBuild(corpus, cents, cb, dir)
     // a held-out batch from the SAME distribution reads ≈ 1 — append-only
     // ingest stays under the fence
@@ -1314,7 +1313,7 @@ class DedupAnnApiSpec extends SparkSpec {
       (101L to 110L).map(i => dirA(i, 0.001 * (i - 101))) ++
         (111L to 120L).map(i => dirB(i, 0.001 * (i - 111)))
     val cb = Ann.pqTrain(corpusDf(base), m = 2, ks = 2, dim = 4, iters = 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_maint").toString
+    val path = tempDir("graft_ivfpq_maint").toString
     Ann.ivfPqBuild(corpusDf(base), cents, cb, path)
     Ann.ivfPqAppend(spark, corpusDf(skew), path)
     assert(Ann.ivfImbalance(spark, path) > 2.0) // cell 1: 24 of 36
@@ -1417,7 +1416,7 @@ class DedupAnnApiSpec extends SparkSpec {
       Seq.tabulate(4)(j =>
         (i * 10L + j) -> Seq.tabulate(4)(d => if (d == i - 1) 1.0 else 0.01 * (j + 1))))
     val cb = Ann.pqTrain(corpusDf(base), m = 2, ks = 2, dim = 4, iters = 1)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_del").toString
+    val path = tempDir("graft_ivfpq_del").toString
     Ann.ivfPqBuild(corpusDf(base), cents, cb, path)
 
     def fileState(tier: String, cell: Long) = {
@@ -1518,7 +1517,7 @@ class DedupAnnApiSpec extends SparkSpec {
     val cents = embs.filter(col("vec_id") >= 10 && col("vec_id") < 18)
       .select(col("vec_id").as("cent_id"), col("v").as("cent_v"), col("nrm").as("cent_nrm"))
     val cb = Ann.pqTrain(corpus, 8, 8, 64, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_rebuild").toString
+    val dir = tempDir("graft_ivfpq_rebuild").toString
     Ann.ivfPqBuild(corpus, cents, cb, dir)
     // fresh build reads exactly 1 (baseline == current)
     assert(Ann.ivfQuantizerStaleness(spark, dir) == 1.0)

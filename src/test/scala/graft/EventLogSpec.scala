@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.log.{EventLog, TxnLog}
-import graft.model.Record
+import graft.model.{Entry, Record, SegmentStatus}
 
 /** Produce / peek / publish / transaction round-trips on a scratch log —
   * the write-side behaviors of the reference store (reference:
@@ -13,11 +11,53 @@ class EventLogSpec extends SparkSpec {
   private def freshLog(): EventLog =
     new EventLog(
       spark,
-      Files.createTempDirectory("graft-log").toString)
+      tempDir("graft-log").toString)
 
   private def records(from: Long, n: Long): org.apache.spark.sql.Dataset[Record] = {
     import spark.implicits._
     spark.createDataset((from until from + n).map(i => Record(i, s"payload $i")))
+  }
+
+  /** The status aggregate produce used to run over the rows it had just
+    * written, kept as the reference formulation the bound arithmetic
+    * must match: one row per trxNumber of the segment's entries past
+    * `after`, with the last row's payload and metadata. */
+  private def readback(
+      log: EventLog,
+      space: String,
+      segment: String,
+      after: Long): (Seq[SegmentStatus], Entry) = {
+    import org.apache.spark.sql.functions.{col, max, max_by, min}
+    val rows = log.load()
+      .filter(col("space") === space && col("segment") === segment && col("sequence") > after)
+      .groupBy("trxNumber")
+      .agg(
+        min("sequence").as("firstSequence"),
+        min("timestamp").as("firstTimestamp"),
+        max("sequence").as("lastSequence"),
+        max("timestamp").as("lastTimestamp"),
+        max_by(col("payload"), col("sequence")).as("lastPayload"),
+        max_by(col("metadata"), col("sequence")).as("lastMetadata"))
+      .orderBy("trxNumber")
+      .collect()
+      .toSeq
+    val statuses = rows.map(r =>
+      SegmentStatus(
+        space, segment,
+        r.getAs[Long]("firstSequence"), r.getAs[Long]("firstTimestamp"),
+        r.getAs[Long]("lastSequence"), r.getAs[Long]("lastTimestamp")))
+    val l = rows.last
+    val peek = Entry(
+      space, segment, l.getAs[Long]("lastSequence"), l.getAs[Long]("lastTimestamp"),
+      l.getAs[Long]("trxNumber"), l.getAs[String]("lastPayload"),
+      l.getAs[scala.collection.Map[String, String]]("lastMetadata").toMap)
+    (statuses, peek)
+  }
+
+  private def tagged(from: Long, n: Long): org.apache.spark.sql.Dataset[Record] = {
+    import spark.implicits._
+    spark.createDataset(
+      (from until from + n).map(i => Record(i, s"payload $i", Map("k" -> s"v$i"))))
   }
 
   test("produce appends, chunks into transactions, and reports statuses") {
@@ -27,6 +67,55 @@ class EventLogSpec extends SparkSpec {
       Seq((1L, 100L), (101L, 200L), (201L, 253L)))
     assert(log.peek("s0", "seg0").get.sequence == 253L)
     assert(log.consumeSegment("s0", "seg0").count() == 253L)
+    // the acks and peek of the write that just ran must equal the
+    // reference aggregate over what it wrote; so must a cold peek
+    def check(segment: String, after: Long, acks: Seq[SegmentStatus]): Unit = {
+      val (statuses, last) = readback(log, "s0", segment, after)
+      assert(acks == statuses, s"$segment after $after")
+      assert(log.peek("s0", segment).contains(last), s"$segment cached peek")
+      assert(new EventLog(spark, log.path).peek("s0", segment).contains(last))
+    }
+    for {
+      lastSeq <- Seq(0L, 7L)
+      chunk <- Seq(1, 3, 10000)
+      n <- Seq(1, chunk - 1, chunk, 2 * chunk + 1).filter(_ > 0).distinct
+    } {
+      val seg = s"seg-$lastSeq-$chunk-$n"
+      // a 7-record prefix in chunks of 2 ends at trxNumber 4
+      if (lastSeq > 0) log.produce("s0", seg, tagged(1, lastSeq), 500L, chunkSize = 2)
+      val acks = log.produce("s0", seg, tagged(lastSeq + 1, n), 1000L + n, chunkSize = chunk)
+      check(seg, lastSeq, acks)
+      val one = log.publish("s0", seg, "one-off", 2000L, Map("p" -> "1"))
+      check(seg, lastSeq + n, Seq(one))
+    }
+    // lastTrx from a transaction: the produce continues its trxNumber
+    val txn = new TxnLog(log)
+    txn.write("trx-p", "s0", "seg-txn", tagged(1, 5), 500L, trxNumber = 1L)
+    txn.commit("trx-p")
+    check("seg-txn", 5L, log.produce("s0", "seg-txn", tagged(6, 7), 1000L, chunkSize = 3))
+  }
+
+  test("a produce whose publish dies midway drops the cached position; its retry is refused") {
+    import org.apache.spark.sql.functions.col
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failrn.impl", classOf[FailingRenameFs].getName)
+    val local = tempDir("graft-failrn").toString
+    val log = new EventLog(spark, s"failrn://$local")
+    log.produce("s0", "seg0", records(1, 5), 1000L)
+    assert(log.peek("s0", "seg0").get.sequence == 5L)
+    val batch = records(6, 8) // several part files: one lands, the next rename fails
+    FailingRenameFs.arm(s"$local/data/")
+    try intercept[java.io.IOException](log.produce("s0", "seg0", batch, 2000L))
+    finally FailingRenameFs.disarm()
+    // peek re-scans the log and sees the part file that did land
+    val landed = new EventLog(spark, log.path).peek("s0", "seg0").get.sequence
+    assert(landed > 5L && landed < 13L)
+    assert(log.peek("s0", "seg0").get.sequence == landed)
+    val e = intercept[IllegalArgumentException](log.produce("s0", "seg0", batch, 3000L))
+    assert(e.getMessage.contains("sequence mismatch"))
+    val dups = log.load().groupBy("space", "segment", "sequence").count()
+      .filter(col("count") > 1)
+    assert(dups.isEmpty, "every (space, segment, sequence) at most once")
   }
 
   test("produce rejects non-contiguous sequences") {
@@ -450,7 +539,7 @@ class EventLogSpec extends SparkSpec {
     // a MANUAL clock (no sleeps): the TTL boundary is asserted exactly
     // at expiresAt / expiresAt+1, and suite load can't expire an entry
     // between the write and the "within TTL" assertion
-    val dir = java.nio.file.Files.createTempDirectory("graft-ttl").toString
+    val dir = tempDir("graft-ttl").toString
     var now = 0L
     val a = new EventLog(
       spark, dir,
@@ -494,4 +583,29 @@ class EventLogSpec extends SparkSpec {
     assert(out.count() == 0)
     assert(out.columns.contains("space") && out.columns.contains("sequence"))
   }
+}
+
+/** [[NonAtomicRenameFs]] under its own scheme, whose rename fails on
+  * demand: once armed with a directory, the second rename into it throws,
+  * so a staged publish dies with one part file live. */
+class FailingRenameFs extends NonAtomicRenameFs {
+  override def getScheme: String = "failrn"
+  override def getUri: java.net.URI = java.net.URI.create("failrn:///")
+  override def rename(
+      src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    val into = FailingRenameFs.armedDir
+    if (into.exists(dst.toUri.getPath.startsWith) &&
+      FailingRenameFs.renamesInto.incrementAndGet() == 2)
+      throw new java.io.IOException(s"injected rename failure: $src -> $dst")
+    super.rename(src, dst)
+  }
+}
+
+object FailingRenameFs {
+  @volatile private var armedDir: Option[String] = None
+  private val renamesInto = new java.util.concurrent.atomic.AtomicInteger
+
+  def arm(dir: String): Unit = { renamesInto.set(0); armedDir = Some(dir) }
+  def disarm(): Unit = armedDir = None
 }

@@ -15,7 +15,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("CSV ingest: explicit schema, quarantined corrupt row, µs canonicalization") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
+    val dir = tempDir("graft-ingest").toString
     val path = write(dir, "events.csv", Seq(
       "event_id,ts,user_id,event_type,value,props",
       "1,2024-01-01 00:00:00,7,click,1.5,{}",
@@ -32,7 +32,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("zone-less timestamps canonicalize as UTC under ANY session time zone") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
+    val dir = tempDir("graft-ingest").toString
     val path = write(dir, "events.csv", Seq(
       "event_id,ts,user_id,event_type,value,props",
       "1,2024-01-01 00:00:00,7,click,1.5,{}"))
@@ -47,7 +47,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("JSONL ingest: same contract as CSV, same quarantine") {
-    val dir = Files.createTempDirectory("graft-ingest").toString
+    val dir = tempDir("graft-ingest").toString
     val path = write(dir, "events.jsonl", Seq(
       """{"event_id":1,"ts":"2024-01-01 00:00:00","user_id":7,"event_type":"click","value":1.5,"props":"{}"}""",
       """this is not json"""))
@@ -58,7 +58,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves the canonical table and pushes filters to the scan") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/events.orc"
+    val dir = tempDir("graft-orc").toString + "/events.orc"
     val ev = graft.sources.Tables.events(spark, SfDir)
       .select("event_id", "ts_us", "user_id", "event_type", "value")
     Ingest.writeOrc(ev, dir)

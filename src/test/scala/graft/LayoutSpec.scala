@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Layout
@@ -13,7 +11,7 @@ import graft.sources.Layout
 class LayoutSpec extends SparkSpec {
 
   private def withDirs[A](prefixes: String*)(body: Seq[String] => A): A = {
-    val dirs = prefixes.map(p => Files.createTempDirectory(p).toString)
+    val dirs = prefixes.map(p => tempDir(p).toString)
     try body(dirs)
     finally dirs.foreach { d =>
       val root = new java.io.File(d)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
@@ -59,11 +57,11 @@ class LogSourceSpec extends SparkSpec {
   }
 
   test("tickle-driven end-to-end: produce → ack → rows, push beats the fallback poll") {
-    val log = new EventLog(spark, Files.createTempDirectory("graft-src").toString)
+    val log = new EventLog(spark, tempDir("graft-src").toString)
     // pre-stream history: covered by the ONE bootstrap reconcile
     log.produce("s0", "seg0", records(1, 3, Map("k" -> "v")), 1000L)
     val srv = PushNet.server(log, bindHost = "127.0.0.1")
-    val ckpt = Files.createTempDirectory("graft-src-ckpt").toString
+    val ckpt = tempDir("graft-src-ckpt").toString
     val got = mutable.Buffer.empty[(String, String, Long, Long, String, Map[String, String])]
     val batchSizes = mutable.Buffer.empty[Int] // raw per-batch arrivals, for the replay bound
     // "another process": a separate session with its own state
@@ -188,10 +186,10 @@ class LogSourceSpec extends SparkSpec {
   }
 
   test("the push feed re-dials after a PushServer restart: rows and tickles resume without the poll") {
-    val log = new EventLog(spark, Files.createTempDirectory("graft-src-redial").toString)
+    val log = new EventLog(spark, tempDir("graft-src-redial").toString)
     val srv1 = PushNet.server(log, bindHost = "127.0.0.1")
     val port = srv1.boundPort
-    val ckpt = Files.createTempDirectory("graft-src-redial-ckpt").toString
+    val ckpt = tempDir("graft-src-redial-ckpt").toString
     val got = mutable.Set.empty[Long]
     val q = spark.newSession().readStream
       .format("graft-log")
@@ -257,10 +255,10 @@ class LogSourceSpec extends SparkSpec {
     // one deterministic many-segment log per mode (a shared log would
     // reject the second run's wave-2 produce as non-contiguous)
     def run(mode: String): (Set[(String, String, Long, Long)], String) = {
-      val log = new EventLog(spark, Files.createTempDirectory(s"graft-src-wm-$mode").toString)
+      val log = new EventLog(spark, tempDir(s"graft-src-wm-$mode").toString)
       // wave 1: a many-segment log (segment := user-id shape)
       (0 until nSegs).foreach(i => log.produce("s0", f"seg$i%02d", records(1, 3), 1000L))
-      val ckpt = Files.createTempDirectory(s"graft-src-wm-ckpt-$mode").toString
+      val ckpt = tempDir(s"graft-src-wm-ckpt-$mode").toString
       val got = mutable.Buffer.empty[(String, String, Long, Long)]
       val q = spark.readStream
         .format("graft-log")
@@ -309,9 +307,9 @@ class LogSourceSpec extends SparkSpec {
   }
 
   test("spaceWatermark regression: skipped rows counted, delivery unaffected, opt-in stream failure") {
-    val log = new EventLog(spark, Files.createTempDirectory("graft-src-wmreg").toString)
+    val log = new EventLog(spark, tempDir("graft-src-wmreg").toString)
     log.produce("s0", "seg0", records(1, 3), 1000L)
-    val ckpt = Files.createTempDirectory("graft-src-wmreg-ckpt").toString
+    val ckpt = tempDir("graft-src-wmreg-ckpt").toString
     val got = mutable.Buffer.empty[(String, Long, Long)]
     val q = spark.readStream
       .format("graft-log")
@@ -348,9 +346,9 @@ class LogSourceSpec extends SparkSpec {
     } finally q.stop()
 
     // opt-in hard failure: same violation, failOnWatermarkRegression=true
-    val log2 = new EventLog(spark, Files.createTempDirectory("graft-src-wmreg2").toString)
+    val log2 = new EventLog(spark, tempDir("graft-src-wmreg2").toString)
     log2.produce("s0", "seg0", records(1, 3), 1000L)
-    val ckpt2 = Files.createTempDirectory("graft-src-wmreg2-ckpt").toString
+    val ckpt2 = tempDir("graft-src-wmreg2-ckpt").toString
     val q2 = spark.readStream
       .format("graft-log")
       .option("path", log2.path)
@@ -373,10 +371,10 @@ class LogSourceSpec extends SparkSpec {
   }
 
   test("space filter: only the subscribed space's rows flow") {
-    val log = new EventLog(spark, Files.createTempDirectory("graft-src-f").toString)
+    val log = new EventLog(spark, tempDir("graft-src-f").toString)
     log.produce("keep", "a", records(1, 3), 1000L)
     log.produce("drop", "b", records(1, 5), 1000L)
-    val ckpt = Files.createTempDirectory("graft-src-f-ckpt").toString
+    val ckpt = tempDir("graft-src-f-ckpt").toString
     val got = mutable.Buffer.empty[(String, Long)]
     val q = spark.readStream
       .format("graft-log")

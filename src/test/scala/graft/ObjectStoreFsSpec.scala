@@ -1,7 +1,6 @@
 package graft
 
 import java.net.URI
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileUtil, Path => HPath, RawLocalFileSystem}
 
@@ -63,7 +62,7 @@ class ObjectStoreFsSpec extends SparkSpec {
   private def freshLog(): EventLog = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.mock3.impl", classOf[NonAtomicRenameFs].getName)
-    val local = Files.createTempDirectory("graft-mock3").toString
+    val local = tempDir("graft-mock3").toString
     new EventLog(spark, s"mock3://$local")
   }
 

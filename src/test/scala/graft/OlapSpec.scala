@@ -76,7 +76,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("cohort retention matrix on crafted events") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ret").toString
+    val dir = tempDir("graft-ret").toString
     Seq(
       // user 1: cohort Jan 1, returns day+1 and day+3
       (1L, "2024-01-01 10:00:00"),
@@ -106,7 +106,7 @@ class OlapSpec extends SparkSpec {
   }
 
   private def writeEvents(rows: Seq[(Long, Long, String, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     rows
       .toDF("event_id", "user_id", "s", "event_type", "value")
       .select(
@@ -279,7 +279,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("HHI: single-buyer segment scores 1.0, an even split scores 1/n") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     Seq(
       (1L, 10L, 100.0), // MONO: one customer
       (2L, 20L, 50.0), // DUO: two customers, even spend
@@ -379,7 +379,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("WoW growth: deltas and the trailing-4-week average") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     // weeks with revenue 100, 150, 150 (one missing week in between is
     // absent from the panel, not zero-filled — weeks are order weeks)
     Seq(
@@ -405,7 +405,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("cohort LTV accumulates per cohort and divides by cohort size") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     Seq(
       // cohort week 0: customers 1 and 2; week-1 repeat by customer 1
       (1L, 1L, "2024-01-01 00:00:00", 100.0),
@@ -487,7 +487,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("top supplier: argmax on exact integer revenue, ties both kept") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     Seq(
       // suppliers 1 and 2 tie at 200.00 net; supplier 3 trails
       (1L, 1L, 100.0, 0.0, "1996-02-01 00:00:00"),
@@ -509,7 +509,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("waiting suppliers: only the sole late shipper of a multi-supplier order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     // order 1: suppliers 1 (late) and 2 (on time) -> supplier 1 waits it
     // order 2: suppliers 1 and 2 BOTH late -> nobody counted
     // order 3: supplier 1 alone and late -> single-supplier, not counted
@@ -535,7 +535,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("bootstrap CI brackets the point estimate, zero-width on constant data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     (1 to 30).map(i => (i.toLong, 1L, 100.0))
       .toDF("o_orderkey", "o_custkey", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
@@ -547,7 +547,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("ABC classification splits at the 80/95 cumulative-share fences") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     // parts with revenue 80, 15, 5: cum shares exactly 0.80 / 0.95 / 1.0
     Seq((1L, 80.0), (2L, 15.0), (3L, 5.0))
       .toDF("l_partkey", "l_extendedprice")
@@ -562,7 +562,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("decile migration: reversal lands on the anti-diagonal, entrants in row 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-olap").toString
+    val dir = tempDir("graft-olap").toString
     val p1 = Seq(
       (1L, 500.0, "1995-01-01"), (2L, 400.0, "1995-01-01"),
       (3L, 300.0, "1995-01-01"), (4L, 200.0, "1995-01-01"),
@@ -587,7 +587,7 @@ class OlapSpec extends SparkSpec {
   }
 
   test("distinctive terms surface a source-exclusive common token") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dist").toString
+    val dir = tempDir("graft-dist").toString
     import spark.implicits._
     // 'zebra' occurs often and ONLY in src_a; filler is shared
     val a = (1 to 10).map(i =>

@@ -120,7 +120,7 @@ class PipelineSpec extends SparkSpec {
 
   test("repetition metrics flag a looping doc and pass a varied one") {
     import graft.queries.PipelineQueries._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rep").toString
+    val dir = tempDir("graft-rep").toString
     spark
       .createDataFrame(Seq(
         // 10× repeated bigram: top_bigram_frac ≈ 0.5, dup trigrams high
@@ -155,7 +155,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ngram counts sum to total bigram occurrences on a crafted corpus") {
     import graft.queries.PipelineQueries._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ng").toString
+    val dir = tempDir("graft-ng").toString
     spark
       .createDataFrame(Seq(
         (1L, "a b a b", "en", "src0", 7L),
@@ -362,7 +362,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe").toString
+    val dir = tempDir("graft-pipe").toString
     rows.toDF("doc_id", "text", "source").write.parquet(s"$dir/documents.parquet")
     dir
   }
@@ -501,7 +501,7 @@ class PipelineSpec extends SparkSpec {
 
   test("profile counts nulls and distincts per column") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-prof").toString
+    val dir = tempDir("graft-prof").toString
     Seq(
       (1L, "aa", null.asInstanceOf[String], "s1", 2L),
       (2L, "bb", "en", "s1", 2L),
@@ -520,7 +520,7 @@ class PipelineSpec extends SparkSpec {
 
   test("source vocabulary overlap computes exact pairwise Jaccard") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ovl").toString
+    val dir = tempDir("graft-ovl").toString
     Seq(
       (1L, "a b c", "s1"),
       (2L, "b c d", "s2"),
@@ -537,7 +537,7 @@ class PipelineSpec extends SparkSpec {
 
   test("lm score ranks a doc of corpus-typical bigrams below one of rare bigrams") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val dir = tempDir("graft-lm").toString
     val common = "the cat sat" // bigrams repeated across many docs
     Seq(
       (1L, common, "s"), (2L, common, "s"), (3L, common, "s"), (4L, common, "s"),
@@ -558,7 +558,7 @@ class PipelineSpec extends SparkSpec {
 
   test("script profile counts and dominant-script tie rule on mixed-script docs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-script").toString
+    val dir = tempDir("graft-script").toString
     Seq(
       (1L, "hello world", "s"), // latin only
       (2L, "土地人 hi", "s"), // 3 han, 2 latin -> han
@@ -582,7 +582,7 @@ class PipelineSpec extends SparkSpec {
     * (strongly negative score, distinct per doc). */
   private def writeScoredCorpus(): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-scored").toString
+    val dir = tempDir("graft-scored").toString
     val pos = (5 to 9).map(i =>
       (i.toLong, ("the and is of to " * i).trim, "en", "s", 0L))
     val neg = (5 to 9).map(j =>
@@ -617,7 +617,7 @@ class PipelineSpec extends SparkSpec {
 
   test("langid eval: diagonal hits and mass leaking to a wrong language, with row shares") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-langeval").toString
+    val dir = tempDir("graft-langeval").toString
     Seq(
       (1L, "the and is of to", "en", "s", 0L), // predicted en: diagonal
       (2L, "le les des est une", "en", "s", 0L), // labeled en, predicted fr
@@ -634,7 +634,7 @@ class PipelineSpec extends SparkSpec {
 
   test("embed outliers: the far vector ranks first in its label") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-outl").toString
+    val dir = tempDir("graft-outl").toString
     val dim = PipelineQueries.EmbDim
     def vec(head: Float): Array[Float] =
       (head +: Array.fill(dim - 1)(0.0f)).toArray
@@ -655,7 +655,7 @@ class PipelineSpec extends SparkSpec {
   test("expectations: violations are reported per rule, never thrown") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, to_timestamp}
-    val dir = java.nio.file.Files.createTempDirectory("graft-expect").toString
+    val dir = tempDir("graft-expect").toString
     Seq((1L, 10.0, 5.0), (2L, 99.0, -1.0)) // quantity 99 and price −1 violate
       .toDF("l_orderkey", "l_quantity", "l_extendedprice")
       .write.parquet(s"$dir/lineitem.parquet")

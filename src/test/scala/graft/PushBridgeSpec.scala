@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
@@ -21,7 +19,7 @@ import graft.model.{Record, SegmentStatus}
 class PushBridgeSpec extends SparkSpec {
 
   private def freshLog(): EventLog =
-    new EventLog(spark, Files.createTempDirectory("graft-push").toString)
+    new EventLog(spark, tempDir("graft-push").toString)
 
   /** The "other process": its own FileSystem from a bare Configuration. */
   private def foreignFs(path: String): FileSystem =
@@ -161,7 +159,7 @@ class PushBridgeSpec extends SparkSpec {
       .set("fs.mock3.impl", classOf[NonAtomicRenameFs].getName)
     val conf = new Configuration()
     conf.set("fs.mock3.impl", classOf[NonAtomicRenameFs].getName)
-    val local = Files.createTempDirectory("graft-push-mock3").toString
+    val local = tempDir("graft-push-mock3").toString
     val log = new EventLog(spark, s"mock3://$local")
     val pub = PushBridge.publisher(log)
     val got = mutable.Buffer.empty[SegmentStatus]

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import graft.log.{EventLog, PushNet, PushNetSubscriber}
@@ -18,7 +16,7 @@ import graft.model.{Record, SegmentStatus}
 class PushNetSpec extends SparkSpec {
 
   private def freshLog(): EventLog =
-    new EventLog(spark, Files.createTempDirectory("graft-pushnet").toString)
+    new EventLog(spark, tempDir("graft-pushnet").toString)
 
   private def records(from: Long, n: Long): org.apache.spark.sql.Dataset[Record] = {
     import spark.implicits._
@@ -556,7 +554,7 @@ class PushNetSpec extends SparkSpec {
     // self-signed keypair via the JDK's own keytool — the same material
     // an operator would provision (reference: the JWT rides TLS-capable
     // transports, wss/http2 — http2/context.go:9)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tls")
+    val dir = tempDir("graft_tls")
     val ksPath = dir.resolve("server.p12").toString
     val pass = "graft-spec-pass"
     import scala.sys.process._

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.log.{EventLog, QuorumLog}
 import graft.model.Record
 
@@ -12,7 +10,7 @@ class QuorumLogSpec extends SparkSpec {
 
   private def freshQuorum(n: Int): QuorumLog =
     new QuorumLog(Seq.fill(n)(
-      new EventLog(spark, Files.createTempDirectory("graft-quorum").toString)))
+      new EventLog(spark, tempDir("graft-quorum").toString)))
 
   private def records(from: Long, n: Long): org.apache.spark.sql.Dataset[Record] = {
     import spark.implicits._
@@ -96,7 +94,7 @@ class QuorumLogSpec extends SparkSpec {
     m.heartbeat("n2"); m.heartbeat("n3"); m.heartbeat("n4"); m.heartbeat("n5")
     val q = new QuorumLog(
       Seq.fill(5)(new EventLog(
-        spark, Files.createTempDirectory("graft-quorum").toString)),
+        spark, tempDir("graft-quorum").toString)),
       Some(m))
     assert(q.majority == 3) // 5 live -> same bar as the static arithmetic
     // two nodes expire (TTL, no sweeper) -> the bar follows the live

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.Rollup
@@ -19,7 +17,7 @@ class RollupSpec extends SparkSpec {
     rows.toDF("space", "timestamp")
 
   test("sink maintains the exact per-(space, day) rollup across batches") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = tempDir("graft-rollup").toString
     val mem = MemoryStream[(String, Long)](spark)
     val q = Rollup.sink(
       mem.toDF().toDF("space", "timestamp"), dir, s"$dir/ckpt")
@@ -41,7 +39,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("a replayed batch id is a no-op (single-rename commit point)") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = tempDir("graft-rollup").toString
     Rollup.writeBatch(entryDf(("s0", 1L), ("s0", 2L)), 0L, dir)
     Rollup.writeBatch(entryDf(("s0", 1L), ("s0", 2L)), 0L, dir) // replay
     Rollup.writeBatch(entryDf(("s0", 3L)), 1L, dir)
@@ -52,8 +50,8 @@ class RollupSpec extends SparkSpec {
 
   test("end-to-end: follow a live EventLog into the rollup; view equals batch recompute") {
     import graft.model.Record
-    val logDir = Files.createTempDirectory("graft-rollup-log").toString
-    val dir = Files.createTempDirectory("graft-rollup-view").toString
+    val logDir = tempDir("graft-rollup-log").toString
+    val dir = tempDir("graft-rollup-view").toString
     val log = new graft.log.EventLog(spark, logDir)
     def recs(from: Long, n: Int) =
       spark.createDataset((0 until n).map(i => Record(from + i, s"p${from + i}")))
@@ -74,7 +72,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("compact folds partials; view identical before and after") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = tempDir("graft-rollup").toString
     (0 until 4).foreach(i =>
       Rollup.writeBatch(entryDf(("s0", 10L * i + 1), ("s1", Day + i)), i.toLong, dir))
     val before = Rollup.view(spark, dir).orderBy("space").collect().toSeq
@@ -96,7 +94,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("compact never consumes a sink's newest batch: a checkpoint-lagged replay stays a no-op") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = tempDir("graft-rollup").toString
     (0 until 3).foreach(i => Rollup.writeBatch(entryDf(("s0", i.toLong)), i.toLong, dir))
     val want = Rollup.view(spark, dir).collect().toSeq
     Rollup.compact(spark, dir)
@@ -110,7 +108,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("distinct sinkIds namespace batch idempotence (two pipelines, one rollup dir)") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = tempDir("graft-rollup").toString
     Rollup.writeBatch(entryDf(("s0", 1L)), 0L, dir, "p1")
     // a NEW pipeline's batchIds restart at 0 — its batch must not be
     // mistaken for p1's committed batch 0
@@ -122,7 +120,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("compaction crash windows: roll back before the rename, roll forward after") {
-    val dir = Files.createTempDirectory("graft-rollup").toString
+    val dir = tempDir("graft-rollup").toString
     (0 until 3).foreach(i => Rollup.writeBatch(entryDf(("s0", i.toLong)), i.toLong, dir))
     val want = Rollup.view(spark, dir).collect().toSeq
 

@@ -22,7 +22,7 @@ class StaleInputSpec extends SparkSpec {
       Files.copy(from.resolve(t), to.resolve(t), StandardCopyOption.REPLACE_EXISTING)
 
   test("rewritten input tables under one sfDir give the rewritten tables' results") {
-    val dir = Files.createTempDirectory("graft-stale-input")
+    val dir = tempDir("graft-stale-input")
     try {
       copyTables(Paths.get(SfDir), dir)
       val before = Keys.map(k => k -> run(k, dir.toString)).toMap

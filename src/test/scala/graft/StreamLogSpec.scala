@@ -201,8 +201,8 @@ class StreamLogSpec extends SparkSpec {
     import graft.dedup.Dedup
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
-    val archive = Files.createTempDirectory("graft_neardup_arch").toString
-    val ckpt = Files.createTempDirectory("graft_neardup_ck").toString
+    val archive = tempDir("graft_neardup_arch").toString
+    val ckpt = tempDir("graft_neardup_ck").toString
     // 20-token docs mixing stopwords and distinct nouns: they pass the
     // quality model, and changing ONLY the last token leaves 3-shingle
     // Jaccard at 17/19 ≈ 0.895 ≥ 0.8 — a NEAR dup (content hashes
@@ -1043,7 +1043,7 @@ class StreamLogSpec extends SparkSpec {
 
   test("follow tails a stored log as entries are produced") {
     import graft.model.Record
-    val dir = Files.createTempDirectory("graft-follow").toString
+    val dir = tempDir("graft-follow").toString
     val log = new EventLog(spark, dir)
     log.produce("s0", "a", spark.createDataset(Seq(Record(1, "p1"), Record(2, "p2"))), 1000L)
     val q = StreamLog
@@ -1074,7 +1074,7 @@ class StreamLogSpec extends SparkSpec {
     // host cannot flake the suite while a regression to (say) per-batch
     // full re-reads or a stuck source still fails it.
     import graft.model.Record
-    val dir = Files.createTempDirectory("graft-follow-latency").toString
+    val dir = tempDir("graft-follow-latency").toString
     val log = new EventLog(spark, dir)
     log.produce("s0", "a", spark.createDataset(Seq(Record(1, "p1"))), 1000L)
     val q = StreamLog
@@ -1105,7 +1105,7 @@ class StreamLogSpec extends SparkSpec {
   }
 
   test("appendSink lands micro-batches in the EventLog layout") {
-    val dir = Files.createTempDirectory("graft-streamlog").toString
+    val dir = tempDir("graft-streamlog").toString
     val log = new EventLog(spark, dir)
     val mem = entryStream()
     val entries = mem
@@ -1130,7 +1130,7 @@ class StreamLogSpec extends SparkSpec {
     // advances its offset to the last entry it saw.
     import graft.model.Record
     import graft.operators.EventOps
-    val dir = Files.createTempDirectory("graft-observer").toString
+    val dir = tempDir("graft-observer").toString
     val log = new EventLog(spark, dir)
     def recs(from: Long, n: Long) =
       spark.createDataset((from until from + n).map(i => Record(i, s"p$i")))
@@ -1181,8 +1181,8 @@ class StreamLogSpec extends SparkSpec {
 
   test("appendSink batch replay after a lost commit does not duplicate") {
     import graft.model.Record
-    val dirA = Files.createTempDirectory("graft-replay-src").toString
-    val dirB = Files.createTempDirectory("graft-replay-dst").toString
+    val dirA = tempDir("graft-replay-src").toString
+    val dirB = tempDir("graft-replay-dst").toString
     val logA = new EventLog(spark, dirA)
     val logB = new EventLog(spark, dirB)
     logA.produce("s0", "a", spark.createDataset(Seq(Record(1, "p1"), Record(2, "p2"))), 1000L)

@@ -53,7 +53,7 @@ class StreamRestartSpec extends SparkSpec {
     // uninterrupted reference
     val ref = {
       val mem = MemoryStream[I](spark)
-      val ckpt = Files.createTempDirectory("graft_ckpt_ref").toString
+      val ckpt = tempDir("graft_ckpt_ref").toString
       val sink = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val q = start(mem, ckpt, sink)
       try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -62,7 +62,7 @@ class StreamRestartSpec extends SparkSpec {
     }
     // stop after `stopAfter` batches, restart from the same checkpoint
     val mem = MemoryStream[I](spark)
-    val ckpt = Files.createTempDirectory("graft_ckpt_restart").toString
+    val ckpt = tempDir("graft_ckpt_restart").toString
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val q1 = start(mem, ckpt, sink)
     try batches.take(stopAfter).foreach { b =>
@@ -235,7 +235,7 @@ class StreamRestartSpec extends SparkSpec {
 
   test("appendSink is exactly-once through the publish/marker crash window") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_append_eo").toString
+    val dir = tempDir("graft_append_eo").toString
     val ckpt = s"$dir/ckpt"
     val log = new graft.log.EventLog(spark, dir)
     val mem = MemoryStream[InEntry](spark)
@@ -264,8 +264,8 @@ class StreamRestartSpec extends SparkSpec {
 
   test("nearDupIngest is exactly-once through the publish/marker crash window") {
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
-    val archive = Files.createTempDirectory("graft_neardup_eo").toString
-    val ckpt = Files.createTempDirectory("graft_neardup_eo_ck").toString
+    val archive = tempDir("graft_neardup_eo").toString
+    val ckpt = tempDir("graft_neardup_eo_ck").toString
     def start() = StreamLog.nearDupIngest(
       mem.toDF().toDF("doc_id", "text", "event_time"), archive, ckpt)
     val tiers = Seq("docs", "shingles", "bands")
@@ -304,7 +304,7 @@ class StreamRestartSpec extends SparkSpec {
 
   test("exactlyOnce marker GC drops only its own sinkId's markers past IngestMarkerKeep") {
     import graft.log.LogFs
-    val root = Files.createTempDirectory("graft_marker_gc").toString
+    val root = tempDir("graft_marker_gc").toString
     val markers = s"$root/_commits"
     val fs = LogFs.fs(spark, root)
     val keep = StreamLog.IngestMarkerKeep
@@ -342,8 +342,8 @@ class StreamRestartSpec extends SparkSpec {
       Seq.tabulate(3)(j =>
         (i * 10L + j) -> Seq.tabulate(4)(d => if (d == i - 1) 1.0 else 0.01 * (j + 1))))
     val cb = Ann.pqTrain(corpusDf(base), m = 2, ks = 2, dim = 4, iters = 1)
-    val path = Files.createTempDirectory("graft_ingest_eo").toString
-    val ckpt = Files.createTempDirectory("graft_ingest_eo_ck").toString
+    val path = tempDir("graft_ingest_eo").toString
+    val ckpt = tempDir("graft_ingest_eo_ck").toString
     Ann.ivfPqBuild(corpusDf(base), cents, cb, path)
 
     def counts(tier: String) = spark.read.parquet(s"$path/$tier")
@@ -384,7 +384,7 @@ class StreamRestartSpec extends SparkSpec {
     // not be discarded as a replay of the first pipeline's batch 0 (the
     // trap sinkId namespacing exists to prevent)
     val mem2 = MemoryStream[(Long, Seq[Double])](spark)
-    val ckpt2 = Files.createTempDirectory("graft_ingest_eo_ck2").toString
+    val ckpt2 = tempDir("graft_ingest_eo_ck2").toString
     val q3 = StreamLog.ivfPqIngest(
       mem2.toDS().toDF("neighbor_id", "c_v"), path, ckpt2,
       sinkId = "ivfpq1", dim = 4)
@@ -401,7 +401,7 @@ class StreamRestartSpec extends SparkSpec {
     new java.io.FileOutputStream(
       s"$path/_ingest_commits/ivfpq1-batch-junk.done").close()
     val mem3 = MemoryStream[(Long, Seq[Double])](spark)
-    val ckpt3 = Files.createTempDirectory("graft_ingest_eo_ck3").toString
+    val ckpt3 = tempDir("graft_ingest_eo_ck3").toString
     val q4 = StreamLog.ivfPqIngest(
       mem3.toDS().toDF("neighbor_id", "c_v"), path, ckpt3,
       sinkId = "ivfpq2", dim = 4)
