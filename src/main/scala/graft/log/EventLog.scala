@@ -1,8 +1,11 @@
 package graft.log
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.roaringbitmap.RoaringBitmap
 
 import graft.model.{Entry, Record, SegmentStatus}
 import graft.operators.EventOps
@@ -14,10 +17,12 @@ import graft.operators.EventOps
   *  - entries live in an append-only parquet table partitioned by `space`
   *    (partition pruning ≡ the reference's key-prefix scans; at cluster
   *    scale the same layout holds on object storage),
-  *  - produce validates sequence contiguity *distributively* (an
-  *    aggregate over the batch, not a per-record loop) and chunks the
-  *    batch into fixed-size transactions exactly like the reference's
-  *    10 000-entry produce chunks (pebble/service.go:307),
+  *  - produce stamps and writes a batch in one Spark job that also
+  *    validates its sequence contiguity *distributively* (an exact
+  *    bitmap aggregate observed on the write, not a per-record loop),
+  *    and chunks the batch into fixed-size transactions exactly like the
+  *    reference's 10 000-entry produce chunks (pebble/service.go:307);
+  *    nothing is published until the check has passed,
   *  - reads delegate to [[graft.operators.EventOps]] so consume plans are
   *    identical whether the log came from this store or any other source.
   *
@@ -51,8 +56,9 @@ final class EventLog(
     * server/cache.go:1). Correct under the store's
     * single-writer-per-segment rule: every mutation issued through THIS
     * instance maintains it (produce, and publish through it, puts the
-    * key from the batch's validated bounds once its append returns; an
-    * append that throws leaves the key dropped; synchronize/compact/
+    * key from the batch's validated bounds once its publish returns; a
+    * publish that throws leaves the key dropped, a refused batch, which
+    * publishes nothing, leaves it as it was; synchronize/compact/
     * retain invalidate;
     * [[TxnLog]] commits and [[graft.streaming.StreamLog.appendSink]]
     * batches invalidate). A writer outside this instance must call
@@ -83,17 +89,21 @@ final class EventLog(
   def invalidateCache(space: String): Unit =
     peekCache.removeIf(_._1 == space)
 
-  /** The committed log as a DataFrame in canonical schema. */
+  /** The committed log as a DataFrame: the data columns in file order,
+    * then `space` as a string. Read with the stored schema, not an
+    * inferred one: no footer job, and a space named `007` stays `007`
+    * (partition inference would read it back as the int 7). */
   def load(): DataFrame =
     if (isEmpty)
       spark.emptyDataset[Entry].toDF()
-    else spark.read.parquet(dataDir)
+    else spark.read.schema(EventLog.StoredSchema).parquet(dataDir)
 
   /** Append `records` to one segment. Sequences must continue the
-    * segment's last committed sequence contiguously — the batch is
-    * validated with one aggregate (min/max/count/distinct) instead of a
-    * sequential scan, then stamped and chunked into transactions of
-    * `chunkSize`. Returns one [[SegmentStatus]] per chunk, in order.
+    * segment's last committed sequence contiguously. The batch is
+    * stamped, chunked into transactions of `chunkSize` and written in
+    * one Spark job that validates it as it writes ([[stage]]); it is
+    * published only once the check has passed. Returns one
+    * [[SegmentStatus]] per chunk, in order.
     * (reference: Produce, pebble/service.go:296-343)
     *
     * The acks and the peek-cache entry come from the bounds validation
@@ -111,17 +121,11 @@ final class EventLog(
     require(chunkSize > 0, "chunkSize must be positive")
     val last = peek(space, segment)
     val lastTrx = last.map(_.trxNumber).getOrElse(0L)
-
-    // one materialization feeds validation and the write: uncached, a
-    // nondeterministic plan could validate one set of rows and persist
-    // another
-    val cached = records.cache()
-    try {
-      val stamped = stampValidated(
-        space, segment, cached, timestampUs, last.map(_.sequence).getOrElse(0L))(lo =>
-        expr(s"CAST($lastTrx + 1 + (sequence - $lo) DIV $chunkSize AS BIGINT)"))
-      stamped.fold(Seq.empty[SegmentStatus]) { b =>
-        appendEntries(b.entries, _ == ((space, segment)))
+    val lastSeq = last.map(_.sequence).getOrElse(0L)
+    val trx = expr(s"CAST($lastTrx + 1 + (sequence - ${lastSeq + 1}) DIV $chunkSize AS BIGINT)")
+    appendEntries(_ == ((space, segment)))(
+      stage(space, segment, records, timestampUs, lastSeq, _)(trx))
+      .fold(Seq.empty[SegmentStatus]) { b =>
         val statuses =
           EventLog.chunkStatuses(space, segment, b.lo, b.hi, timestampUs, chunkSize)
         peekCache.put(
@@ -139,70 +143,104 @@ final class EventLog(
         bus.publish(statuses)
         statuses
       }
-    } finally cached.unpersist(false)
   }
 
-  /** The produce checks shared with [[TxnLog.write]]: one aggregate
-    * (count/min/max/distinct — distributed, not a per-record loop)
-    * proves `records` continue `lastSeq` contiguously, then the rows are
-    * stamped as entries of `space`/`segment` at `timestampUs`, with the
-    * trxNumber column `trx` builds from the batch's first sequence. The
-    * same aggregate carries the payload and metadata at `hi` for the
-    * peek cache. None for an empty batch. */
-  private[log] def stampValidated(
+  /** The one-pass stager shared with [[TxnLog.write]]: writes `records`
+    * into `dir`, stamped as entries of `space`/`segment` at
+    * `timestampUs` with the trxNumber column `trx`, in ONE Spark job
+    * that also checks them. One `observe` on the write carries the
+    * batch's count/min/max, the exact contiguity check
+    * ([[EventLog.Contiguous]]) and the payload and metadata at the
+    * highest sequence for the peek cache, so a single evaluation of
+    * `records` feeds both the check and the files — a nondeterministic
+    * plan cannot stage rows other than the ones checked. The observe
+    * node sits in the write's result stage with no exchange above it:
+    * Spark merges a result task's accumulator update once per
+    * partition, even on retry.
+    *
+    * A batch whose estimated size fits one read split
+    * (`spark.sql.files.maxPartitionBytes`) is written as one file;
+    * a larger one keeps its input partitioning and its parallel write.
+    *
+    * Returns the batch's bounds and last payload/metadata, or None for
+    * an empty batch. Throws `sequence mismatch` unless the batch is
+    * exactly `[lastSeq + 1, lastSeq + n]`. On None or a throw `dir` is
+    * deleted: nothing of a refused batch stays staged. */
+  private[log] def stage(
       space: String,
       segment: String,
       records: Dataset[Record],
       timestampUs: Long,
-      lastSeq: Long)(trx: Long => Column): Option[EventLog.Stamped] = {
-    val stats = records
-      .agg(
+      lastSeq: Long,
+      dir: String)(trx: Column): Option[EventLog.Staged] = {
+    val base = lastSeq + 1
+    val batch = Observation()
+    val entries = records
+      .select(
+        lit(space).as("space"),
+        lit(segment).as("segment"),
+        col("sequence"),
+        lit(timestampUs).as("timestamp"),
+        trx.as("trxNumber"),
+        col("payload"),
+        col("metadata"))
+      .observe(
+        batch,
         count(lit(1)).as("n"),
         min("sequence").as("lo"),
         max("sequence").as("hi"),
-        count_distinct(col("sequence")).as("nd"),
-        max_by(col("payload"), col("sequence")),
-        max_by(col("metadata"), col("sequence")))
-      .head()
-    val n = stats.getLong(0)
-    if (n == 0) return None // before getLong on lo/hi: both null here
-    val (lo, hi, nd) = (stats.getLong(1), stats.getLong(2), stats.getLong(3))
-    require(
-      lo == lastSeq + 1 && hi == lastSeq + n && nd == n,
-      s"sequence mismatch: expected contiguous [${lastSeq + 1}, ${lastSeq + n}], " +
-        s"got [$lo, $hi] with $nd distinct of $n")
-    val entries = records.select(
-      lit(space).as("space"),
-      lit(segment).as("segment"),
-      col("sequence"),
-      lit(timestampUs).as("timestamp"),
-      trx(lo).as("trxNumber"),
-      col("payload"),
-      col("metadata"))
-    Some(EventLog.Stamped(
-      lo, hi, stats.getString(4), stats.getMap[String, String](5).toMap, entries))
+        udaf(EventLog.Contiguous(base), Encoders.scalaLong)(col("sequence")).as("contiguous"),
+        max_by(col("payload"), col("sequence")).as("payload"),
+        max_by(col("metadata"), col("sequence")).as("metadata"))
+    val oneSplit = records.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.filesMaxPartitionBytes
+    var staged: Option[EventLog.Staged] = None
+    try {
+      (if (oneSplit) entries.coalesce(1) else entries).write
+        .mode(SaveMode.Overwrite)
+        .partitionBy("space")
+        .parquet(dir)
+      val m = batch.get
+      def metric[T](name: String): T = m(name).asInstanceOf[T]
+      val n = metric[Long]("n")
+      if (n > 0) {
+        val (lo, hi) = (metric[Long]("lo"), metric[Long]("hi"))
+        require(
+          metric[Boolean]("contiguous"),
+          s"sequence mismatch: expected contiguous [$base, ${lastSeq + n}], " +
+            s"got [$lo, $hi] in $n records")
+        staged = Some(EventLog.Staged(
+          lo, hi, metric[String]("payload"),
+          metric[scala.collection.Map[String, String]]("metadata").toMap))
+      }
+    } finally if (staged.isEmpty) LogFs.deleteRecursive(hfs, dir)
+    staged
   }
 
-  /** Multi-file append through the staged publish of [[LogFs]], under a
-    * call-unique `<token>-` prefix. Staging per call is what makes
+  /** Append through the staged publish of [[LogFs]]: `write` stages into
+    * a call-unique dir, whose files are published under its `<token>-`
+    * prefix iff `write` returns a result. Staging per call is what makes
     * producers to different segments safe to run concurrently (other
-    * threads or other processes). An append is not transactional across
+    * threads or other processes). A publish is not transactional across
     * part files, and a throw can leave some of them published, so every
-    * append, failed or not, drops the cached positions `written` selects:
+    * publish, failed or not, drops the cached positions `written` selects:
     * the next peek re-scans and validation sees what did land (produce
     * then caches its new position from the batch bounds). A hard crash
     * can leave an inert staging dir under `produce-staging/` — swept
     * here, age-gated so an in-flight concurrent produce is never
     * touched. */
-  private def appendEntries(entries: DataFrame, written: ((String, String)) => Boolean): Unit = {
+  private def appendEntries[T](written: ((String, String)) => Boolean)(
+      write: String => Option[T]): Option[T] = {
     val token = java.util.UUID.randomUUID().toString
     val stagingRoot = s"$path/produce-staging"
     val staging = s"$stagingRoot/$token"
     try {
-      entries.write.mode(SaveMode.Overwrite).partitionBy("space").parquet(staging)
-      LogFs.publish(hfs, staging, dataDir, s"$token-")
+      val staged = write(staging)
+      if (staged.nonEmpty)
+        try LogFs.publish(hfs, staging, dataDir, s"$token-")
+        finally peekCache.removeIf(written)
+      staged
     } finally {
-      peekCache.removeIf(written)
       LogFs.deleteRecursive(hfs, staging)
       // age-gated sweep of staging dirs a crashed producer left behind.
       // The age of a dir is the NEWEST mtime anywhere under it, not the
@@ -335,7 +373,7 @@ final class EventLog(
     * names the replicas needing repair).
     * Returns the resulting file count (0 if the space does not exist). */
   def compact(space: String, targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    rewriteSpace(space, identity, targetFileBytes)
+    rewriteSpace(space, targetFileBytes)(in => (in, 1.0))
 
   /** Retention / TTL enforcement: drop every entry of `space` with
     * `timestamp < minTimestamp` — the third log-lifecycle operation
@@ -356,15 +394,19 @@ final class EventLog(
       space: String,
       minTimestamp: Long,
       targetFileBytes: Long = 128L * 1024 * 1024): Int =
-    rewriteSpace(
-      space,
-      df => {
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("segment")
-        df.withColumn("__hwm", max("sequence").over(w))
-          .filter(col("timestamp") >= minTimestamp || col("sequence") === col("__hwm"))
-          .drop("__hwm")
-      },
-      targetFileBytes)
+    rewriteSpace(space, targetFileBytes) { in =>
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("segment")
+      val kept = in
+        .withColumn("__hwm", max("sequence").over(w))
+        .filter(col("timestamp") >= minTimestamp || col("sequence") === col("__hwm"))
+        .drop("__hwm")
+      // size the output from the survivors: a retention pass that drops
+      // most of the space must not shatter them into pre-retention-many
+      // tiny files (the row-count ratio is a fair size proxy; both
+      // counts are cheap next to the rewrite)
+      val total = in.count()
+      (kept, if (total == 0L) 0.0 else kept.count().toDouble / total)
+    }
 
   /** Partition dir name as Spark's `partitionBy` writes it: partition
     * VALUES are escaped (`/`, `=`, `%`, `:`, …), so a raw
@@ -374,10 +416,11 @@ final class EventLog(
     "space=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .escapePathName(space)
 
-  private def rewriteSpace(
-      space: String,
-      transform: DataFrame => DataFrame,
-      targetFileBytes: Long): Int = {
+  /** Rewrite one space's partition through `transform`, which returns
+    * the rows to keep and their estimated fraction of the partition's
+    * bytes (the output is sized from it, in ~`targetFileBytes` files). */
+  private def rewriteSpace(space: String, targetFileBytes: Long)(
+      transform: DataFrame => (DataFrame, Double)): Int = {
     // a rewrite preserves peek semantics (retain keeps each segment's
     // max-sequence row), but invalidating is free and removes any
     // dependence of cache coherence on that invariant
@@ -385,19 +428,9 @@ final class EventLog(
     recoverCompaction(space)
     val partPath = s"$dataDir/${spacePartDir(space)}"
     if (!LogFs.exists(hfs, partPath)) return 0
-    val bytes = LogFs.totalBytes(hfs, partPath)
-    val in = spark.read.parquet(partPath)
-    val transformed = transform(in)
-    // size the output from the POST-transform data: a retention pass
-    // that drops most of the space must not shatter the survivors into
-    // pre-transform-many tiny files (row-count ratio × bytes is a fair
-    // size proxy; both counts are cheap next to the rewrite). Ratio in
-    // floating point: bytes × rows would overflow Long at TB scale.
-    val keptBytes = {
-      val total = in.count()
-      if (total == 0L) 0L
-      else (bytes * (transformed.count().toDouble / total)).toLong
-    }
+    val (transformed, kept) =
+      transform(spark.read.schema(EventLog.DataSchema).parquet(partPath))
+    val keptBytes = (LogFs.totalBytes(hfs, partPath) * kept).toLong
     val nFiles =
       math.max(1L, (keptBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val staging = s"$path/compacting-${spacePartDir(space).stripPrefix("space=")}"
@@ -494,7 +527,6 @@ final class EventLog(
     var remoteDf = remote.load()
     space.foreach(sp => remoteDf = remoteDf.filter(col("space") === sp))
     segment.foreach(sg => remoteDf = remoteDf.filter(col("segment") === sg))
-    if (remoteDf.isEmpty) return 0L
 
     val localHw =
       if (isEmpty) null
@@ -513,26 +545,70 @@ final class EventLog(
           .filter(col("hw_seq").isNull || col("sequence") > col("hw_seq"))
           .drop("hw_space", "hw_segment", "hw_seq")
 
-    val toWrite = missing.cache()
-    try {
-      val n = toWrite.count()
-      // the pulled tail may advance any segment's high-water mark
-      if (n > 0) appendEntries(toWrite, k => space.forall(_ == k._1))
-      n
-    } finally toWrite.unpersist()
+    // counted as it is written; the pulled tail may advance any
+    // segment's high-water mark
+    val pulled = Observation()
+    appendEntries(k => space.forall(_ == k._1)) { dir =>
+      missing
+        .observe(pulled, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).partitionBy("space").parquet(dir)
+      Some(pulled.get("n").asInstanceOf[Long]).filter(_ > 0)
+    }.getOrElse(0L)
   }
 }
 
-private[log] object EventLog {
+private[graft] object EventLog {
 
-  /** A validated batch: its sequence bounds, the payload and metadata of
-    * the row at `hi`, and the rows stamped as entries. */
-  final case class Stamped(
+  /** The columns of a data file, in file order: every [[Entry]] field
+    * but `space`, which lives in the partition path. Nullable, as a
+    * parquet read reports them. */
+  val DataSchema: StructType = StructType(
+    Encoders.product[Entry].schema.fields.collect {
+      case f if f.name != "space" => f.copy(nullable = true)
+    })
+
+  /** The schema [[EventLog.load]] reads with: the data columns, then
+    * the `space` partition column as a string. */
+  val StoredSchema: StructType = DataSchema.add("space", StringType)
+
+  /** A staged, validated batch: its sequence bounds and the payload and
+    * metadata of the row at `hi`. */
+  final case class Staged(
       lo: Long,
       hi: Long,
       lastPayload: String,
-      lastMetadata: Map[String, String],
-      entries: DataFrame)
+      lastMetadata: Map[String, String])
+
+  /** Set in a [[Contiguous]] bitmap when the batch is already known bad.
+    * No valid offset reaches it: offsets ≥ `Int.MaxValue` are bad. */
+  private val Bad = Int.MaxValue
+
+  /** The exact contiguity check: true iff the sequences are exactly
+    * `base, base + 1, …, base + n − 1` in any order. Each sequence sets
+    * bit `sequence − base` of a RoaringBitmap. An offset < 0 or
+    * ≥ `Int.MaxValue` (a `Long` wrap lands there too), a bit already
+    * set, or two partial bitmaps that intersect at merge set the [[Bad]]
+    * bit instead; a batch without it is contiguous iff its bitmap is
+    * `[0, cardinality − 1]`. The bitmap needs one container per 65 536
+    * offsets, and is serialized once per task. */
+  final case class Contiguous(base: Long) extends Aggregator[Long, RoaringBitmap, Boolean] {
+    def zero: RoaringBitmap = new RoaringBitmap
+    def reduce(bits: RoaringBitmap, sequence: Long): RoaringBitmap = {
+      val offset = sequence - base
+      if (offset < 0 || offset >= Bad || !bits.checkedAdd(offset.toInt)) bits.add(Bad)
+      bits
+    }
+    def merge(a: RoaringBitmap, b: RoaringBitmap): RoaringBitmap = {
+      if (RoaringBitmap.intersects(a, b)) a.add(Bad)
+      a.or(b)
+      a
+    }
+    def finish(bits: RoaringBitmap): Boolean =
+      bits.isEmpty ||
+        (!bits.contains(Bad) && bits.first == 0 && bits.last == bits.getLongCardinality - 1)
+    def bufferEncoder: Encoder[RoaringBitmap] = Encoders.javaSerialization[RoaringBitmap]
+    def outputEncoder: Encoder[Boolean] = Encoders.scalaBoolean
+  }
 
   /** The acks of a batch proven to be exactly `[lo, hi]`, stamped at
     * `timestampUs`: one per `chunkSize` sequences, in order. */

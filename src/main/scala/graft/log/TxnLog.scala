@@ -1,7 +1,7 @@
 package graft.log
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Dataset, SaveMode}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.lit
 
 import graft.model.{Record, SegmentStatus}
@@ -10,10 +10,11 @@ import graft.model.{Record, SegmentStatus}
   * Write / Commit / Rollback protocol (reference: pebble/service.go:
   * 414-530) mapped onto the staged publish of [[LogFs]]:
   *
-  *  - `write` stages a validated batch under `path/staged/<trxId>/`
-  *    (invisible to readers — `EventLog.load` only reads `path/data`)
-  *    and rejects a trxId that is already staged (the reference's
-  *    checkExistingTransaction),
+  *  - `write` stages a batch under `path/staged/<trxId>/` in the one
+  *    Spark job that also validates it (invisible to readers —
+  *    `EventLog.load` only reads `path/data`; a refused batch leaves no
+  *    staged dir) and rejects a trxId that is already staged (the
+  *    reference's checkExistingTransaction),
   *  - `commit` publishes the staged files into the data dir under the
   *    `trx-<id>.` prefix ([[LogFs.publish]]): re-calling `commit` with
   *    the same trxId after a crash resumes the publish. The reference
@@ -42,8 +43,11 @@ final class TxnLog(val log: EventLog) {
     LogFs.exists(hfs, s"$stagedRoot/$trxId")
   }
 
-  /** Stage a contiguous batch; returns the staged trx id. Validation is
-    * identical to [[EventLog.produce]] but nothing becomes visible. */
+  /** Stage a contiguous batch under `trxId`. Validation is
+    * [[EventLog.produce]]'s, in the same one-pass write
+    * ([[EventLog.stage]]), but nothing becomes visible: the rows staged
+    * are exactly the rows checked, and a refused or empty batch leaves
+    * no staged dir. */
   def write(
       trxId: String,
       space: String,
@@ -57,15 +61,11 @@ final class TxnLog(val log: EventLog) {
     require(
       trxNumber == lastTrx + 1,
       s"transaction number mismatch: expected ${lastTrx + 1}, got $trxNumber")
-    val stamped = log.stampValidated(
-      space, segment, records, timestampUs, last.map(_.sequence).getOrElse(0L))(
-      _ => lit(trxNumber))
-    require(stamped.nonEmpty, s"empty batch staging trx $trxId")
-    val batch = stamped.get
-    batch.entries.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("space")
-      .parquet(s"$stagedRoot/$trxId")
+    val staged = log.stage(
+      space, segment, records, timestampUs, last.map(_.sequence).getOrElse(0L),
+      s"$stagedRoot/$trxId")(lit(trxNumber))
+    require(staged.nonEmpty, s"empty batch staging trx $trxId")
+    val batch = staged.get
     // status sidecar (non-parquet: the publish walk skips it, the
     // staged-dir delete removes it): commit() reads it back so the
     // bus notification carries exact ack bounds without an

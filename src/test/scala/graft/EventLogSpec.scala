@@ -103,7 +103,7 @@ class EventLogSpec extends SparkSpec {
     val log = new EventLog(spark, s"failrn://$local")
     log.produce("s0", "seg0", records(1, 5), 1000L)
     assert(log.peek("s0", "seg0").get.sequence == 5L)
-    val batch = records(6, 8) // several part files: one lands, the next rename fails
+    val batch = spread(6L until 14L, 4) // several part files: one lands, the next rename fails
     FailingRenameFs.arm(s"$local/data/")
     try intercept[java.io.IOException](log.produce("s0", "seg0", batch, 2000L))
     finally FailingRenameFs.disarm()
@@ -576,6 +576,218 @@ class EventLogSpec extends SparkSpec {
     assert(c.get(3).contains(31), "a write must re-arm the entry's TTL")
   }
 
+  /** Every file under `dir` (relative path), for before/after diffs. */
+  private def filesUnder(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Set.empty
+    else {
+      val s = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(root.relativize(_).toString).toSet
+      } finally s.close()
+    }
+  }
+
+  private def parquetFiles(log: EventLog): Set[String] =
+    filesUnder(s"${log.path}/data").filter(_.endsWith(".parquet"))
+
+  private def seqs(xs: Long*): org.apache.spark.sql.Dataset[Record] = {
+    import spark.implicits._
+    spark.createDataset(xs.map(i => Record(i, s"payload $i")))
+  }
+
+  /** A batch with no size estimate (RDD-backed) in `parts` partitions:
+    * produce keeps its partitioning, one task and one file per part. */
+  private def spread(xs: Seq[Long], parts: Int): org.apache.spark.sql.Dataset[Record] =
+    spark.createDataset(
+      spark.sparkContext.parallelize(xs.map(i => Record(i, s"payload $i")), parts))(
+      org.apache.spark.sql.Encoders.product[Record])
+
+  /** Spark jobs `body` launches (listener events are async: wait until
+    * the count stops moving on both sides). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def settled(): Int = {
+      var prev = -1
+      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(150) }
+      prev
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val before = settled()
+      val out = body
+      (out, settled() - before)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("spaces named 7 and 007 stay two string spaces") {
+    import spark.implicits._
+    val log = freshLog()
+    for (space <- Seq("7", "007")) {
+      val one = spark.createDataset(Seq(Record(1L, s"in $space")))
+      assert(log.produce(space, "seg0", one, 1000L).map(_.lastSequence) == Seq(1L), space)
+    }
+    for (space <- Seq("7", "007")) {
+      val cold = new EventLog(spark, log.path).peek(space, "seg0")
+      assert(cold.map(e => (e.space, e.payload)) == Some((space, s"in $space")), space)
+    }
+    val seven = log.consumeSegment("7", "seg0").collect()
+    assert(seven.map(r => (r.getAs[String]("space"), r.getAs[String]("payload"))).toSeq ==
+      Seq(("7", "in 7")))
+    val spaces = log.getSpaces()
+    assert(spaces.schema("space").dataType == org.apache.spark.sql.types.StringType)
+    assert(spaces.collect().map(_.getString(0)).sorted.toSeq == Seq("007", "7"))
+  }
+
+  test("load reads the schema parquet inference gives string-named spaces") {
+    val log = freshLog()
+    log.produce("s0", "seg0", tagged(1, 3), 1000L)
+    assert(log.load().schema == spark.read.parquet(s"${log.path}/data").schema)
+  }
+
+  test("a refused batch publishes nothing, stages nothing and keeps peek") {
+    val log = freshLog()
+    log.produce("s0", "seg0", records(1, 5), 1000L)
+    val files = parquetFiles(log)
+    val peek = log.peek("s0", "seg0")
+    val refused = Seq(
+      "duplicate" -> seqs(6L, 7L, 7L, 9L), // count, min and max alone pass
+      "gap" -> seqs(6L, 8L),
+      "stale" -> seqs(5L, 6L),
+      "replay" -> records(3, 3),
+      // the offset 2 + 2^32 would wrap to 2 as an Int
+      "past Int.MaxValue" -> seqs(6L, 7L, 8L + (1L << 32)),
+      "offset Int.MaxValue" -> seqs(6L + Int.MaxValue),
+      "duplicate across partitions" -> spread(Seq(6L, 7L, 7L, 9L), 2))
+    for ((name, batch) <- refused) {
+      val e = intercept[IllegalArgumentException](log.produce("s0", "seg0", batch, 2000L))
+      assert(e.getMessage.contains("sequence mismatch: expected contiguous [6, "), name)
+      assert(parquetFiles(log) == files, name)
+      assert(filesUnder(s"${log.path}/produce-staging").isEmpty, name)
+      assert(log.peek("s0", "seg0") == peek, name)
+      assert(new EventLog(spark, log.path).peek("s0", "seg0") == peek, name)
+    }
+    // the same refusals through TxnLog leave no staged dir
+    val txn = new TxnLog(log)
+    for ((name, batch) <- refused) {
+      intercept[IllegalArgumentException](txn.write("trx-bad", "s0", "seg0", batch, 2000L, 2L))
+      assert(!txn.isStaged("trx-bad"), name)
+    }
+    assert(log.consumeSegment("s0", "seg0").count() == 5L)
+  }
+
+  test("accepted batches: one record, reordered, and 100k rows across partitions") {
+    val log = freshLog()
+    assert(log.produce("s0", "seg0", seqs(1L), 1000L) ==
+      Seq(SegmentStatus("s0", "seg0", 1L, 1000L, 1L, 1000L)))
+    assert(log.produce("s0", "seg0", seqs(4L, 2L, 6L, 3L, 5L), 2000L).map(s =>
+      (s.firstSequence, s.lastSequence)) == Seq((2L, 6L)))
+    assert(log.peek("s0", "seg0").map(e => (e.sequence, e.payload)) == Some((6L, "payload 6")))
+    // interleaved over 4 partitions: every task sees a sparse bitmap,
+    // only the merge is contiguous
+    val big = (7L until 100007L).sortBy(i => (i % 4, i))
+    val before = parquetFiles(log)
+    val acks = log.produce("s0", "seg0", spread(big, 4), 3000L)
+    assert(acks.size == 10)
+    assert((parquetFiles(log) -- before).size >= 2)
+    val (statuses, last) = readback(log, "s0", "seg0", 6L)
+    assert(acks == statuses)
+    assert(log.peek("s0", "seg0").contains(last))
+    assert(new EventLog(spark, log.path).peek("s0", "seg0").contains(last))
+    assert(log.consumeSegment("s0", "seg0").count() == 100006L)
+  }
+
+  test("an empty batch acks nothing and writes no file") {
+    import spark.implicits._
+    val log = freshLog()
+    log.produce("s0", "seg0", records(1, 5), 1000L)
+    val files = parquetFiles(log)
+    assert(log.produce("s0", "seg0", spark.emptyDataset[Record], 2000L).isEmpty)
+    assert(parquetFiles(log) == files)
+    assert(filesUnder(s"${log.path}/produce-staging").isEmpty)
+    assert(log.peek("s0", "seg0").get.sequence == 5L)
+  }
+
+  test("a warm-peek produce is one Spark job; a small batch is one file, a large one several") {
+    val log = freshLog()
+    log.produce("s0", "seg0", records(1, 100), 1000L)
+    val before = parquetFiles(log)
+    val (acks, jobs) = jobsOf(log.produce("s0", "seg0", records(101, 100), 2000L))
+    assert(acks.map(s => (s.firstSequence, s.lastSequence)) == Seq((101L, 200L)))
+    assert(jobs == 1, "stage, check and write in one job")
+    assert((parquetFiles(log) -- before).size == 1, "100 records publish one file")
+    // a range batch whose estimate exceeds one read split keeps its
+    // parallel write
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, concat, lit, typedLit}
+    val large = spark.range(201, 201 + 500000)
+      .select(
+        col("id").as("sequence"),
+        concat(lit("payload-"), col("id")).as("payload"),
+        typedLit(Map.empty[String, String]).as("metadata"))
+      .as[Record]
+    assert(large.queryExecution.optimizedPlan.stats.sizeInBytes >
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    val mid = parquetFiles(log)
+    log.produce("s0", "seg0", large, 3000L)
+    assert((parquetFiles(log) -- mid).size >= 2)
+    assert(log.peek("s0", "seg0").get.sequence == 500200L)
+  }
+
+  test("TxnLog.write stages exactly the rows it checked") {
+    import org.apache.spark.sql.functions.{col, concat, lit, typedLit, udf}
+    import spark.implicits._
+    val log = freshLog()
+    val txn = new TxnLog(log)
+    val n = 10L
+    // contiguous on the first evaluation of the batch, shifted by 100 on
+    // any later one
+    NondetSequences.calls.set(0L)
+    val sequence = udf((id: Long) =>
+      if (NondetSequences.calls.getAndIncrement() < n) id else id + 100L).asNondeterministic()
+    val batch = spark.range(1, n + 1)
+      .select(
+        sequence(col("id")).as("sequence"),
+        concat(lit("payload "), col("id")).as("payload"),
+        typedLit(Map.empty[String, String]).as("metadata"))
+      .as[Record]
+    scala.util.Try(txn.write("trx-nd", "s0", "seg0", batch, 1000L, 1L)) match {
+      case scala.util.Success(_) =>
+        txn.commit("trx-nd")
+        assert(log.consumeSegment("s0", "seg0").collect()
+          .map(_.getAs[Long]("sequence")).sorted.toSeq == (1L to n))
+      case scala.util.Failure(e) =>
+        assert(e.getMessage.contains("sequence mismatch"))
+        assert(!txn.isStaged("trx-nd"))
+    }
+  }
+
+  test("the contiguity aggregate is exact across partitions and offsets") {
+    def contiguous(base: Long)(parts: Seq[Long]*): Boolean = {
+      val agg = EventLog.Contiguous(base)
+      agg.finish(parts.map(_.foldLeft(agg.zero)(agg.reduce)).reduce(agg.merge))
+    }
+    assert(contiguous(6)(Seq(6L, 7L, 8L)))
+    assert(contiguous(6)(Seq(8L, 6L), Seq(7L)))
+    assert(contiguous(6)(Seq.empty, Seq(6L)))
+    assert(!contiguous(6)(Seq(6L, 7L, 7L, 9L)), "duplicate within a partition")
+    assert(!contiguous(6)(Seq(6L, 7L), Seq(7L, 9L)), "duplicate across partitions")
+    assert(!contiguous(6)(Seq(6L, 8L)), "gap")
+    assert(!contiguous(6)(Seq(5L, 6L)), "stale")
+    assert(!contiguous(6)(Seq(7L, 8L)), "does not start at base")
+    assert(!contiguous(6)(Seq(6L, 7L, 8L + (1L << 32))), "no Int wrap")
+    assert(!contiguous(6)(Seq(6L + Int.MaxValue)), "offset Int.MaxValue")
+    assert(!contiguous(6)(Seq(Long.MinValue)), "no Long wrap")
+    assert(!contiguous(6)(Seq(6L), Seq(Long.MaxValue)))
+  }
+
   test("consume with zero subscriptions returns an empty canonical frame") {
     val log = freshLog()
     log.produce("s0", "seg0", records(1, 5), 1000L)
@@ -608,4 +820,11 @@ object FailingRenameFs {
 
   def arm(dir: String): Unit = { renamesInto.set(0); armedDir = Some(dir) }
   def disarm(): Unit = armedDir = None
+}
+
+/** The evaluation counter behind the nondeterministic batch of "TxnLog.write
+  * stages exactly the rows it checked" (executors share the driver JVM
+  * in local mode). */
+object NondetSequences {
+  val calls = new java.util.concurrent.atomic.AtomicLong
 }
