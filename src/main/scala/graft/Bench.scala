@@ -45,15 +45,22 @@ object Bench {
   final class Counters extends SparkListener {
     private val stageTag = mutable.HashMap.empty[Int, String]
     private val byTag = mutable.HashMap.empty[String, Stats]
+    private val jobStartMs = mutable.HashMap.empty[String, mutable.ArrayBuffer[Long]]
 
     private def update(tag: String)(f: Stats => Stats): Unit =
       byTag(tag) = f(byTag.getOrElse(tag, Stats()))
 
     def apply(tag: String): Stats = synchronized(byTag.getOrElse(tag, Stats()))
 
+    /** Epoch ms of the first job of `tag` submitted at or after `fromMs`. */
+    def firstJobStartMs(tag: String, fromMs: Long): Option[Long] = synchronized {
+      jobStartMs.get(tag).flatMap(_.filter(_ >= fromMs).minOption)
+    }
+
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       Option(j.properties).flatMap(p => Option(p.getProperty(TagProperty))).foreach { tag =>
         update(tag)(c => c.copy(jobs = c.jobs + 1))
+        jobStartMs.getOrElseUpdate(tag, mutable.ArrayBuffer.empty[Long]) += j.time
         j.stageIds.foreach(id => stageTag.getOrElseUpdate(id, tag))
       }
     }
@@ -79,9 +86,33 @@ object Bench {
     }
   }
 
+  /** Where a query pass's wall went before its noop write: `constructMs`
+    * is the wall of `fn(spark, sfDir)` (eager cut jobs included),
+    * `writeStartMs` the epoch ms the write began at, `writeMs` the rest
+    * of the wall. */
+  final case class Built(constructMs: Double, writeStartMs: Long, writeMs: Double)
+
   /** The best pass of one metric: wall seconds, the GC time and process
-    * CPU of that same pass, and its [[TagProperty]] tag. */
-  final case class Best(seconds: Double, gcMs: Long, cpuMs: Long, tag: String)
+    * CPU of that same pass, its [[TagProperty]] tag, and for a query
+    * its [[Built]] split. */
+  final case class Best(
+      seconds: Double,
+      gcMs: Long,
+      cpuMs: Long,
+      tag: String,
+      built: Option[Built] = None)
+
+  /** `(construct_ms, plan_ms, exec_ms)` of a query's best pass: plan runs
+    * from the start of the noop write to its first job's start (0 when
+    * the write ran no job), exec is the rest of the write; the three sum
+    * to the wall. None for a metric that is not a query. */
+  def split(b: Best, counters: Counters): Option[(Double, Double, Double)] =
+    b.built.map { w =>
+      val plan = counters
+        .firstJobStartMs(b.tag, w.writeStartMs)
+        .fold(0.0)(j => (j - w.writeStartMs).toDouble.max(0.0).min(w.writeMs))
+      (w.constructMs, plan, w.writeMs - plan)
+    }
 
   /** Best-of-passes record per metric name. Per-query GC time and process
     * CPU ride along with the wall time, from the SAME pass that produced
@@ -113,20 +144,40 @@ object Bench {
       * wall time: a fast failure would masquerade as the best-of minimum
       * (observed: an OOM'd sf100 pass recorded 0.011 s over a successful
       * 229 s pass). */
-    def time(name: String)(body: => Unit): Boolean = {
+    def time(name: String)(body: => Unit): Boolean = run(name) { body; None }
+
+    /** [[time]] for a query: `build` is `fn(spark, sfDir)`, run through
+      * the noop sink; the pass also records its [[Built]] split. */
+    def timeQuery(name: String)(build: => org.apache.spark.sql.DataFrame): Boolean =
+      run(name) {
+        val df = build
+        val built = (System.nanoTime(), System.currentTimeMillis())
+        df.write.format("noop").mode("overwrite").save()
+        Some(built)
+      }
+
+    /** One tagged pass; `body` returns the nanoTime and epoch ms its
+      * construction ended at, if it is a query. */
+    private def run(name: String)(body: => Option[(Long, Long)]): Boolean = {
       runs += 1
       val tag = s"$name#$runs"
       val g0 = gcMsNow()
       val c0 = cpuNsNow()
       val t0 = System.nanoTime()
       sc.setLocalProperty(TagProperty, tag)
+      var mark: Option[(Long, Long)] = None
       val ok =
-        try { body; true }
+        try { mark = body; true }
         catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
         finally sc.setLocalProperty(TagProperty, null)
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (ok && best.get(name).forall(wall < _.seconds))
-        best(name) = Best(wall, gcMsNow() - g0, (cpuNsNow() - c0) / 1000000L, tag)
+      val wallNs = System.nanoTime() - t0
+      val wall = wallNs / 1e9
+      if (ok && best.get(name).forall(wall < _.seconds)) {
+        val built = mark.map { case (ns, ms) =>
+          Built((ns - t0) / 1e6, ms, (wallNs - (ns - t0)) / 1e6)
+        }
+        best(name) = Best(wall, gcMsNow() - g0, (cpuNsNow() - c0) / 1000000L, tag, built)
+      }
       ok
     }
   }
@@ -159,7 +210,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(Excluded).filter(keep)
     for (_ <- 1 to passes; name <- names) {
       val fn = SparkEntry.queries(name)
-      board.time(name) { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+      board.timeQuery(name)(fn(spark, sfDir))
     }
     // Storage-layer throughput (the reference is an event store — its
     // core metric is produce/consume, not just the query layer): produce
@@ -287,8 +338,12 @@ object Bench {
     // stdout contract is a SHORT line — and it must be the LAST line.
     // "queries" stays name→seconds (the cross-round comparison format);
     // gc_ms / cpu_ms and the scheduler counters (jobs … spill_mb, from
-    // [[Counters]]) are ADDITIVE parallel maps from the best-of pass, and
-    // "cpus" sizes the core budget tools/overhead_share.py divides by.
+    // [[Counters]]) are ADDITIVE parallel maps from the best-of pass, as
+    // are construct_ms / plan_ms / exec_ms ([[split]]; null for a store
+    // metric), and "cpus" sizes the core budget tools/overhead_share.py
+    // divides by.
+    def splitMs(pick: ((Double, Double, Double)) => Double)(b: Best): String =
+      split(b, counters).fold("null")(t => f"${pick(t)}%.1f")
     val auxJson = Seq[(String, Best => String)](
       "gc_ms" -> (_.gcMs.toString),
       "cpu_ms" -> (_.cpuMs.toString),
@@ -298,7 +353,10 @@ object Bench {
       "task_ms" -> (b => counters(b.tag).taskMs.toString),
       "shuffle_write_mb" -> (b => mb(counters(b.tag).shuffleWriteBytes)),
       "shuffle_read_mb" -> (b => mb(counters(b.tag).shuffleReadBytes)),
-      "spill_mb" -> (b => mb(counters(b.tag).spillBytes)))
+      "spill_mb" -> (b => mb(counters(b.tag).spillBytes)),
+      "construct_ms" -> splitMs(_._1),
+      "plan_ms" -> splitMs(_._2),
+      "exec_ms" -> splitMs(_._3))
       .map { case (k, value) => s""","$k":${perMetric(value)}""" }
       .mkString
     val kcJson =

@@ -254,6 +254,7 @@ object Clustering {
           iters = iters, dim = dim, k = k1.toLong,
           flatMaxK = flatMaxK, broadcastBudgetBytes = broadcastBudgetBytes)
           .select(col(id), col("cluster").as("cell"))
+    // cut: loop — every Lloyd round's join reads the members
     val member = graft.operators.Materialize.cut(
       embs
         .select(col(id), col(vec), col(nrm))
@@ -267,7 +268,7 @@ object Clustering {
       .filter(
         col("rn") <= ceil(col("sz").cast("double") / lit(targetClusterSize.toDouble)))
       .select(col("cell"), (col("rn") - 1L).cast("long").as("j"), col(vec).as("cv"))
-      .transform(graft.operators.Materialize.cut(_))
+      .transform(graft.operators.Materialize.cut(_)) // cut: loop — the Lloyd loop's first state
     // fine-join strategy, routed on ESTIMATED TABLE BYTES (see
     // [[FineBroadcastBudgetBytes]]): broadcast while the whole k·dim
     // fine table fits the budget (the corpus never shuffles), else
@@ -306,7 +307,7 @@ object Clustering {
             array((1 to dim).map(d =>
               col(s"s$d").cast("double") / (col("cn").cast("double") * lit(Q.toDouble))): _*)
               .as("cv") +: Nil: _*)
-        .transform(graft.operators.Materialize.cut(_))
+        .transform(graft.operators.Materialize.cut(_)) // cut: loop — bounds the centroid lineage per round
     }
     // pack (cell, j) into one stable long cluster id. Recursion makes
     // `cell` itself a packed long, so the j width comes from the REAL

@@ -113,13 +113,12 @@ object Dedup {
     * approximate. The join key is the 60-bit shingle hash (8-byte
     * shuffle key), which also serves as the global order.
     *
-    * The shingle table is materialized ONCE ([[
-    * graft.operators.Materialize.cut]]) — it feeds four logical
-    * consumers (prefix explode + two verification sides) and without the
-    * cut Spark re-reads and re-shingles the corpus per consumer. On a
-    * real cluster configure a session checkpoint dir so every cut is a
-    * RELIABLE checkpoint (executor loss would kill localCheckpoint
-    * blocks). The candidate self-join is shuffle-hash like
+    * The hashed shingle rows and the per-doc hash sets are each
+    * materialized once ([[graft.operators.Materialize.cut]]): the
+    * hash-set table's count (the join fence) and the verify plan both
+    * read them. On a real cluster configure a session checkpoint dir
+    * so every cut is a RELIABLE checkpoint (executor loss would kill
+    * localCheckpoint blocks). The candidate self-join is shuffle-hash like
     * [[minhashLsh]] — but only below [[ShjDocsPerPartitionFence]]: the build
     * side grows ∝ corpus and a hash relation cannot spill, so past the
     * fence the joins run UNHINTED (sort-merge statically; AQE's
@@ -131,17 +130,13 @@ object Dedup {
       text: String = "text",
       k: Int = 3,
       threshold: Double = 0.8): DataFrame =
-    // no shingle-array cut here: the exploded HASH rows are the
-    // materialized spine now (ngramJaccardFromShingled cuts them), and
-    // sh is consumed exactly once to build it — checkpointing the
-    // string arrays too would only add a corpus-sized write
     ngramJaccardFromShingled(shingled(docs, id, text, k), id, threshold)
 
   /** [[ngramJaccard]] over an ALREADY-MATERIALIZED shingle table — the
     * entry point for callers that reuse one shingle pass across several
     * consumers (e.g. the LSH-tuning evaluation, which also feeds the
     * minhash banding from the same table). `sh` must be the
-    * [[shingled]] shape and should be lineage-cut by the caller. */
+    * [[shingled]] shape. */
   def ngramJaccardFromShingled(
       sh: DataFrame,
       id: String,
@@ -151,9 +146,8 @@ object Dedup {
   /** Exploded per-shingle hash rows `(id, h)` from a shingled table,
     * MATERIALIZED — the spine every PPJoin stage (df table, prefix,
     * verification hash sets) reads instead of re-running
-    * explode+md5 per consumer (r14: the before-plans showed the
-    * explode+hash pass 4× per query — freq, prefix probe, and one per
-    * verify side). The shingle string is dropped IMMEDIATELY after
+    * explode+md5 per consumer: the hash-set job (its count fences the
+    * joins) and the verify plan are two actions over it. The shingle string is dropped IMMEDIATELY after
     * hashing: every downstream shuffle moves 16-byte (id, h) rows
     * instead of shingle text. A 60-bit h collision (~2^-60 per
     * distinct-shingle pair) could only inflate/deflate the candidate
@@ -162,7 +156,7 @@ object Dedup {
     sh
       .select(col(id), explode(col("s")).as("shingle"))
       .select(col(id), Hashing.md5Long(col("shingle")).as("h"))
-      .transform(Materialize.cut)
+      .transform(Materialize.cut) // cut: actions — the hash-set count and the verify plan both read it
 
   /** [[ngramJaccardFromShingled]] over the materialized `(id, h)`
     * spine — the entry point for callers that already hold one (the
@@ -172,10 +166,9 @@ object Dedup {
       id: String,
       threshold: Double): DataFrame = {
     // The per-doc hash-set table doubles as the verification side and
-    // the doc count for the join-strategy fence ([[ShjDocsPerPartitionFence]]):
-    // built ONCE here (the before-plans showed two independent
-    // collect_list aggregations, one per verify side).
-    val hs = hashSetsFromHashed(ex, id)
+    // the doc count for the join-strategy fence ([[ShjDocsPerPartitionFence]]).
+    // cut: actions — the fence's count and the verify plan both read it
+    val hs = hashSetsFromHashed(ex, id).transform(Materialize.cut)
     // fence counts docs with ≥ 1 shingle (the hs table), not raw docs:
     // shingle-free docs contribute zero rows to every joined table the
     // fence protects, so excluding them is the intended density measure
@@ -197,16 +190,14 @@ object Dedup {
     val eps = 1e-6
     // sz (the doc's distinct-shingle count) is recovered as a count over
     // the same window partition rather than carried through both
-    // shuffles. prefix is (1-t)·|shingle rows| of (id, h, pos, sz):
-    // materialize it too, so the self-join's two sides read one computed
-    // table instead of re-running the freq join + window per side.
+    // shuffles. The self-join's two sides are one subtree up to the
+    // (h) exchange, which AQE reuses.
     val prefix = ex
       .join(pinned(freq), "h")
       .withColumn("pos", row_number().over(w))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy(id)))
       .filter(col("pos") <= col("sz") - ceil(col("sz") * threshold - eps) + 1)
       .select(col(id), col("h"), col("pos"), col("sz"))
-      .transform(Materialize.cut)
       .transform(pinned)
     // Candidate pruning beyond the prefix bucket (PPJoin, Xiao et al.,
     // "Efficient Similarity Joins for Near Duplicate Detection", WWW'08):
@@ -215,9 +206,7 @@ object Dedup {
     // positions (i, j) caps the overlap at 1 + min(|A|−i, |B|−j), so
     // pairs whose cap < α are pruned (positional filter). Both are
     // supersets of the true pair set — measured 9× fewer candidates on
-    // the synthetic corpus. The pair set is then materialized so the
-    // verification join direction is planned from its REAL size
-    // (otherwise Spark broadcasts the corpus-side shingle table).
+    // the synthetic corpus.
     val cands = prefix
       .select(col(id).as("a_id"), col("h"), col("pos").as("a_pos"), col("sz").as("a_sz"))
       .join(
@@ -230,14 +219,13 @@ object Dedup {
         ceil((col("a_sz") + col("b_sz")) * lit(threshold / (1 + threshold)) - eps))
       .select("a_id", "b_id")
       .distinct()
-      .transform(Materialize.cut)
     jaccardVerifySets(cands, hs, hs, id, "a_id", "b_id", threshold)
   }
 
   /** Per-doc 60-bit shingle hash SETS `(id, hs array<long>)` off the
-    * materialized `(id, h)` spine, themselves materialized — ONE
-    * aggregation serving both sides of every self-join verification
-    * (and the fence's doc count). SORTED (r15): the sets are only ever
+    * `(id, h)` spine — ONE aggregation serving both sides of every
+    * self-join verification (a caller that also counts it cuts it).
+    * SORTED (r15): the sets are only ever
     * consumed by count statistics, and sorted sets let the verify run
     * the allocation-free merge kernel
     * ([[graft.functions.expressions.SortedLongIntersectCount]]) instead
@@ -246,11 +234,10 @@ object Dedup {
     ex
       .groupBy(id)
       .agg(sort_array(collect_list(col("h"))).as("hs"))
-      .transform(Materialize.cut)
 
   /** Exact-Jaccard verification of candidate pairs `(aKey, bKey)`
-    * against two shingle tables (the same table twice for self-joins):
-    * keeps pairs with `round(|A∩B| / |A∪B|, 6) ≥ threshold`. One shared
+    * against two shingle tables (the incremental path's batch and
+    * candidate-corpus sides): keeps pairs with `round(|A∩B| / |A∪B|, 6) ≥ threshold`. One shared
     * definition for the ngram, minhash, and incremental paths — the
     * rounding here is load-bearing (it must match the oracle's
     * `round(c/(a_sz+b_sz-c), 6)` in every consumer).
@@ -281,20 +268,13 @@ object Dedup {
         .groupBy(id)
         // sorted for the merge-count verify kernel (see hashSetsFromHashed)
         .agg(sort_array(collect_list(col("h"))).as("hs"))
-    if (shA eq shB) {
-      // self-join: ONE materialized set table serves both sides
-      // (uncut, the two join sides each re-run the aggregation — the
-      // r13 plans showed exactly that)
-      val hs = hashSets(shA).transform(Materialize.cut)
-      jaccardVerifySets(cands, hs, hs, id, aKey, bKey, threshold)
-    } else
-      jaccardVerifySets(
-        cands, hashSets(shA), hashSets(shB), id, aKey, bKey, threshold)
+    jaccardVerifySets(
+      cands, hashSets(shA), hashSets(shB), id, aKey, bKey, threshold)
   }
 
   /** [[jaccardVerify]] over prebuilt per-doc hash-set tables (`(id,
     * hs)`, SORTED ascending; for self-joins callers pass the same
-    * materialized table twice — one aggregation serves both sides).
+    * table twice — one aggregation serves both sides).
     * The common count is the sorted-merge kernel, not a per-pair hash
     * set — the verify stage runs once per CANDIDATE, which at loose
     * thresholds is ~20× the true pair set, so its per-pair constant
@@ -327,9 +307,10 @@ object Dedup {
   }
 
   /** Banded LSH rows `(id, band_id, band_hash)` from a shingled table —
-    * one shared definition for the full-corpus and incremental paths,
-    * mirrored 1:1 by the oracle's band CTEs (band hash = md5Long of the
-    * ':'-joined row signatures). */
+    * one shared definition for the incremental path's batch and corpus
+    * band tables, mirrored 1:1 by the oracle's band CTEs: band `j`
+    * hashes the ':'-joined signatures `mh{r·j} … mh{r·j + r − 1}`
+    * (`r = numHashes / bands` rows per band) with md5Long. */
   private def bandedSignatures(
       sh: DataFrame,
       id: String,
@@ -348,23 +329,12 @@ object Dedup {
       .select(col(id), col("b.band_id"), col("b.band_hash"))
   }
 
-  /** MinHash signatures `mh0..mh{numHashes-1}` per doc. One md5 digest
-    * per shingle row; the family is derived arithmetically as
-    * `h_i = a + i·b` (a 60-bit, b 40-bit digest slices — the sum stays
-    * < 2^61, overflow-safe in any int64 engine), then min-aggregated with
-    * map-side partials: one shuffle of one row per doc. `numHashes` ≤ 16
-    * keeps `i·b` < 2^44·16. */
-  def minhashSignatures(
-      docs: DataFrame,
-      id: String,
-      text: String,
-      k: Int,
-      numHashes: Int): DataFrame =
-    minhashSignaturesFromShingled(shingled(docs, id, text, k), id, numHashes)
-
-  /** [[minhashSignatures]] over an already-shingled `(id, s)` table —
-    * lets callers that also need the shingle sets (verification)
-    * materialize them ONCE instead of re-scanning the corpus. */
+  /** MinHash signatures `mh0..mh{numHashes-1}` per doc of a shingled
+    * `(id, s)` table. One md5 digest per shingle row; the family is
+    * derived arithmetically as `h_i = a + i·b` (a 60-bit, b 40-bit
+    * digest slices — the sum stays < 2^61, overflow-safe in any int64
+    * engine), then min-aggregated with map-side partials: one shuffle
+    * of one row per doc. `numHashes` ≤ 16 keeps `i·b` < 2^44·16. */
   def minhashSignaturesFromShingled(
       sh: DataFrame,
       id: String,
@@ -382,21 +352,20 @@ object Dedup {
   }
 
   /** Exploded per-shingle hash PAIR rows `(id, h, h2)` from a shingled
-    * table, MATERIALIZED — the minhash-family spine: `h`/`h2` are the
+    * table — the minhash-family spine: `h`/`h2` are the
     * [[Hashing.md5MinhashPair]] family bases (h = the 60-bit
     * [[Hashing.md5Long]], so the same spine feeds the signature
     * aggregation, the PPJoin exact arm, AND the verification hash sets
     * — one tokenize+shingle+hash pass per corpus where the r13 shape
-    * paid three). 24 bytes/row. */
+    * paid three, once the caller cuts it). 24 bytes/row. */
   def hashedShinglePairs(sh: DataFrame, id: String): DataFrame =
     sh
       .select(col(id), explode(col("s")).as("shingle"))
       .select(col(id), Hashing.md5MinhashPair(col("shingle")).as("ab"))
       .select(col(id), col("ab.a").as("h"), col("ab.b").as("h2"))
-      .transform(Materialize.cut)
 
-  /** [[minhashSignaturesFromShingled]] off the materialized `(id, h,
-    * h2)` spine — no re-shingle, no re-hash. */
+  /** [[minhashSignaturesFromShingled]] off the `(id, h, h2)` spine —
+    * no re-shingle, no re-hash. */
   def minhashSignaturesFromHashedPairs(
       ex: DataFrame,
       id: String,
@@ -426,8 +395,8 @@ object Dedup {
       .select(col(id), col("b.band_id"), col("b.band_hash"))
   }
 
-  /** Band-collision candidate pairs off the materialized `(id, h, h2)`
-    * spine. */
+  /** Band-collision candidate pairs `(a_id, b_id)` off the `(id, h,
+    * h2)` spine. */
   def minhashCandidatesFromHashedPairs(
       ex: DataFrame,
       id: String,
@@ -438,13 +407,9 @@ object Dedup {
     // aggregation for the build side (Broadcast- and ShuffleExchange
     // cannot reuse each other); shuffling both sides on the band key is
     // also the only shape that survives when n_docs is too big to
-    // broadcast.
-    // materialized: the self-join's two sides otherwise each re-run the
-    // whole signature aggregation (no ReusedExchange across the x/y
-    // references) — at scale that doubles the most expensive stage. The
-    // cut table is (id, band_id, band_hash) — 24 bytes/row × bands.
+    // broadcast. Both sides are one subtree up to the band-key
+    // exchange, which AQE reuses: the signature aggregation runs once.
     val banded = bandedFromHashedPairs(ex, id, numHashes, bands)
-      .transform(Materialize.cut)
       .hint("shuffle_hash")
     banded
       .as("x")
@@ -455,63 +420,13 @@ object Dedup {
           col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("a_id"), col(s"y.$id").as("b_id"))
       .distinct()
-      .transform(Materialize.cut)
   }
-
-  /** Band-collision candidate pairs over an already-materialized
-    * shingle table (see [[ngramJaccardFromShingled]] for the shared-
-    * shingle-pass rationale). */
-  def minhashCandidatesFromShingled(
-      sh: DataFrame,
-      id: String,
-      numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    // shuffle_hash: a broadcast band join would recompute the signature
-    // aggregation for the build side (Broadcast- and ShuffleExchange
-    // cannot reuse each other); shuffling both sides on the band key is
-    // also the only shape that survives when n_docs is too big to
-    // broadcast.
-    // materialized: the self-join's two sides otherwise each re-run the
-    // whole signature aggregation (no ReusedExchange across the x/y
-    // references) — at scale that doubles the most expensive stage. The
-    // cut table is (id, band_id, band_hash) — 24 bytes/row × bands.
-    val banded = bandedSignatures(sh, id, numHashes, bands)
-      .transform(Materialize.cut)
-      .hint("shuffle_hash")
-    val cands = banded
-      .as("x")
-      .join(
-        banded.as("y"),
-        col(s"x.band_id") === col(s"y.band_id") &&
-          col(s"x.band_hash") === col(s"y.band_hash") &&
-          col(s"x.$id") < col(s"y.$id"))
-      .select(col(s"x.$id").as("a_id"), col(s"y.$id").as("b_id"))
-      .distinct()
-      .transform(Materialize.cut)
-    cands
-  }
-
-  /** Just the band-collision candidate pairs (no exact-Jaccard verify)
-    * — the raw LSH recall/precision surface a bands/rows tuning pass
-    * evaluates (see `q_lsh_eval`). */
-  def minhashCandidates(
-      docs: DataFrame,
-      id: String = "doc_id",
-      text: String = "text",
-      k: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 8): DataFrame =
-    minhashCandidatesFromHashedPairs(
-      hashedShinglePairs(shingled(docs, id, text, k), id),
-      id, numHashes, bands)
 
   /** MinHash + LSH near-dup: `bands` band buckets (signature split
     * evenly) generate candidates, exact Jaccard over the shingle-hash
-    * sets verifies against `threshold`. ONE corpus
-    * tokenize+shingle+hash pass total: the materialized `(id, h, h2)`
+    * sets verifies against `threshold`, in one plan: the `(id, h, h2)`
     * spine ([[hashedShinglePairs]]) feeds the signature aggregation
-    * and the (materialized-once) verification hash sets. */
+    * and the verification hash sets. */
   def minhashLsh(
       docs: DataFrame,
       id: String = "doc_id",
@@ -546,7 +461,8 @@ object Dedup {
       k: Int = 3): DataFrame = {
     val ex = shingleRows(docs, id, text, k)
       .select(col(id), col("sz"), Hashing.md5Long(col("shingle")).as("h"))
-      .transform(Materialize.cut) // feeds the freq aggregate AND the join probe side
+      // cut: measured — the freq aggregate and the join probe each re-shingle uncut: sf0.01 best 0.599 → 0.650 s
+      .transform(Materialize.cut)
     val freq = ex.groupBy("h").agg(count(lit(1)).as("f"))
     ex.join(freq.hint("shuffle_hash"), "h")
       .groupBy(col(id))
@@ -580,6 +496,7 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 8,
       threshold: Double = 0.8): DataFrame = {
+    // cut: actions — the candidate cut's job and the verify plan read both
     val shNew = shingled(newDocs, id, text, k).transform(Materialize.cut)
     val shCorpus = shingled(corpus, id, text, k).transform(Materialize.cut)
     minhashLshAgainstTables(
@@ -635,6 +552,7 @@ object Dedup {
       .filter(col("new_id") =!= col("dup_of"))
       .select("new_id", "dup_of")
       .distinct()
+      // cut: measured — the semi-join and the verify re-run the band probe uncut: sf0.01 best 1.074 → 1.174 s
       .transform(Materialize.cut)
     val shCand = corpusShingles
       .join(cands.select(col("dup_of").as(id)), Seq(id), "left_semi")
@@ -768,7 +686,8 @@ object Dedup {
     * explode → shuffle_hash self-join → exact hamming verify), with
     * hamming summed across the two words and bands from
     * [[wideBandLayout]]. Same output contract `(a_id, b_id, hamming)`,
-    * `a_id < b_id`. */
+    * `a_id < b_id`. No fence and no cut: the self-join's two sides are
+    * one subtree up to the band-key exchange, which AQE reuses. */
   def simhashPairsWide(
       simhashes: DataFrame,
       id: String = "doc_id",
@@ -790,7 +709,6 @@ object Dedup {
         col("sim_hi"),
         col("b.band_id"),
         col("b.band_bits"))
-      .transform(Materialize.cut)
       .hint("shuffle_hash")
     banded
       .as("x")
@@ -859,12 +777,10 @@ object Dedup {
     }
     // shuffle_hash for the same reason as in minhashLsh: no broadcast of
     // a per-doc table, and both sides shuffle on the band key.
-    // Materialized: the upstream signature aggregation (60 bit-sums per
-    // doc) would otherwise run once per self-join side.
     val banded = simhashes
       .select(col(id), col("simhash"), explode(array(bands: _*)).as("b"))
       .select(col(id), col("simhash"), col("b.band_id"), col("b.band_bits"))
-      .transform(Materialize.cut)
+      .transform(Materialize.cut) // cut: actions — the fence's count and the pair plan both read it
       .hint("shuffle_hash")
     if (fenceDocs > 0L) {
       val nDocs = banded.count() / nBands // each doc emits exactly nBands rows
@@ -912,10 +828,12 @@ object Dedup {
     * GC superseded ones — set it (or clear the dir after the run) for
     * long jobs. */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
+    // cut: loop — every round's propagation join reads the edges
     val edges = Materialize.cut(
       pairs
         .select(col("a_id").as("src"), col("b_id").as("dst"))
         .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
+    // cut: loop — the first round's state; each round replaces it
     var labels = Materialize.cut(
       edges
         .select(col("src").as("id"))
@@ -930,6 +848,7 @@ object Dedup {
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(min("comp").as("nbr_comp"))
+      // cut: loop — bounds the label lineage and carries the changed-count
       val (updated, m) = Materialize.cutObserved(
         labels
           .join(propagated, Seq("id"), "left")
@@ -1028,17 +947,14 @@ object Dedup {
       dim: Int = 64): DataFrame = {
     // one codegen'd expression computes ALL band signatures per vector
     // (BandSignatures — the plan stays O(1) at lshTune'd geometry where
-    // per-plane literals made plan compile the dominant cost);
-    // materialized: without the cut, BOTH self-join sides re-evaluate
-    // every hyperplane dot product (bands × bits × dim FMAs per vector)
-    // — the dominant compute — and re-scan the source; the cut table is
-    // 24-byte (id, band, sig) rows
+    // per-plane literals made plan compile the dominant cost); both
+    // self-join sides are one subtree up to the band-key exchange,
+    // which AQE reuses, so the dot products run once
     val banded = embs
       .select(
         col(id),
         posexplode(VectorFns.bandSignatures(col(vec), bands, bitsPerBand, dim)))
       .select(col(id), col("pos").as("band_id"), col("col").as("band_sig"))
-      .transform(Materialize.cut)
       .hint("shuffle_hash")
     val cands = banded
       .as("x")
@@ -1203,10 +1119,7 @@ object Dedup {
                   |  i -> array_join(slice(t, i * $window + 1, $window), ' '))""".stripMargin))
           .as(Seq("pos", "passage")))
       .withColumn("h", Hashing.md5Long(col("passage")))
-      // three consumers (df count, anti-join probe, totals-by-doc side
-      // of the reassembly): materialize once or the corpus is re-read
-      // and re-tokenized per consumer (prefer reliable persist/
-      // checkpoint on a real cluster)
+      // cut: measured — df count, probe and reassembly re-tokenize uncut: sf0.01 best 0.795 → 0.855 s
       .transform(Materialize.cut)
     val hot = passages
       .select(col("h"), col(id))
@@ -1265,9 +1178,6 @@ object Dedup {
     val lines = docs
       .select(col(id), posexplode(split(col(text), "\n")).as(Seq("pos", "line")))
       .withColumn("h", Hashing.md5Long(col("line")))
-      // three consumers (df count, anti probe, reassembly) — same
-      // materialize-once reasoning as passageDedup
-      .transform(Materialize.cut)
     val hot = lines
       .filter(trim(col("line")) =!= "")
       .select(col("h"), col(id))
@@ -1333,7 +1243,8 @@ object Dedup {
             struct(col("a_id").as("src"), col("b_id").as("dst")),
             struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.cut)
+      .transform(Materialize.cut) // cut: loop — every round joins it; uncut, each round embeds the pair pipeline
+    // cut: loop — every round joins it; uncut, each round embeds the pair pipeline
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).transform(Materialize.cut)
     var ranks = deg.withColumn("pr", lit(1000000L))
     for (_ <- 1 to iters) {
@@ -1360,8 +1271,8 @@ object Dedup {
     * node-key shuffle join + an anti-join, frontiers only shrink the
     * unvisited set, and a node's recorded dist is its FIRST (= minimum)
     * reach round, so no min-aggregate is ever needed. Edges and each
-    * round's outputs are materialized (every round consumes them
-    * twice: expansion + visited-set exclusion); all joins are on node
+    * round's outputs are materialized (every round's jobs consume
+    * them: expansion + visited-set exclusion); all joins are on node
     * keys — never quadratic in nodes. Isolated seeds still report
     * dist 0 (they are in the answer set by definition). */
   def bfsDistances(pairs: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
@@ -1372,10 +1283,10 @@ object Dedup {
             struct(col("a_id").as("src"), col("b_id").as("dst")),
             struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.cut)
+      .transform(Materialize.cut) // cut: loop — every hop's expansion job reads it
     var visited = seeds
       .select(col("doc_id").as("id"), lit(0L).as("dist"))
-      .transform(Materialize.cut)
+      .transform(Materialize.cut) // cut: loop — the first hop's frontier and visited set
     var frontier = visited
     for (h <- 1 to maxHops) {
       val next = frontier
@@ -1384,8 +1295,8 @@ object Dedup {
         .distinct()
         .join(visited.select("id"), Seq("id"), "left_anti")
         .select(col("id"), lit(h.toLong).as("dist"))
-        .transform(Materialize.cut)
-      visited = visited.unionByName(next).transform(Materialize.cut)
+        .transform(Materialize.cut) // cut: loop — next hop's frontier and this hop's visited union
+      visited = visited.unionByName(next).transform(Materialize.cut) // cut: loop — bounds the visited lineage
       frontier = next
     }
     visited.select(col("id").as("doc_id"), col("dist"))
@@ -1413,18 +1324,17 @@ object Dedup {
             struct(col("a_id").as("src"), col("b_id").as("dst")),
             struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.cut)
+      .transform(Materialize.cut) // cut: loop — the first round's edge state
     for (_ <- 1 to rounds) {
       val keep = edges
         .groupBy("src")
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("node"))
-        .transform(Materialize.cut)
       edges = edges
         .join(keep.hint("shuffle_hash"), col("src") === col("node"), "left_semi")
         .join(keep.hint("shuffle_hash"), col("dst") === col("node"), "left_semi")
-        .transform(Materialize.cut)
+        .transform(Materialize.cut) // cut: loop — bounds the peeled edge lineage per round
     }
     edges
       .groupBy(col("src").as("doc_id"))
@@ -1485,6 +1395,7 @@ object Dedup {
             % lit(1000000007L)),
         lit(0L)))
     def cutStat(e: DataFrame): (DataFrame, (Long, Long)) = {
+      // cut: loop — bounds the edge lineage per round and carries the fingerprint
       val (out, m) = Materialize.cutObserved(e, statMetrics: _*)
       (out, (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long]))
     }
@@ -1509,7 +1420,6 @@ object Dedup {
         .select(col("v").as("a"), least(col("u"), col("mn")).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct()
-        .transform(Materialize.cut)
       val s2 = sym(large)
       val n2 = s2.groupBy("u").agg(min("v").as("mn"))
       val (small, cur) = cutStat(
@@ -1574,10 +1484,8 @@ object Dedup {
         least(col("x"), col("y")).as("a_id"),
         greatest(col("x"), col("y")).as("b_id"))
       .distinct()
-      .transform(Materialize.cut)
     val ex = shingleRows(docs, id, text, k)
       .select(col(id), col("sz"), Hashing.md5Long(col("shingle")).as("h"))
-      .transform(Materialize.cut)
     val exA = ex.select(col(id).as("a_id"), col("sz").as("a_sz"), col("h"))
     val exB = ex.select(col(id).as("b_id"), col("sz").as("b_sz"), col("h"))
     cands
@@ -1640,17 +1548,16 @@ object Dedup {
         size(col("s")).cast("long").as("sz"),
         explode(col("s")).as("shingle"))
       .select(col(id), col("sz"), Hashing.md5Long(col("shingle")).as("h"))
+      // cut: measured — freq, positions and hash sets each re-shingle uncut: sf0.01 best 0.974 → 1.526 s
       .transform(Materialize.cut)
     val freq = rows.groupBy("h").agg(count(lit(1)).as("f"))
     val w = Window.partitionBy(id).orderBy("f", "h")
-    // every row's rank in its doc's global-(df, hash) order — computed
-    // once, consumed by BOTH join sides (prefix selection on A, the
-    // positional bound on B)
+    // every row's rank in its doc's global-(df, hash) order, read by
+    // BOTH join sides (prefix selection on A, the positional bound on B)
     val posRows = rows
       .join(freq.hint("shuffle_hash"), "h")
       .withColumn("pos", row_number().over(w))
       .drop("f")
-      .transform(Materialize.cut)
     val prefixA = posRows
       .filter(col("pos") <= col("sz") - ceil(col("sz") * threshold - eps) + 1)
       .select(
@@ -1671,15 +1578,13 @@ object Dedup {
         lit(1) + least(col("a_sz") - col("a_pos"), col("b_sz") - col("b_pos")) >= alpha)
       .select("a_id", "b_id")
       .distinct()
-      .transform(Materialize.cut)
-    // ONE materialized hash-set table serves both verify sides; the
+    // ONE hash-set table serves both verify sides; the
     // containment denominator is the distinct-shingle count sz (what
     // the oracle divides by), carried alongside the set
     val hs = rows
       .groupBy(id)
       // sorted for the merge-count verify kernel (see hashSetsFromHashed)
       .agg(first(col("sz")).as("sz"), sort_array(collect_list(col("h"))).as("hs"))
-      .transform(Materialize.cut)
     cands
       .join(
         hs.select(col(id).as("a_id"), col("sz").as("a_sz"), col("hs").as("a_hs")),
@@ -1722,6 +1627,8 @@ object Dedup {
             struct(col("a_id").as("src"), col("b_id").as("dst")),
             struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      // cut: measured — the degree count and the orientation join each run the pair pipeline uncut: sf0.01 best 1.606 → 1.645 s
+      .transform(Materialize.cut)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
     // orient src → dst by (degree, id); carry dst's degree for the
     // wedge ordering so no re-join is needed
@@ -1735,6 +1642,7 @@ object Dedup {
         col("sd") < col("dd") ||
           (col("sd") === col("dd") && col("src") < col("dst")))
       .select("src", "dst", "dd")
+      // cut: measured — both wedge sides and the closing probe re-run it uncut: sf0.01 best 1.513 → 1.907 s
       .transform(Materialize.cut)
     val e1 = oriented.select(col("src"), col("dst").as("v"), col("dd").as("vd"))
     val e2 = oriented.select(col("src"), col("dst").as("w"), col("dd").as("wd"))

@@ -81,7 +81,7 @@ object BpeTrainer {
             "]["),
           lit("]")).as("s"),
         col("cnt"))
-      .transform(graft.operators.Materialize.cut)
+      .transform(graft.operators.Materialize.cut) // cut: loop — the merge loop's first state
 
     var words = words0
     val learned = Seq.newBuilder[Row]

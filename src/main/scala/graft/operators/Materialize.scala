@@ -4,9 +4,32 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 
 /** The library's single lineage-cut / materialization primitive.
   *
-  * Multi-stage operators (dedup candidate tables, tf/df tables, pipeline
-  * stages) materialize an intermediate exactly once and fan it out to
-  * several consumers. The session alone picks the mode:
+  * A cut runs one eager Spark job while the DataFrame is being built,
+  * before any planning, so it is kept only where that job earns its
+  * keep. Every call site names its rule in a `// cut: <rule> — <why>`
+  * comment on the call's line or within the two lines above
+  * (GraftSessionSpec enforces the tag):
+  *
+  *  - `actions`: two or more actions or returned plans consume it (a
+  *    driver count or collect plus the plan, two writes, a sort's
+  *    range-sampling job plus the write);
+  *  - `loop`: it bounds lineage in a loop (fixpoint rounds,
+  *    [[cutObserved]], k-means rounds, BPE merges);
+  *  - `artefact`: a build-once artefact that outlives the call (index
+  *    tiers, a codebook);
+  *  - `pin`: it fixes an input that would otherwise change under the
+  *    plan (a directory the caller then rewrites, a nondeterministic
+  *    input read twice);
+  *  - `measured`: deleting it made the key slower on a same-host board.
+  *
+  * A cut whose one consumer sits in the same plan is not kept, nor one
+  * whose several consumers sit inside one plan: AQE's exchange reuse
+  * already shares an exchange-terminated subtree there. "So the join is
+  * planned from its real size" is not a reason either: on Spark 4.1 the
+  * `LogicalRDD` a cut returns carries the origin plan's ESTIMATED
+  * statistics, not the materialized size.
+  *
+  * The session alone picks the mode:
   *
   *  - no checkpoint directory: `localCheckpoint()` — executor-local
   *    blocks, no distributed write. Fast, and right for single-node and

@@ -116,8 +116,7 @@ object TrainingPipeline {
     import org.apache.spark.sql.types.BinaryType
 
     val (ex, bench0) = shingleHashes(docs, benchMaxId, shingleK)
-    // materialized once: feeds the filter build (an action) AND the
-    // confirm join, and LogicalRDD's real stats keep it the build side
+    // cut: actions — the bloom build, its count and the confirm join read it
     val bench = bench0.transform(graft.operators.Materialize.cut)
     val bf = bench.stat.bloomFilter("h", math.max(bench.count(), 1L), fpp)
     val bfBytes = {
@@ -139,12 +138,10 @@ object TrainingPipeline {
     * (doc_id, text, ...). Returns the prepared corpus rows (all input
     * columns, original content untouched).
     *
-    * The decontaminated and exact-deduped bases are each materialized
-    * (`Materialize.cut` — same rationale and cluster caveat as
-    * [[Dedup.ngramJaccard]]): both feed multiple downstream consumers
-    * (dedup aggregate + semi join; LSH pipeline + keep-canonical), and
-    * without the cut the whole upstream subplan embeds once per
-    * consumer and re-executes per action. */
+    * The exact-deduped base is materialized (`Materialize.cut` — same
+    * cluster caveat as [[Dedup.ngramJaccard]]): the near-dup cluster
+    * loop's jobs and the keep-canonical plan both read it, and without
+    * the cut the whole upstream subplan re-executes per job. */
   def prepare(docs: DataFrame, p: Params = Params()): DataFrame = {
     Tokens.register(docs.sparkSession)
 
@@ -156,13 +153,13 @@ object TrainingPipeline {
           .select("doc_id"),
         Seq("doc_id"),
         "left_anti")
-      .transform(graft.operators.Materialize.cut)
 
     // 2. exact dedup — keep the min id of every content group
     val keepExact =
       Dedup.exact(decon).select(col("keep_id").as("doc_id"))
     val exactKept = decon
       .join(keepExact, Seq("doc_id"), "left_semi")
+      // cut: actions — the cluster loop's jobs and the keep-canonical plan read it
       .transform(graft.operators.Materialize.cut)
 
     // 3. near-dup clustering, keep canonical survivors

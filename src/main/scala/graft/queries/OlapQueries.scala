@@ -21,14 +21,11 @@ object OlapQueries {
 
   import graft.operators.SortUtil.sortSmall
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   private def revenue: Column =
     col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
   def q1Agg(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
@@ -42,9 +39,9 @@ object OlapQueries {
       .transform(sortSmall(_, col("l_returnflag"), col("l_linestatus")))
 
   def q3Join(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
-    t(s, d, "lineitem")
-      .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+    val cust = Tables(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
+    Tables(s, d, "lineitem")
+      .join(Tables(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .groupBy("o_orderkey")
       .agg(
@@ -58,15 +55,15 @@ object OlapQueries {
     * co-national, one region. All dims broadcast — lineitem never moves
     * except for the final small aggregation. */
   def q5Join(s: SparkSession, d: String): DataFrame = {
-    val nation = t(s, d, "nation")
-    val region = t(s, d, "region").filter(col("r_name") === "ASIA")
+    val nation = Tables(s, d, "nation")
+    val region = Tables(s, d, "region").filter(col("r_name") === "ASIA")
     val nr = broadcast(
       nation.join(region, col("n_regionkey") === col("r_regionkey")))
-    t(s, d, "lineitem")
-      .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
+    Tables(s, d, "lineitem")
+      .join(Tables(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
       .join(
-        broadcast(t(s, d, "customer")),
+        broadcast(Tables(s, d, "customer")),
         col("o_custkey") === col("c_custkey") &&
           col("c_nationkey") === col("s_nationkey"))
       .join(nr, col("s_nationkey") === col("n_nationkey"))
@@ -79,7 +76,7 @@ object OlapQueries {
     val w = Window
       .partitionBy("p_brand")
       .orderBy(col("p_retailprice").desc, col("p_partkey"))
-    t(s, d, "part")
+    Tables(s, d, "part")
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
       .select("p_brand", "rank", "p_partkey", "p_name", "p_retailprice")
@@ -466,7 +463,6 @@ object OlapQueries {
     val mm = ev
       .groupBy("user_id", "t")
       .agg(min("ts_us").as("mn"), max("ts_us").as("mx"))
-      .transform(graft.operators.Materialize.cut)
     // The three user-keyed joins below have corpus-∝ build sides (mm is
     // user×type-sized, ev is the events table itself) — exactly the
     // non-spillable pinned-SHJ class Dedup fences: keep the fast hash
@@ -582,7 +578,7 @@ object OlapQueries {
     * aggregate to 9 rows; the share window runs over the 9-row
     * statistic. */
   def qBenford(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
+    Tables(s, d, "orders")
       .filter(col("o_totalprice") > 0)
       .select(
         regexp_extract(col("o_totalprice").cast("string"), "[1-9]", 0)
@@ -778,7 +774,6 @@ object OlapQueries {
         "grp",
         count(when(col("event_type") === "purchase", 1))
           .over(byUser.rowsBetween(Window.unboundedPreceding, -1)))
-      .transform(graft.operators.Materialize.cut)
     val gg = g
       .groupBy("user_id", "grp")
       .agg(
@@ -1002,7 +997,7 @@ object OlapQueries {
     * use the same single-pass co-moment recurrences, stable under
     * round(4). */
   def qGroupStats(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
@@ -1019,7 +1014,7 @@ object OlapQueries {
     * shape, where inferring/parsing full JSON structs would be the
     * mistake. */
   def qJsonExtract(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
+    Tables(s, d, "events")
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
       .groupBy("event_type")
       .agg(
@@ -1078,7 +1073,7 @@ object OlapQueries {
 
   /** ROLLUP over the Q1 grouping — subtotal + grand-total rows. */
   def qRollup(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .rollup("l_returnflag", "l_linestatus")
       .agg(
         round(sum("l_quantity"), 4).as("sum_qty"),
@@ -1091,7 +1086,7 @@ object OlapQueries {
     * instead of four scans. Same measures as qRollup; the operator under
     * test is the multi-set expansion + grouping-id disambiguation. */
   def qCube(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .cube("l_returnflag", "l_linestatus")
       .agg(
         grouping_id().cast("long").as("gid"),
@@ -1168,7 +1163,7 @@ object OlapQueries {
       .orderBy("user_id")
 
   def qDistinctUsers(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
+    Tables(s, d, "events")
       .groupBy("event_type")
       .agg(count_distinct(col("user_id")).as("n_users"))
       .transform(sortSmall(_, col("event_type")))
@@ -1180,7 +1175,7 @@ object OlapQueries {
     * groups×partitions register banks dominates, not the per-row
     * update) while keeping a ~3σ margin under the 5% spec bound. */
   def qApproxDistinct(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
+    Tables(s, d, "events")
       .groupBy("event_type")
       .agg(approx_count_distinct(col("user_id"), 0.016).as("approx_users"))
       .transform(sortSmall(_, col("event_type")))
@@ -1224,8 +1219,8 @@ object OlapQueries {
       .transform(sortSmall(_, col("event_type")))
 
   def qSemiJoin(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
+    Tables(s, d, "customer")
+      .join(Tables(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
 
@@ -1233,9 +1228,9 @@ object OlapQueries {
     * filtered fact subset — non-empty at every SF, unlike raw-key antis
     * on this dense star schema). */
   def qAntiJoin(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
+    Tables(s, d, "orders")
       .join(
-        t(s, d, "lineitem")
+        Tables(s, d, "lineitem")
           .filter(col("l_shipdate") > lit("2000-06-01").cast("timestamp")),
         col("o_orderkey") === col("l_orderkey"),
         "left_anti")
@@ -1253,7 +1248,7 @@ object OlapQueries {
     * rather than erroring (the usual fix at that scale is z-ordering on
     * rank-bucketed dimensions, [[graft.sources.Layout.zvalueRanked]]). */
   def qZorder(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
+    Tables(s, d, "events")
       .select(
         col("event_id"),
         col("user_id"),
@@ -1269,7 +1264,7 @@ object OlapQueries {
     * neighbors); the oracle replays the identical unrolled
     * quadrant walk as one CTE per bit. */
   def qHilbert(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
+    Tables(s, d, "events")
       .select(
         col("event_id"),
         col("user_id"),
@@ -1822,7 +1817,6 @@ object OlapQueries {
         col("dy"),
         coalesce(col("xn"), lit(0L)).as("x"),
         coalesce(col("yn"), lit(0L)).as("y"))
-      .transform(graft.operators.Materialize.cut)
     val lags = s.range(-3, 4).select(col("id").as("lag"))
     val pairs = series
       .select(col("dy"), col("x"))
@@ -1876,7 +1870,6 @@ object OlapQueries {
       .join(counts, Seq("event_type", "dy"), "left")
       .withColumn("x", coalesce(col("n"), lit(0L)))
       .select("event_type", "dy", "x")
-      .transform(graft.operators.Materialize.cut)
     def cuts(df: DataFrame, keys: Seq[String], label: Column): DataFrame = {
       val part = Window.partitionBy(keys.map(col): _*)
       val byDay = part.orderBy("dy")
@@ -1954,7 +1947,6 @@ object OlapQueries {
         col("dy"),
         coalesce(col("xn"), lit(0L)).as("x"),
         coalesce(col("yn"), lit(0L)).as("y"))
-      .transform(graft.operators.Materialize.cut)
     val pairs = series
       .join(
         broadcast(
@@ -2464,7 +2456,6 @@ object OlapQueries {
     val items = Tables(s, d, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     // top-20 is decided by (n_both, pa, pb) ALONE, and the statistic
     // joins below are 1:1 (every co-bought part has a support row), so
     // the cut happens BEFORE them: TakeOrderedAndProject reduces the
@@ -2521,7 +2512,6 @@ object OlapQueries {
     val items = Tables(s, d, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     val und = items
       .as("a")
       .join(
@@ -2616,7 +2606,6 @@ object OlapQueries {
       .events(s, d)
       .select(col("user_id"), expr(s"ts_us DIV $DayUs").as("day"))
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     val bounds = pairs.agg(min("day").as("d0"), max("day").as("d1"))
     pairs
       .select(col("user_id"), explode(expr("sequence(day, day + 6)")).as("wday"))
@@ -2788,7 +2777,6 @@ object OlapQueries {
     val cells = Tables(s, d, "documents")
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("c"))
-      .transform(graft.operators.Materialize.cut)
     val rl = cells.groupBy("lang").agg(sum("c").as("r"))
     val cs = cells.groupBy("source").agg(sum("c").as("s"))
     val tot = cells.agg(sum("c").as("n"))
@@ -2836,6 +2824,7 @@ object OlapQueries {
     val cells = Tables(s, d, "documents")
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("c"))
+      // cut: measured — margins and totals each re-scan the corpus uncut: sf0.01 best 0.717 → 0.804 s
       .transform(graft.operators.Materialize.cut)
     val rl = cells.groupBy("lang").agg(sum("c").as("r"))
     val cs = cells.groupBy("source").agg(sum("c").as("s"))
@@ -2891,7 +2880,6 @@ object OlapQueries {
     val cells = Tables(s, d, "documents")
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("c"))
-      .transform(graft.operators.Materialize.cut)
     val totals = cells.groupBy("source").agg(sum("c").as("n_docs"))
     val p = col("c").cast("double") / col("n_docs").cast("double")
     cells
@@ -2923,7 +2911,6 @@ object OlapQueries {
       .events(s, d)
       .select(col("user_id"), expr(s"ts_us DIV $DayUs").as("day"))
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     val firstDay =
       pairs.groupBy("user_id").agg(min("day").as("first_day"))
     pairs
@@ -2947,7 +2934,7 @@ object OlapQueries {
     * [[qRollingActive]] (a (user, day) pair is visible from ≤ 28
     * window-end days; a second distinct collapses multi-day users; the
     * final count is a plain aggregate — never a count(distinct) frame).
-    * DAU rides the SAME materialized distinct-pairs scan. Days with no
+    * DAU rides the SAME distinct-pairs table. Days with no
     * events still report their trailing MAU (dense via the mau frame),
     * with DAU coalesced to 0 — the dashboard convention. */
   def qStickiness(s: SparkSession, d: String): DataFrame = {
@@ -2955,7 +2942,6 @@ object OlapQueries {
       .events(s, d)
       .select(col("user_id"), expr(s"ts_us DIV $DayUs").as("day"))
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     val bounds = pairs.agg(min("day").as("d0"), max("day").as("d1"))
     val dau = pairs.groupBy(col("day").as("wday")).agg(count(lit(1)).as("dau"))
     val mau = pairs
@@ -2992,8 +2978,8 @@ object OlapQueries {
     * customer-statistic rows, never raw orders. */
   def qHhi(s: SparkSession, d: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val perCust = t(s, d, "orders")
-      .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
+    val perCust = Tables(s, d, "orders")
+      .join(broadcast(Tables(s, d, "customer")), col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment", "c_custkey")
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
     perCust
@@ -3217,7 +3203,6 @@ object OlapQueries {
             (acc, e) => hwStep(acc, e.getField("x")),
             acc => acc).as("st")
         })
-      .transform(graft.operators.Materialize.cut)
     folded
       .select(
         col("event_type"),
@@ -3271,7 +3256,6 @@ object OlapQueries {
       .events(s, d)
       .select(col("user_id"), col("event_type"))
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     val totals = ut.groupBy("event_type").agg(count(lit(1)).as("n"))
     val a = ut.select(col("user_id"), col("event_type").as("type_a"))
     val b = ut.select(col("user_id"), col("event_type").as("type_b"))
@@ -3358,7 +3342,7 @@ object OlapQueries {
     * the two-phase rank of [[kmvSketch]]; everything after is
     * alphabet-sized. */
   def qKmvSketch(s: SparkSession, d: String): DataFrame = {
-    val th = kmvHashes(s, d).transform(graft.operators.Materialize.cut)
+    val th = kmvHashes(s, d)
     val kth = kmvSketchOf(th)
       .filter(col("rn") === KmvK)
       .select(col("event_type"), col("h").as("hk"))
@@ -3397,9 +3381,10 @@ object OlapQueries {
     * (the [[qAnnRecall]] pattern: sketch + truth + error in one
     * report). Deterministic hash family → hash-checkable oracle. */
   def qKmvOverlap(s: SparkSession, d: String): DataFrame = {
+    // cut: measured — uncut, the sketch's every consumer re-ranks the hashes: sf0.01 best 1.447 → 1.532 s
     val th = kmvHashes(s, d).transform(graft.operators.Materialize.cut)
     val sk =
-      kmvSketchOf(th).drop("rn").transform(graft.operators.Materialize.cut)
+      kmvSketchOf(th).drop("rn").transform(graft.operators.Materialize.cut) // cut: measured — as th
     val types = sk.select("event_type").distinct()
     val tp = types
       .select(col("event_type").as("type_a"))
@@ -3575,7 +3560,7 @@ object OlapQueries {
     * windows run over the week-count-bounded statistic table (a
     * calendar of weeks, never raw orders). */
   def qWowGrowth(s: SparkSession, d: String): DataFrame = {
-    val weekly = t(s, d, "orders")
+    val weekly = Tables(s, d, "orders")
       .groupBy(
         expr(
           s"(unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV $DayUs) DIV $WeekDays")
@@ -3615,14 +3600,13 @@ object OlapQueries {
     * runs per cohort over age-bounded rows. Revenue is exact integer
     * cents until the final division. */
   def qCohortLtv(s: SparkSession, d: String): DataFrame = {
-    val orders = t(s, d, "orders")
+    val orders = Tables(s, d, "orders")
       .select(
         col("o_custkey"),
         expr(
           s"(unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV $DayUs) DIV $WeekDays")
           .as("week"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      .transform(graft.operators.Materialize.cut)
     val cohorts =
       orders.groupBy("o_custkey").agg(min("week").as("cohort_week"))
     val cohortSize = cohorts
@@ -3680,7 +3664,6 @@ object OlapQueries {
       .select(explode(expr("sequence(d0, d1)")).as("day"))
       .join(daily, Seq("day"), "left")
       .select(col("day"), coalesce(col("n_events"), lit(0L)).as("n_events"))
-      .transform(graft.operators.Materialize.cut)
     val w7 = Window.orderBy("day").rowsBetween(-3, 3)
     val r4 = (c: Column) => floor(c * 10000.0d + 0.5d) / 10000.0d
     val det = dense
@@ -3782,7 +3765,7 @@ object OlapQueries {
     * comparison — the part a float sum would make engine-dependent — is
     * integer equality. */
   def qTopSupplier(s: SparkSession, d: String): DataFrame = {
-    val rev = t(s, d, "lineitem")
+    val rev = Tables(s, d, "lineitem")
       .filter(
         col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
@@ -3796,7 +3779,7 @@ object OlapQueries {
     rev
       .crossJoin(broadcast(mx))
       .filter(col("rev_e4") === col("mx"))
-      .join(broadcast(t(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Tables(s, d, "supplier")), col("l_suppkey") === col("s_suppkey"))
       .select(
         col("s_suppkey"),
         col("s_name"),
@@ -3817,9 +3800,9 @@ object OlapQueries {
     * null-unless-late key — no second pass, no self-joins of the fact
     * table). Integer counts end to end. */
   def qWaitingSuppliers(s: SparkSession, d: String): DataFrame = {
-    val perSupp = t(s, d, "lineitem")
+    val perSupp = Tables(s, d, "lineitem")
       .join(
-        t(s, d, "orders").select("o_orderkey", "o_orderdate"),
+        Tables(s, d, "orders").select("o_orderkey", "o_orderdate"),
         col("l_orderkey") === col("o_orderkey"))
       // ONE fact shuffle for BOTH stacked aggregates (r15, guide §2.4):
       // hash(l_orderkey) satisfies the (l_orderkey, l_suppkey) grouping
@@ -3843,7 +3826,7 @@ object OlapQueries {
     perOrder
       .groupBy(col("lone_supp").as("s_suppkey"))
       .agg(count(lit(1)).as("numwait"))
-      .join(broadcast(t(s, d, "supplier").select("s_suppkey", "s_name")), "s_suppkey")
+      .join(broadcast(Tables(s, d, "supplier").select("s_suppkey", "s_name")), "s_suppkey")
       .select("s_suppkey", "s_name", "numwait")
       .orderBy(col("numwait").desc, col("s_suppkey"))
       .limit(10)
@@ -3895,7 +3878,7 @@ object OlapQueries {
       }
     }
     val seed = concat(lit("bs:"), col("o_orderkey").cast("string"))
-    val rs = t(s, d, "orders")
+    val rs = Tables(s, d, "orders")
       .select(
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
         graft.functions.Hashing.md5Long(seed).as("ha"),
@@ -3917,7 +3900,7 @@ object OlapQueries {
       .withColumn(
         "rk",
         row_number().over(Window.orderBy(col("mean_b"), col("b"))).cast("long"))
-    val point = t(s, d, "orders")
+    val point = Tables(s, d, "orders")
       .agg(
         count(lit(1)).as("n_orders"),
         sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("tot"))
@@ -3949,7 +3932,7 @@ object OlapQueries {
     * statistic table (dimension-sized, like q_skyline's survivor stage
     * — never lineitem), and each share is one integer division. */
   def qAbcAnalysis(s: SparkSession, d: String): DataFrame = {
-    val perPart = t(s, d, "lineitem")
+    val perPart = Tables(s, d, "lineitem")
       .groupBy("l_partkey")
       .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("cents"))
     val w = Window.orderBy(col("cents").desc, col("l_partkey"))
@@ -3984,7 +3967,7 @@ object OlapQueries {
     * end to end. */
   def qDecileMigration(s: SparkSession, d: String): DataFrame = {
     def period(pred: Column, q: String): DataFrame =
-      t(s, d, "orders")
+      Tables(s, d, "orders")
         .filter(pred)
         .groupBy("o_custkey")
         .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))

@@ -9,6 +9,7 @@ import graft.multimodal.Multimodal
 import graft.functions.{Hashing, TextFns, VectorFns}
 import graft.functions.expressions.Tokens
 import graft.similarity.Ann
+import graft.sources.Tables
 
 /** Training-data pipeline operators (SURVEY §2c): dedup, similarity
   * search, text analysis — each with a DuckDB oracle built on the shared
@@ -21,16 +22,10 @@ import graft.similarity.Ann
   */
 object PipelineQueries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** String-column adapter over the shared small-output sort (see
     * [[graft.operators.SortUtil.sortSmall]] for the rationale). */
   private def sortSmall(df: DataFrame, cols: String*): DataFrame =
     graft.operators.SortUtil.sortSmall(df, cols.map(col): _*)
-
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
 
   /** Shingle CTEs (`toks<x>`/`sh<x>`/`ex<x>`) over an arbitrary base
     * relation — parameterized so composed oracles (q_pipeline_e2e) can
@@ -96,11 +91,11 @@ object PipelineQueries {
   // library modules.
 
   def qDedupExact(s: SparkSession, d: String): DataFrame =
-    Dedup.exact(docs(s, d)).orderBy("h")
+    Dedup.exact(Tables(s, d, "documents")).orderBy("h")
 
   def qDedupNgram(s: SparkSession, d: String): DataFrame =
     Dedup
-      .ngramJaccard(docs(s, d), k = 3, threshold = 0.8)
+      .ngramJaccard(Tables(s, d, "documents"), k = 3, threshold = 0.8)
       .transform(sortSmall(_, "a_id", "b_id"))
 
   val MinhashSeeds = 16
@@ -109,7 +104,7 @@ object PipelineQueries {
   def qDedupMinhash(s: SparkSession, d: String): DataFrame =
     Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
@@ -125,19 +120,20 @@ object PipelineQueries {
   def qDupRateBySource(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
         threshold = 0.8)
+    // one explode pass, not a two-select union: each union branch
+    // would embed (and run) the whole pair pipeline
     val dupIds = pairs
-      .select(col("a_id").as("doc_id"))
-      .unionAll(pairs.select(col("b_id").as("doc_id")))
+      .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .distinct()
     // ONE corpus pass: a left join + conditional count replaces the
     // r13 semi-join-then-right-join shape (which aggregated the doc
     // table twice); zero-dup sources fall out of the same aggregate
-    docs(s, d)
+    Tables(s, d, "documents")
       .select("doc_id", "source")
       .join(dupIds.withColumn("dup", lit(1L)), Seq("doc_id"), "left")
       .groupBy("source")
@@ -197,7 +193,7 @@ object PipelineQueries {
     Tokens.register(s)
     // signatures are a shuffle-free per-row fold over the token array —
     // the only exchange in the whole query is the band self-join's
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
     Dedup
       .simhashPairs(
@@ -277,7 +273,7 @@ object PipelineQueries {
     * for oracle-pinned legacy consumers. */
   def qDedupSimhashWide(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
     Dedup
       .simhashPairsWide(
@@ -289,7 +285,7 @@ object PipelineQueries {
   /** Embeddings with per-vector norm precomputed once. */
   private def normedEmbs(s: SparkSession, dir: String): DataFrame =
     Ann.withNorm(
-      embs(s, dir)
+      Tables(s, dir, "embeddings")
         .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v")),
       "v")
 
@@ -301,7 +297,7 @@ object PipelineQueries {
     Dedup
       .duplicateClusters(
         Dedup.minhashLsh(
-          docs(s, d),
+          Tables(s, d, "documents"),
           k = 3,
           numHashes = MinhashSeeds,
           bands = MinhashBands,
@@ -318,7 +314,7 @@ object PipelineQueries {
     Dedup
       .connectedComponentsBigStar(
         Dedup.minhashLsh(
-          docs(s, d),
+          Tables(s, d, "documents"),
           k = 3,
           numHashes = MinhashSeeds,
           bands = MinhashBands,
@@ -335,7 +331,7 @@ object PipelineQueries {
     Dedup
       .duplicateClusters(
         Dedup.minhashLsh(
-          docs(s, d),
+          Tables(s, d, "documents"),
           k = 3,
           numHashes = MinhashSeeds,
           bands = MinhashBands,
@@ -348,23 +344,22 @@ object PipelineQueries {
         sum("sz").as("n_docs"))
       .transform(sortSmall(_, "cluster_size"))
 
-  /** The near-dup pair table as a first-class MATERIALIZED stage, cut
-    * once per call: the production shape is pairs-once → many graph
-    * consumers, not one shingle→minhash→band rebuild per consumer. The
-    * composed dashboard keys ([[qDupGraphReport]], [[qDupSourceOverlap]],
-    * [[qDupJaccardHist]]) and [[kcoreConverged]] each build it inside
-    * their own call, so a result is a function of the tables as they
-    * stand; the standalone per-operator queries keep their own builds so
-    * each CORRECTNESS row stays an independent end-to-end check. */
+  /** The near-dup pair table shared by the composed dashboard keys
+    * ([[qDupGraphReport]], [[qDupSourceOverlap]], [[qDupJaccardHist]])
+    * and [[kcoreConverged]]: the production shape is pairs-once → many
+    * graph consumers, not one shingle→minhash→band rebuild per consumer.
+    * Each key builds it inside its own call, so a result is a function
+    * of the tables as they stand, and a key whose several jobs read it
+    * cuts it; the standalone per-operator queries keep their own builds
+    * so each CORRECTNESS row stays an independent end-to-end check. */
   private def dupPairs(s: SparkSession, d: String): DataFrame =
     Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
         threshold = 0.8)
-      .transform(graft.operators.Materialize.cut)
 
   /** Composed duplicate-graph dashboard: degrees, per-node triangle
     * counts, k-core survivors (in-core degree), and the cluster-size
@@ -379,7 +374,8 @@ object PipelineQueries {
     * doc_id → within-core degree, `cluster_size` keys the family size →
     * number of families. */
   def qDupGraphReport(s: SparkSession, d: String): DataFrame = {
-    val pairs = dupPairs(s, d)
+    // cut: actions — the k-core and cluster loops' jobs and the report plan read it
+    val pairs = dupPairs(s, d).transform(graft.operators.Materialize.cut)
     val deg = pairs
       .select(explode(array(col("a_id"), col("b_id"))).as("id"))
       .groupBy("id")
@@ -414,19 +410,18 @@ object PipelineQueries {
   /** Per-source duplicate-cluster overlap: for each source pair, how
     * many near-dup families contain documents from BOTH — the "which
     * feeds share templates with which" report a curation team reads
-    * before choosing per-source dedup policy. Builds the same
-    * materialized pair table as [[qDupGraphReport]] ([[dupPairs]]);
-    * membership is (family, source)-distinct so the self-join is
-    * family-count-sized, never corpus-sized. */
+    * before choosing per-source dedup policy. Builds the same pair
+    * table as [[qDupGraphReport]] ([[dupPairs]]); membership is
+    * (family, source)-distinct so the self-join is family-count-sized,
+    * never corpus-sized, and its two sides share one exchange. */
   def qDupSourceOverlap(s: SparkSession, d: String): DataFrame = {
     val memb = Dedup
       .duplicateClusters(dupPairs(s, d))
       .join(
-        docs(s, d).select(col("doc_id").as("id"), col("source")),
+        Tables(s, d, "documents").select(col("doc_id").as("id"), col("source")),
         "id")
       .select("comp", "source")
       .distinct()
-      .transform(graft.operators.Materialize.cut)
     memb
       .select(col("comp"), col("source").as("source_a"))
       .join(
@@ -467,6 +462,7 @@ object PipelineQueries {
   def qDedupEmbed(s: SparkSession, d: String): DataFrame =
     Dedup
       .embeddingNearDups(
+        // cut: actions — the router's count, k-means rounds and the pair plan read it
         normedEmbs(s, d).transform(graft.operators.Materialize.cut),
         threshold = DedupEmbedThreshold,
         dim = EmbDim,
@@ -503,6 +499,7 @@ object PipelineQueries {
         col("nrm"))
     Dedup
       .embeddingNearDups(
+        // cut: actions — lshTune's count and the pair plan read it
         base.unionByName(planted).transform(graft.operators.Materialize.cut),
         threshold = DedupEmbedHiThreshold,
         dim = EmbDim,
@@ -566,7 +563,7 @@ object PipelineQueries {
     * predicate. */
   def qHardNegatives(s: SparkSession, d: String): DataFrame = {
     val base = Ann.withNorm(
-      embs(s, d).select(
+      Tables(s, d, "embeddings").select(
         col("vec_id"),
         col("label"),
         VectorFns.asDouble(col("embedding")).as("v")),
@@ -719,7 +716,7 @@ object PipelineQueries {
   def qAnnFiltered(s: SparkSession, d: String): DataFrame = {
     val corpus = Ann
       .withNorm(
-        embs(s, d)
+        Tables(s, d, "embeddings")
           .filter(col("vec_id") >= 10 && col("label") === AnnFilterLabel)
           .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v")),
         "v")
@@ -1104,7 +1101,7 @@ object PipelineQueries {
     * projection so the language CASE doesn't re-evaluate each filter. */
   def qLangId(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("doc_id"),
@@ -1137,7 +1134,7 @@ object PipelineQueries {
     * alphabet-sized aggregate, one source-partitioned window. */
   def qLangPurity(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val marked = docs(s, d)
+    val marked = Tables(s, d, "documents")
       .select(col("source"), expr("graft_tokens(text)").as("t"))
       .select(
         col("source"),
@@ -1167,7 +1164,7 @@ object PipelineQueries {
 
   def qTextQuality(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("doc_id"),
@@ -1199,7 +1196,7 @@ object PipelineQueries {
 
   def qGopherRules(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("t"))
       .select(
         col("doc_id"),
@@ -1231,7 +1228,7 @@ object PipelineQueries {
   def qDupDegree(s: SparkSession, d: String): DataFrame =
     Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
@@ -1249,8 +1246,9 @@ object PipelineQueries {
     * [[graft.dedup.Dedup.passageDedup]] for the scale shape. */
   def qPassageDedup(s: SparkSession, d: String): DataFrame =
     Dedup
-      .passageDedup(docs(s, d), window = 10, minDocs = 2)
-      .transform(graft.operators.Materialize.cut) // full-corpus output; don't re-run the pipeline for the sort's sampling pass
+      .passageDedup(Tables(s, d, "documents"), window = 10, minDocs = 2)
+      // cut: actions — the sort's range-sampling job and the write read it
+      .transform(graft.operators.Materialize.cut)
       .orderBy("doc_id")
 
   /** Line-level corpus dedup (RefinedWeb "remove duplicated lines") —
@@ -1262,8 +1260,9 @@ object PipelineQueries {
     * split/count/reassemble machinery. */
   def qLineDedup(s: SparkSession, d: String): DataFrame =
     Dedup
-      .lineDedup(docs(s, d), minDocs = 2)
-      .transform(graft.operators.Materialize.cut) // full-corpus output; don't re-run the pipeline for the sort's sampling pass
+      .lineDedup(Tables(s, d, "documents"), minDocs = 2)
+      // cut: actions — the sort's range-sampling job and the write read it
+      .transform(graft.operators.Materialize.cut)
       .orderBy("doc_id")
 
   val ShuffleShards = 16
@@ -1276,7 +1275,7 @@ object PipelineQueries {
     * (see [[graft.operators.Sampling.corpusShuffle]]). */
   def qCorpusShuffle(s: SparkSession, d: String): DataFrame =
     graft.operators.Sampling
-      .corpusShuffle(docs(s, d), "doc_id", shards = ShuffleShards, salt = ShuffleSalt)
+      .corpusShuffle(Tables(s, d, "documents"), "doc_id", shards = ShuffleShards, salt = ShuffleSalt)
       .orderBy("pos")
 
   /** Per-vector int8 scalar quantization with reconstruction-error
@@ -1285,7 +1284,7 @@ object PipelineQueries {
     * billion-vector shortlists in executor memory; codes stay exact
     * under the explicit floor(x/s + 0.5) tie rule in both engines. */
   def qQuantizeEmbed(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
+    val e = Tables(s, d, "embeddings")
       .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v"))
     val q = e
       .withColumn("scale", VectorFns.quantizeScale(col("v")))
@@ -1317,7 +1316,7 @@ object PipelineQueries {
     * lives in TextFnsSpec), so the entry pins the 11-rule regex-chain
     * parity between engines. */
   def qHtmlStrip(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), TextFns.stripHtml(col("text")).as("clean"))
       .withColumn("n_chars_clean", length(col("clean")).cast("long"))
       .orderBy("doc_id")
@@ -1328,7 +1327,7 @@ object PipelineQueries {
     * never funnels a column's whole value set through one reducer —
     * the profile of a 100 TB table is one narrow shuffle. */
   def qProfile(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(expr(
         """stack(5,
           |  'doc_id', CAST(doc_id AS STRING),
@@ -1358,7 +1357,6 @@ object PipelineQueries {
     * REPORTED, not asserted (a failing rule is a red row, not a crashed
     * job). */
   def qExpectations(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.Tables
     val li = Tables(s, d, "lineitem")
       .agg(
         count(lit(1)).as("n"),
@@ -1401,7 +1399,7 @@ object PipelineQueries {
           |  'events', 'ts_not_null', n, v1,
           |  'events', 'value_positive', n, v2)
           |  AS (table_name, rule, n_rows, n_violations)""".stripMargin))
-    val dc = docs(s, d)
+    val dc = Tables(s, d, "documents")
       .agg(
         count(lit(1)).as("n"),
         sum(expr(
@@ -1435,13 +1433,11 @@ object PipelineQueries {
     * containing it)², bounded by |vocab| · |sources|² — never a doc-
     * level cross product. Set sizes broadcast (|sources| rows). */
   def qSourceOverlap(s: SparkSession, d: String): DataFrame = {
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(
         col("source"),
         explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
       .distinct()
-      // three consumers (sizes + both self-join sides)
-      .transform(graft.operators.Materialize.cut)
     val sizes = toks.groupBy("source").agg(count(lit(1)).as("n"))
     toks.as("a")
       .join(
@@ -1472,7 +1468,7 @@ object PipelineQueries {
     * language ID, one linear strip-and-diff pass per class, no
     * shuffle. */
   def qScriptProfile(s: SparkSession, d: String): DataFrame = {
-    val counted = docs(s, d).select(
+    val counted = Tables(s, d, "documents").select(
       col("doc_id") +:
         length(col("text")).cast("long").as("n_chars") +:
         TextFns.ScriptClasses.map { case (name, javaP, _) =>
@@ -1498,8 +1494,8 @@ object PipelineQueries {
     * p(w2|w1) = (c(w1 w2)+1) / (c(w1·)+V), V = distinct-next-token
     * vocabulary. Docs with < 2 tokens have no bigram and no row.
     *
-    * Scale shape: bigrams materialized once, counted twice (bigram key,
-    * history key) — both two-phase aggregations; the scoring join is an
+    * Scale shape: bigrams counted twice (bigram key, history key) —
+    * both two-phase aggregations; the scoring join is an
     * equi-join per key; V rides a one-row broadcast cross product (the
     * same bounded product as the pmi/tfidf totals, allow-listed in
     * PlanSpec). */
@@ -1510,11 +1506,9 @@ object PipelineQueries {
     * the CCNet-style bucket mixer [[qCcnetBuckets]] — one definition
     * of the corpus LM quality score. */
   private def lmScores(s: SparkSession, d: String): DataFrame = {
-    val bi = docs(s, d)
+    val bi = Tables(s, d, "documents")
       .select(col("doc_id"), explode(TextFns.ngramsAll(col("text"), 2)).as("bg"))
       .withColumn("w1", split(col("bg"), " ").getItem(0))
-      // three consumers: bigram counts, history counts, scoring join
-      .transform(graft.operators.Materialize.cut)
     val cb = bi.groupBy("bg").agg(count(lit(1)).as("c_bg"))
     val cu = bi.groupBy("w1").agg(count(lit(1)).as("c_w1"))
     val vocab = bi
@@ -1548,6 +1542,7 @@ object PipelineQueries {
       .select(
         col("doc_id"),
         expr("CAST(round(lm_score * 10000) AS BIGINT)").as("sq"))
+      // cut: measured — uncut, the LM score is recomputed per consumer: sf0.01 best 1.491 → 1.935 s
       .transform(graft.operators.Materialize.cut(_))
     val hist = scored.groupBy("sq").agg(count(lit(1)).as("m"))
     val cum = hist
@@ -1560,7 +1555,7 @@ object PipelineQueries {
       .agg(
         min(when(col("cm") >= expr("(n + 2) DIV 3"), col("sq"))).as("f1"),
         min(when(col("cm") >= expr("(2 * n + 2) DIV 3"), col("sq"))).as("f2"))
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("source"),
@@ -1605,9 +1600,8 @@ object PipelineQueries {
     * one division of exact counts. */
   def qContamOverlap(s: SparkSession, d: String): DataFrame = {
     val ex = Dedup
-      .shingleRows(docs(s, d), "doc_id", "text", 3)
+      .shingleRows(Tables(s, d, "documents"), "doc_id", "text", 3)
       .select(col("doc_id"), Hashing.md5Long(col("shingle")).as("h"))
-      .transform(graft.operators.Materialize.cut(_))
     val bench = ex.filter(col("doc_id") < 10).select("h").distinct()
     val corpus = ex.filter(col("doc_id") >= 10)
     val tot = corpus.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
@@ -1653,7 +1647,7 @@ object PipelineQueries {
     * summary fold. */
   def qJlProject(s: SparkSession, d: String): DataFrame = {
     val sArr = s"array(${jlSigns.mkString("L,")}L)"
-    val sample = embs(s, d)
+    val sample = Tables(s, d, "embeddings")
       .filter(col("vec_id") < JlSample)
       .select(
         col("vec_id"),
@@ -1665,7 +1659,6 @@ object PipelineQueries {
           s"transform(sequence(0, ${JlDim - 1}), k -> " +
             s"aggregate(sequence(0, ${EmbDim - 1}), CAST(0 AS BIGINT), " +
             s"(acc, i) -> acc + element_at($sArr, k * $EmbDim + i + 1) * qv[i]))"))
-      .transform(graft.operators.Materialize.cut(_))
     val pairs = sample
       .select(col("vec_id").as("a_id"), col("qv").as("qa"), col("y").as("ya"))
       .join(
@@ -1712,6 +1705,7 @@ object PipelineQueries {
   def qIvfBalance(s: SparkSession, d: String): DataFrame = {
     val sizes = graft.clustering.Clustering
       .kmeansAssign(
+        // cut: actions — every Lloyd round's centroid collect and the report read it
         normedEmbs(s, d).transform(graft.operators.Materialize.cut(_)),
         k = KmeansK,
         iters = KmeansIters,
@@ -1748,7 +1742,7 @@ object PipelineQueries {
     * convention), top 20 on the exact (common, aa, id) order. */
   def qGraphCommonNeighbors(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
     val pairs = Dedup
       .simhashPairs(
@@ -1756,7 +1750,6 @@ object PipelineQueries {
         bits = SimhashBits,
         maxHamming = SimhashMaxHamming)
       .select("a_id", "b_id")
-      .transform(graft.operators.Materialize.cut(_))
     commonNeighborsOver(pairs)
   }
 
@@ -1767,18 +1760,19 @@ object PipelineQueries {
     * sound) wedge + anti-join plan. */
   def qGraphCommonNeighborsWide(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
     val pairs = Dedup
       .simhashPairsWide(
         Dedup.simhashSignaturesWide(toks, "doc_id", "tk"),
         maxHamming = SimhashMaxHamming)
       .select("a_id", "b_id")
+      // cut: measured — every wedge/degree consumer re-runs the pair build uncut: sf0.01 best 0.752 → 1.074 s
       .transform(graft.operators.Materialize.cut(_))
     commonNeighborsOver(pairs)
   }
 
-  /** The shared wedge + anti-join + Adamic–Adar rank over a materialized
+  /** The shared wedge + anti-join + Adamic–Adar rank over an
     * `(a_id, b_id)` edge table (extracted so the 60-bit and 120-bit
     * graphs run the IDENTICAL downstream plan). */
   private def commonNeighborsOver(pairs: DataFrame): DataFrame = {
@@ -1820,7 +1814,7 @@ object PipelineQueries {
     * chain, no regex engine, identity on clean text (this corpus —
     * the crafted-artifact behavior lives in FunctionsSpec). */
   def qFixMojibake(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("text"),
@@ -1839,8 +1833,8 @@ object PipelineQueries {
   /** BM25 full-text retrieval scoring (the inverted-index consumer,
     * row 75's ranking sibling): Okapi BM25 with the Lucene idf
     * (`ln((N−df+0.5)/(df+0.5)+1)` — never negative) for a fixed query
-    * term set, top-[[Bm25TopK]] docs. Scale shape: the token table is
-    * materialized once for its two consumers (doc lengths + term tf);
+    * term set, top-[[Bm25TopK]] docs. Scale shape: one token table
+    * feeds doc lengths and term tf;
     * the query-term filter cuts tf to |terms|·matching docs BEFORE any
     * join; df/idf and the corpus totals ride broadcasts; per-doc
     * summation is a fixed-association column sum over the literal term
@@ -1853,13 +1847,12 @@ object PipelineQueries {
     * TERM order (never partition order): the score is bit-stable. */
   private def bm25Scores(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val pairs = docs(s, d)
+    val pairs = Tables(s, d, "documents")
       .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
-      .transform(graft.operators.Materialize.cut)
     bm25ScoresFrom(pairs)
   }
 
-  /** [[bm25Scores]] over a caller-materialized token table — shared
+  /** [[bm25Scores]] over a caller's token table — shared
     * with [[qRrfFusion]] so the fused rankers ride ONE token pass. */
   private def bm25ScoresFrom(pairs: DataFrame): DataFrame = {
     val dl = pairs.groupBy("doc_id").agg(count(lit(1)).as("dl"))
@@ -1917,7 +1910,7 @@ object PipelineQueries {
     * Scale shape: one codegen'd regexp pass per row fused into the
     * scan, then an alphabet-sized rollup. */
   def qPiiAudit(s: SparkSession, d: String): DataFrame = {
-    val planted = docs(s, d).select(
+    val planted = Tables(s, d, "documents").select(
       col("doc_id"),
       col("source"),
       concat(
@@ -1983,9 +1976,9 @@ object PipelineQueries {
     * two IEEE divisions in fixed order. */
   def qRrfFusion(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val pairs = docs(s, d)
+    val pairs = Tables(s, d, "documents")
       .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
-      .transform(graft.operators.Materialize.cut)
+      .transform(graft.operators.Materialize.cut) // cut: actions — the nDocs count and the fused plan read it
     val bm = bm25ScoresFrom(pairs)
     // TF-IDF ranker: tf·ln(N/df) per term, slot-summed like bm25
     val tf = pairs
@@ -2049,6 +2042,7 @@ object PipelineQueries {
       .withColumn(
         "gain",
         pow(lit(2.0), col("n_terms").cast("double")) - lit(1.0))
+      // cut: measured — each k's aggregate re-ranks the scores uncut: sf0.01 best 1.312 → 1.736 s
       .transform(graft.operators.Materialize.cut)
     NdcgKs
       .map { k =>
@@ -2094,7 +2088,7 @@ object PipelineQueries {
     * corpus. */
   def qScoreAuc(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val scored = docs(s, d)
+    val scored = Tables(s, d, "documents")
       .select(col("lang"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         (col("lang") === "en").cast("long").as("pos"),
@@ -2128,17 +2122,16 @@ object PipelineQueries {
     * drift signal — which sources look least like the blend they feed).
     * KL against the GLOBAL distribution needs no union-vocabulary
     * gymnastics: every source term exists globally, so one equi-join
-    * scores everything. Scale shape: per-(source, token) counts
-    * materialized once for their two consumers (global rollup +
-    * scoring); source totals are a broadcast; the global total is the
+    * scores everything. Scale shape: per-(source, token) counts feed
+    * the global rollup and the scoring; source totals are a broadcast;
+    * the global total is the
     * allow-listed one-row product. */
   def qSourceDivergence(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val st = docs(s, d)
+    val st = Tables(s, d, "documents")
       .select(col("source"), explode(expr("graft_tokens(text)")).as("tok"))
       .groupBy("source", "tok")
       .agg(count(lit(1)).as("c"))
-      .transform(graft.operators.Materialize.cut)
     val gt = st.groupBy("tok").agg(sum("c").as("gc"))
     val gtot = gt.agg(sum("gc").as("gtot"))
     val stot = st.groupBy("source").agg(sum("c").as("tot"))
@@ -2168,7 +2161,7 @@ object PipelineQueries {
     * a placement layer actually consumes. */
   def qShardRendezvous(s: SparkSession, d: String): DataFrame = {
     val shards = array((0 until RendezvousShards).map(i => lit(i.toLong)): _*)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), col("n_chars"), explode(shards).as("shard"))
       .withColumn(
         "h",
@@ -2193,7 +2186,7 @@ object PipelineQueries {
     Dedup
       .pairRank(
         Dedup.minhashLsh(
-          docs(s, d),
+          Tables(s, d, "documents"),
           k = 3,
           numHashes = MinhashSeeds,
           bands = MinhashBands,
@@ -2207,7 +2200,7 @@ object PipelineQueries {
     * contained side only, lossless). */
   def qContainment(s: SparkSession, d: String): DataFrame =
     Dedup
-      .containment(docs(s, d), k = 3, threshold = 0.9)
+      .containment(Tables(s, d, "documents"), k = 3, threshold = 0.9)
       .transform(sortSmall(_, "a_id", "b_id"))
 
   /** LSH candidate-quality report: the minhash band-collision pair set
@@ -2227,7 +2220,8 @@ object PipelineQueries {
     // two (r14: the shared spine is the materialized (id, h, h2) hash
     // rows, so neither arm re-tokenizes or re-hashes)
     val ex = Dedup.hashedShinglePairs(
-      Dedup.shingled(docs(s, d), "doc_id", "text", k = 3), "doc_id")
+      Dedup.shingled(Tables(s, d, "documents"), "doc_id", "text", k = 3), "doc_id")
+      .transform(graft.operators.Materialize.cut) // cut: actions — the exact arm's hash-set job and the eval plan read it
     val cand = Dedup
       .minhashCandidatesFromHashedPairs(
         ex, "doc_id", numHashes = MinhashSeeds, bands = MinhashBands)
@@ -2302,10 +2296,11 @@ object PipelineQueries {
   /** [[qSimhashEval]] with an explicit fence budget (0 opts out). */
   def simhashEvalFenced(s: SparkSession, d: String, fenceDocs: Long): DataFrame = {
     Tokens.register(s)
-    fenceExactEval(docs(s, d), fenceDocs, "q_simhash_eval", "q_simhash_eval_sampled")
-    val toks = docs(s, d)
+    fenceExactEval(Tables(s, d, "documents"), fenceDocs, "q_simhash_eval", "q_simhash_eval_sampled")
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
       .filter(size(col("tk")) > 0)
+      // cut: actions — the exact arm's hashed-shingle job and the eval plan read it
       .transform(graft.operators.Materialize.cut)
     val cand = Dedup
       .simhashPairs(
@@ -2366,10 +2361,11 @@ object PipelineQueries {
       fenceDocs: Long): DataFrame = {
     Tokens.register(s)
     fenceExactEval(
-      docs(s, d), fenceDocs, "q_simhash_eval_wide", "q_simhash_eval_sampled")
-    val toks = docs(s, d)
+      Tables(s, d, "documents"), fenceDocs, "q_simhash_eval_wide", "q_simhash_eval_sampled")
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
       .filter(size(col("tk")) > 0)
+      // cut: actions — the exact arm's hashed-shingle job and the eval plan read it
       .transform(graft.operators.Materialize.cut)
     val cand = Dedup
       .simhashPairsWide(
@@ -2452,7 +2448,7 @@ object PipelineQueries {
     * full DuckDB oracle. */
   def qSimhashEvalSampled(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val all = docs(s, d)
+    val all = Tables(s, d, "documents")
     // one metadata-cheap count; the cutoff is driver-baked as a literal
     // so the sample filter reaches the scan
     val cut = evalSampleCut(all.count())
@@ -2460,6 +2456,7 @@ object PipelineQueries {
       .filter(graft.operators.Sampling.hashBucket(col("doc_id")) < cut)
       .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
       .filter(size(col("tk")) > 0)
+      // cut: actions — the exact arm's hashed-shingle job and the eval plan read it
       .transform(graft.operators.Materialize.cut)
     val cand = Dedup
       .simhashPairsWide(
@@ -2529,7 +2526,7 @@ object PipelineQueries {
       sum(floor(element_at(col("v"), j) * lit(Q.toDouble)).cast("long"))
         .as(s"s$j"))
     val aggs = count(lit(1)).as("n") +: sums
-    val cents = embs(s, d)
+    val cents = Tables(s, d, "embeddings")
       .select(col("label"), VectorFns.asDouble(col("embedding")).as("v"))
       .groupBy("label")
       .agg(aggs.head, aggs.tail: _*)
@@ -2556,7 +2553,7 @@ object PipelineQueries {
     Dedup
       .triangleCounts(
         Dedup.minhashLsh(
-          docs(s, d),
+          Tables(s, d, "documents"),
           k = 3,
           numHashes = MinhashSeeds,
           bands = MinhashBands,
@@ -2573,7 +2570,7 @@ object PipelineQueries {
     * capped at [[BfsHops]]. Seeds here are the fixed doc_id % 10 rule
     * so both engines pick the identical set without any exchange. */
   def qGraphBfs(s: SparkSession, d: String): DataFrame = {
-    val dd = docs(s, d)
+    val dd = Tables(s, d, "documents")
     Dedup
       .bfsDistances(
         Dedup.minhashLsh(
@@ -2599,7 +2596,7 @@ object PipelineQueries {
     Dedup
       .kCore(
         Dedup.minhashLsh(
-          docs(s, d),
+          Tables(s, d, "documents"),
           k = 3,
           numHashes = MinhashSeeds,
           bands = MinhashBands,
@@ -2617,7 +2614,8 @@ object PipelineQueries {
     * [[dupPairs]] table cut inside this call; the collected survivor
     * sets are core-sized. */
   def kcoreConverged(s: SparkSession, d: String): Boolean = {
-    val pairs = dupPairs(s, d)
+    // cut: actions — both peel chains' jobs and collects read it
+    val pairs = dupPairs(s, d).transform(graft.operators.Materialize.cut)
     def survivors(rounds: Int): Array[String] =
       Dedup
         .kCore(pairs, k = KcoreK, rounds = rounds)
@@ -2645,13 +2643,12 @@ object PipelineQueries {
     * per-token corpus counts join on the token key (shuffle_hash);
     * per-source totals and the one-row corpus total broadcast. */
   def qDistinctiveTerms(s: SparkSession, d: String): DataFrame = {
-    val ySi = docs(s, d)
+    val ySi = Tables(s, d, "documents")
       .select(
         col("source"),
         explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
       .groupBy("source", "tok")
       .agg(count(lit(1)).as("y_si"))
-      .transform(graft.operators.Materialize.cut)
     val yI = ySi.groupBy("tok").agg(sum("y_si").as("y_i"))
     val nS = ySi.groupBy("source").agg(sum("y_si").as("n_s"))
     val nTot = ySi.agg(sum("y_si").as("n"))
@@ -2694,13 +2691,12 @@ object PipelineQueries {
     * shape identical to the log-odds query: explode-aggregate, token
     * join shuffle_hash, margins broadcast. */
   def qGtestTerms(s: SparkSession, d: String): DataFrame = {
-    val ySi = docs(s, d)
+    val ySi = Tables(s, d, "documents")
       .select(
         col("source"),
         explode(expr("filter(split(text, ' '), x -> length(x) > 0)")).as("tok"))
       .groupBy("source", "tok")
       .agg(count(lit(1)).as("y_si"))
-      .transform(graft.operators.Materialize.cut)
     val yI = ySi.groupBy("tok").agg(sum("y_si").as("y_i"))
     val nS = ySi.groupBy("source").agg(sum("y_si").as("n_s"))
     val nTot = ySi.agg(sum("y_si").as("n"))
@@ -2744,12 +2740,13 @@ object PipelineQueries {
   def qGraphAssortativity(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
         threshold = 0.8)
       .select("a_id", "b_id")
+      // cut: measured — degrees and directed edges each run the pair pipeline uncut: sf0.01 best 1.317 → 1.704 s
       .transform(graft.operators.Materialize.cut)
     val deg = pairs
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
@@ -2802,21 +2799,20 @@ object PipelineQueries {
     * or do templates cross feeds (Q→0/negative — the dedup must be
     * global, not per-source)? Q = Σ_s (m_s/m − (d_s/2m)²) over source
     * communities, where m_s counts intra-source edges and d_s sums
-    * member degrees. Pairs materialized once, both endpoint sources
-    * picked up via shuffle_hash joins against the doc dimension,
-    * everything after is source-alphabet-sized exact integers; Q is
+    * member degrees. Both endpoint sources are picked up via
+    * shuffle_hash joins against the doc dimension and that edge table
+    * is materialized once for its three rollups; everything after is source-alphabet-sized exact integers; Q is
     * one quantize-before-sum fold. */
   def qDupModularity(s: SparkSession, d: String): DataFrame = {
     val pairs = Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
         threshold = 0.8)
       .select("a_id", "b_id")
-      .transform(graft.operators.Materialize.cut(_))
-    val src = docs(s, d).select(col("doc_id"), col("source"))
+    val src = Tables(s, d, "documents").select(col("doc_id"), col("source"))
     val withSrc = pairs
       .join(
         src.select(col("doc_id").as("a_id"), col("source").as("sa")).hint("shuffle_hash"),
@@ -2824,6 +2820,7 @@ object PipelineQueries {
       .join(
         src.select(col("doc_id").as("b_id"), col("source").as("sb")).hint("shuffle_hash"),
         Seq("b_id"))
+      // cut: measured — m, intra and degSum each re-run the pair joins uncut: sf0.01 best 1.182 → 1.585 s
       .transform(graft.operators.Materialize.cut(_))
     val m = withSrc.agg(count(lit(1)).as("m"))
     val intra = withSrc
@@ -2878,7 +2875,7 @@ object PipelineQueries {
   def qPowerLaw(s: SparkSession, d: String): DataFrame = {
     val hist = Dedup
       .minhashLsh(
-        docs(s, d),
+        Tables(s, d, "documents"),
         k = 3,
         numHashes = MinhashSeeds,
         bands = MinhashBands,
@@ -2888,7 +2885,6 @@ object PipelineQueries {
       .agg(count(lit(1)).as("degree"))
       .groupBy("degree")
       .agg(count(lit(1)).as("cnt"))
-      .transform(graft.operators.Materialize.cut(_))
     val dmin = hist.agg(min("degree").as("d_min"), max("degree").as("d_max"))
     hist
       .crossJoin(broadcast(dmin))
@@ -2919,7 +2915,7 @@ object PipelineQueries {
   def qSnmDedup(s: SparkSession, d: String): DataFrame =
     Dedup
       .sortedNeighborhood(
-        docs(s, d),
+        Tables(s, d, "documents"),
         window = 3,
         blockChars = 4,
         k = 3,
@@ -2944,7 +2940,7 @@ object PipelineQueries {
       sum(floor(element_at(col("v"), j) * lit(Q.toDouble)).cast("long"))
         .as(s"s$j"))
     val aggs = count(lit(1)).as("n") +: sums
-    val cents = embs(s, d)
+    val cents = Tables(s, d, "embeddings")
       .select(col("label"), VectorFns.asDouble(col("embedding")).as("v"))
       .groupBy("label")
       .agg(aggs.head, aggs.tail: _*)
@@ -2958,7 +2954,7 @@ object PipelineQueries {
         lit(2.0d) * VectorFns.dot(col("v"), col("cv")) +
         VectorFns.dot(col("cv"), col("cv"))
     val w = Window.partitionBy("label").orderBy(col("dist2").desc, col("vec_id"))
-    embs(s, d)
+    Tables(s, d, "embeddings")
       .select(col("vec_id"), col("label"), VectorFns.asDouble(col("embedding")).as("v"))
       .join(broadcast(cents), "label")
       .select(col("label"), col("vec_id"), round(d2, 6).as("dist2"))
@@ -2992,7 +2988,7 @@ object PipelineQueries {
         sum128(qj * qj).as(s"q$j"))
     }
     val aggs = count(lit(1)).as("n") +: sums
-    val stats = embs(s, d)
+    val stats = Tables(s, d, "embeddings")
       .select(VectorFns.asDouble(col("embedding")).as("v"))
       .agg(aggs.head, aggs.tail: _*)
       .select(
@@ -3009,7 +3005,7 @@ object PipelineQueries {
       s"aggregate(transform(sequence(1, $EmbDim), j -> " +
         "(element_at(v, j) - element_at(mu, j)) * (element_at(v, j) - element_at(mu, j)) / element_at(vr, j)), " +
         "CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
-    embs(s, d)
+    Tables(s, d, "embeddings")
       .select(col("vec_id"), col("label"), VectorFns.asDouble(col("embedding")).as("v"))
       .crossJoin(broadcast(stats))
       .select(
@@ -3030,7 +3026,7 @@ object PipelineQueries {
     * arithmetic. */
   def qQualityModel(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("doc_id"),
@@ -3066,7 +3062,7 @@ object PipelineQueries {
       .partitionBy("source")
       .orderBy("hrank", "doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("source"),
@@ -3101,7 +3097,7 @@ object PipelineQueries {
       .partitionBy("bucket")
       .orderBy("hrank", "doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         size(expr("graft_tokens(text)")).cast("long").as("n_tokens"),
@@ -3132,7 +3128,7 @@ object PipelineQueries {
     * engines enumerate identical windows. */
   def qChunk(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), expr("graft_tokens(text)").as("t"))
       .filter(size(col("t")) > 0)
       .select(
@@ -3166,7 +3162,7 @@ object PipelineQueries {
     * words. */
   def qBpeTokens(s: SparkSession, d: String): DataFrame = {
     graft.functions.expressions.BpeTokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("n_chars"),
@@ -3189,7 +3185,7 @@ object PipelineQueries {
     * `replace` merge application bit-for-bit in DuckDB. */
   def qBpeTrain(s: SparkSession, d: String): DataFrame =
     graft.functions.BpeTrainer
-      .train(docs(s, d), merges = BpeTrainMerges)
+      .train(Tables(s, d, "documents"), merges = BpeTrainMerges)
       .orderBy("rank")
 
   /** Corpus vocabulary head: top-20 tokens by document frequency (ties
@@ -3198,7 +3194,7 @@ object PipelineQueries {
     * shape, since token frequency is exactly the skewed case. */
   def qVocabTopk(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val pairs = docs(s, d)
+    val pairs = Tables(s, d, "documents")
       .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
     val tf = pairs.groupBy("tok").agg(count(lit(1)).as("tf"))
     val df = pairs.distinct().groupBy("tok").agg(count(lit(1)).as("df"))
@@ -3220,9 +3216,10 @@ object PipelineQueries {
     * posting scan). */
   def qInvertedIndex(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val pairs = docs(s, d)
+    val pairs = Tables(s, d, "documents")
       .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
       .distinct()
+      // cut: measured — the df top-k and the posting pass each re-tokenize uncut: sf0.01 best 0.635 → 0.840 s
       .transform(graft.operators.Materialize.cut)
     val top = pairs
       .groupBy("tok")
@@ -3246,7 +3243,7 @@ object PipelineQueries {
 
   def qTokenCount(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         size(expr("graft_tokens(text)")).cast("long").as("ws_tokens"),
@@ -3264,7 +3261,7 @@ object PipelineQueries {
   def qTokenFertility(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
     val floor6 = (c: Column) => floor(c * 1000000.0d + 0.5d) / 1000000.0d
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("lang"),
         size(expr("graft_tokens(text)")).cast("long").as("w"),
@@ -3301,7 +3298,7 @@ object PipelineQueries {
     * fixing. */
   def qNormalize(s: SparkSession, d: String): DataFrame = {
     graft.functions.expressions.NormalizeText.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         expr("graft_normalize(text)").as("norm_text"),
@@ -3314,7 +3311,7 @@ object PipelineQueries {
     * independent, so engine-portable). Explode+aggregate rather than
     * array HOFs: min/bit_xor get map-side partials and stay codegen'd. */
   def qFingerprint(s: SparkSession, d: String): DataFrame =
-    Dedup.shingleRows(docs(s, d), "doc_id", "text", 3)
+    Dedup.shingleRows(Tables(s, d, "documents"), "doc_id", "text", 3)
       .withColumn("h", Hashing.md5Long(col("shingle")))
       .groupBy("doc_id")
       .agg(
@@ -3350,7 +3347,7 @@ object PipelineQueries {
 
   /** The shared winnow posting table of [[qWinnow]]/[[qWinnowEval]]:
     * per-doc distinct selected fingerprints, df ≤ 64 stop-fingerprint
-    * rule applied, materialized once — paired with the
+    * rule applied over the materialized fingerprint table — paired with the
     * [[Dedup.shjPinned]] decision for its n-scaling joins (the
     * fingerprint tables grow ∝ corpus, so the pinned non-spillable
     * hash build holds only while the per-partition share fits — the
@@ -3358,7 +3355,7 @@ object PipelineQueries {
   private def winnowKept(
       s: SparkSession,
       d: String): (DataFrame, DataFrame => DataFrame) =
-    winnowKeptFrom(docs(s, d), s)
+    winnowKeptFrom(Tables(s, d, "documents"), s)
 
   /** [[winnowKept]] over an arbitrary doc relation — the seam the
     * SAMPLED eval reuses (the df ≤ 64 stop rule is corpus-dependent, so
@@ -3370,7 +3367,7 @@ object PipelineQueries {
       .winnowFingerprints(base, "doc_id", "text", k = 3, w = 4)
       .select(col("doc_id"), col("fp"))
       .distinct()
-      .transform(graft.operators.Materialize.cut(_))
+      .transform(graft.operators.Materialize.cut(_)) // cut: actions — the fence's count and the posting plan read it
     // fence in FP-ROW units (≈ 2/(w+1) of tokens, ~40 rows/doc here):
     // measured GOOD at 625k fp rows/partition (sf10 at 32 partitions,
     // the whole board), hash-build OOM by 6.25M (sf100/32); 1.25M is
@@ -3382,11 +3379,7 @@ object PipelineQueries {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= 64)
       .select("fp")
-    // materialized: the posting self-join's two sides otherwise EACH
-    // re-run the df aggregation + stop-fingerprint join (r14 — the
-    // before-plan carried the whole subtree twice)
-    (fp.join(pinned(rare), "fp").transform(graft.operators.Materialize.cut),
-      pinned)
+    (fp.join(pinned(rare), "fp"), pinned)
   }
 
   /** Minimum shared winnowed fingerprints for [[qWinnowEval]]'s
@@ -3426,12 +3419,12 @@ object PipelineQueries {
   /** [[qWinnowEval]] with an explicit fence budget (0 opts out). */
   def winnowEvalFenced(s: SparkSession, d: String, fenceDocs: Long): DataFrame = {
     fenceExactEval(
-      docs(s, d), fenceDocs, "q_winnow_eval", "q_winnow_eval_sampled")
+      Tables(s, d, "documents"), fenceDocs, "q_winnow_eval", "q_winnow_eval_sampled")
     val (kept, pinned) = winnowKept(s, d)
     val cand = winnowCandPairs(kept, pinned)
       .withColumn("in_cand", lit(true))
     val exact = Dedup
-      .ngramJaccard(docs(s, d), k = 3, threshold = 0.5)
+      .ngramJaccard(Tables(s, d, "documents"), k = 3, threshold = 0.5)
       .select(col("a_id"), col("b_id"))
       .withColumn("in_exact", lit(true))
     cand
@@ -3472,7 +3465,7 @@ object PipelineQueries {
     * error conditional on that geometry. The shared exact arm — the
     * whole measured cost — is the thing the sample buys down. */
   def qWinnowEvalSampled(s: SparkSession, d: String): DataFrame = {
-    val all = docs(s, d)
+    val all = Tables(s, d, "documents")
     val cut = evalSampleCut(all.count())
     val sampled =
       all.filter(graft.operators.Sampling.hashBucket(col("doc_id")) < cut)
@@ -3498,7 +3491,7 @@ object PipelineQueries {
     * gets a full DuckDB oracle. */
   def qDocSample(s: SparkSession, d: String): DataFrame =
     graft.operators.Sampling
-      .sampleByHash(docs(s, d), "doc_id", 0.1)
+      .sampleByHash(Tables(s, d, "documents"), "doc_id", 0.1)
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")
 
@@ -3514,10 +3507,10 @@ object PipelineQueries {
     * row count plus a bounded id sample per class (sort_array of a
     * WindowGroupLimit'd collect — never the full id list). */
   def qSnapshotDiff(s: SparkSession, d: String): DataFrame = {
-    val cur = docs(s, d)
+    val cur = Tables(s, d, "documents")
       .filter(col("doc_id") % 5 =!= 0)
       .select(col("doc_id"), md5(col("text")).as("h"))
-    val prev = docs(s, d)
+    val prev = Tables(s, d, "documents")
       .filter(col("doc_id") % 7 =!= 0)
       .select(
         col("doc_id"),
@@ -3558,7 +3551,7 @@ object PipelineQueries {
     * on any layout, engine-exact because the only float ops are an
     * IEEE multiply and divide). Top-[[WeightedSampleK]] by priority. */
   def qWeightedSample(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("n_chars"),
@@ -3578,10 +3571,10 @@ object PipelineQueries {
   def qSplitLeakage(s: SparkSession, d: String): DataFrame =
     graft.operators.Sampling
       .leakageSafeSplit(
-        docs(s, d),
+        Tables(s, d, "documents"),
         Dedup.duplicateClusters(
           Dedup.minhashLsh(
-            docs(s, d),
+            Tables(s, d, "documents"),
             k = 3,
             numHashes = MinhashSeeds,
             bands = MinhashBands,
@@ -3601,7 +3594,7 @@ object PipelineQueries {
     * fully oracle-checked. */
   def qSourceMix(s: SparkSession, d: String): DataFrame =
     graft.operators.Sampling
-      .weightedMix(docs(s, d), "doc_id", "source", MixWeights.toMap)
+      .weightedMix(Tables(s, d, "documents"), "doc_id", "source", MixWeights.toMap)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
       .transform(sortSmall(_, "source"))
@@ -3616,16 +3609,16 @@ object PipelineQueries {
   def qDupTokenShare(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
     val pairs = Dedup.minhashLsh(
-      docs(s, d),
+      Tables(s, d, "documents"),
       k = 3,
       numHashes = MinhashSeeds,
       bands = MinhashBands,
       threshold = 0.8)
+    // one explode pass, not a two-select union (see qDupRateBySource)
     val dupIds = pairs
-      .select(col("a_id").as("doc_id"))
-      .unionAll(pairs.select(col("b_id").as("doc_id")))
+      .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .distinct()
-    val base = docs(s, d)
+    val base = Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("source"),
@@ -3671,9 +3664,9 @@ object PipelineQueries {
     * no float accumulates). */
   def qHeapsLaw(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
-    val mx = docs(s, d).agg(max("doc_id").as("mx"))
+    val mx = Tables(s, d, "documents").agg(max("doc_id").as("mx"))
     // checkpoint index of a doc id: 1..HeapsCheckpoints, upper-inclusive
     def ck(name: String): Column =
       least(
@@ -3744,7 +3737,7 @@ object PipelineQueries {
     * and each weight is one IEEE division of exact integers. */
   def qTempMix(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val src = docs(s, d)
+    val src = Tables(s, d, "documents")
       .select(col("source"), size(expr("graft_tokens(text)")).cast("long").as("tok"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("tok").as("n_tokens"))
@@ -3782,7 +3775,7 @@ object PipelineQueries {
     * map partition). */
   def qStratifiedSample(s: SparkSession, d: String): DataFrame =
     graft.operators.Sampling
-      .stratifiedSample(docs(s, d), "source", "doc_id", StratSampleN)
+      .stratifiedSample(Tables(s, d, "documents"), "source", "doc_id", StratSampleN)
       .select("source", "rank", "doc_id")
       .transform(sortSmall(_, "source", "rank"))
 
@@ -3793,7 +3786,7 @@ object PipelineQueries {
     * id engine-exact; one map-side-combinable aggregate, output is
     * bucket-count-sized. */
   def qLenHistogram(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .groupBy(expr(s"n_chars DIV $HistBucketWidth").as("bucket"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -3824,7 +3817,7 @@ object PipelineQueries {
     * re-joined — a wider shuffle row beats a second corpus-wide join
     * at any scale. */
   def qRepetition(s: SparkSession, d: String): DataFrame = {
-    val base = docs(s, d)
+    val base = Tables(s, d, "documents")
       .select(
         col("doc_id"),
         TextFns.ngramsAll(col("text"), 2).as("bgs"),
@@ -3881,7 +3874,7 @@ object PipelineQueries {
   def qHeavyHitters(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
     graft.functions.expressions.TopKSketch.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(explode(expr("graft_tokens(text)")).as("tok"))
       .agg(expr(s"graft_topk(tok, $HeavyK)").as("hh"))
       .select(posexplode(col("hh")).as(Seq("rank", "e")))
@@ -3915,10 +3908,11 @@ object PipelineQueries {
     * profiles — counters are mergeable by addition. */
   def qCmsCounts(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val tf = docs(s, d)
+    val tf = Tables(s, d, "documents")
       .select(explode(expr("graft_tokens(text)")).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).as("tf"))
+      // cut: measured — the depth-way union and top-k each re-run it uncut: sf0.01 best 0.917 → 1.213 s
       .transform(graft.operators.Materialize.cut)
     def hashed(src: DataFrame) = (0 until CmsDepth)
       .map(r =>
@@ -3949,7 +3943,7 @@ object PipelineQueries {
     * one explode into one map-side-combinable aggregate; the global
     * top-k is a TakeOrderedAndProject (no range-partition sort). */
   def qNgramCounts(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(explode(TextFns.ngramsAll(col("text"), 2)).as("bigram"))
       .groupBy("bigram")
       .agg(count(lit(1)).as("n"))
@@ -3964,7 +3958,7 @@ object PipelineQueries {
     * rows-only at the driver gate, invariants spec-asserted. */
   def qCompressRatio(s: SparkSession, d: String): DataFrame = {
     graft.functions.expressions.DeflateLen.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("n_chars"),
@@ -3983,7 +3977,7 @@ object PipelineQueries {
     * [[graft.operators.Skew.countDistinct]] shape instead). */
   def qSourceReport(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("source"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("source"),
@@ -4079,7 +4073,7 @@ object PipelineQueries {
     * domain-sized aggregate. */
   def qDomainReport(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val withUrl = docs(s, d)
+    val withUrl = Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("source"),
@@ -4134,7 +4128,7 @@ object PipelineQueries {
     * decision-sized. Same synthetic URL derivation as
     * [[qDomainReport]]. */
   def qUrlDedup(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(
         col("doc_id"),
         md5(col("text")).as("h"),
@@ -4159,7 +4153,7 @@ object PipelineQueries {
     * construction; both engines replant identically and the detector
     * must recover exactly those groups. */
   def qMirrorDetect(s: SparkSession, d: String): DataFrame = {
-    val base = docs(s, d).select(col("doc_id"), col("text"), col("source"))
+    val base = Tables(s, d, "documents").select(col("doc_id"), col("text"), col("source"))
     val plants = base
       .filter(col("doc_id") % 97L === 0L)
       .select((col("doc_id") + 10000000L).as("doc_id"), col("text"), col("source"))
@@ -4197,14 +4191,14 @@ object PipelineQueries {
     * row explosion; totals are one-row broadcasts. */
   def qPmiTerms(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val toks = docs(s, d)
+    val toks = Tables(s, d, "documents")
       .select(expr("graft_tokens(text)").as("t"))
+      // cut: measured — the unigram and bigram counts each re-tokenize uncut: sf0.01 best 0.770 → 0.996 s
       .transform(graft.operators.Materialize.cut)
     val uni = toks
       .select(explode(col("t")).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).as("c"))
-      .transform(graft.operators.Materialize.cut)
     val big = toks
       .filter(size(col("t")) >= 2) // sequence(1, 0) would be DESCENDING, not empty
       .select(
@@ -4216,7 +4210,6 @@ object PipelineQueries {
       .select(col("p.x").as("x"), col("p.y").as("y"))
       .groupBy("x", "y")
       .agg(count(lit(1)).as("c_xy"))
-      .transform(graft.operators.Materialize.cut)
     val totals = uni
       .agg(sum("c").as("nn"))
       .crossJoin(big.agg(sum("c_xy").as("mm")))
@@ -4248,25 +4241,21 @@ object PipelineQueries {
     * (ln's last ulp is not portable; an integer ratio is).
     *
     * Shape at scale: tf is one (doc, tok) aggregate with map-side
-    * partials, materialized ONCE (Materialize.cut — column pruning
-    * makes the two consumers' subplans canonically different, so
-    * exchange reuse alone cannot dedupe them); df is then derived FROM
-    * tf (tf's keys ARE the distinct (doc, tok) pairs — the two-phase
-    * distinct shape for the skewed token key). Net: the corpus is
-    * scanned and tokenized exactly once. The tf⋈df join shuffles on tok
+    * partials; df is then derived FROM tf (tf's keys ARE the distinct
+    * (doc, tok) pairs — the two-phase distinct shape for the skewed
+    * token key). The tf⋈df join shuffles on tok
     * (shuffle_hash — the df table is vocabulary-sized, too big to
     * broadcast at corpus scale); the per-doc top-k gets Spark's
     * WindowGroupLimit pushdown, so no doc's full term list crosses the
     * final shuffle. */
   def qTfidfTerms(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val base = docs(s, d)
+    val base = Tables(s, d, "documents")
     val pairs = base
       .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
     val tf = pairs
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("tf"))
-      .transform(graft.operators.Materialize.cut)
     val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val n = base.agg(count(lit(1)).as("n"))
     val w = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("tok"))
@@ -4301,6 +4290,7 @@ object PipelineQueries {
   def qKmeans(s: SparkSession, d: String): DataFrame =
     graft.clustering.Clustering
       .kmeansAssign(
+        // cut: actions — every Lloyd round's centroid collect and the assignment read it
         normedEmbs(s, d).transform(graft.operators.Materialize.cut),
         k = KmeansK,
         iters = KmeansIters,
@@ -4312,6 +4302,7 @@ object PipelineQueries {
     * second scale path for embedding dedup (quadratic only within
     * clusters; `q_dedup_embed` buckets by cosine-LSH bands instead). */
   def qSemdedup(s: SparkSession, d: String): DataFrame = {
+    // cut: actions — every Lloyd round's centroid collect and the pair plan read it
     val e = normedEmbs(s, d).transform(graft.operators.Materialize.cut)
     val assign = graft.clustering.Clustering
       .kmeansAssign(e, k = KmeansK, iters = KmeansIters, dim = EmbDim)
@@ -4327,7 +4318,7 @@ object PipelineQueries {
     * Data Makes Language Models Better", ACL'22). */
   def qDupSpans(s: SparkSession, d: String): DataFrame =
     Dedup
-      .duplicateSpans(docs(s, d), k = 3)
+      .duplicateSpans(Tables(s, d, "documents"), k = 3)
       .orderBy("doc_id")
 
   /** Incremental cross-corpus near-dup: a ~10% hash-selected "new batch"
@@ -4336,7 +4327,7 @@ object PipelineQueries {
     * existing deduplicated corpus. See
     * [[graft.dedup.Dedup.minhashLshAgainst]]. */
   def qDedupIncr(s: SparkSession, d: String): DataFrame = {
-    val all = docs(s, d)
+    val all = Tables(s, d, "documents")
     val batch = graft.operators.Sampling.sampleByHash(all, "doc_id", 0.1)
     val corpus = graft.operators.Sampling.complement(all, "doc_id", 0.1)
     Dedup
@@ -4358,12 +4349,10 @@ object PipelineQueries {
     * [[graft.pipeline.TrainingPipeline]]. */
   def qPipelineE2e(s: SparkSession, d: String): DataFrame =
     graft.pipeline.TrainingPipeline
-      .prepare(docs(s, d))
+      .prepare(Tables(s, d, "documents"))
       .select("doc_id", "lang", "source", "n_chars")
-      // materialize before the global sort: the output is ~half the
-      // corpus (too big for the single-partition sortSmall head), and a
-      // raw orderBy would re-run the whole pipeline for its
-      // range-sampling pass
+      // cut: actions — the sort's range-sampling job and the write read it
+      // (the output is ~half the corpus, too big for sortSmall's head)
       .transform(graft.operators.Materialize.cut)
       .orderBy("doc_id")
 
@@ -4376,7 +4365,7 @@ object PipelineQueries {
   def qContamination(s: SparkSession, d: String): DataFrame =
     graft.pipeline.TrainingPipeline
       .contaminatedIds(
-        docs(s, d),
+        Tables(s, d, "documents"),
         benchMaxId = 10,
         shingleK = 3,
         minShared = ContaminationMinShared)
@@ -4389,7 +4378,7 @@ object PipelineQueries {
   def qContaminationBloom(s: SparkSession, d: String): DataFrame =
     graft.pipeline.TrainingPipeline
       .bloomContaminatedIds(
-        docs(s, d),
+        Tables(s, d, "documents"),
         benchMaxId = 10,
         shingleK = 3,
         minShared = ContaminationMinShared)
@@ -4404,7 +4393,7 @@ object PipelineQueries {
     * totals verify the content actually merged (not just the row
     * counts). */
   def qMergeUpsert(s: SparkSession, d: String): DataFrame = {
-    val base = docs(s, d)
+    val base = Tables(s, d, "documents")
     val deletes = base
       .filter(col("doc_id") % 13 === 0)
       .select(col("doc_id"), lit("delete").as("op"), lit(null).cast("string").as("new_text"),
@@ -4443,7 +4432,7 @@ object PipelineQueries {
     * aggregate — no per-cutoff pass, no window over the corpus. */
   def qVocabCoverage(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val counts = docs(s, d)
+    val counts = Tables(s, d, "documents")
       .select(explode(expr("graft_tokens(text)")).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).as("c"))
@@ -4471,7 +4460,7 @@ object PipelineQueries {
     * float only in the two final ratios. */
   def qSyllables(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val perDoc = docs(s, d).select(
+    val perDoc = Tables(s, d, "documents").select(
       col("source"),
       size(expr("graft_tokens(text)")).cast("long").as("words"),
       regexp_count(lower(col("text")), lit("[aeiouy]+")).cast("long").as("syllables"))
@@ -4543,7 +4532,7 @@ object PipelineQueries {
     val posMap = (for { j <- 0 until dim; k <- j until dim } yield (j, k)).zipWithIndex
       .map { case ((j, k), p) => (p, (j + 1).toLong, (k + 1).toLong) }
       .toDF("pos", "j", "k")
-    embs(s, d)
+    Tables(s, d, "embeddings")
       .repartition(s.sparkContext.defaultParallelism)
       .select(
         posexplode(
@@ -4562,7 +4551,7 @@ object PipelineQueries {
     * (64 + 1 statistic rows from one scan; same pre-explode
     * repartition rationale as [[covPairSums]]). */
   private def covDimSums(s: SparkSession, d: String): DataFrame =
-    embs(s, d)
+    Tables(s, d, "embeddings")
       .repartition(s.sparkContext.defaultParallelism)
       .select(
         expr(s"transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * $EmbFp.0) AS BIGINT))")
@@ -4688,7 +4677,7 @@ object PipelineQueries {
       col("embedding"),
       lit(0.0),
       (acc, x) => acc + x.cast("double") * x.cast("double")))
-    embs(s, d)
+    Tables(s, d, "embeddings")
       .select(col("label"), size(col("embedding")).cast("long").as("dim"), norm.as("norm"))
       .groupBy("label")
       .agg(
@@ -4720,7 +4709,7 @@ object PipelineQueries {
         regexp_replace(lower(col("text")), TextFns.PunctClass, " "),
         "\\s+",
         " "))
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("doc_id"), col("source"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("doc_id"),
@@ -4761,7 +4750,7 @@ object PipelineQueries {
     * shrinkage formula. */
   def qQualityShrunk(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    val per = docs(s, d)
+    val per = Tables(s, d, "documents")
       .select(col("source"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("source"),
@@ -4796,7 +4785,7 @@ object PipelineQueries {
     * as (positive = `lang = 'en'`, linear quality score). */
   private def scoredEn(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("lang"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         (col("lang") === "en").cast("long").as("pos"),
@@ -4920,7 +4909,7 @@ object PipelineQueries {
     * shared by the confusion matrix and the kappa summary. */
   private def langidPred(s: SparkSession, d: String): DataFrame = {
     Tokens.register(s)
-    docs(s, d)
+    Tables(s, d, "documents")
       .select(col("lang"), col("text"), expr("graft_tokens(text)").as("t"))
       .select(
         col("lang").as("actual_lang"),
@@ -4965,7 +4954,6 @@ object PipelineQueries {
     val cells = langidPred(s, d)
       .groupBy("actual_lang", "pred_lang")
       .agg(count(lit(1)).as("n"))
-      .transform(graft.operators.Materialize.cut)
     val rows = cells.groupBy("actual_lang").agg(sum("n").as("rn"))
     val cols = cells.groupBy("pred_lang").agg(sum("n").as("cn"))
     val agree = cells
@@ -5007,8 +4995,7 @@ object PipelineQueries {
     * insert/delete/substitute, so the distance — and the pair set — is
     * engine-exact. */
   def qFuzzyJoin(s: SparkSession, d: String): DataFrame = {
-    val names = s.read
-      .parquet(s"$d/part.parquet")
+    val names = Tables(s, d, "part")
       .select(col("p_name"))
       .distinct()
       // The recall-1 guarantee (shared bigrams ≥ max|s|−1−2d ≥ 1) only
@@ -5021,7 +5008,6 @@ object PipelineQueries {
         when(length(col("p_name")) >= 6, length(col("p_name")).cast("long"))
           .otherwise(raise_error(
             lit("qFuzzyJoin: bigram blocking requires length(p_name) >= 6"))))
-      .transform(graft.operators.Materialize.cut(_))
     val grams = names.select(
       col("p_name"),
       col("len"),

@@ -22,9 +22,6 @@ object StatsQueries {
 
   import graft.operators.SortUtil.sortSmall
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   private def floor6(c: Column): Column =
@@ -111,7 +108,7 @@ object StatsQueries {
     * pairs, bounded, broadcast — never on the fact table, which folds
     * to per-month counts first). Only the final z is float. */
   def qMannKendall(s: SparkSession, d: String): DataFrame = {
-    val m = t(s, d, "orders")
+    val m = Tables(s, d, "orders")
       .groupBy(monthIdx(col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("c"))
     val pairs = m
@@ -171,7 +168,7 @@ object StatsQueries {
     * doubles, also engine-exact. Pair set is |months|², statistic-
     * sized, broadcast. */
   def qTheilSen(s: SparkSession, d: String): DataFrame = {
-    val m = t(s, d, "orders")
+    val m = Tables(s, d, "orders")
       .groupBy(monthIdx(col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("c"))
     val pairs = m
@@ -227,7 +224,7 @@ object StatsQueries {
     * co-partitioned on (month, customer) — then integer counts and ONE
     * division per month. Output is month-bounded. */
   def qChurnRate(s: SparkSession, d: String): DataFrame = {
-    val am = t(s, d, "orders")
+    val am = Tables(s, d, "orders")
       .select(monthIdx(col("o_orderdate")).as("m"), col("o_custkey"))
       .distinct()
     val active = am.groupBy("m").agg(count(lit(1)).as("active"))
@@ -542,9 +539,9 @@ object StatsQueries {
   def qMixShift(s: SparkSession, d: String): DataFrame = {
     val split = lit(MixSplit).cast("timestamp")
     val cents = expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    val g = t(s, d, "orders")
+    val g = Tables(s, d, "orders")
       .join(
-        broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
+        broadcast(Tables(s, d, "customer").select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(
@@ -589,7 +586,7 @@ object StatsQueries {
     * n₁/n₂/R stay exact int64 and only the final z is float. Days at
     * the median are excluded (the standard two-sample reduction). */
   def qRunsTest(s: SparkSession, d: String): DataFrame = {
-    val days = t(s, d, "orders")
+    val days = Tables(s, d, "orders")
       .groupBy(
         expr(s"unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV $DayUs").as("day"))
       .agg(count(lit(1)).as("c"))
@@ -810,7 +807,7 @@ object StatsQueries {
     * is one scalar IEEE tree. Scale shape: fact table → 11-row
     * statistic table in one exchange. */
   def qCochranArmitage(s: SparkSession, d: String): DataFrame = {
-    val doses = t(s, d, "lineitem")
+    val doses = Tables(s, d, "lineitem")
       .select(
         expr("CAST(round(l_discount * 100) AS BIGINT)").as("k"),
         (col("l_returnflag") === "R").cast("long").as("r"))
@@ -850,7 +847,7 @@ object StatsQueries {
     * two source-partitioned rank windows + one aggregate — no pair
     * joins, no global sort. */
   def qSpearman(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "documents")
+    val base = Tables(s, d, "documents")
       .select(
         col("source"),
         col("n_chars").as("x"),
@@ -900,15 +897,14 @@ object StatsQueries {
     * = 0 and are excluded, the standard reduction). One fact exchange
     * (custkey aggregate → segment join), then segment-sized algebra. */
   def qTheilIndex(s: SparkSession, d: String): DataFrame = {
-    val rev = t(s, d, "orders")
+    val rev = Tables(s, d, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("x"))
       .join(
-        t(s, d, "customer").select(
+        Tables(s, d, "customer").select(
           col("c_custkey").as("o_custkey"),
           col("c_mktsegment").as("segment")),
         Seq("o_custkey"))
-      .transform(graft.operators.Materialize.cut)
     val seg = rev
       .groupBy("segment")
       .agg(count(lit(1)).as("n_g"), sum(dec(col("x"))).as("s_g"))
@@ -981,7 +977,6 @@ object StatsQueries {
         count(lit(1)).as("n"),
         sum("c").as("sc"),
         sum(dec(col("c")) * col("c")).as("sq"))
-      .transform(graft.operators.Materialize.cut(_))
     val mse = g
       .select(
         col("n"),
@@ -1097,7 +1092,7 @@ object StatsQueries {
     * broadcast, tie-corrected variance), seasons' S and Var18 sum
     * exactly, one final z with continuity correction. */
   def qMkSeasonal(s: SparkSession, d: String): DataFrame = {
-    val m = t(s, d, "orders")
+    val m = Tables(s, d, "orders")
       .groupBy(
         monthIdx(col("o_orderdate")).as("m"),
         month(col("o_orderdate")).as("moy"))
@@ -1209,7 +1204,6 @@ object StatsQueries {
       .agg(
         count(lit(1)).as("r"),
         sum(when(col("conv_d") === col("dd"), 1L).otherwise(0L)).as("o"))
-      .transform(graft.operators.Materialize.cut)
     val byDay = table
       .groupBy("dd")
       .agg(
@@ -1296,7 +1290,6 @@ object StatsQueries {
         sum(col("t") * col("y")).as("y_t"),
         sum((lit(1L) - col("t")) * col("y")).as("y_c"))
       .withColumn("n_c", col("n_s") - col("n_t"))
-      .transform(graft.operators.Materialize.cut(_))
     val kept = strata.filter(col("n_t") > 0 && col("n_c") > 0)
     val tot = strata.agg(sum("n_s").as("nn"), count(lit(1)).as("n_strata"))
     val keptAgg = kept
@@ -1412,13 +1405,12 @@ object StatsQueries {
     * tie-uncorrected Var₀, and z are one scalar IEEE tree on exact
     * N/nₖ sums. */
   def qJonckheere(s: SparkSession, d: String): DataFrame = {
-    val hist = t(s, d, "lineitem")
+    val hist = Tables(s, d, "lineitem")
       .select(
         expr("CAST(round(l_discount * 100) AS BIGINT)").as("k"),
         expr("CAST(l_quantity AS BIGINT)").as("q"))
       .groupBy("k", "q")
       .agg(count(lit(1)).as("m"))
-      .transform(graft.operators.Materialize.cut(_))
     val a = hist.select(col("k").as("ka"), col("q").as("qa"), col("m").as("ma"))
     val b = hist.select(col("k").as("kb"), col("q").as("qb"), col("m").as("mb"))
     val j2 = a

@@ -29,9 +29,6 @@ object TpchQueries {
 
   import graft.operators.SortUtil.sortSmall
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Exact revenue in int64 ten-thousandths of a dollar. */
   private def revE4: Column =
     expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
@@ -63,10 +60,10 @@ object TpchQueries {
     * left join is customer-row × one-count — never customer × orders.
     * Output is histogram-bounded (≤ max order count rows). */
   def qCustdist(s: SparkSession, d: String): DataFrame = {
-    val oc = t(s, d, "orders")
+    val oc = Tables(s, d, "orders")
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n"))
-    t(s, d, "customer")
+    Tables(s, d, "customer")
       .select("c_custkey")
       .join(oc, col("c_custkey") === col("o_custkey"), "left")
       .select(coalesce(col("n"), lit(0L)).as("c_count"))
@@ -91,8 +88,8 @@ object TpchQueries {
     * customer/nation dimension join runs on 20 rows, not on every
     * customer. */
   def qReturnedRevenue(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").filter(col("l_returnflag") === "R")
-    val ord = t(s, d, "orders")
+    val li = Tables(s, d, "lineitem").filter(col("l_returnflag") === "R")
+    val ord = Tables(s, d, "orders")
       .filter(
         col("o_orderdate") >= lit(ReturnedFrom).cast("timestamp") &&
           col("o_orderdate") < lit(ReturnedUntil).cast("timestamp"))
@@ -102,8 +99,8 @@ object TpchQueries {
       .agg(sum(revE4).as("rev_e4"))
       .orderBy(col("rev_e4").desc, col("o_custkey"))
       .limit(20)
-      .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables(s, d, "customer")), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
       .select(
         col("c_custkey"),
         col("c_name"),
@@ -129,21 +126,21 @@ object TpchQueries {
   def qNationTrade(s: SparkSession, d: String): DataFrame = {
     val nations = Seq(TradeNationA, TradeNationB)
     val sup = broadcast(
-      t(s, d, "supplier")
+      Tables(s, d, "supplier")
         .join(
-          t(s, d, "nation").filter(col("n_name").isin(nations: _*)),
+          Tables(s, d, "nation").filter(col("n_name").isin(nations: _*)),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation")))
     val cust = broadcast(
-      t(s, d, "customer")
+      Tables(s, d, "customer")
         .join(
-          t(s, d, "nation").filter(col("n_name").isin(nations: _*)),
+          Tables(s, d, "nation").filter(col("n_name").isin(nations: _*)),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name").as("cust_nation")))
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .join(sup, col("l_suppkey") === col("s_suppkey"))
       .join(
-        t(s, d, "orders").select("o_orderkey", "o_custkey"),
+        Tables(s, d, "orders").select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
       .filter(
@@ -172,22 +169,22 @@ object TpchQueries {
     * of ONE aggregate — no second pass over the fact table). */
   def qMarketShare(s: SparkSession, d: String): DataFrame = {
     val regionNations = broadcast(
-      t(s, d, "nation")
+      Tables(s, d, "nation")
         .join(
-          t(s, d, "region").filter(col("r_name") === MarketRegion),
+          Tables(s, d, "region").filter(col("r_name") === MarketRegion),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey").as("rn_key")))
     val cust = broadcast(
-      t(s, d, "customer")
+      Tables(s, d, "customer")
         .join(regionNations, col("c_nationkey") === col("rn_key"))
         .select("c_custkey"))
     val sup = broadcast(
-      t(s, d, "supplier")
-        .join(t(s, d, "nation"), col("s_nationkey") === col("n_nationkey"))
+      Tables(s, d, "supplier")
+        .join(Tables(s, d, "nation"), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .join(
-        t(s, d, "orders").select("o_orderkey", "o_custkey", "o_orderdate"),
+        Tables(s, d, "orders").select("o_orderkey", "o_custkey", "o_orderdate"),
         col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
       .join(sup, col("l_suppkey") === col("s_suppkey"))
@@ -224,16 +221,16 @@ object TpchQueries {
       expr("CAST(round(p_retailprice * 100) AS BIGINT)") *
       expr("CAST(round(l_quantity) AS BIGINT)")
     val sup = broadcast(
-      t(s, d, "supplier")
-        .join(t(s, d, "nation"), col("s_nationkey") === col("n_nationkey"))
+      Tables(s, d, "supplier")
+        .join(Tables(s, d, "nation"), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name")))
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .join(
-        broadcast(t(s, d, "part").select("p_partkey", "p_retailprice")),
+        broadcast(Tables(s, d, "part").select("p_partkey", "p_retailprice")),
         col("l_partkey") === col("p_partkey"))
       .join(sup, col("l_suppkey") === col("s_suppkey"))
       .join(
-        t(s, d, "orders").select("o_orderkey", "o_orderdate"),
+        Tables(s, d, "orders").select("o_orderkey", "o_orderdate"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(
         col("n_name").as("nation"),
@@ -254,12 +251,12 @@ object TpchQueries {
     * aggregate over the month slice; the share is a single IEEE
     * (promo·100)/total on exact int64 sums. */
   def qPromoShare(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .filter(
         col("l_shipdate") >= lit(PromoFrom).cast("timestamp") &&
           col("l_shipdate") < lit(PromoUntil).cast("timestamp"))
       .join(
-        broadcast(t(s, d, "part").select("p_partkey", "p_type")),
+        broadcast(Tables(s, d, "part").select("p_partkey", "p_type")),
         col("l_partkey") === col("p_partkey"))
       .agg(
         sum(when(col("p_type") === "PROMO", revE4).otherwise(0L)).as("promo_e4"),
@@ -289,12 +286,12 @@ object TpchQueries {
     * quarter filter prunes the orders scan before the semi join;
     * output is priority-bounded (5 rows). */
   def qPriorityExists(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
+    Tables(s, d, "orders")
       .filter(
         col("o_orderdate") >= lit(PriorityFrom).cast("timestamp") &&
           col("o_orderdate") < lit(PriorityUntil).cast("timestamp"))
       .join(
-        t(s, d, "lineitem").select("l_orderkey", "l_shipdate"),
+        Tables(s, d, "lineitem").select("l_orderkey", "l_shipdate"),
         col("o_orderkey") === col("l_orderkey") &&
           col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $PriorityLateDays DAYS"),
         "left_semi")
@@ -315,13 +312,13 @@ object TpchQueries {
     * the ~0.1% of orders that survive. Output is SF-proportional, so
     * the head keeps the scalable range sort. */
   def qLargeOrders(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .groupBy("l_orderkey")
       .agg(sum(expr("CAST(round(l_quantity) AS BIGINT)")).as("total_qty"))
       .filter(col("total_qty") >= LargeOrderQty)
-      .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
       .join(
-        broadcast(t(s, d, "customer").select("c_custkey", "c_name")),
+        broadcast(Tables(s, d, "customer").select("c_custkey", "c_name")),
         col("o_custkey") === col("c_custkey"))
       .select(
         col("c_custkey"),
@@ -346,7 +343,7 @@ object TpchQueries {
     * the broadcast join, and only the exact three-way disjunct runs on
     * joined rows. */
   def qDisjunctRevenue(s: SparkSession, d: String): DataFrame = {
-    val part = t(s, d, "part")
+    val part = Tables(s, d, "part")
       .filter(
         col("p_brand").isin("Brand#12", "Brand#23", "Brand#24") &&
           col("p_size").between(1, 15))
@@ -358,7 +355,7 @@ object TpchQueries {
           col("l_quantity").between(10, 20)) ||
         (col("p_brand") === "Brand#24" && col("p_size").between(1, 15) &&
           col("l_quantity").between(20, 30))
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .filter(col("l_quantity").between(1, 30))
       .join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .filter(branch)
@@ -382,10 +379,10 @@ object TpchQueries {
     * on the min are kept, like the reference query. */
   def qMinCostSupplier(s: SparkSession, d: String): DataFrame = {
     val parts = broadcast(
-      t(s, d, "part")
+      Tables(s, d, "part")
         .filter(col("p_size") === MinCostPartSize)
         .select("p_partkey", "p_name"))
-    val offers = t(s, d, "lineitem")
+    val offers = Tables(s, d, "lineitem")
       .join(parts, col("l_partkey") === col("p_partkey"))
       .groupBy("p_partkey", "p_name", "l_suppkey")
       .agg(min(col("l_extendedprice") / col("l_quantity")).as("unit_cost"))
@@ -394,7 +391,7 @@ object TpchQueries {
       .withColumn("mn", min("unit_cost").over(w))
       .filter(col("unit_cost") === col("mn"))
       .join(
-        broadcast(t(s, d, "supplier").select("s_suppkey", "s_name")),
+        broadcast(Tables(s, d, "supplier").select("s_suppkey", "s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(
         col("p_partkey"),
@@ -424,7 +421,7 @@ object TpchQueries {
     * decimal (value·|parts| at 100 TB would overflow int64). Output is
     * SF-proportional → range sort. */
   def qImportantParts(s: SparkSession, d: String): DataFrame = {
-    val v = t(s, d, "lineitem")
+    val v = Tables(s, d, "lineitem")
       .groupBy(col("l_partkey").as("p_partkey"))
       .agg(sum(revE4).as("value_e4"))
     val tot = v.agg(
@@ -454,13 +451,13 @@ object TpchQueries {
     * the date-pruned orders slice. */
   def qIdleRich(s: SparkSession, d: String): DataFrame = {
     val balE2 = expr("CAST(round(c_acctbal * 100) AS BIGINT)")
-    val pos = t(s, d, "customer")
+    val pos = Tables(s, d, "customer")
       .filter(col("c_acctbal") > 0)
       .agg(count(lit(1)).as("n_pos"), sum(balE2).as("sum_pos"))
-    val recent = t(s, d, "orders")
+    val recent = Tables(s, d, "orders")
       .filter(col("o_orderdate") >= lit(IdleSince).cast("timestamp"))
       .select("o_custkey")
-    t(s, d, "customer")
+    Tables(s, d, "customer")
       .crossJoin(broadcast(pos))
       .filter(balE2 * col("n_pos") > col("sum_pos"))
       .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -487,7 +484,7 @@ object TpchQueries {
     * shuffle). The compare q·n_supp > 3·total is exact int64. Output
     * is supplier-bounded. */
   def qDominantSupplier(s: SparkSession, d: String): DataFrame = {
-    val ps = t(s, d, "lineitem")
+    val ps = Tables(s, d, "lineitem")
       .groupBy("l_partkey", "l_suppkey")
       .agg(sum(expr("CAST(round(l_quantity) AS BIGINT)")).as("qty"))
     val w = Window.partitionBy("l_partkey")
@@ -497,7 +494,7 @@ object TpchQueries {
       .groupBy("l_suppkey")
       .agg(count(lit(1)).as("n_parts"), sum("qty").as("qty_shipped"))
       .join(
-        broadcast(t(s, d, "supplier").select("s_suppkey", "s_name")),
+        broadcast(Tables(s, d, "supplier").select("s_suppkey", "s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select("s_suppkey", "s_name", "n_parts", "qty_shipped")
       .transform(sortSmall(_, col("n_parts").desc, col("s_suppkey")))
@@ -516,10 +513,10 @@ object TpchQueries {
     * status-bounded output. */
   def qLateLines(s: SparkSession, d: String): DataFrame = {
     val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .filter(year(col("l_shipdate")) === LateLinesYear)
       .join(
-        t(s, d, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority"),
+        Tables(s, d, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority"),
         col("l_orderkey") === col("o_orderkey"))
       .filter(
         col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $PriorityLateDays DAYS"))
@@ -542,14 +539,14 @@ object TpchQueries {
     * same lo + (hi−lo)·frac over sorted doubles) and integer-exact
     * counts with a single IEEE division for the share. */
   def qCustomerLifespan(s: SparkSession, d: String): DataFrame = {
-    val per = t(s, d, "orders")
+    val per = Tables(s, d, "orders")
       .groupBy("o_custkey")
       .agg(
         count(lit(1)).as("n_orders"),
         expr(s"(unix_micros(CAST(max(o_orderdate) AS TIMESTAMP)) - unix_micros(CAST(min(o_orderdate) AS TIMESTAMP))) DIV ${DayUs}")
           .as("span_days"))
       .join(
-        broadcast(t(s, d, "customer").select("c_custkey", "c_mktsegment")),
+        broadcast(Tables(s, d, "customer").select("c_custkey", "c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
     per
       .groupBy("c_mktsegment")
@@ -587,9 +584,9 @@ object TpchQueries {
   def qElasticity(s: SparkSession, d: String): DataFrame = {
     val dE2 = expr("CAST(round(l_discount * 100) AS BIGINT)")
     val qty = expr("CAST(round(l_quantity) AS BIGINT)")
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .join(
-        broadcast(t(s, d, "part").select("p_partkey", "p_brand")),
+        broadcast(Tables(s, d, "part").select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand")
       .agg(
@@ -631,7 +628,7 @@ object TpchQueries {
     * never a float band). The benchmark's pure scan-throughput probe:
     * no join, no shuffle beyond the final 1-row fold. */
   def qFilteredRevenue(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .filter(
         col("l_shipdate") >= lit(FilteredFrom).cast("timestamp") &&
           col("l_shipdate") < lit(FilteredUntil).cast("timestamp") &&
@@ -665,10 +662,10 @@ object TpchQueries {
     * — the same proxy Q2/Q9/Q11/Q20 document); the excluded-supplier
     * and filtered-part sides both broadcast. */
   def qSupplierPartTypes(s: SparkSession, d: String): DataFrame = {
-    val excluded = t(s, d, "supplier")
+    val excluded = Tables(s, d, "supplier")
       .filter(col("s_acctbal") < 0)
       .select(col("s_suppkey"))
-    val parts = t(s, d, "part")
+    val parts = Tables(s, d, "part")
       .filter(
         col("p_brand") =!= SptExcludeBrand &&
           col("p_type") =!= SptExcludeType &&
@@ -683,7 +680,7 @@ object TpchQueries {
     // standalone pre-distinct was a second full-width shuffle of the
     // same information). Same output: the part join is 1:1 on
     // p_partkey and count_distinct ignores multiplicity.
-    t(s, d, "lineitem")
+    Tables(s, d, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
       .join(
         broadcast(excluded),

@@ -495,7 +495,7 @@ object Ann {
     val twoTier = codesPath.getFileSystem(conf).exists(codesPath)
     val cbOld = if (twoTier) Some(ivfPqCodebook(spark, path)) else None
     val k = spark.read.parquet(s"$path/centroids").count().toInt
-    // materialize the corpus OFF the tiers about to be overwritten
+    // cut: pin — the corpus is read OFF the tiers about to be overwritten
     val corpus = graft.operators.Materialize.cut(
       spark.read.parquet(s"$path/lists").select("neighbor_id", "c_v", "c_nrm"))
     // deterministic global k-means: k lowest-id rows seed (the
@@ -852,6 +852,7 @@ object Ann {
       staging: String): Unit = {
     val cents = spark.read.parquet(s"$path/centroids")
     val cb = ivfPqCodebook(spark, path)
+    // cut: actions — the lists and codes writes read it
     val assigned = graft.operators.Materialize.cut(
       nearestCells(batch, broadcast(cents), "neighbor_id", "c_v", "c_nrm", 1))
     assigned
@@ -1400,6 +1401,7 @@ object Ann {
     val finalAssign0 =
       assign(centsDf(subs)).select("neighbor_id", "c_v", "c_nrm", "cent_id")
     val finalAssign =
+      // cut: actions — the lists and codes writes read it
       if (cbOpt.isDefined) graft.operators.Materialize.cut(finalAssign0)
       else finalAssign0
     finalAssign
@@ -1548,6 +1550,7 @@ object Ann {
         col("c_nrm"),
         col("new_id").as("cent_id"))
     val survivors =
+      // cut: actions — the lists and codes writes read it
       if (cbOpt.isDefined) graft.operators.Materialize.cut(survivors0)
       else survivors0
     survivors

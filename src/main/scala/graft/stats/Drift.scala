@@ -28,9 +28,8 @@ object Drift {
   val DefaultBins = 65536L
 
   /** Per-(group, bucket) counts of `value` on the fixed-width integer
-    * spine — the shared rollup every test rides. `df` is scanned once;
-    * both intermediate aggregates are materialized for reuse by the
-    * multiple downstream consumers. */
+    * spine — the shared rollup every test rides, materialized once for
+    * the test's several consumers. */
   def bucketCounts(
       df: DataFrame,
       group: Column,
@@ -40,7 +39,6 @@ object Drift {
       .select(group.as("g"), value.as("x"))
       .groupBy("g", "x")
       .agg(count(lit(1)).as("c"))
-      .transform(graft.operators.Materialize.cut)
     val bounds = exact.agg(min("x").as("mn"), max("x").as("mx"))
     exact
       .crossJoin(broadcast(bounds))
@@ -54,6 +52,7 @@ object Drift {
         expr(s"((CAST(x AS DECIMAL(38,0)) - mn) * $bins) DIV (mx - mn + 1)"))
       .groupBy("g", "bucket")
       .agg(sum("c").as("c"))
+      // cut: measured — spine, totals and the join each re-aggregate uncut: sf0.01 best ks 0.898 → 1.513 s, psi 1.035 → 1.670 s
       .transform(graft.operators.Materialize.cut)
   }
 

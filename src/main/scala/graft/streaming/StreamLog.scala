@@ -1228,6 +1228,7 @@ object StreamLog {
             // 2. survivors vs the archive: batch bands broadcast against
             // the persisted corpus band table (row-64 contract); a replay
             // of the first batch can find the band dir swept empty
+            // cut: actions — the archive probe and the staged shingle write read it
             val shSurv = graft.operators.Materialize.cut(
               Dedup.shingled(internal, "doc_id", "clean_text", k))
             val kept =
@@ -1244,7 +1245,9 @@ object StreamLog {
               } else internal
 
             // 3. stage docs + their shingle/band rows
+            // cut: pin — kept reads the archive dirs a publish then rewrites
             val keptCut = graft.operators.Materialize.cut(kept)
+            // cut: actions — the shingle and band writes read it
             val shKept = graft.operators.Materialize.cut(
               shSurv.join(keptCut.select("doc_id"), Seq("doc_id"), "left_semi"))
             keptCut.write.mode("overwrite").parquet(s"$staging/docs")

@@ -5,8 +5,9 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
-/** Bench's pass guard ([[Bench.Board]]) and its scheduler counters
-  * ([[Bench.Counters]]) on the shared spec session. */
+/** Bench's pass guard ([[Bench.Board]]), its scheduler counters
+  * ([[Bench.Counters]]) and its wall split ([[Bench.split]]) on the
+  * shared spec session. */
 class BenchSpec extends SparkSpec {
 
   /** Blocks until listeners registered before this one have seen every
@@ -53,6 +54,33 @@ class BenchSpec extends SparkSpec {
       val b = run("q5_join")
       assert(b.jobs >= 1 && b.tasks >= 1, s"q5_join: $b")
       assert(counters(board("q1_agg").get.tag) == a, "q1_agg's counts moved while q5_join ran")
+    } finally {
+      sc.removeSparkListener(counters)
+      sc.removeSparkListener(drain)
+    }
+  }
+
+  test("a query pass splits its wall into construct, plan and exec; a store pass has no split") {
+    val sc = spark.sparkContext
+    val counters = new Bench.Counters
+    val drain = new Drain(sc)
+    sc.addSparkListener(counters)
+    sc.addSparkListener(drain)
+    try {
+      val board = new Bench.Board(sc)
+      // q_dedup_ngram keeps cuts, so its construction runs eager jobs
+      for (key <- Seq("q1_agg", "q_dedup_ngram")) {
+        assert(board.timeQuery(key)(SparkEntry.queries(key)(spark, SfDir)))
+        drain()
+        val best = board(key).get
+        val (c, p, e) = Bench.split(best, counters).get
+        assert(c >= 0 && p >= 0 && e >= 0, s"$key: construct $c, plan $p, exec $e")
+        assert(
+          math.abs(c + p + e - best.seconds * 1000.0) <= 1.0,
+          s"$key: $c + $p + $e ms vs wall ${best.seconds} s")
+      }
+      assert(board.time("store_produce_100k")(()))
+      assert(Bench.split(board("store_produce_100k").get, counters).isEmpty)
     } finally {
       sc.removeSparkListener(counters)
       sc.removeSparkListener(drain)

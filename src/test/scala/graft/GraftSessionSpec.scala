@@ -6,29 +6,31 @@ import scala.jdk.CollectionConverters._
 
 /** [[GraftSession]] is the one session policy: no other `src/main` code
   * builds a session, the spec harness's session carries every setting
-  * the factory owns, and no library code keeps state across queries or
-  * changes the session's checkpoint dir. */
+  * the factory owns, no library code keeps state across queries or
+  * changes the session's checkpoint dir, and every lineage cut names
+  * the rule it is kept under. */
 class GraftSessionSpec extends SparkSpec {
 
-  /** `(path relative to src/main/scala, code)` of every `src/main` source
-    * file; comment lines (scaladoc examples) are not code. */
-  private lazy val mainCode: List[(String, String)] = {
+  private def isComment(l: String): Boolean = {
+    val t = l.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
+
+  /** Every `src/main` source file as (path under src/main/scala, lines). */
+  private lazy val mainLines: List[(String, IndexedSeq[String])] = {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root)
     try
       files.iterator().asScala.toList
         .filter(_.toString.endsWith(".scala"))
-        .map { p =>
-          val code = Files.readAllLines(p).asScala
-            .filterNot { l =>
-              val t = l.trim
-              t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-            }
-            .mkString("\n")
-          root.relativize(p).toString -> code
-        }
+        .map(p => root.relativize(p).toString -> Files.readAllLines(p).asScala.toIndexedSeq)
     finally files.close()
   }
+
+  /** `(path relative to src/main/scala, code)` of every `src/main` source
+    * file; comment lines (scaladoc examples) are not code. */
+  private lazy val mainCode: List[(String, String)] =
+    mainLines.map { case (f, lines) => f -> lines.filterNot(isComment).mkString("\n") }
 
   test("src/main holds exactly one SparkSession.builder() call, in GraftSession") {
     val builder = "SparkSession\\s*\\.\\s*builder\\s*\\(\\s*\\)".r
@@ -47,6 +49,18 @@ class GraftSessionSpec extends SparkSpec {
   test("src/main never sets the checkpoint dir") {
     val setters = mainCode.collect { case (f, code) if code.contains("setCheckpointDir") => f }
     assert(setters.isEmpty, s"setCheckpointDir in: $setters")
+  }
+
+  test("every Materialize.cut/cutObserved call outside Materialize carries its cut: rule") {
+    val call = "Materialize\\s*\\.\\s*(cut|cutObserved)\\b".r
+    val tag = "cut: (actions|loop|artefact|pin|measured)\\b".r
+    val untagged = for {
+      (f, lines) <- mainLines if f != "graft/operators/Materialize.scala"
+      (l, i) <- lines.zipWithIndex
+      if !isComment(l) && call.findFirstIn(l).isDefined
+      if !lines.slice(i - 2, i + 1).exists(tag.findFirstIn(_).isDefined)
+    } yield s"$f:${i + 1}"
+    assert(untagged.isEmpty, s"cut sites without a `// cut: <rule> — <why>` tag: ${untagged.mkString(", ")}")
   }
 
   test("the spec session carries every factory setting, with 4 shuffle partitions") {

@@ -9,7 +9,10 @@ printed per metric, plus the wall-weighted share of the whole board
 metric's time goes to fixed per-query work outside tasks (planning,
 scheduling, eager construction jobs); near 0 means every core was busy. Reads the "queries" (seconds), "task_ms" and "cpus" fields Bench
 writes to BENCH_FULL.json; metrics with no successful pass (null) are
-skipped.
+skipped. When the file carries Bench's "construct_ms" map, it also prints
+the board's construct share, sum(construct_ms) / sum(wall_ms) over the
+metrics that have one: the part of the wall spent in fn(spark, sfDir),
+eager cut jobs included.
 
 Usage: python3 tools/overhead_share.py BENCH_FULL.json
 Exit code: 0 = printed, 2 = usage/load error.
@@ -46,6 +49,14 @@ def main():
         return 2
     board = 1.0 - task_total / (wall_total * cpus)
     print(f"board (wall-weighted, {len(rows)} metrics, {cpus} cpus): {board:.3f}")
+    construct = d.get("construct_ms")
+    if isinstance(construct, dict):
+        split = [(construct[k], w) for k, w, _ in rows if construct.get(k) is not None]
+        split_wall = sum(w for _, w in split)
+        if split_wall > 0:
+            share = sum(c for c, _ in split) / split_wall
+            print(f"construct share ({len(split)} metrics): {share:.3f} "
+                  f"(sum construct_ms {sum(c for c, _ in split):.0f} of {split_wall:.0f} ms)")
     return 0
 
 
