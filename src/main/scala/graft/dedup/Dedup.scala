@@ -306,51 +306,6 @@ object Dedup {
       .select(col(aKey), col(bKey), col("jaccard"))
   }
 
-  /** Banded LSH rows `(id, band_id, band_hash)` from a shingled table —
-    * one shared definition for the incremental path's batch and corpus
-    * band tables, mirrored 1:1 by the oracle's band CTEs: band `j`
-    * hashes the ':'-joined signatures `mh{r·j} … mh{r·j + r − 1}`
-    * (`r = numHashes / bands` rows per band) with md5Long. */
-  private def bandedSignatures(
-      sh: DataFrame,
-      id: String,
-      numHashes: Int,
-      bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val bandCols = (0 until bands).map { j =>
-      val sig = (0 until rowsPerBand)
-        .map(r => col(s"mh${rowsPerBand * j + r}").cast("string"))
-      struct(
-        lit(j).as("band_id"),
-        Hashing.md5Long(concat_ws(":", sig: _*)).as("band_hash"))
-    }
-    minhashSignaturesFromShingled(sh, id, numHashes)
-      .select(col(id), explode(array(bandCols: _*)).as("b"))
-      .select(col(id), col("b.band_id"), col("b.band_hash"))
-  }
-
-  /** MinHash signatures `mh0..mh{numHashes-1}` per doc of a shingled
-    * `(id, s)` table. One md5 digest per shingle row; the family is
-    * derived arithmetically as `h_i = a + i·b` (a 60-bit, b 40-bit
-    * digest slices — the sum stays < 2^61, overflow-safe in any int64
-    * engine), then min-aggregated with map-side partials: one shuffle
-    * of one row per doc. `numHashes` ≤ 16 keeps `i·b` < 2^44·16. */
-  def minhashSignaturesFromShingled(
-      sh: DataFrame,
-      id: String,
-      numHashes: Int): DataFrame = {
-    val ex = sh
-      .select(col(id), explode(col("s")).as("shingle"))
-      // one digest yields both family bases (codegen CSE shares the
-      // struct across the two field reads) — half the md5 work of
-      // hashing a and b independently
-      .select(col(id), Hashing.md5MinhashPair(col("shingle")).as("ab"))
-      .select(col(id), col("ab.a").as("a"), col("ab.b").as("b"))
-    val mins = (0 until numHashes).map(i =>
-      min(col("a") + lit(i.toLong) * col("b")).as(s"mh$i"))
-    ex.groupBy(id).agg(mins.head, mins.tail: _*)
-  }
-
   /** Exploded per-shingle hash PAIR rows `(id, h, h2)` from a shingled
     * table — the minhash-family spine: `h`/`h2` are the
     * [[Hashing.md5MinhashPair]] family bases (h = the 60-bit
@@ -361,11 +316,18 @@ object Dedup {
   def hashedShinglePairs(sh: DataFrame, id: String): DataFrame =
     sh
       .select(col(id), explode(col("s")).as("shingle"))
+      // one digest yields both family bases (codegen CSE shares the
+      // struct across the two field reads) — half the md5 work of
+      // hashing h and h2 independently
       .select(col(id), Hashing.md5MinhashPair(col("shingle")).as("ab"))
       .select(col(id), col("ab.a").as("h"), col("ab.b").as("h2"))
 
-  /** [[minhashSignaturesFromShingled]] off the `(id, h, h2)` spine —
-    * no re-shingle, no re-hash. */
+  /** MinHash signatures `mh0..mh{numHashes-1}` per doc off the `(id,
+    * h, h2)` spine of [[hashedShinglePairs]]: the family is derived
+    * arithmetically as `h_i = h + i·h2` (60-bit and 40-bit digest
+    * slices — the sum stays < 2^61, overflow-safe in any int64 engine),
+    * then min-aggregated with map-side partials: one shuffle of one row
+    * per doc. `numHashes` ≤ 16 keeps `i·h2` < 2^44·16. */
   def minhashSignaturesFromHashedPairs(
       ex: DataFrame,
       id: String,
@@ -375,8 +337,11 @@ object Dedup {
     ex.groupBy(id).agg(mins.head, mins.tail: _*)
   }
 
-  /** Banded LSH rows off the `(id, h, h2)` spine (the
-    * [[bandedSignatures]] layout, same band hashes). */
+  /** Banded LSH rows `(id, band_id, band_hash)` off the `(id, h, h2)`
+    * spine — one shared definition for every band table, mirrored 1:1
+    * by the oracle's band CTEs: band `j` hashes the ':'-joined
+    * signatures `mh{r·j} … mh{r·j + r − 1}` (`r = numHashes / bands`
+    * rows per band) with md5Long. */
   private def bandedFromHashedPairs(
       ex: DataFrame,
       id: String,
@@ -519,7 +484,7 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    bandedSignatures(sh, id, numHashes, bands)
+    bandedFromHashedPairs(hashedShinglePairs(sh, id), id, numHashes, bands)
   }
 
   /** [[minhashLshAgainst]] with the corpus side passed as PREBUILT
@@ -540,7 +505,7 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val cands = broadcast(
-      bandedSignatures(shNew, id, numHashes, bands)
+      bandedFromHashedPairs(hashedShinglePairs(shNew, id), id, numHashes, bands)
         .withColumnRenamed(id, "new_id"))
       .join(
         corpusBands.withColumnRenamed(id, "dup_of"),
@@ -809,6 +774,21 @@ object Dedup {
       .select("a_id", "b_id", "hamming")
   }
 
+  /** Both directions `(src, dst)` of every `(a_id, b_id)` pair, cut:
+    * the edge table every round of [[duplicateClusters]], [[pairRank]],
+    * [[bfsDistances]] and [[kCore]] joins. One explode pass, NOT a
+    * two-select union — a union embeds (and the cut job executes) the
+    * whole upstream pair pipeline once per branch. */
+  private def symmetricEdges(pairs: DataFrame): DataFrame =
+    pairs
+      .select(
+        explode(
+          array(
+            struct(col("a_id").as("src"), col("b_id").as("dst")),
+            struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .transform(Materialize.cut) // cut: loop — every round joins it; uncut, each round embeds the pair pipeline
+
   /** Connected components over duplicate pairs — the step that turns
     * near-dup PAIRS into dedup DECISIONS (keep one id per component).
     * Min-label propagation: each round every node adopts the smallest
@@ -828,11 +808,7 @@ object Dedup {
     * GC superseded ones — set it (or clear the dir after the run) for
     * long jobs. */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
-    // cut: loop — every round's propagation join reads the edges
-    val edges = Materialize.cut(
-      pairs
-        .select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
+    val edges = symmetricEdges(pairs)
     // cut: loop — the first round's state; each round replaces it
     var labels = Materialize.cut(
       edges
@@ -1233,17 +1209,7 @@ object Dedup {
     * no per-round cut needed for a small fixed `iters` (cut it too if
     * you push iters high enough for plan depth to bite). */
   def pairRank(pairs: DataFrame, iters: Int = 5): DataFrame = {
-    // one explode pass, NOT a two-select union — a union embeds (and
-    // the materializing job executes) the whole upstream pair pipeline
-    // once per branch (same reasoning as qDupDegree)
-    val edges = pairs
-      .select(
-        explode(
-          array(
-            struct(col("a_id").as("src"), col("b_id").as("dst")),
-            struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.cut) // cut: loop — every round joins it; uncut, each round embeds the pair pipeline
+    val edges = symmetricEdges(pairs)
     // cut: loop — every round joins it; uncut, each round embeds the pair pipeline
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).transform(Materialize.cut)
     var ranks = deg.withColumn("pr", lit(1000000L))
@@ -1276,14 +1242,7 @@ object Dedup {
     * keys — never quadratic in nodes. Isolated seeds still report
     * dist 0 (they are in the answer set by definition). */
   def bfsDistances(pairs: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val edges = pairs
-      .select(
-        explode(
-          array(
-            struct(col("a_id").as("src"), col("b_id").as("dst")),
-            struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.cut) // cut: loop — every hop's expansion job reads it
+    val edges = symmetricEdges(pairs)
     var visited = seeds
       .select(col("doc_id").as("id"), lit(0L).as("dist"))
       .transform(Materialize.cut) // cut: loop — the first hop's frontier and visited set
@@ -1317,14 +1276,7 @@ object Dedup {
     *
     * Returns surviving (doc_id, degree) — degree within the core. */
   def kCore(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var edges = pairs
-      .select(
-        explode(
-          array(
-            struct(col("a_id").as("src"), col("b_id").as("dst")),
-            struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.cut) // cut: loop — the first round's edge state
+    var edges = symmetricEdges(pairs)
     for (_ <- 1 to rounds) {
       val keep = edges
         .groupBy("src")

@@ -61,7 +61,7 @@ object Hashing {
 
   /** Both minhash base hashes ([[md5Long]], [[md5Long2]]) as
     * struct(a, b) off ONE digest — the per-shingle fast path of
-    * [[graft.dedup.Dedup.minhashSignaturesFromShingled]]. */
+    * [[graft.dedup.Dedup.hashedShinglePairs]]. */
   def md5MinhashPair(c: Column): Column =
     ColumnBridge.column(
       graft.functions.expressions.Md5MinhashPair(ColumnBridge.expression(c)))

@@ -99,7 +99,7 @@ case class Md5LongHi60(child: Expression) extends Md5SliceExpression {
 
 /** Both minhash base hashes from ONE digest: struct(a = hex chars
   * 1–15, b = hex chars 17–26) — the per-shingle row of
-  * [[graft.dedup.Dedup.minhashSignaturesFromShingled]] pays one md5
+  * [[graft.dedup.Dedup.hashedShinglePairs]] pays one md5
   * instead of two (or instead of one md5 + hex + two substring/conv
   * re-parses on the original path). */
 case class Md5MinhashPair(child: Expression) extends Md5SliceExpression {

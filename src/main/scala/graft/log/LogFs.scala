@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * ==Staged publish: the one way a file enters a live directory==
   *
   * Every writer that appends parquet to a directory readers are listing
-  * (the log's `data/`, a dedup archive, an IVF-PQ index) uses one
+  * (the log's `data/`, a dedup archive, an ANN index's tiers) uses one
   * protocol, the filesystem form of the reference's two-phase
   * Write → Commit (pebble/service.go:414-530):
   *
@@ -53,9 +53,11 @@ import org.apache.spark.sql.SparkSession
   *     [[graft.streaming.StreamLog.IngestMarkerKeep]] batches behind it.
   *     Other sinkIds' markers and unparseable names are left alone.
   *
-  * `EventLog.produce` and [[TxnLog.commit]] use steps 1-2 with a
-  * call-unique or `trx-<id>.` prefix; the three streaming sinks use all
-  * five through [[exactlyOnce]]. Compaction's manifest-and-marker swap
+  * `EventLog.produce`, [[TxnLog.commit]] and every write into a stored
+  * ANN index (`Ann.ivfAppend`, `Ann.ivfMaintain`'s re-homed cells,
+  * `Ann.ivfDelete`'s survivors) use steps 1-2 with a call-unique or
+  * `trx-<id>.` prefix; the three streaming sinks use all five through
+  * [[exactlyOnce]]. Compaction's manifest-and-marker swap
   * ([[EventLog.compact]]) and `Rollup`'s single-directory rename are
   * different protocols and do not go through here.
   */

@@ -125,8 +125,7 @@ object EventOps {
   }
 
   /** Resume a space scan strictly after `(ts, seg, seq)` — the reference's
-    * exclusive offset resume (pebble/service.go:187). The tuple predicate
-    * is plain boolean algebra so it stays inside whole-stage codegen. */
+    * exclusive offset resume (pebble/service.go:187). */
   def consumeSpaceFromOffset(
       log: DataFrame,
       space: String,
@@ -135,12 +134,17 @@ object EventOps {
       seq: Long): DataFrame =
     log
       .filter(col("space") === space)
-      .filter(
-        col("timestamp") > ts ||
-          (col("timestamp") === ts &&
-            (col("segment") > seg ||
-              (col("segment") === seg && col("sequence") > seq))))
+      .filter(after(ts, seg, seq))
       .orderBy("timestamp", "segment", "sequence")
+
+  /** Rows strictly after `(ts, seg, seq)` in `(timestamp, segment,
+    * sequence)` order — the exclusive offset of every resume. Plain
+    * boolean algebra, so it stays inside whole-stage codegen. */
+  private def after(ts: Long, seg: String, seq: Long): Column =
+    col("timestamp") > ts ||
+      (col("timestamp") === ts &&
+        (col("segment") > seg ||
+          (col("segment") === seg && col("sequence") > seq)))
 
   /** Offset-resume combined with time bounds — the reference's
     * EnumerateSpace (pebble/service.go:165): scan one space strictly
@@ -154,13 +158,7 @@ object EventOps {
       minTimestamp: Long = 0L,
       maxTimestamp: Long = 0L): DataFrame = {
     var df = log.filter(col("space") === space)
-    offset.foreach { case (ts, seg, seq) =>
-      df = df.filter(
-        col("timestamp") > ts ||
-          (col("timestamp") === ts &&
-            (col("segment") > seg ||
-              (col("segment") === seg && col("sequence") > seq))))
-    }
+    offset.foreach { case (ts, seg, seq) => df = df.filter(after(ts, seg, seq)) }
     if (minTimestamp > 0) df = df.filter(col("timestamp") > minTimestamp)
     if (maxTimestamp > 0) df = df.filter(col("timestamp") <= maxTimestamp)
     df.orderBy("timestamp", "segment", "sequence")
@@ -183,13 +181,7 @@ object EventOps {
     val parts = offsets.toSeq.sortBy(_._1).map {
       case (space, None) => log.filter(col("space") === space)
       case (space, Some((ts, seg, seq))) =>
-        log
-          .filter(col("space") === space)
-          .filter(
-            col("timestamp") > ts ||
-              (col("timestamp") === ts &&
-                (col("segment") > seg ||
-                  (col("segment") === seg && col("sequence") > seq))))
+        log.filter(col("space") === space).filter(after(ts, seg, seq))
     }
     parts
       .reduce(_ unionAll _)

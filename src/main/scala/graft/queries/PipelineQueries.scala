@@ -869,7 +869,7 @@ object PipelineQueries {
   val AnnDeleteRem = 3L
 
   /** IVF-PQ probe AFTER vector deletion — the serving index's removal
-    * lifecycle ([[Ann.ivfPqDelete]]): a fresh two-tier index is built,
+    * lifecycle ([[Ann.ivfDelete]]): a fresh two-tier index is built,
     * the planted [[AnnDeleteMod]]-residue set is deleted (touched cells
     * rewritten under fresh ids in BOTH tiers, quantizer re-keyed, cold
     * cells untouched), and the standard probe runs against the result.
@@ -881,7 +881,7 @@ object PipelineQueries {
   def qAnnIvfPqDeleted(s: SparkSession, d: String): DataFrame = {
     val path = freshIndexDir("graft_ivfpqdel_")
     Ann.ivfPqBuild(corpusSide(s, d), ivfCents(s, d), pqCb(s, d), path)
-    Ann.ivfPqDelete(
+    Ann.ivfDelete(
       s, path,
       corpusSide(s, d)
         .select("neighbor_id")
@@ -925,7 +925,7 @@ object PipelineQueries {
     * distribution-shifted append — the codebook-staleness readout
     * behind [[graft.similarity.Ann.IvfPqRetrainFence]]: quantizer and
     * codebook stay FROZEN at build time (trained on the original corpus
-    * only, exactly what [[graft.similarity.Ann.ivfPqAppend]] does),
+    * only, exactly what [[graft.similarity.Ann.ivfAppend]] does),
     * while the serving corpus is original ∪ shifted twins and the
     * queries live in the shifted region. The number says what silent
     * drift costs the route — compare against q_ann_recall_ivfpq (the
@@ -5181,7 +5181,7 @@ object PipelineQueries {
   }
 
   private def bandCtes(x: String): String = {
-    // rows-per-band DERIVED like Dedup.bandedSignatures derives it, so
+    // rows-per-band DERIVED like Dedup.bandedFromHashedPairs derives it, so
     // retuning MinhashSeeds/MinhashBands re-shapes both engines in
     // lockstep (a hardcoded 2 here would desync every minhash oracle)
     val rowsPerBand = MinhashSeeds / MinhashBands

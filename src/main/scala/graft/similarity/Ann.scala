@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
+import graft.log.LogFs
 
 /** Approximate-nearest-neighbor search over embedding columns — the
   * parameterized library surface behind the `q_ann_*` queries.
@@ -312,7 +313,7 @@ object Ann {
   /** Codebook-staleness fence for a stored IVF-PQ index — the retrain
     * twin of the [[ivfImbalance]] cell-skew fence: [[ivfPqStaleness]]
     * above this means the FROZEN codebook ([[ivfPqBuild]] trains once;
-    * [[ivfPqAppend]] never retrains) no longer represents incoming
+    * [[ivfAppend]] never retrains) no longer represents incoming
     * batches, so ADC scores stop discriminating and route recall decays
     * silently (measured: a planted 4σ per-dim shift reads ≫ this fence
     * while same-distribution batches read ≈ 1; see the
@@ -490,16 +491,13 @@ object Ann {
       path: String,
       iters: Int = 2): Unit = {
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val codesPath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val twoTier = codesPath.getFileSystem(conf).exists(codesPath)
-    val cbOld = if (twoTier) Some(ivfPqCodebook(spark, path)) else None
+    val cbOld = storedCodebook(spark, path)
     val k = spark.read.parquet(s"$path/centroids").count().toInt
     // cut: pin — the corpus is read OFF the tiers about to be overwritten
     val corpus = graft.operators.Materialize.cut(
       spark.read.parquet(s"$path/lists").select("neighbor_id", "c_v", "c_nrm"))
     // deterministic global k-means: k lowest-id rows seed (the
-    // pqCodebook / maintainCore init convention), `iters` Lloyd rounds
+    // pqCodebook / ivfMaintain init convention), `iters` Lloyd rounds
     // of argmax-cosine assignment + per-cell mean (each round: ONE
     // corpus projection + ONE k-row aggregate — control plane only)
     var cents: Seq[(Long, Seq[Double], Double)] = corpus
@@ -816,51 +814,6 @@ object Ann {
       .write.mode("overwrite").parquet(s"$path/stats")
   }
 
-  /** Incrementally add `batch` (corpus-shaped) to a stored IVF-PQ
-    * index: assign against the STORED quantizer and encode against the
-    * STORED codebook — appended vectors land in exactly the cells, and
-    * carry exactly the codes, a fresh build would give them (the
-    * [[ivfAppend]] contract extended to the codes tier). */
-  def ivfPqAppend(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      path: String): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val cb = ivfPqCodebook(spark, path)
-    val assigned =
-      nearestCells(batch, broadcast(cents), "neighbor_id", "c_v", "c_nrm", 1)
-    assigned.write.mode("append").partitionBy("cent_id").parquet(s"$path/lists")
-    pqEncode(assigned, cb, carry = Seq("cent_id"))
-      .write.mode("append").partitionBy("cent_id").parquet(s"$path/codes")
-  }
-
-  /** Stage `batch` (corpus-shaped, pre-normed) for a stored IVF-PQ
-    * index WITHOUT touching the live tiers: assignment + encoding
-    * against the STORED quantizer/codebook (exactly [[ivfPqAppend]]'s
-    * semantics) written to `$staging/lists` and `$staging/codes`
-    * (cent_id-partitioned, mode overwrite — a retried staging is a
-    * clean rewrite). The exactly-once ingest sink then PUBLISHES the
-    * staged files into the live tiers by per-file rename under
-    * deterministic batch-prefixed names — see
-    * [[graft.streaming.StreamLog.ivfPqIngest]] for the commit
-    * protocol. The assignment is materialized once so both tier
-    * writes read the same cut. */
-  def ivfPqStage(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      path: String,
-      staging: String): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val cb = ivfPqCodebook(spark, path)
-    // cut: actions — the lists and codes writes read it
-    val assigned = graft.operators.Materialize.cut(
-      nearestCells(batch, broadcast(cents), "neighbor_id", "c_v", "c_nrm", 1))
-    assigned
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$staging/lists")
-    pqEncode(assigned, cb, carry = Seq("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$staging/codes")
-  }
-
   /** The ACTION behind the [[IvfPqRetrainFence]]: retrain the codebook
     * on the index's CURRENT corpus (the stored raw `lists/`, drifted
     * appends included) and re-encode ONLY the `codes/` tier against it
@@ -1050,27 +1003,114 @@ object Ann {
   /** Incrementally add `batch` (corpus-shaped: `neighbor_id, c_v,
     * c_nrm`) to a stored index: assign against the STORED quantizer (no
     * retraining — appended vectors land in exactly the cells a fresh
-    * build would choose) and append to the partitioned lists. */
+    * build would choose) and, on the two-tier layout ([[ivfPqBuild]]),
+    * encode against the STORED codebook, so the batch carries exactly
+    * the codes a fresh build would give it. The batch enters the live
+    * tiers through [[publishStaged]], so concurrent appends to one index
+    * never share a write. */
   def ivfAppend(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame,
-      path: String): Unit = {
+      path: String): Unit =
+    publishStaged(spark, path)(ivfStage(spark, batch, path, _))
+
+  /** Stage `batch` (corpus-shaped, pre-normed) for the stored index at
+    * `path` WITHOUT touching its live tiers: [[ivfAppend]]'s assignment
+    * (and encoding, on the two-tier layout) written under `staging`.
+    * [[ivfAppend]] publishes it under a call-unique prefix; the
+    * exactly-once ingest sink [[graft.streaming.StreamLog.ivfPqIngest]]
+    * under its batch prefix. */
+  private[graft] def ivfStage(
+      spark: org.apache.spark.sql.SparkSession,
+      batch: DataFrame,
+      path: String,
+      staging: String): Unit = {
     val cents = spark.read.parquet(s"$path/centroids")
-    nearestCells(batch, broadcast(cents), "neighbor_id", "c_v", "c_nrm", 1)
-      .write.mode("append").partitionBy("cent_id").parquet(s"$path/lists")
+    stageCells(
+      nearestCells(batch, broadcast(cents), "neighbor_id", "c_v", "c_nrm", 1),
+      storedCodebook(spark, path),
+      staging)
+  }
+
+  /** The codebook of a two-tier index (`$path/codes` exists), else
+    * None: how append, maintenance and delete pick the tiers they
+    * write. */
+  private def storedCodebook(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[PqCodebook] =
+    if (LogFs.exists(LogFs.fs(spark, path), s"$path/codes")) Some(ivfPqCodebook(spark, path))
+    else None
+
+  /** Write assigned rows `(neighbor_id, c_v, c_nrm, cent_id)` under
+    * `staging` in the index layout: `lists/`, plus their codes under
+    * `cbOpt` in `codes/`, both partitioned by `cent_id`. A retried
+    * staging is a clean rewrite. */
+  private def stageCells(
+      cells: DataFrame,
+      cbOpt: Option[PqCodebook],
+      staging: String): Unit = {
+    val rows =
+      // cut: actions — the lists and codes writes read it
+      if (cbOpt.isDefined) graft.operators.Materialize.cut(cells) else cells
+    rows.write.mode("overwrite").partitionBy("cent_id").parquet(s"$staging/lists")
+    cbOpt.foreach { cb =>
+      pqEncode(rows, cb, carry = Seq("cent_id"))
+        .write.mode("overwrite").partitionBy("cent_id").parquet(s"$staging/codes")
+    }
+  }
+
+  /** The one way rows enter a live index tier: `stage` writes into a
+    * call-unique dir under `$path/_staging/`, whose files
+    * [[LogFs.publish]] then renames into the tiers under that dir's
+    * `<token>-` prefix. A hard crash before the publish leaves an inert
+    * staging dir; one during it leaves whole files of the batch. */
+  private def publishStaged(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String)(stage: String => Unit): Unit = {
+    val fs = LogFs.fs(spark, path)
+    val token = java.util.UUID.randomUUID().toString
+    val staging = s"$path/_staging/$token"
+    try {
+      stage(staging)
+      LogFs.publish(fs, staging, path, s"$token-")
+    } finally LogFs.deleteRecursive(fs, staging)
+  }
+
+  /** The swap behind [[ivfMaintain]] and [[ivfDelete]]: `rows` (the
+    * rewritten cells' members, keyed by their NEW `cent_id`s) enter
+    * every tier through [[publishStaged]], the stored quantizer
+    * (`centroids`) drops the `old` ids and gains `added`, and only then
+    * are the `old` partitions deleted from every tier. New data is on
+    * disk before old data goes; a crash in the window leaves
+    * quantizer-absent orphans that [[ivfRecover]] deletes. */
+  private def rehomeCells(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      centroids: DataFrame,
+      old: Seq[Long],
+      rows: DataFrame,
+      added: DataFrame): Unit = {
+    val cbOpt = storedCodebook(spark, path)
+    publishStaged(spark, path)(stageCells(rows, cbOpt, _))
+    val merged = centroids
+      .where(!col("cent_id").isin(old: _*))
+      .unionByName(added)
+      .collect()
+      .toIndexedSeq // k rows — control plane
+    spark
+      .createDataFrame(spark.sparkContext.parallelize(merged, 1), centroids.schema)
+      .write.mode("overwrite").parquet(s"$path/centroids")
+    val fs = LogFs.fs(spark, path)
+    for (tier <- "lists" +: cbOpt.map(_ => "codes").toSeq; id <- old)
+      LogFs.deleteRecursive(fs, s"$path/$tier/cent_id=$id")
   }
 
   /** [[ivfAppend]] with the maintenance fence wired in: after the
-    * batch lands, read [[ivfImbalance]] off the stored lists and run
-    * [[ivfMaintain]] rounds while the fence stays tripped (with the
-    * default AUTO split arity one round normally suffices; the
-    * `maxRounds` cap bounds uneven k-means splits and the degenerate
-    * all-duplicates cell that cannot split at all). This is the
-    * self-balancing ingest loop a serving deployment actually runs —
-    * append-only ingest under drift/skew otherwise grows hot cells
-    * unbounded. Returns true iff any maintenance ran. The imbalance
-    * readout is one k-row control-plane aggregate per round —
-    * negligible next to the append itself. */
+    * batch lands, [[ivfRebalance]] splits hot cells while the fence
+    * stays tripped. This is the self-balancing ingest loop a serving
+    * deployment actually runs — append-only ingest under drift/skew
+    * otherwise grows hot cells unbounded. Returns true iff any
+    * maintenance ran. */
   def ivfAppendMaintained(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame,
@@ -1078,12 +1118,27 @@ object Ann {
       fence: Double = 2.0,
       splitInto: Int = 0,
       iters: Int = 2,
-      dim: Int = 64,
       maxRounds: Int = 4): Boolean = {
     ivfAppend(spark, batch, path)
+    ivfRebalance(spark, path, fence, splitInto, iters, maxRounds)
+  }
+
+  /** Run [[ivfMaintain]] rounds while [[ivfImbalance]] reads above
+    * `fence` (with the default AUTO split arity one round normally
+    * suffices; the `maxRounds` cap bounds uneven k-means splits and the
+    * degenerate all-duplicates cell that cannot split at all). The
+    * imbalance readout is one k-row control-plane aggregate per round.
+    * Returns true iff any maintenance ran. */
+  private[graft] def ivfRebalance(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      fence: Double,
+      splitInto: Int,
+      iters: Int,
+      maxRounds: Int): Boolean = {
     var rounds = 0
     while (rounds < maxRounds && ivfImbalance(spark, path) > fence &&
-      ivfMaintain(spark, path, fence, splitInto, iters, dim)) rounds += 1
+      ivfMaintain(spark, path, fence, splitInto, iters)) rounds += 1
     rounds > 0
   }
 
@@ -1117,7 +1172,7 @@ object Ann {
     * partitions whose `cent_id` is absent from the stored quantizer —
     * in `lists/` and, when the index is the two-tier IVF-PQ layout
     * ([[ivfPqBuild]]), in `codes/` too. A crash between the sub-cell
-    * append and the hot-partition delete leaves exactly such orphans —
+    * publish and the hot-partition delete leaves exactly such orphans —
     * either the new sub-cells (crash BEFORE the quantizer swap: the hot
     * partition still holds every member, so the orphans are a
     * discardable partial split) or the already-re-homed hot partitions
@@ -1203,7 +1258,7 @@ object Ann {
     *     quantizer and the lists, so a centroid row with zero members
     *     (argmax assignment can leave a quantizer cell empty) can never
     *     collide with a new sub-cell id;
-    *   - crash safety: the swap orders sub-cell append → quantizer
+    *   - crash safety: the swap orders sub-cell publish → quantizer
     *     overwrite → hot-partition delete. A crash inside that window
     *     leaves orphan partitions (absent from the quantizer — probes
     *     never read them); the [[ivfRecover]] pass at the start of the
@@ -1214,88 +1269,28 @@ object Ann {
     *     a crash mid-overwrite.
     *
     * Wire this to the [[ivfImbalance]] readout after append batches:
-    * `if (ivfImbalance(s, p) > fence) ivfMaintain(s, p, fence)`.
+    * `if (ivfImbalance(s, p) > fence) ivfMaintain(s, p, fence)`, or let
+    * [[ivfAppendMaintained]] do it.
     *
-    * Two-tier ([[ivfPqBuild]]) indexes are AUTO-DETECTED: when
-    * `$path/codes` exists this delegates to [[ivfPqMaintain]], so a
-    * caller holding an IVF-PQ index can never strand its codes tier by
-    * reaching for the plain-IVF entry point. */
+    * Two-tier ([[ivfPqBuild]]) indexes are detected from the layout:
+    * the split cells' `codes/` partitions are re-homed in the same
+    * pass. Because the codes are raw-vector against the FROZEN global
+    * codebook (cell-independent by design — see [[ivfPqTopKWith]]), a
+    * split never changes a single code value: the re-home re-derives
+    * each moved row's codes from its raw vector with [[pqEncode]]
+    * (byte-identical values, spec-asserted), one extra projection over
+    * the rows the lists split already holds — no extra shuffle, no
+    * extra scan. Cold cells stay bit-identical in BOTH tiers, and
+    * [[ivfRecover]] covers both tiers.
+    *
+    * The sub-centroid length is the members' vector length, read off
+    * the seed vectors. */
   def ivfMaintain(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       fence: Double = 2.0,
       splitInto: Int = 0,
-      iters: Int = 2,
-      dim: Int = 64): Boolean = {
-    val conf = spark.sessionState.newHadoopConf()
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes")
-    if (codes.getFileSystem(conf).exists(codes))
-      ivfPqMaintain(spark, path, fence, splitInto, iters, dim)
-    else maintainCore(spark, path, fence, splitInto, iters, dim, None)
-  }
-
-  /** [[ivfMaintain]] for the two-tier IVF-PQ layout ([[ivfPqBuild]]):
-    * hot cells split exactly as the plain-IVF maintenance does (the
-    * quantizer and the raw `lists/` tier are shared machinery), and the
-    * split cells' `codes/` partitions are re-homed in the same pass.
-    * Because the codes are raw-vector against the FROZEN global
-    * codebook (cell-independent by design — see [[ivfPqTopKWith]]), a
-    * split never changes a single code value: the re-home re-derives
-    * each moved row's codes from its raw vector with [[pqEncode]]
-    * (byte-identical values, spec-asserted), which is cheaper than
-    * joining the old code rows against the new assignment — the raw
-    * rows are already in hand from the lists split, so the codes write
-    * is one extra pure projection over data already read, no extra
-    * shuffle, no extra scan. Cold cells stay bit-identical in BOTH
-    * tiers; crash recovery ([[ivfRecover]]) covers both tiers; the
-    * delete order is lists-then-codes AFTER the quantizer swap, so the
-    * route-then-scan invariant holds throughout the window on both
-    * tiers. Returns true iff maintenance ran. */
-  def ivfPqMaintain(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      fence: Double = 2.0,
-      splitInto: Int = 0,
-      iters: Int = 2,
-      dim: Int = 64): Boolean =
-    maintainCore(
-      spark, path, fence, splitInto, iters, dim,
-      Some(ivfPqCodebook(spark, path)))
-
-  /** [[ivfPqAppend]] with the maintenance fence wired in — the
-    * [[ivfAppendMaintained]] contract on the two-tier index: after the
-    * batch lands in both tiers, run [[ivfPqMaintain]] rounds while
-    * [[ivfImbalance]] stays tripped. This is the self-balancing ingest
-    * loop the production serving index runs — skewed
-    * [[ivfPqAppend]]-only traffic otherwise grows hot cells unbounded
-    * (exactly the gap the plain-IVF loop closed). Returns true iff any
-    * maintenance ran. */
-  def ivfPqAppendMaintained(
-      spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame,
-      path: String,
-      fence: Double = 2.0,
-      splitInto: Int = 0,
-      iters: Int = 2,
-      dim: Int = 64,
-      maxRounds: Int = 4): Boolean = {
-    ivfPqAppend(spark, batch, path)
-    var rounds = 0
-    while (rounds < maxRounds && ivfImbalance(spark, path) > fence &&
-      ivfPqMaintain(spark, path, fence, splitInto, iters, dim)) rounds += 1
-    rounds > 0
-  }
-
-  /** The shared hot-cell split ([[ivfMaintain]]'s contract); `cbOpt`
-    * adds the codes-tier re-home for two-tier indexes. */
-  private def maintainCore(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      fence: Double,
-      splitInto: Int,
-      iters: Int,
-      dim: Int,
-      cbOpt: Option[PqCodebook]): Boolean = {
+      iters: Int = 2): Boolean = {
     import spark.implicits._
     require(
       fence > 1.0 && (splitInto == 0 || splitInto >= 2),
@@ -1378,6 +1373,7 @@ object Ann {
       }
       .sortBy(t => (t._1, t._2))
       .toIndexedSeq
+    val dim = subs.head._3.size
 
     for (_ <- 0 until iters) { // ONE job per Lloyd round, all hot cells
       val dims = (1 to dim).map(j => avg(element_at(col("c_v"), j)).as(s"m$j"))
@@ -1395,47 +1391,12 @@ object Ann {
     }
 
     // final assignment rides the SAME centroids that get stored, so
-    // member ↔ quantizer consistency holds by construction — ONE job.
-    // Two-tier indexes materialize it once (hot-cell sized) so the
-    // codes write re-reads the cut, not the hot partitions.
-    val finalAssign0 =
-      assign(centsDf(subs)).select("neighbor_id", "c_v", "c_nrm", "cent_id")
-    val finalAssign =
-      // cut: actions — the lists and codes writes read it
-      if (cbOpt.isDefined) graft.operators.Materialize.cut(finalAssign0)
-      else finalAssign0
-    finalAssign
-      .write.mode("append").partitionBy("cent_id").parquet(s"$path/lists")
-
-    // two-tier re-home: the moved rows' codes are a pure projection of
-    // the raw vectors under the FROZEN codebook — identical values to
-    // the pre-split rows, new cent_id partitioning (see ivfPqMaintain)
-    cbOpt.foreach { cb =>
-      pqEncode(finalAssign, cb, carry = Seq("cent_id"))
-        .write.mode("append").partitionBy("cent_id").parquet(s"$path/codes")
-    }
-
-    // quantizer swap: drop the hot centroids, add the sub-centroids
-    val kept = centroids.where(!col("cent_id").isin(hot: _*))
-    val added = subs.map { case (_, id, v, nrm) => (id, v, nrm) }
-      .toDF("cent_id", "cent_v", "cent_nrm")
-    val merged = kept.unionByName(added).collect().toIndexedSeq // k rows — control plane
-    spark
-      .createDataFrame(
-        spark.sparkContext.parallelize(merged, 1),
-        centroids.schema)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-
-    // old hot partitions go LAST — their members are already re-homed
-    // (both tiers for the IVF-PQ layout; a crash between the two loops
-    // leaves quantizer-absent orphans that ivfRecover deletes)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val tiers = "lists" +: cbOpt.map(_ => "codes").toSeq
-    for (tier <- tiers; hotId <- hot) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$tier/cent_id=$hotId"), true)
-      ()
-    }
+    // member ↔ quantizer consistency holds by construction — ONE job;
+    // the quantizer swaps the hot centroids for the sub-centroids
+    rehomeCells(
+      spark, path, centroids, hot,
+      assign(centsDf(subs)).select("neighbor_id", "c_v", "c_nrm", "cent_id"),
+      subs.map { case (_, id, v, nrm) => (id, v, nrm) }.toDF("cent_id", "cent_v", "cent_nrm"))
     true
   }
 
@@ -1454,11 +1415,10 @@ object Ann {
     * the fresh ones (identical geometry, so future routing is
     * unchanged), and only then are the old partitions dropped. Cells
     * holding no deleted vector are never read and stay BIT-IDENTICAL.
-    * Two-tier ([[ivfPqBuild]]) layouts are AUTO-DETECTED: survivors'
-    * codes re-derive from their raw vectors under the FROZEN codebook
-    * ([[ivfPqMaintain]]'s re-home trick — byte-identical values), so
-    * both tiers stay consistent; [[ivfPqDelete]] is the explicit
-    * two-tier entry point.
+    * Two-tier ([[ivfPqBuild]]) layouts are detected from the layout:
+    * survivors' codes re-derive from their raw vectors under the FROZEN
+    * codebook ([[ivfMaintain]]'s re-home trick — byte-identical
+    * values), so both tiers stay consistent.
     *
     * Crash safety is the maintenance contract: new partitions are
     * quantizer-absent until the swap, old partitions quantizer-absent
@@ -1477,31 +1437,6 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       deletes: DataFrame): Seq[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes")
-    deleteCore(
-      spark, path, deletes,
-      if (codes.getFileSystem(conf).exists(codes))
-        Some(ivfPqCodebook(spark, path))
-      else None)
-  }
-
-  /** [[ivfDelete]] for the two-tier IVF-PQ layout — survivors rewrite
-    * in BOTH tiers ([[ivfDelete]] auto-detects the layout; this entry
-    * point just makes the two-tier intent explicit at call sites). */
-  def ivfPqDelete(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      deletes: DataFrame): Seq[Long] =
-    deleteCore(spark, path, deletes, Some(ivfPqCodebook(spark, path)))
-
-  /** The shared touched-cell rewrite behind [[ivfDelete]]/
-    * [[ivfPqDelete]] (`cbOpt` adds the codes-tier rewrite). */
-  private def deleteCore(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      deletes: DataFrame,
-      cbOpt: Option[PqCodebook]): Seq[Long] = {
     import spark.implicits._
     ivfRecover(spark, path) // idempotence: clear any prior crash's orphans
     val del = deletes.select(col("neighbor_id")).distinct()
@@ -1532,63 +1467,29 @@ object Ann {
     val maxListId = cellCounts(spark, path).map(_._1).foldLeft(0L)(math.max)
     val nextId = math.max(maxListId, knownIds.max) + 1L
     // deterministic re-key: touched cells in ascending id order take
-    // contiguous fresh ids (the maintainCore allocation rule)
+    // contiguous fresh ids (the ivfMaintain allocation rule)
     val rekey = touched.zipWithIndex.map { case (old, i) => (old, nextId + i) }
     val rekeyDf = broadcast(rekey.toDF("cent_id", "new_id"))
 
     // survivors: the touched partitions only (partition-pruned read),
-    // minus the delete set, re-keyed to the fresh cell ids. Two-tier
-    // layouts materialize the cut once so the codes write re-reads the
-    // survivor cut, not the hot partitions.
-    val survivors0 = lists
-      .where(col("cent_id").isin(touched: _*))
-      .join(del, Seq("neighbor_id"), "left_anti")
-      .join(rekeyDf, "cent_id")
-      .select(
-        col("neighbor_id"),
-        col("c_v"),
-        col("c_nrm"),
-        col("new_id").as("cent_id"))
-    val survivors =
-      // cut: actions — the lists and codes writes read it
-      if (cbOpt.isDefined) graft.operators.Materialize.cut(survivors0)
-      else survivors0
-    survivors
-      .write.mode("append").partitionBy("cent_id").parquet(s"$path/lists")
-    cbOpt.foreach { cb =>
-      pqEncode(survivors, cb, carry = Seq("cent_id"))
-        .write.mode("append").partitionBy("cent_id").parquet(s"$path/codes")
-    }
-
-    // quantizer swap: touched ids re-keyed, SAME centroid vectors —
-    // geometry unchanged, so routing and tie behavior are preserved
+    // minus the delete set, re-keyed to the fresh cell ids; the
+    // quantizer re-keys the touched ids with the SAME centroid vectors
+    // — geometry unchanged, so routing and tie behavior are preserved
     // for every future probe/append/maintain
-    val touchedSet = touched.toSet
-    val kept = centroids.where(!col("cent_id").isin(touched: _*))
-    val rekeyed = centroids
-      .where(col("cent_id").isin(touched: _*))
-      .join(rekeyDf.withColumnRenamed("new_id", "nid"), "cent_id")
-      .select(col("nid").as("cent_id"), col("cent_v"), col("cent_nrm"))
-    val merged = kept
-      .unionByName(rekeyed)
-      .collect()
-      .toIndexedSeq // k rows — control plane
-    spark
-      .createDataFrame(
-        spark.sparkContext.parallelize(merged, 1),
-        centroids.schema)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-
-    // old touched partitions go LAST (both tiers) — survivors are
-    // already re-homed; a crash in the window leaves quantizer-absent
-    // orphans that ivfRecover deletes
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val tiers = "lists" +: cbOpt.map(_ => "codes").toSeq
-    for (tier <- tiers; oldId <- touchedSet.toSeq.sorted) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$tier/cent_id=$oldId"), true)
-      ()
-    }
+    rehomeCells(
+      spark, path, centroids, touched,
+      lists
+        .where(col("cent_id").isin(touched: _*))
+        .join(del, Seq("neighbor_id"), "left_anti")
+        .join(rekeyDf, "cent_id")
+        .select(
+          col("neighbor_id"),
+          col("c_v"),
+          col("c_nrm"),
+          col("new_id").as("cent_id")),
+      centroids
+        .join(rekeyDf, "cent_id")
+        .select(col("new_id").as("cent_id"), col("cent_v"), col("cent_nrm")))
     touched
   }
 

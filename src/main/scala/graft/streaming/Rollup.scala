@@ -87,6 +87,11 @@ object Rollup {
 
   private val PartB = raw"part-(.+)-b(\d+)".r
 
+  /** A compacted generation's dir name. A sink's batch dir never matches
+    * (its name ends in `-b<digits>`), whichever letter its id starts
+    * with. */
+  private val PartC = raw"part-c(\d+)".r
+
   private def validateSinkId(sinkId: String): Unit =
     require(
       sinkId.nonEmpty && sinkId.forall(c => c.isLetterOrDigit || c == '_'),
@@ -188,8 +193,7 @@ object Rollup {
     val parts = all.filterNot(uncommitted)
     if (parts.size < 2) return
     val gen = 1L + parts
-      .filter(_.startsWith("part-c"))
-      .map(_.stripPrefix("part-c").toLong)
+      .collect { case PartC(g) => g.toLong }
       .foldLeft(-1L)(math.max)
     val target = s"part-c$gen"
     val staging = s"$dir/staging/$target"

@@ -1329,23 +1329,25 @@ object StreamLog {
   }
 
   /** Live vector-ingest sink for a persisted IVF-PQ index
-    * ([[graft.similarity.Ann.ivfPqBuild]]'s layout): every micro-batch
-    * of `(neighbor_id, c_v)` vectors lands through the STORED
-    * quantizer + codebook and runs the hot-cell maintenance fence in
-    * the same call — the self-balancing serving-index loop as a
-    * Structured Streaming sink (the recommender shape: embeddings
+    * ([[graft.similarity.Ann.ivfPqBuild]]'s layout; a plain
+    * [[graft.similarity.Ann.ivfBuild]] index works too): every
+    * micro-batch of `(neighbor_id, c_v)` vectors lands through the
+    * STORED quantizer (+ codebook) and runs the hot-cell maintenance
+    * fence in the same call — the self-balancing serving-index loop as
+    * a Structured Streaming sink (the recommender shape: embeddings
     * stream in, probes never retrain, skew never accumulates).
     *
-    * Exactly-once: both index tiers go through the staged publish of
-    * [[graft.log.LogFs.exactlyOnce]] (staging under `_ingest_staging/`
-    * by [[graft.similarity.Ann.ivfPqStage]], markers in
+    * Exactly-once: the index tiers go through the staged publish of
+    * [[graft.log.LogFs.exactlyOnce]] (staged under `_ingest_staging/`
+    * by [[graft.similarity.Ann.ivfAppend]]'s stager, markers in
     * `_ingest_commits/`), so each vector lands in each tier exactly
-    * once through any crash window. Maintenance runs AFTER the commit
-    * point (a crash between marker and maintenance just defers the
-    * rebalance to the next batch's fence check;
-    * [[graft.similarity.Ann.ivfRecover]] keeps the index consistent
-    * through any maintenance crash). `sinkId` namespaces markers and
-    * staging — the (sinkId, checkpoint) reuse contract is
+    * once through any crash window. Maintenance
+    * ([[graft.similarity.Ann.ivfAppendMaintained]]'s rebalance loop)
+    * runs AFTER the commit point (a crash between marker and
+    * maintenance just defers the rebalance to the next batch's fence
+    * check; [[graft.similarity.Ann.ivfRecover]] keeps the index
+    * consistent through any maintenance crash). `sinkId` namespaces
+    * markers and staging — the (sinkId, checkpoint) reuse contract is
     * [[appendSink]]'s.
     *
     * Codebook drift is the operator's axis: sample batches through
@@ -1360,7 +1362,6 @@ object StreamLog {
       fence: Double = 2.0,
       splitInto: Int = 0,
       iters: Int = 2,
-      dim: Int = 64,
       maxRounds: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
     LogFs.requireId("sinkId", sinkId)
     import graft.similarity.Ann
@@ -1374,14 +1375,11 @@ object StreamLog {
           LogFs.exactlyOnce(
             fs, path, s"$path/_ingest_commits", s"$path/_ingest_staging",
             sinkId, batchId) { staging =>
-            Ann.ivfPqStage(session, Ann.withNorm(batch, "c_v", "c_nrm"), path, staging)
+            Ann.ivfStage(session, Ann.withNorm(batch, "c_v", "c_nrm"), path, staging)
           }
         // maintenance after the commit point — the self-balancing loop
-        var rounds = 0
-        while (committed && rounds < maxRounds &&
-          Ann.ivfImbalance(session, path) > fence &&
-          Ann.ivfPqMaintain(session, path, fence, splitInto, iters, dim))
-          rounds += 1
+        if (committed) Ann.ivfRebalance(session, path, fence, splitInto, iters, maxRounds)
+        ()
       }
       .start()
   }

@@ -301,11 +301,11 @@ class DedupAnnApiSpec extends SparkSpec {
     val coldBefore = probe(coldQuery, nProbe = 1)
     val cell3Before = fileState(3L)
 
-    assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2, dim = 4))
+    assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2))
 
     // balance restored under the fence; a second pass is a no-op
     assert(Ann.ivfImbalance(spark, path) < 2.0)
-    assert(!Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2, dim = 4))
+    assert(!Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2))
     // the member set is preserved exactly (no loss, no dup) and the hot
     // cell's partition is gone
     val ids = spark.read.parquet(s"$path/lists").select("neighbor_id")
@@ -336,9 +336,9 @@ class DedupAnnApiSpec extends SparkSpec {
     // without maintenance; a skewed surge trips the fence and
     // self-balances in the same call
     val calm = corpusDf(Seq(301L -> vec(0, 1, 0.05, 0), 302L -> vec(0, 0, 0.05, 1)))
-    assert(!Ann.ivfAppendMaintained(spark, calm, path, fence = 2.0, iters = 2, dim = 4))
+    assert(!Ann.ivfAppendMaintained(spark, calm, path, fence = 2.0, iters = 2))
     val surge = corpusDf((401L to 460L).map(i => dirA(i, 0.0001 * (i - 401))))
-    assert(Ann.ivfAppendMaintained(spark, surge, path, fence = 2.0, iters = 2, dim = 4),
+    assert(Ann.ivfAppendMaintained(spark, surge, path, fence = 2.0, iters = 2),
       "a skewed surge must trip the fence and rebalance in the same call")
     assert(Ann.ivfImbalance(spark, path) < 2.0)
     // nothing lost across the wired loop either
@@ -906,7 +906,7 @@ class DedupAnnApiSpec extends SparkSpec {
         rows(Ann.ivfPqTopKWith(qs, base, cents, cb, k = 5, nProbe = 2, shortlist = 20)))
     // append assigns + encodes through the STORED quantizer/codebook:
     // the probe now matches the inline route over the UNION corpus
-    Ann.ivfPqAppend(spark, rest, dir)
+    Ann.ivfAppend(spark, rest, dir)
     assert(
       rows(Ann.ivfPqProbe(spark, dir, qs, k = 5, nProbe = 2, shortlist = 20)) ==
         rows(Ann.ivfPqTopKWith(qs, full, cents, cb, k = 5, nProbe = 2, shortlist = 20)))
@@ -1063,9 +1063,9 @@ class DedupAnnApiSpec extends SparkSpec {
     assert(Ann.ivfImbalance(spark, path3) > 2.0)
 
     val jobs1 = countJobs(
-      assert(Ann.ivfMaintain(spark, path1, fence = 2.0, splitInto = 2, iters = 2, dim = 8)))
+      assert(Ann.ivfMaintain(spark, path1, fence = 2.0, splitInto = 2, iters = 2)))
     val jobs3 = countJobs(
-      assert(Ann.ivfMaintain(spark, path3, fence = 2.0, splitInto = 2, iters = 2, dim = 8)))
+      assert(Ann.ivfMaintain(spark, path3, fence = 2.0, splitInto = 2, iters = 2)))
     // the batched maintenance schedules O(1) jobs in the hot-cell count
     assert(jobs3 == jobs1, s"3 hot cells took $jobs3 jobs vs $jobs1 for 1")
 
@@ -1112,7 +1112,7 @@ class DedupAnnApiSpec extends SparkSpec {
       (base ++ hotA ++ hotB).toDF("neighbor_id", "c_v"), "c_v", "c_nrm")
     val path = tempDir("graft_ivf_empty").toString
     Ann.ivfBuild(corpus, cents, path)
-    assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2, dim = 4))
+    assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2))
     val quant = spark.read.parquet(s"$path/centroids")
       .select(col("cent_id").cast("long")).collect().map(_.getLong(0)).toSeq.sorted
     assert(quant.size == quant.toSet.size, s"duplicate cent_id in quantizer: $quant")
@@ -1162,7 +1162,7 @@ class DedupAnnApiSpec extends SparkSpec {
     spark.read.parquet(s"$path/lists").where(col("cent_id") === 2)
       .select("neighbor_id", "c_v", "c_nrm")
       .write.parquet(s"$path/lists/cent_id=88")
-    assert(!Ann.ivfMaintain(spark, path, fence = 10.0, splitInto = 2, iters = 1, dim = 4))
+    assert(!Ann.ivfMaintain(spark, path, fence = 10.0, splitInto = 2, iters = 1))
     assert(!new java.io.File(s"$path/lists/cent_id=88").exists)
     assert(probe() == before)
   }
@@ -1189,7 +1189,7 @@ class DedupAnnApiSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Double])](spark)
     val q = graft.streaming.StreamLog.ivfPqIngest(
       mem.toDS().toDF("neighbor_id", "c_v"),
-      path, ckpt, fence = 2.0, splitInto = 2, iters = 2, dim = 4)
+      path, ckpt, fence = 2.0, splitInto = 2, iters = 2)
     try {
       // calm batch: two vectors in different cells — appended, no split
       mem.addData(Seq(301L -> vec(0, 1, 0.05, 0), 302L -> vec(0, 0, 0.05, 1)): _*)
@@ -1264,7 +1264,7 @@ class DedupAnnApiSpec extends SparkSpec {
     // the fence's ACTION closes the loop: append the drifted batch,
     // retrain on the index's current corpus (codes tier only), and the
     // same batch reads fresh against the new book
-    Ann.ivfPqAppend(spark, shifted, dir)
+    Ann.ivfAppend(spark, shifted, dir)
     val pre = Ann.ivfPqStaleness(spark, dir, shifted)
     assert(pre > Ann.IvfPqRetrainFence)
     val newCb = Ann.ivfPqRetrain(spark, dir, iters = 2)
@@ -1315,7 +1315,7 @@ class DedupAnnApiSpec extends SparkSpec {
     val cb = Ann.pqTrain(corpusDf(base), m = 2, ks = 2, dim = 4, iters = 1)
     val path = tempDir("graft_ivfpq_maint").toString
     Ann.ivfPqBuild(corpusDf(base), cents, cb, path)
-    Ann.ivfPqAppend(spark, corpusDf(skew), path)
+    Ann.ivfAppend(spark, corpusDf(skew), path)
     assert(Ann.ivfImbalance(spark, path) > 2.0) // cell 1: 24 of 36
 
     def codeRows() = spark.read.parquet(s"$path/codes")
@@ -1346,9 +1346,9 @@ class DedupAnnApiSpec extends SparkSpec {
 
     // the plain entry point AUTO-DETECTS the codes tier and delegates —
     // reaching for ivfMaintain on an IVF-PQ index can no longer strand codes
-    assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2, dim = 4))
+    assert(Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2))
     assert(Ann.ivfImbalance(spark, path) < 2.0)
-    assert(!Ann.ivfPqMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2, dim = 4))
+    assert(!Ann.ivfMaintain(spark, path, fence = 2.0, splitInto = 2, iters = 2))
 
     // hot partitions gone in BOTH tiers; cold cells bit-identical in BOTH
     assert(!new java.io.File(s"$path/lists/cent_id=1").exists)
@@ -1383,9 +1383,9 @@ class DedupAnnApiSpec extends SparkSpec {
     // the wired ingest loop: a balanced batch appends without
     // maintenance; a skewed surge trips the fence and self-balances
     val calm = corpusDf(Seq(301L -> vec(0, 1, 0.05, 0), 302L -> vec(0, 0, 0.05, 1)))
-    assert(!Ann.ivfPqAppendMaintained(spark, calm, path, fence = 2.0, iters = 2, dim = 4))
+    assert(!Ann.ivfAppendMaintained(spark, calm, path, fence = 2.0, iters = 2))
     val surge = corpusDf((401L to 460L).map(i => dirA(i, 0.0001 * (i - 401))))
-    assert(Ann.ivfPqAppendMaintained(spark, surge, path, fence = 2.0, iters = 2, dim = 4),
+    assert(Ann.ivfAppendMaintained(spark, surge, path, fence = 2.0, iters = 2),
       "a skewed surge must trip the fence and rebalance in the same call")
     assert(Ann.ivfImbalance(spark, path) < 2.0)
     val allIds = (base.map(_._1) ++ skew.map(_._1) ++ Seq(301L, 302L) ++ (401L to 460L)).sorted
@@ -1448,7 +1448,7 @@ class DedupAnnApiSpec extends SparkSpec {
     // delete two of cell 1's members, one of cell 2's; 999 matches
     // nothing (ignored); cells 3 and 4 are cold
     val del = Seq(10L, 11L, 20L, 999L).toDF("neighbor_id")
-    assert(Ann.ivfPqDelete(spark, path, del) == Seq(1L, 2L))
+    assert(Ann.ivfDelete(spark, path, del) == Seq(1L, 2L))
 
     // touched partitions dropped in BOTH tiers; survivors re-keyed under
     // fresh ids carrying the SAME centroid vectors (routing unchanged)
@@ -1484,7 +1484,7 @@ class DedupAnnApiSpec extends SparkSpec {
     assert(probe(vec(1, 0.3, 0.2, 0.1), nProbe = 4) == brute)
 
     // retry with the same delete set: nothing matches → no-op
-    assert(Ann.ivfPqDelete(spark, path, del).isEmpty)
+    assert(Ann.ivfDelete(spark, path, del).isEmpty)
     assert(listIds() == expect)
 
     // crash idempotence: a planted quantizer-absent orphan (the crash
@@ -1493,18 +1493,17 @@ class DedupAnnApiSpec extends SparkSpec {
     spark.read.parquet(s"$path/lists").where(col("cent_id") === 3)
       .select("neighbor_id", "c_v", "c_nrm")
       .write.parquet(s"$path/lists/cent_id=88")
-    assert(Ann.ivfPqDelete(spark, path, Seq(30L).toDF("neighbor_id")) == Seq(3L))
+    assert(Ann.ivfDelete(spark, path, Seq(30L).toDF("neighbor_id")) == Seq(3L))
     assert(!new java.io.File(s"$path/lists/cent_id=88").exists)
     assert(listIds() == expect - 30L)
 
     // deleting an ENTIRE cell leaves an empty (partition-less) cell:
     // probes routed there return nothing, everything else unaffected
-    assert(Ann.ivfPqDelete(
+    assert(Ann.ivfDelete(
       spark, path, Seq(40L, 41L, 42L, 43L).toDF("neighbor_id")).nonEmpty)
     assert(probe(vec(0, 0, 0, 1), nProbe = 1).isEmpty)
     assert(listIds() == expect - 30L -- Set(40L, 41L, 42L, 43L))
-    // auto-detect twin: ivfDelete on a two-tier index behaves as
-    // ivfPqDelete (both tiers stay consistent)
+    // one more delete on the two-tier index: both tiers stay consistent
     assert(Ann.ivfDelete(spark, path, Seq(31L).toDF("neighbor_id")).nonEmpty)
     assert(codeRows().keySet == listIds())
   }
@@ -1522,7 +1521,7 @@ class DedupAnnApiSpec extends SparkSpec {
     // fresh build reads exactly 1 (baseline == current)
     assert(Ann.ivfQuantizerStaleness(spark, dir) == 1.0)
     // same-distribution append stays under the rebuild fence
-    Ann.ivfPqAppend(spark, same, dir)
+    Ann.ivfAppend(spark, same, dir)
     val sSame = Ann.ivfQuantizerStaleness(spark, dir)
     assert(sSame < Ann.IvfRebuildFence, s"same-distribution staleness $sSame")
     // the planted drift trips it: a +0.25/dim HALF of the
@@ -1533,7 +1532,7 @@ class DedupAnnApiSpec extends SparkSpec {
       (col("neighbor_id") + 100000L).as("neighbor_id"),
       org.apache.spark.sql.functions.transform(col("c_v"), x => x + lit(0.25d)).as("c_v"))
       .withColumn("c_nrm", VectorFns.norm(col("c_v")))
-    Ann.ivfPqAppend(spark, drifted, dir)
+    Ann.ivfAppend(spark, drifted, dir)
     val sDrift = Ann.ivfQuantizerStaleness(spark, dir)
     assert(
       sDrift > Ann.IvfRebuildFence,
@@ -1582,5 +1581,96 @@ class DedupAnnApiSpec extends SparkSpec {
     // the rebuilt index still serves the whole corpus (nothing lost)
     val n = spark.read.parquet(s"$dir/lists").count()
     assert(n == corpus.count() + same.count() + drifted.count())
+  }
+
+  // ---- one write path into a stored index --------------------------------
+
+  /** The ivfMaintain fixture: four unit-axis 4-dim centroids, 16 base
+    * vectors (4 per cell) and a 20-vector skew into cell 1. */
+  private object FourCells {
+    import spark.implicits._
+    def vec(xs: Double*): Seq[Double] = xs.toSeq
+    def corpusDf(rows: Seq[(Long, Seq[Double])]) = Ann.withNorm(
+      rows.toDF("neighbor_id", "c_v"), "c_v", "c_nrm")
+    def cents = Seq(
+      (1L, vec(1, 0, 0, 0)), (2L, vec(0, 1, 0, 0)),
+      (3L, vec(0, 0, 1, 0)), (4L, vec(0, 0, 0, 1)))
+      .toDF("cent_id", "cent_v")
+      .withColumn("cent_nrm", VectorFns.norm(col("cent_v")))
+    val dirA = (id: Long, eps: Double) => id -> vec(1, 0.3 + eps, 0, 0)
+    val dirB = (id: Long, eps: Double) => id -> vec(1, 0, 0.3 + eps, 0)
+    val base = Seq(
+      dirA(1L, 0.0), dirB(2L, 0.0), dirA(3L, 0.01), dirB(4L, 0.01),
+      5L -> vec(0, 1, 0.01, 0), 6L -> vec(0, 1, 0.02, 0),
+      7L -> vec(0, 1, 0.03, 0), 8L -> vec(0, 1, 0.04, 0),
+      9L -> vec(0, 0.01, 1, 0), 10L -> vec(0, 0.02, 1, 0),
+      11L -> vec(0, 0.03, 1, 0), 12L -> vec(0, 0.04, 1, 0),
+      13L -> vec(0, 0, 0.01, 1), 14L -> vec(0, 0, 0.02, 1),
+      15L -> vec(0, 0, 0.03, 1), 16L -> vec(0, 0, 0.04, 1))
+    val skew =
+      (101L to 110L).map(i => dirA(i, 0.001 * (i - 101))) ++
+        (111L to 120L).map(i => dirB(i, 0.001 * (i - 111)))
+    def pqIndex(prefix: String): String = {
+      val path = tempDir(prefix).toString
+      val cb = Ann.pqTrain(corpusDf(base), m = 2, ks = 2, dim = 4, iters = 1)
+      Ann.ivfPqBuild(corpusDf(base), cents, cb, path)
+      path
+    }
+    def ids(path: String, tier: String): Seq[Long] =
+      spark.read.parquet(s"$path/$tier").select("neighbor_id")
+        .collect().map(_.getLong(0)).toSeq.sorted
+  }
+
+  test("ivfAppend on an IVF-PQ index lands the batch in codes/ and ivfPqProbe finds it") {
+    import spark.implicits._
+    import FourCells._
+    val path = pqIndex("graft_ivfpq_append")
+    val added = Seq(501L -> vec(0.2, 0, 0.1, 1), 502L -> vec(0, 1, 0.3, 0.2))
+    Ann.ivfAppend(spark, corpusDf(added), path)
+    val all = (base ++ added).map(_._1).sorted
+    assert(ids(path, "lists") == all)
+    assert(ids(path, "codes") == all)
+    val qs = Ann.withNorm(
+      added.map { case (id, v) => id -> v }.toDF("query_id", "q_v"), "q_v", "q_nrm")
+    val top1 = Ann.ivfPqProbe(spark, path, qs, k = 1, nProbe = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(top1 == Map(501L -> 501L, 502L -> 502L))
+  }
+
+  test("ivfMaintain and ivfAppendMaintained with default arguments rebalance the 4-dim fixture") {
+    import FourCells._
+    val path = tempDir("graft_ivf_defaults").toString
+    Ann.ivfBuild(corpusDf(base), cents, path)
+    Ann.ivfAppend(spark, corpusDf(skew), path)
+    assert(Ann.ivfImbalance(spark, path) > 2.0)
+    assert(Ann.ivfMaintain(spark, path))
+    assert(Ann.ivfImbalance(spark, path) <= 2.0)
+    assert(!Ann.ivfMaintain(spark, path))
+    // sub-centroids keep the members' length: no truncation, no padding
+    val lens = spark.read.parquet(s"$path/centroids").select(size(col("cent_v")))
+      .collect().map(_.getInt(0)).toSet
+    assert(lens == Set(4))
+    val surge = corpusDf((401L to 460L).map(i => dirA(i, 0.0001 * (i - 401))))
+    assert(Ann.ivfAppendMaintained(spark, surge, path))
+    assert(Ann.ivfImbalance(spark, path) <= 2.0)
+    assert(ids(path, "lists") ==
+      (base.map(_._1) ++ skew.map(_._1) ++ (401L to 460L)).sorted)
+  }
+
+  test("two concurrent ivfAppend calls on one index land every vector exactly once") {
+    import FourCells._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val path = pqIndex("graft_ivfpq_concurrent")
+    val left = (1001L to 1040L).map(i => i -> vec(1, 0.01 * (i % 7), 0.02 * (i % 5), 0))
+    val right = (2001L to 2040L).map(i => i -> vec(0, 0.03 * (i % 3), 1, 0.01 * (i % 11)))
+    val runs = Seq(left, right).map(b => Future(Ann.ivfAppend(spark, corpusDf(b), path)))
+    runs.foreach(Await.result(_, 5.minutes))
+    val all = (base ++ left ++ right).map(_._1).sorted
+    assert(ids(path, "lists") == all)
+    assert(ids(path, "codes") == all)
+    assert(!new java.io.File(s"$path/_staging").exists ||
+      new java.io.File(s"$path/_staging").list().isEmpty)
   }
 }

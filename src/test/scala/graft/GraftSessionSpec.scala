@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 /** [[GraftSession]] is the one session policy: no other `src/main` code
   * builds a session, the spec harness's session carries every setting
   * the factory owns, no library code keeps state across queries or
-  * changes the session's checkpoint dir, and every lineage cut names
-  * the rule it is kept under. */
+  * changes the session's checkpoint dir, every lineage cut names the
+  * rule it is kept under, and no write appends to a live directory. */
 class GraftSessionSpec extends SparkSpec {
 
   private def isComment(l: String): Boolean = {
@@ -61,6 +61,16 @@ class GraftSessionSpec extends SparkSpec {
       if !lines.slice(i - 2, i + 1).exists(tag.findFirstIn(_).isDefined)
     } yield s"$f:${i + 1}"
     assert(untagged.isEmpty, s"cut sites without a `// cut: <rule> — <why>` tag: ${untagged.mkString(", ")}")
+  }
+
+  test("src/main writes no parquet in append mode: every live-directory write is a staged publish") {
+    val append = "(?i)mode\\s*\\(\\s*\"append\"\\s*\\)|SaveMode\\s*\\.\\s*Append\\b".r
+    val sites = for {
+      (f, lines) <- mainLines
+      (l, i) <- lines.zipWithIndex
+      if !isComment(l) && append.findFirstIn(l).isDefined
+    } yield s"$f:${i + 1}"
+    assert(sites.isEmpty, s"append-mode writes (stage and LogFs.publish instead): ${sites.mkString(", ")}")
   }
 
   test("the spec session carries every factory setting, with 4 shuffle partitions") {

@@ -93,6 +93,17 @@ class RollupSpec extends SparkSpec {
     assert(Rollup.view(spark, dir).orderBy("space").collect().toSeq == before)
   }
 
+  test("compact reads only part-c<digits> as a generation: a sink id starting with c compacts") {
+    val dir = tempDir("graft-rollup").toString
+    (0 until 3).foreach(i =>
+      Rollup.writeBatch(entryDf(("s0", 10L * i + 1), ("s1", Day + i)), i.toLong, dir, "cdc"))
+    val before = Rollup.view(spark, dir).orderBy("space").collect().toSeq
+    Rollup.compact(spark, dir)
+    assert(Rollup.view(spark, dir).orderBy("space").collect().toSeq == before)
+    val parts = new java.io.File(s"$dir/parts").list().filter(_.startsWith("part-")).sorted.toSeq
+    assert(parts == Seq("part-c0", "part-cdc-b2"))
+  }
+
   test("compact never consumes a sink's newest batch: a checkpoint-lagged replay stays a no-op") {
     val dir = tempDir("graft-rollup").toString
     (0 until 3).foreach(i => Rollup.writeBatch(entryDf(("s0", i.toLong)), i.toLong, dir))

@@ -352,7 +352,7 @@ class StreamRestartSpec extends SparkSpec {
 
     val mem = MemoryStream[(Long, Seq[Double])](spark)
     val q1 = StreamLog.ivfPqIngest(
-      mem.toDS().toDF("neighbor_id", "c_v"), path, ckpt, dim = 4)
+      mem.toDS().toDF("neighbor_id", "c_v"), path, ckpt)
     val batch0 = Seq(301L -> vec(0, 1, 0.05, 0), 302L -> vec(0, 0, 0.05, 1))
     try {
       mem.addData(batch0: _*)
@@ -369,7 +369,7 @@ class StreamRestartSpec extends SparkSpec {
     // sweep removes the half-published files, the republish lands each
     // vector EXACTLY once in each tier
     val q2 = StreamLog.ivfPqIngest(
-      mem.toDS().toDF("neighbor_id", "c_v"), path, ckpt, dim = 4)
+      mem.toDS().toDF("neighbor_id", "c_v"), path, ckpt)
     try q2.processAllAvailable()
     finally q2.stop()
     val lc = counts("lists")
@@ -387,7 +387,7 @@ class StreamRestartSpec extends SparkSpec {
     val ckpt2 = tempDir("graft_ingest_eo_ck2").toString
     val q3 = StreamLog.ivfPqIngest(
       mem2.toDS().toDF("neighbor_id", "c_v"), path, ckpt2,
-      sinkId = "ivfpq1", dim = 4)
+      sinkId = "ivfpq1")
     try {
       mem2.addData(Seq(401L -> vec(1, 0.05, 0, 0)): _*)
       q3.processAllAvailable()
@@ -404,7 +404,7 @@ class StreamRestartSpec extends SparkSpec {
     val ckpt3 = tempDir("graft_ingest_eo_ck3").toString
     val q4 = StreamLog.ivfPqIngest(
       mem3.toDS().toDF("neighbor_id", "c_v"), path, ckpt3,
-      sinkId = "ivfpq2", dim = 4)
+      sinkId = "ivfpq2")
     try {
       mem3.addData(Seq(402L -> vec(1, 0.06, 0, 0)): _*)
       q4.processAllAvailable()
