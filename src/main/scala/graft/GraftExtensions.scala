@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -14,95 +14,60 @@ import graft.functions.expressions.{BpeTokens, DeflateLen, DotProduct, HilbertDi
   * }}}
   *
   * or programmatically
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`, or
+  * [[GraftExtensions.register]] on a session built without it.
   *
-  * Every function is also self-registered lazily by the operators that
-  * use it (see e.g. [[graft.functions.expressions.DotProduct.register]]),
-  * so the extension is a convenience for SQL users, not a hard
-  * dependency.
+  * The extension serves SQL users only. Library code calls the kernels
+  * as Columns (e.g. [[graft.functions.expressions.Tokens.of]]), so no
+  * operator needs a function in the session's registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(
-      classOf[GraftExtensions].getName,
-      null,
-      name,
-      usage,
-      "",
-      "",
-      "",
-      "",
-      "",
-      "",
-      "built-in")
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((name, info, build) <- GraftExtensions.functions)
+      ext.injectFunction((FunctionIdentifier(name), info, build))
+}
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_dot"),
-        info(
-          "graft_dot",
-          "graft_dot(a, b) - dot product of two array<double> columns"),
-        (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_tokens"),
-        info(
-          "graft_tokens",
-          "graft_tokens(text) - whitespace tokens, empties dropped"),
-        (exprs: Seq[Expression]) => Tokens(exprs(0))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_shingles"),
-        info(
-          "graft_shingles",
-          "graft_shingles(text, k[, distinct]) - word k-shingles"),
-        (exprs: Seq[Expression]) =>
-          WordShingles(
-            exprs(0),
-            exprs(1).eval(null).asInstanceOf[Number].intValue(),
-            if (exprs.size > 2) exprs(2).eval(null).asInstanceOf[Boolean]
-            else true)))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_bpe"),
-        info(
-          "graft_bpe",
-          "graft_bpe(text) - greedy BPE tokens over the built-in merge table"),
-        (exprs: Seq[Expression]) => BpeTokens(exprs(0))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_deflate_len"),
-        info(
-          "graft_deflate_len",
-          "graft_deflate_len(text) - DEFLATE-compressed byte length"),
-        (exprs: Seq[Expression]) => DeflateLen(exprs(0))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_normalize"),
-        info(
-          "graft_normalize",
-          "graft_normalize(text) - NFC composition + control/whitespace-run collapse"),
-        (exprs: Seq[Expression]) => NormalizeText(exprs(0))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_hilbert"),
-        info(
-          "graft_hilbert",
-          "graft_hilbert(x, y, bits) - Hilbert-curve distance of a 2-D point"),
-        (exprs: Seq[Expression]) =>
-          HilbertDistance(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_topk"),
-        info(
-          "graft_topk",
-          "graft_topk(item, k) - Misra-Gries heavy-hitter summary (aggregate)"),
-        (exprs: Seq[Expression]) =>
-          TopKSketch(
-            exprs(0),
-            exprs(1).eval(null).asInstanceOf[Number].intValue())
-            .toAggregateExpression()))
+object GraftExtensions {
+
+  private def literalInt(e: Expression): Int =
+    e.eval(null).asInstanceOf[Number].intValue()
+
+  private def fn(name: String, usage: String)(build: Seq[Expression] => Expression) = {
+    val info = new ExpressionInfo(
+      classOf[GraftExtensions].getName, null, name, usage, "", "", "", "", "", "", "built-in")
+    (name, info, build)
+  }
+
+  /** (name, usage, builder) of every `graft_*` SQL function. */
+  private val functions = Seq(
+    fn("graft_dot", "graft_dot(a, b) - dot product of two array<double> columns")(
+      e => DotProduct(e(0), e(1))),
+    fn("graft_tokens", "graft_tokens(text) - whitespace tokens, empties dropped")(
+      e => Tokens(e(0))),
+    fn("graft_shingles", "graft_shingles(text, k[, distinct]) - word k-shingles")(
+      e =>
+        WordShingles(
+          e(0),
+          literalInt(e(1)),
+          if (e.size > 2) e(2).eval(null).asInstanceOf[Boolean] else true)),
+    fn("graft_bpe", "graft_bpe(text) - greedy BPE tokens over the built-in merge table")(
+      e => BpeTokens(e(0))),
+    fn("graft_deflate_len", "graft_deflate_len(text) - DEFLATE-compressed byte length")(
+      e => DeflateLen(e(0))),
+    fn("graft_normalize",
+      "graft_normalize(text) - NFC composition + control/whitespace-run collapse")(
+      e => NormalizeText(e(0))),
+    fn("graft_hilbert", "graft_hilbert(x, y, bits) - Hilbert-curve distance of a 2-D point")(
+      e => HilbertDistance(e(0), e(1), e(2))),
+    fn("graft_topk", "graft_topk(item, k) - Misra-Gries heavy-hitter summary (aggregate)")(
+      e => TopKSketch(e(0), literalInt(e(1))).toAggregateExpression()))
+
+  /** Register every `graft_*` function in `spark`'s function registry;
+    * names already there are left alone, so calling it again is free. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    for ((name, info, build) <- functions if !registry.functionExists(FunctionIdentifier(name)))
+      registry.registerFunction(FunctionIdentifier(name), info, build)
   }
 }

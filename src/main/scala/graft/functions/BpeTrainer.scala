@@ -63,10 +63,7 @@ object BpeTrainer {
     // one corpus scan: NFC-normalize (parity contract, see class doc),
     // tokenize, word-frequency table, then each word spelled as
     // bracketed hex symbols. Materialized — every round reuses it.
-    import org.apache.spark.sql.graft.ColumnBridge
-    val normed = ColumnBridge.column(
-      graft.functions.expressions.NormalizeText(
-        ColumnBridge.expression(col(text))))
+    val normed = graft.functions.expressions.NormalizeText.of(col(text))
     val words0 = docs
       .select(explode(TextFns.tokens(normed)).as("w"))
       .groupBy("w")

@@ -1,10 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -56,6 +57,10 @@ case class BpeTokens(child: Expression) extends UnaryExpression {
 }
 
 object BpeTokens {
+
+  /** `graft_bpe(text)` as a Column. */
+  def of(text: Column): Column =
+    ColumnBridge.column(BpeTokens(ColumnBridge.expression(text)))
 
   /** Merge list in rank order (rank = index; lower merges first). A
     * small frequency-plausible English table — a stand-in for a trained
@@ -144,16 +149,5 @@ object BpeTokens {
       i += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  /** Register `graft_bpe(text) -> array<string>` once per session. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val name = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bpe")
-    if (!registry.functionExists(name))
-      registry.createOrReplaceTempFunction(
-        "graft_bpe",
-        exprs => BpeTokens(exprs(0)),
-        "built-in")
   }
 }

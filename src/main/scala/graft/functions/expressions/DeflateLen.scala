@@ -1,9 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -50,6 +51,10 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
 
 object DeflateLen {
 
+  /** `graft_deflate_len(text)` as a Column. */
+  def of(text: Column): Column =
+    ColumnBridge.column(DeflateLen(ColumnBridge.expression(text)))
+
   def compute(text: UTF8String): Long = {
     val in = text.getBytes
     val d = new java.util.zip.Deflater(6, true)
@@ -61,17 +66,5 @@ object DeflateLen {
       while (!d.finished()) total += d.deflate(buf)
       total
     } finally d.end()
-  }
-
-  /** Register `graft_deflate_len(text) -> bigint` once per session. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val name =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_deflate_len")
-    if (!registry.functionExists(name))
-      registry.createOrReplaceTempFunction(
-        "graft_deflate_len",
-        exprs => DeflateLen(exprs(0)),
-        "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,17 +89,4 @@ object DotProduct {
     if (a != b)
       throw new IllegalArgumentException(
         s"graft_dot: vector length mismatch ($a vs $b)")
-
-  /** Register `graft_dot(array<double>, array<double>) -> double` in the
-    * session's function registry so queries can call it via `expr`.
-    * Once per session — re-registering logs a "replaced" warning per
-    * query. */
-  def register(spark: SparkSession): Unit = {
-    val name = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
-    if (spark.sessionState.functionRegistry.functionExists(name)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)),
-      "built-in")
-  }
 }

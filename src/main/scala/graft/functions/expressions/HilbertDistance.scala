@@ -1,6 +1,5 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,16 +95,5 @@ object HilbertDistance {
       s >>= 1
     }
     d
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val name =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_hilbert")
-    if (!registry.functionExists(name))
-      registry.createOrReplaceTempFunction(
-        "graft_hilbert",
-        exprs => HilbertDistance(exprs(0), exprs(1), exprs(2)),
-        "built-in")
   }
 }

@@ -1,9 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -59,6 +60,10 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
 
 object NormalizeText {
 
+  /** `graft_normalize(text)` as a Column. */
+  def of(text: Column): Column =
+    ColumnBridge.column(NormalizeText(ColumnBridge.expression(text)))
+
   private def isCollapsible(c: Char): Boolean = c <= ' ' || c == '\u007f'
 
   def compute(text: UTF8String): UTF8String = {
@@ -90,17 +95,5 @@ object NormalizeText {
       i += 1
     }
     UTF8String.fromString(out.toString)
-  }
-
-  /** Register `graft_normalize(text) -> string` once per session. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val name =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_normalize")
-    if (!registry.functionExists(name))
-      registry.createOrReplaceTempFunction(
-        "graft_normalize",
-        exprs => NormalizeText(exprs(0)),
-        "built-in")
   }
 }

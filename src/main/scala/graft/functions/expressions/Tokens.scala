@@ -1,10 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -45,6 +46,10 @@ case class Tokens(child: Expression) extends UnaryExpression {
 
 object Tokens {
 
+  /** `graft_tokens(text)` as a Column. */
+  def of(text: Column): Column =
+    ColumnBridge.column(Tokens(ColumnBridge.expression(text)))
+
   def compute(text: UTF8String): ArrayData = {
     val toks = text.toString.split(" ")
     var n = 0
@@ -58,20 +63,5 @@ object Tokens {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Register `graft_tokens(text) -> array<string>`. */
-  /** Register `graft_tokens` once per session — re-registering an
-    * existing name makes the SimpleFunctionRegistry log a "replaced"
-    * warning on every query that calls register, so check first. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val name =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_tokens")
-    if (!registry.functionExists(name))
-      registry.createOrReplaceTempFunction(
-        "graft_tokens",
-        exprs => Tokens(exprs(0)),
-        "built-in")
   }
 }

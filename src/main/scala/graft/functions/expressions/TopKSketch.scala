@@ -4,12 +4,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -170,20 +172,7 @@ case class TopKSketch(
 
 object TopKSketch {
 
-  /** Register `graft_topk(item, k)` (k a literal); register-once to
-    * avoid SimpleFunctionRegistry "replaced" warnings per query. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val name =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topk")
-    if (!registry.functionExists(name))
-      registry.createOrReplaceTempFunction(
-        "graft_topk",
-        exprs =>
-          TopKSketch(
-            exprs(0),
-            exprs(1).eval(null).asInstanceOf[Number].intValue())
-            .toAggregateExpression(),
-        "built-in")
-  }
+  /** `graft_topk(item, k)` as an aggregate Column. */
+  def of(item: Column, k: Int): Column =
+    ColumnBridge.column(TopKSketch(ColumnBridge.expression(item), k).toAggregateExpression())
 }

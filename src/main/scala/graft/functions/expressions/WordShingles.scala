@@ -2,7 +2,6 @@ package graft.functions.expressions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,23 +88,5 @@ object WordShingles {
     var p = 0
     seen.foreach { s => out(p) = UTF8String.fromString(s); p += 1 }
     new GenericArrayData(out)
-  }
-
-  /** Register `graft_shingles(text, k[, distinct]) -> array<string>`
-    * (k and distinct literals; distinct defaults true). Once per
-    * session — re-registering logs a "replaced" warning per query. */
-  def register(spark: SparkSession): Unit = {
-    val name =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingles")
-    if (spark.sessionState.functionRegistry.functionExists(name)) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs =>
-        WordShingles(
-          exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue(),
-          if (exprs.size > 2) exprs(2).eval(null).asInstanceOf[Boolean]
-          else true),
-      "built-in")
   }
 }

@@ -143,7 +143,6 @@ object TrainingPipeline {
     * loop's jobs and the keep-canonical plan both read it, and without
     * the cut the whole upstream subplan re-executes per job. */
   def prepare(docs: DataFrame, p: Params = Params()): DataFrame = {
-    Tokens.register(docs.sparkSession)
 
     // 1. benchmark decontamination
     val decon = docs
@@ -178,7 +177,7 @@ object TrainingPipeline {
     // the already-materialized base during the single output pass, so
     // clarity wins over a manual barrier here.)
     val quality = ndKept
-      .withColumn("tk", expr("graft_tokens(text)"))
+      .withColumn("tk", Tokens.of(col("text")))
       .filter(
         size(col("tk")) >= p.minTokens && size(col("tk")) <= p.maxTokens &&
           round(TextFns.punctRatio(col("text")), 6) < p.maxPunctRatio &&

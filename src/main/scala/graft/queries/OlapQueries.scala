@@ -1490,6 +1490,54 @@ object OlapQueries {
 
   private val DayUs = 86400000000L
 
+  /** Per-(event_type, bucket) event counts `n` of `events`, the bucket
+    * column named `bucket` holding `ts_us DIV bucketUs`. */
+  private def eventCounts(events: DataFrame, bucketUs: Long, bucket: String): DataFrame =
+    events
+      .groupBy(col("event_type"), expr(s"ts_us DIV $bucketUs").as(bucket))
+      .agg(count(lit(1)).as("n"))
+
+  /** Each event type's dense bucket grid over [[eventCounts]]: every
+    * bucket from the type's first to its last active one, built from a
+    * per-type `sequence()`, never a cross join. `keep` adds per-type
+    * columns of the `(event_type, lo, hi)` bounds row. */
+  private def typeGrid(counts: DataFrame, bucket: String, keep: Column*): DataFrame =
+    counts
+      .groupBy("event_type")
+      .agg(min(bucket).as("lo"), max(bucket).as("hi"))
+      .select(
+        (col("event_type") +: keep :+ explode(sequence(col("lo"), col("hi"))).as(bucket)): _*)
+
+  /** The dense per-type event series `(event_type, bucket, n, x)`: the
+    * [[typeGrid]] joined back to its counts, a missing bucket counting
+    * `x = 0` (a statistic over only-active buckets would be biased). */
+  private def denseEventSeries(s: SparkSession, d: String, bucketUs: Long, bucket: String): DataFrame = {
+    val counts = eventCounts(Tables.events(s, d), bucketUs, bucket)
+    typeGrid(counts, bucket)
+      .join(counts, Seq("event_type", bucket), "left")
+      .withColumn("x", coalesce(col("n"), lit(0L)))
+  }
+
+  /** The paired daily series `(dy, <x> = views, <y> = purchases)` on one
+    * shared dense day grid, from the first to the last day either type
+    * is active; a missing day counts 0. */
+  private def viewPurchaseDays(s: SparkSession, d: String, x: String, y: String): DataFrame = {
+    val counts = eventCounts(
+      Tables.events(s, d).filter(col("event_type").isin("view", "purchase")), DayUs, "dy")
+    val grid = counts
+      .agg(min("dy").as("lo"), max("dy").as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"))).as("dy"))
+    def daily(eventType: String, n: String) =
+      counts.filter(col("event_type") === eventType).select(col("dy"), col("n").as(n))
+    grid
+      .join(daily("view", "xn"), Seq("dy"), "left")
+      .join(daily("purchase", "yn"), Seq("dy"), "left")
+      .select(
+        col("dy"),
+        coalesce(col("xn"), lit(0L)).as(x),
+        coalesce(col("yn"), lit(0L)).as(y))
+  }
+
   /** Daily-activity streaks per user — the classic gaps-and-islands
     * rewrite: distinct active days, then `day - row_number()` collapses
     * each run of consecutive days to one constant group key, so streak
@@ -1580,16 +1628,7 @@ object OlapQueries {
     * association in Spark and the oracle so the IEEE results agree
     * bit-for-bit before the display round. */
   def qAutocorr(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $HourUs").as("hr"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("hr").as("lo"), max("hr").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("hr"))
-      .join(counts, Seq("event_type", "hr"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, HourUs, "hr")
     val w = Window.partitionBy("event_type").orderBy("hr")
     // sufficient statistics go through decimal(38,0): the products stay
     // EXACT (then one double division/sqrt, same association as the
@@ -1633,16 +1672,7 @@ object OlapQueries {
     * day grid per type (zero days count); ties on |T| break to the
     * earliest day. Output keeps T and its n-scaled magnitude. */
   def qCusum(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("dy"))
-      .join(counts, Seq("event_type", "dy"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, DayUs, "dy")
     val w = Window.partitionBy("event_type").orderBy("dy")
     val scored = series
       .withColumn("i", row_number().over(w).cast("long"))
@@ -1687,16 +1717,7 @@ object OlapQueries {
     * exchange; every window runs over the calendar-sized series table
     * partitioned by type. */
   def qPettitt(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("dy"))
-      .join(counts, Seq("event_type", "dy"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, DayUs, "dy")
     val byType = Window.partitionBy("event_type")
     val byDay = byType.orderBy("dy")
     val scored = series
@@ -1741,16 +1762,7 @@ object OlapQueries {
     * float. Scale shape: corpus → per-(type, day) counts in one
     * exchange; all windows run over the calendar-sized series. */
   def qPageHinkley(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("dy"))
-      .join(counts, Seq("event_type", "dy"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, DayUs, "dy")
     val w = Window.partitionBy("event_type").orderBy("dy")
     val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val scored = series
@@ -1800,23 +1812,7 @@ object OlapQueries {
     * exchange; the 7-lag explode runs over the day grid, never the
     * corpus. */
   def qCcf(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .filter(col("event_type").isin("view", "purchase"))
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val grid = counts
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("dy"))
-    val x = counts.filter(col("event_type") === "view").select(col("dy"), col("n").as("xn"))
-    val y = counts.filter(col("event_type") === "purchase").select(col("dy"), col("n").as("yn"))
-    val series = grid
-      .join(x, Seq("dy"), "left")
-      .join(y, Seq("dy"), "left")
-      .select(
-        col("dy"),
-        coalesce(col("xn"), lit(0L)).as("x"),
-        coalesce(col("yn"), lit(0L)).as("y"))
+    val series = viewPurchaseDays(s, d, "x", "y")
     val lags = s.range(-3, 4).select(col("id").as("lag"))
     val pairs = series
       .select(col("dy"), col("x"))
@@ -1859,16 +1855,7 @@ object OlapQueries {
     * one extra exchange. Segments of length 1 have no interior cut and
     * emit nothing. */
   def qBinseg(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("dy"))
-      .join(counts, Seq("event_type", "dy"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, DayUs, "dy")
       .select("event_type", "dy", "x")
     def cuts(df: DataFrame, keys: Seq[String], label: Column): DataFrame = {
       val part = Window.partitionBy(keys.map(col): _*)
@@ -1930,23 +1917,7 @@ object OlapQueries {
     * folds of the per-value tie histograms, and τ_b is one scalar IEEE
     * tree. */
   def qKendallTau(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .filter(col("event_type").isin("view", "purchase"))
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val grid = counts
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("dy"))
-    val x = counts.filter(col("event_type") === "view").select(col("dy"), col("n").as("xn"))
-    val y = counts.filter(col("event_type") === "purchase").select(col("dy"), col("n").as("yn"))
-    val series = grid
-      .join(x, Seq("dy"), "left")
-      .join(y, Seq("dy"), "left")
-      .select(
-        col("dy"),
-        coalesce(col("xn"), lit(0L)).as("x"),
-        coalesce(col("yn"), lit(0L)).as("y"))
+    val series = viewPurchaseDays(s, d, "x", "y")
     val pairs = series
       .join(
         broadcast(
@@ -2001,16 +1972,7 @@ object OlapQueries {
     * (H, Σx, Σx² decimal), fano = H·(H·Σx² − (Σx)²)/((H−1)·H·Σx) as one
     * scalar IEEE tree per type. One corpus exchange. */
   def qFano(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $HourUs").as("hr"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("hr").as("lo"), max("hr").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("hr"))
-      .join(counts, Seq("event_type", "hr"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, HourUs, "hr")
     series
       .groupBy("event_type")
       .agg(
@@ -2045,16 +2007,7 @@ object OlapQueries {
     * float-σ comparison invites. Dense day grid (a zero day CAN flag —
     * an outage is exactly what SPC must catch). */
   def qSpcDays(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val series = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("dy"))
-      .join(counts, Seq("event_type", "dy"), "left")
-      .withColumn("x", coalesce(col("n"), lit(0L)))
+    val series = denseEventSeries(s, d, DayUs, "dy")
     val byType = Window.partitionBy("event_type")
     series
       .withColumn("n_days", count(lit(1)).over(byType))
@@ -2384,24 +2337,8 @@ object OlapQueries {
     * the exact sums; χ²(1) fence, large-n normal approximation of the
     * F(1, n−3) quantile documented. */
   def qGranger(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .filter(col("event_type").isin("view", "purchase"))
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val grid = counts
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("dy"))
-    val x = counts.filter(col("event_type") === "view").select(col("dy"), col("n").as("xn"))
-    val y = counts.filter(col("event_type") === "purchase").select(col("dy"), col("n").as("yn"))
     val w = Window.orderBy("dy") // single global series: calendar-sized
-    val rows = grid
-      .join(x, Seq("dy"), "left")
-      .join(y, Seq("dy"), "left")
-      .select(
-        col("dy"),
-        coalesce(col("xn"), lit(0L)).as("xv"),
-        coalesce(col("yn"), lit(0L)).as("yv"))
+    val rows = viewPurchaseDays(s, d, "xv", "yv")
       .withColumn("y1", lag("yv", 1).over(w))
       .withColumn("x1", lag("xv", 1).over(w))
       .filter(col("y1").isNotNull)
@@ -3021,15 +2958,8 @@ object OlapQueries {
     * day-grid counts on one (type, day) aggregate; the fold state is
     * one array per type, bounded by the calendar, not the data. */
   def qHolt(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val grid = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(expr("sequence(lo, hi)")).as("dy"))
-    val series = grid
+    val counts = eventCounts(Tables.events(s, d), DayUs, "dy")
+    val series = typeGrid(counts, "dy")
       .join(counts, Seq("event_type", "dy"), "left")
       .select(
         col("event_type"),
@@ -3088,15 +3018,8 @@ object OlapQueries {
     * collapses to one (type, day) aggregate; fold state is ONE double
     * per type. */
   def qThetaForecast(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val grid = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), col("lo"), explode(expr("sequence(lo, hi)")).as("dy"))
-    val series = grid
+    val counts = eventCounts(Tables.events(s, d), DayUs, "dy")
+    val series = typeGrid(counts, "dy", col("lo"))
       .join(counts, Seq("event_type", "dy"), "left")
       .select(
         col("event_type"),
@@ -3166,15 +3089,8 @@ object OlapQueries {
     * queue. Scale shape: the corpus collapses to day-grid counts on
     * one (type, day) aggregate; fold state is 9 doubles per type. */
   def qHoltWinters(s: SparkSession, d: String): DataFrame = {
-    val counts = Tables
-      .events(s, d)
-      .groupBy(col("event_type"), expr(s"ts_us DIV $DayUs").as("dy"))
-      .agg(count(lit(1)).as("n"))
-    val grid = counts
-      .groupBy("event_type")
-      .agg(min("dy").as("lo"), max("dy").as("hi"))
-      .select(col("event_type"), explode(expr("sequence(lo, hi)")).as("dy"))
-    val series = grid
+    val counts = eventCounts(Tables.events(s, d), DayUs, "dy")
+    val series = typeGrid(counts, "dy")
       .join(counts, Seq("event_type", "dy"), "left")
       .select(
         col("event_type"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.functions.{Hashing, TextFns, VectorFns}
-import graft.functions.expressions.Tokens
+import graft.functions.expressions.{BpeTokens, DeflateLen, NormalizeText, Tokens, TopKSketch}
 import graft.similarity.Ann
 import graft.sources.Tables
 
@@ -101,15 +101,21 @@ object PipelineQueries {
   val MinhashSeeds = 16
   val MinhashBands = 8 // 2 rows per band
 
+  /** The near-dup pair table `(a_id, b_id, jaccard)`: minhash LSH over
+    * `documents` at [[MinhashSeeds]]/[[MinhashBands]], verified at
+    * Jaccard ≥ 0.8. Every key that reads near-dup pairs builds them
+    * here, inside its own call, so a result is a function of the tables
+    * as they stand; a key whose several jobs read the table cuts it. */
+  private def dupPairs(s: SparkSession, d: String): DataFrame =
+    Dedup.minhashLsh(
+      Tables(s, d, "documents"),
+      k = 3,
+      numHashes = MinhashSeeds,
+      bands = MinhashBands,
+      threshold = 0.8)
+
   def qDedupMinhash(s: SparkSession, d: String): DataFrame =
-    Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
-      .transform(sortSmall(_, "a_id", "b_id"))
+    dupPairs(s, d).transform(sortSmall(_, "a_id", "b_id"))
 
   /** Near-duplication rate per source — the intake-dashboard line that
     * decides which feed gets a dedup pass first: of each source's docs,
@@ -118,13 +124,7 @@ object PipelineQueries {
     * all-pairs); the dup-id set is pair-sized, the join back to
     * sources is a semi join, and the report is |sources| rows. */
   def qDupRateBySource(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
+    val pairs = dupPairs(s, d)
     // one explode pass, not a two-select union: each union branch
     // would embed (and run) the whole pair pipeline
     val dupIds = pairs
@@ -190,11 +190,10 @@ object PipelineQueries {
        |  WHERE bit_count(xor(a.simhash, b.simhash)) <= $SimhashMaxHamming)""".stripMargin
 
   def qDedupSimhash(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     // signatures are a shuffle-free per-row fold over the token array —
     // the only exchange in the whole query is the band self-join's
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
     Dedup
       .simhashPairs(
         Dedup.simhashSignaturesFromTokens(toks, "doc_id", "tk", SimhashBits),
@@ -272,9 +271,8 @@ object PipelineQueries {
     * verify summed over the two words. The 60-bit key stays available
     * for oracle-pinned legacy consumers. */
   def qDedupSimhashWide(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
     Dedup
       .simhashPairsWide(
         Dedup.simhashSignaturesWide(toks, "doc_id", "tk"),
@@ -294,15 +292,7 @@ object PipelineQueries {
     * fixpoint → no SQL oracle (rows-only check); the spec asserts the
     * component semantics. */
   def qDedupClusters(s: SparkSession, d: String): DataFrame =
-    Dedup
-      .duplicateClusters(
-        Dedup.minhashLsh(
-          Tables(s, d, "documents"),
-          k = 3,
-          numHashes = MinhashSeeds,
-          bands = MinhashBands,
-          threshold = 0.8))
-      .transform(sortSmall(_, "id", "comp"))
+    Dedup.duplicateClusters(dupPairs(s, d)).transform(sortSmall(_, "id", "comp"))
 
   /** Duplicate clusters via large-star/small-star contraction
     * (Kiveris et al., SoCC'14) — the O(log² n)-round scale path of
@@ -311,15 +301,7 @@ object PipelineQueries {
     * components: versioned docs, quote-expansion chains). Same
     * `(id, comp = component min id)` contract, same oracle. */
   def qCcBigstar(s: SparkSession, d: String): DataFrame =
-    Dedup
-      .connectedComponentsBigStar(
-        Dedup.minhashLsh(
-          Tables(s, d, "documents"),
-          k = 3,
-          numHashes = MinhashSeeds,
-          bands = MinhashBands,
-          threshold = 0.8))
-      .transform(sortSmall(_, "id", "comp"))
+    Dedup.connectedComponentsBigStar(dupPairs(s, d)).transform(sortSmall(_, "id", "comp"))
 
   /** Duplicate-family size distribution: how many near-dup clusters of
     * each size the corpus carries (and how many docs they bind) — the
@@ -329,13 +311,7 @@ object PipelineQueries {
     * rollups are cluster-sized statistic tables. */
   def qClusterSizes(s: SparkSession, d: String): DataFrame =
     Dedup
-      .duplicateClusters(
-        Dedup.minhashLsh(
-          Tables(s, d, "documents"),
-          k = 3,
-          numHashes = MinhashSeeds,
-          bands = MinhashBands,
-          threshold = 0.8))
+      .duplicateClusters(dupPairs(s, d))
       .groupBy("comp")
       .agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("cluster_size"))
@@ -343,23 +319,6 @@ object PipelineQueries {
         count(lit(1)).as("n_clusters"),
         sum("sz").as("n_docs"))
       .transform(sortSmall(_, "cluster_size"))
-
-  /** The near-dup pair table shared by the composed dashboard keys
-    * ([[qDupGraphReport]], [[qDupSourceOverlap]], [[qDupJaccardHist]])
-    * and [[kcoreConverged]]: the production shape is pairs-once → many
-    * graph consumers, not one shingle→minhash→band rebuild per consumer.
-    * Each key builds it inside its own call, so a result is a function
-    * of the tables as they stand, and a key whose several jobs read it
-    * cuts it; the standalone per-operator queries keep their own builds
-    * so each CORRECTNESS row stays an independent end-to-end check. */
-  private def dupPairs(s: SparkSession, d: String): DataFrame =
-    Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
 
   /** Composed duplicate-graph dashboard: degrees, per-node triangle
     * counts, k-core survivors (in-core degree), and the cluster-size
@@ -1100,9 +1059,8 @@ object PipelineQueries {
     * expression; the marker counts are then materialized in their own
     * projection so the language CASE doesn't re-evaluate each filter. */
   def qLangId(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("doc_id"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("doc_id"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("doc_id"),
         col("text"),
@@ -1133,9 +1091,8 @@ object PipelineQueries {
     * feeds ship code-switched text" intake panel. One corpus scan, one
     * alphabet-sized aggregate, one source-partitioned window. */
   def qLangPurity(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val marked = Tables(s, d, "documents")
-      .select(col("source"), expr("graft_tokens(text)").as("t"))
+      .select(col("source"), Tokens.of(col("text")).as("t"))
       .select(
         col("source"),
         TextFns.markerCount(col("t"), TextFns.EnMarkers).as("en"),
@@ -1163,9 +1120,8 @@ object PipelineQueries {
   }
 
   def qTextQuality(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("doc_id"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("doc_id"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
@@ -1195,9 +1151,8 @@ object PipelineQueries {
     Seq("the", "be", "to", "of", "and", "that", "have", "with", "a", "in")
 
   def qGopherRules(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("t"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("t"))
       .select(
         col("doc_id"),
         size(col("t")).cast("long").as("n_words"),
@@ -1226,13 +1181,7 @@ object PipelineQueries {
     * One explode pass over the pair table (NOT two selects unioned,
     * which would embed the whole LSH subplan twice). */
   def qDupDegree(s: SparkSession, d: String): DataFrame =
-    Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
+    dupPairs(s, d)
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("degree"))
@@ -1741,9 +1690,8 @@ object PipelineQueries {
     * term µ-quantized to int64 BEFORE the sum (the q_power_law ln
     * convention), top 20 on the exact (common, aa, id) order. */
   def qGraphCommonNeighbors(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
     val pairs = Dedup
       .simhashPairs(
         Dedup.simhashSignaturesFromTokens(toks, "doc_id", "tk", SimhashBits),
@@ -1759,9 +1707,8 @@ object PipelineQueries {
     * fingerprint fixes the upstream geometry rather than the (already
     * sound) wedge + anti-join plan. */
   def qGraphCommonNeighborsWide(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
     val pairs = Dedup
       .simhashPairsWide(
         Dedup.simhashSignaturesWide(toks, "doc_id", "tk"),
@@ -1846,9 +1793,8 @@ object PipelineQueries {
     * contributions land in fixed slot columns so the total sums in
     * TERM order (never partition order): the score is bit-stable. */
   private def bm25Scores(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val pairs = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok"))
     bm25ScoresFrom(pairs)
   }
 
@@ -1975,9 +1921,8 @@ object PipelineQueries {
     * order, so both rankings are bit-stable and the fused score is
     * two IEEE divisions in fixed order. */
   def qRrfFusion(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val pairs = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok"))
       .transform(graft.operators.Materialize.cut) // cut: actions — the nDocs count and the fused plan read it
     val bm = bm25ScoresFrom(pairs)
     // TF-IDF ranker: tf·ln(N/df) per term, slot-summed like bm25
@@ -2087,9 +2032,8 @@ object PipelineQueries {
     * prefix-sum window runs over that statistic-sized table, never the
     * corpus. */
   def qScoreAuc(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val scored = Tables(s, d, "documents")
-      .select(col("lang"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("lang"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         (col("lang") === "en").cast("long").as("pos"),
         TextFns.qualityScore(
@@ -2127,9 +2071,8 @@ object PipelineQueries {
     * the global total is the
     * allow-listed one-row product. */
   def qSourceDivergence(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val st = Tables(s, d, "documents")
-      .select(col("source"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("source"), explode(Tokens.of(col("text"))).as("tok"))
       .groupBy("source", "tok")
       .agg(count(lit(1)).as("c"))
     val gt = st.groupBy("tok").agg(sum("c").as("gc"))
@@ -2184,14 +2127,7 @@ object PipelineQueries {
     * graph-analytics complement of [[qDupDegree]]'s raw degrees. */
   def qDupRank(s: SparkSession, d: String): DataFrame =
     Dedup
-      .pairRank(
-        Dedup.minhashLsh(
-          Tables(s, d, "documents"),
-          k = 3,
-          numHashes = MinhashSeeds,
-          bands = MinhashBands,
-          threshold = 0.8),
-        iters = PagerankIters)
+      .pairRank(dupPairs(s, d), iters = PagerankIters)
       .transform(
         graft.operators.SortUtil.sortSmall(_, col("pr").desc, col("doc_id")))
 
@@ -2225,28 +2161,18 @@ object PipelineQueries {
     val cand = Dedup
       .minhashCandidatesFromHashedPairs(
         ex, "doc_id", numHashes = MinhashSeeds, bands = MinhashBands)
-      .withColumn("in_cand", lit(true))
     val exact = Dedup
       .ngramJaccardFromHashed(ex, "doc_id", threshold = 0.8)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_exact", lit(true))
-    cand
-      .join(exact, Seq("a_id", "b_id"), "full_outer")
-      .select(
-        coalesce(col("in_cand"), lit(false)).as("in_cand"),
-        coalesce(col("in_exact"), lit(false)).as("in_exact"))
-      .agg(
-        sum(when(col("in_cand"), 1L).otherwise(0L)).as("n_cand"),
-        sum(when(col("in_exact"), 1L).otherwise(0L)).as("n_exact"),
-        sum(when(col("in_cand") && col("in_exact"), 1L).otherwise(0L)).as("tp"),
-        sum(when(col("in_cand") && !col("in_exact"), 1L).otherwise(0L)).as("fp"),
-        sum(when(col("in_exact") && !col("in_cand"), 1L).otherwise(0L)).as("fn"))
+    confusion(cand, exact)
+      .withColumn("fp", col("n_cand") - col("tp"))
+      .withColumn("fn", col("n_exact") - col("tp"))
       .withColumn(
         "cand_precision",
-        round(col("tp").cast("double") / col("n_cand"), 6))
+        when(col("n_cand") > 0L, round(col("tp").cast("double") / col("n_cand"), 6)))
       .withColumn(
         "cand_recall",
-        round(col("tp").cast("double") / col("n_exact"), 6))
+        when(col("n_exact") > 0L, round(col("tp").cast("double") / col("n_exact"), 6)))
   }
 
   /** Simhash candidate-quality evaluation (the [[qLshEval]] twin for
@@ -2295,10 +2221,9 @@ object PipelineQueries {
 
   /** [[qSimhashEval]] with an explicit fence budget (0 opts out). */
   def simhashEvalFenced(s: SparkSession, d: String, fenceDocs: Long): DataFrame = {
-    Tokens.register(s)
     fenceExactEval(Tables(s, d, "documents"), fenceDocs, "q_simhash_eval", "q_simhash_eval_sampled")
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
       .filter(size(col("tk")) > 0)
       // cut: actions — the exact arm's hashed-shingle job and the eval plan read it
       .transform(graft.operators.Materialize.cut)
@@ -2308,37 +2233,13 @@ object PipelineQueries {
         bits = SimhashBits,
         maxHamming = SimhashMaxHamming)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_cand", lit(true))
     val exact = Dedup
       .ngramJaccardFromShingled(
         Dedup.shingledFromTokens(toks, "doc_id", "tk", k = 3),
         "doc_id",
         threshold = 0.5)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_exact", lit(true))
-    cand
-      .join(exact, Seq("a_id", "b_id"), "full_outer")
-      .select(
-        coalesce(col("in_cand"), lit(false)).as("in_cand"),
-        coalesce(col("in_exact"), lit(false)).as("in_exact"))
-      .agg(
-        sum(when(col("in_cand"), 1L).otherwise(0L)).as("n_cand"),
-        sum(when(col("in_exact"), 1L).otherwise(0L)).as("n_exact"),
-        sum(when(col("in_cand") && col("in_exact"), 1L).otherwise(0L)).as("tp"))
-      .select(
-        col("n_cand"),
-        col("n_exact"),
-        col("tp"),
-        floor6(col("tp").cast("double") / col("n_cand").cast("double")).as("precision"),
-        floor6(col("tp").cast("double") / col("n_exact").cast("double")).as("recall"),
-        when(
-          col("tp") > 0L,
-          floor6(
-            lit(2.0d) * (col("tp").cast("double") / col("n_cand").cast("double")) *
-              (col("tp").cast("double") / col("n_exact").cast("double")) /
-              (col("tp").cast("double") / col("n_cand").cast("double") +
-                col("tp").cast("double") / col("n_exact").cast("double"))))
-          .otherwise(lit(0.0d)).as("f1"))
+    precisionRecallF1(confusion(cand, exact))
   }
 
   /** [[qSimhashEval]] for the 120-bit fingerprint — precision/recall/F1
@@ -2359,11 +2260,10 @@ object PipelineQueries {
       s: SparkSession,
       d: String,
       fenceDocs: Long): DataFrame = {
-    Tokens.register(s)
     fenceExactEval(
       Tables(s, d, "documents"), fenceDocs, "q_simhash_eval_wide", "q_simhash_eval_sampled")
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
       .filter(size(col("tk")) > 0)
       // cut: actions — the exact arm's hashed-shingle job and the eval plan read it
       .transform(graft.operators.Materialize.cut)
@@ -2372,37 +2272,13 @@ object PipelineQueries {
         Dedup.simhashSignaturesWide(toks, "doc_id", "tk"),
         maxHamming = SimhashMaxHamming)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_cand", lit(true))
     val exact = Dedup
       .ngramJaccardFromShingled(
         Dedup.shingledFromTokens(toks, "doc_id", "tk", k = 3),
         "doc_id",
         threshold = 0.5)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_exact", lit(true))
-    cand
-      .join(exact, Seq("a_id", "b_id"), "full_outer")
-      .select(
-        coalesce(col("in_cand"), lit(false)).as("in_cand"),
-        coalesce(col("in_exact"), lit(false)).as("in_exact"))
-      .agg(
-        sum(when(col("in_cand"), 1L).otherwise(0L)).as("n_cand"),
-        sum(when(col("in_exact"), 1L).otherwise(0L)).as("n_exact"),
-        sum(when(col("in_cand") && col("in_exact"), 1L).otherwise(0L)).as("tp"))
-      .select(
-        col("n_cand"),
-        col("n_exact"),
-        col("tp"),
-        floor6(col("tp").cast("double") / col("n_cand").cast("double")).as("precision"),
-        floor6(col("tp").cast("double") / col("n_exact").cast("double")).as("recall"),
-        when(
-          col("tp") > 0L,
-          floor6(
-            lit(2.0d) * (col("tp").cast("double") / col("n_cand").cast("double")) *
-              (col("tp").cast("double") / col("n_exact").cast("double")) /
-              (col("tp").cast("double") / col("n_cand").cast("double") +
-                col("tp").cast("double") / col("n_exact").cast("double"))))
-          .otherwise(lit(0.0d)).as("f1"))
+    precisionRecallF1(confusion(cand, exact))
   }
 
   /** Expected ground-truth-pair budget of the SAMPLED eval: the doc
@@ -2447,14 +2323,13 @@ object PipelineQueries {
     * where the exact arm exhausts scratch. Deterministic end to end →
     * full DuckDB oracle. */
   def qSimhashEvalSampled(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val all = Tables(s, d, "documents")
     // one metadata-cheap count; the cutoff is driver-baked as a literal
     // so the sample filter reaches the scan
     val cut = evalSampleCut(all.count())
     val toks = all
       .filter(graft.operators.Sampling.hashBucket(col("doc_id")) < cut)
-      .select(col("doc_id"), expr("graft_tokens(text)").as("tk"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("tk"))
       .filter(size(col("tk")) > 0)
       // cut: actions — the exact arm's hashed-shingle job and the eval plan read it
       .transform(graft.operators.Materialize.cut)
@@ -2463,29 +2338,22 @@ object PipelineQueries {
         Dedup.simhashSignaturesWide(toks, "doc_id", "tk"),
         maxHamming = SimhashMaxHamming)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_cand", lit(true))
     val exact = Dedup
       .ngramJaccardFromShingled(
         Dedup.shingledFromTokens(toks, "doc_id", "tk", k = 3),
         "doc_id",
         threshold = 0.5)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_exact", lit(true))
     confusionWithCi(cand, exact)
   }
 
-  /** The sampled-eval confusion fold: full-outer pair join → one-row
-    * counts → precision/recall + the 95% normal-approximation binomial
-    * CI on recall (`r ± 1.96·√(r(1−r)/n_exact)`, clamped to [0, 1]) —
-    * shared by both sampled ground-truth arms so their statistics are
-    * definitionally identical. */
-  private def confusionWithCi(cand: DataFrame, exact: DataFrame): DataFrame = {
-    val ne = col("n_exact").cast("double")
-    val p = col("tp").cast("double") / col("n_cand").cast("double")
-    val r = col("tp").cast("double") / ne
-    val half = lit(1.96d) * sqrt(r * (lit(1.0d) - r) / ne)
+  /** The eval family's confusion fold: the full-outer join of the
+    * candidate and ground-truth `(a_id, b_id)` pair sets, folded to one
+    * row of `n_cand`, `n_exact` and `tp`. */
+  private def confusion(cand: DataFrame, exact: DataFrame): DataFrame =
     cand
-      .join(exact, Seq("a_id", "b_id"), "full_outer")
+      .withColumn("in_cand", lit(true))
+      .join(exact.withColumn("in_exact", lit(true)), Seq("a_id", "b_id"), "full_outer")
       .select(
         coalesce(col("in_cand"), lit(false)).as("in_cand"),
         coalesce(col("in_exact"), lit(false)).as("in_exact"))
@@ -2493,15 +2361,43 @@ object PipelineQueries {
         sum(when(col("in_cand"), 1L).otherwise(0L)).as("n_cand"),
         sum(when(col("in_exact"), 1L).otherwise(0L)).as("n_exact"),
         sum(when(col("in_cand") && col("in_exact"), 1L).otherwise(0L)).as("tp"))
+
+  /** The full evals' tail over [[confusion]]: floor6 precision, recall
+    * and F1. Each ratio is guarded by its divisor (→ NULL when an arm is
+    * empty): with ANSI mode on, Spark throws `DIVIDE_BY_ZERO` on a
+    * double `/ 0`, while DuckDB returns NULL, so the guard makes the
+    * two engines agree. F1 is 0 when no pair is a true positive. */
+  private def precisionRecallF1(counts: DataFrame): DataFrame = {
+    val p = col("tp").cast("double") / col("n_cand").cast("double")
+    val r = col("tp").cast("double") / col("n_exact").cast("double")
+    counts.select(
+      col("n_cand"),
+      col("n_exact"),
+      col("tp"),
+      when(col("n_cand") > 0L, floor6(p)).as("precision"),
+      when(col("n_exact") > 0L, floor6(r)).as("recall"),
+      when(col("tp") > 0L, floor6(lit(2.0d) * p * r / (p + r))).otherwise(lit(0.0d)).as("f1"))
+  }
+
+  /** The sampled evals' tail over [[confusion]]: precision/recall + the
+    * 95% normal-approximation binomial CI on recall
+    * (`r ± 1.96·√(r(1−r)/n_exact)`, clamped to [0, 1]) — shared by both
+    * sampled ground-truth arms so their statistics are definitionally
+    * identical. */
+  private def confusionWithCi(cand: DataFrame, exact: DataFrame): DataFrame = {
+    val ne = col("n_exact").cast("double")
+    val p = col("tp").cast("double") / col("n_cand").cast("double")
+    val r = col("tp").cast("double") / ne
+    val half = lit(1.96d) * sqrt(r * (lit(1.0d) - r) / ne)
+    confusion(cand, exact)
       .select(
         col("n_cand"),
         col("n_exact"),
         col("tp"),
-        // zero-divisor guards (→ NULL on both engines): Spark's Divide
-        // yields NULL on /0 while DuckDB's IEEE doubles yield inf/NaN,
-        // so a degenerate sample (zero candidate or ground-truth pairs)
-        // would otherwise produce an engine-divergent row — the same
-        // reason qSimhashEvalWide's fold CASE-guards its f1
+        // zero-divisor guards (→ NULL on both engines): with ANSI mode
+        // on, Spark throws DIVIDE_BY_ZERO on a double `/ 0` while DuckDB
+        // returns NULL, so a degenerate sample (zero candidate or
+        // ground-truth pairs) would otherwise fail the query
         when(col("n_cand") > 0L, floor6(p)).as("precision"),
         when(col("n_exact") > 0L, floor6(r)).as("recall"),
         when(col("n_exact") > 0L, floor6(greatest(lit(0.0d), r - half)))
@@ -2551,13 +2447,7 @@ object PipelineQueries {
     * is. */
   def qTriangles(s: SparkSession, d: String): DataFrame =
     Dedup
-      .triangleCounts(
-        Dedup.minhashLsh(
-          Tables(s, d, "documents"),
-          k = 3,
-          numHashes = MinhashSeeds,
-          bands = MinhashBands,
-          threshold = 0.8))
+      .triangleCounts(dupPairs(s, d))
       .transform(
         graft.operators.SortUtil
           .sortSmall(_, col("n_triangles").desc, col("doc_id")))
@@ -2594,15 +2484,7 @@ object PipelineQueries {
     * stable) keep the DAG deterministic and straight-line. */
   def qKcore(s: SparkSession, d: String): DataFrame =
     Dedup
-      .kCore(
-        Dedup.minhashLsh(
-          Tables(s, d, "documents"),
-          k = 3,
-          numHashes = MinhashSeeds,
-          bands = MinhashBands,
-          threshold = 0.8),
-        k = KcoreK,
-        rounds = KcoreRounds)
+      .kCore(dupPairs(s, d), k = KcoreK, rounds = KcoreRounds)
       .orderBy("doc_id")
 
   /** Convergence audit for [[qKcore]]'s FIXED [[KcoreRounds]] peeling
@@ -2738,13 +2620,7 @@ object PipelineQueries {
     * joins, and all five sufficient statistics are exact decimal
     * folds; r is one scalar IEEE tree. */
   def qGraphAssortativity(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
+    val pairs = dupPairs(s, d)
       .select("a_id", "b_id")
       // cut: measured — degrees and directed edges each run the pair pipeline uncut: sf0.01 best 1.317 → 1.704 s
       .transform(graft.operators.Materialize.cut)
@@ -2804,13 +2680,7 @@ object PipelineQueries {
     * is materialized once for its three rollups; everything after is source-alphabet-sized exact integers; Q is
     * one quantize-before-sum fold. */
   def qDupModularity(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
+    val pairs = dupPairs(s, d)
       .select("a_id", "b_id")
     val src = Tables(s, d, "documents").select(col("doc_id"), col("source"))
     val withSrc = pairs
@@ -2873,13 +2743,7 @@ object PipelineQueries {
     * BEFORE the count-weighted sum (the q_ndcg trick → order-free
     * exact decimal fold); α is one scalar IEEE tree. */
   def qPowerLaw(s: SparkSession, d: String): DataFrame = {
-    val hist = Dedup
-      .minhashLsh(
-        Tables(s, d, "documents"),
-        k = 3,
-        numHashes = MinhashSeeds,
-        bands = MinhashBands,
-        threshold = 0.8)
+    val hist = dupPairs(s, d)
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("degree"))
@@ -3025,9 +2889,8 @@ object PipelineQueries {
     * fixed association order, so both engines evaluate identical IEEE
     * arithmetic. */
   def qQualityModel(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("doc_id"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("doc_id"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
@@ -3057,7 +2920,6 @@ object PipelineQueries {
     * which is why the budget is in tokens, not rows — the window input
     * is one narrow long per doc. */
   def qTokenBudget(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val w = Window
       .partitionBy("source")
       .orderBy("hrank", "doc_id")
@@ -3066,7 +2928,7 @@ object PipelineQueries {
       .select(
         col("doc_id"),
         col("source"),
-        size(expr("graft_tokens(text)")).cast("long").as("n_tokens"),
+        size(Tokens.of(col("text"))).cast("long").as("n_tokens"),
         Hashing.md5Long(col("doc_id").cast("string")).as("hrank"))
       .withColumn("cum_tokens", sum("n_tokens").over(w))
       .filter(col("cum_tokens") <= TokenBudget)
@@ -3092,7 +2954,6 @@ object PipelineQueries {
     * final partial sequence is the only waste, amortized over the
     * bucket's token mass). All-integer → bit-exact oracle. */
   def qPack(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val w = Window
       .partitionBy("bucket")
       .orderBy("hrank", "doc_id")
@@ -3100,7 +2961,7 @@ object PipelineQueries {
     Tables(s, d, "documents")
       .select(
         col("doc_id"),
-        size(expr("graft_tokens(text)")).cast("long").as("n_tokens"),
+        size(Tokens.of(col("text"))).cast("long").as("n_tokens"),
         Hashing.md5Long(col("doc_id").cast("string")).as("hrank"))
       .filter(col("n_tokens") > 0)
       .withColumn("bucket", pmod(col("hrank"), lit(PackBuckets)))
@@ -3127,9 +2988,8 @@ object PipelineQueries {
     * stride; the chunk count is closed-form integer arithmetic so both
     * engines enumerate identical windows. */
   def qChunk(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("doc_id"), expr("graft_tokens(text)").as("t"))
+      .select(col("doc_id"), Tokens.of(col("text")).as("t"))
       .filter(size(col("t")) > 0)
       .select(
         col("doc_id"),
@@ -3161,12 +3021,11 @@ object PipelineQueries {
     * so DuckDB replays it as one chained replace over distinct
     * words. */
   def qBpeTokens(s: SparkSession, d: String): DataFrame = {
-    graft.functions.expressions.BpeTokens.register(s)
     Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("n_chars"),
-        size(expr("graft_bpe(text)")).cast("long").as("bpe_tokens"))
+        size(BpeTokens.of(col("text"))).cast("long").as("bpe_tokens"))
       .withColumn(
         "chars_per_token",
         round(col("n_chars") / col("bpe_tokens"), 4))
@@ -3193,9 +3052,8 @@ object PipelineQueries {
     * before the df count — the [[graft.operators.Skew]] countDistinct
     * shape, since token frequency is exactly the skewed case. */
   def qVocabTopk(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val pairs = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok"))
     val tf = pairs.groupBy("tok").agg(count(lit(1)).as("tf"))
     val df = pairs.distinct().groupBy("tok").agg(count(lit(1)).as("df"))
     tf.join(df, "tok")
@@ -3215,9 +3073,8 @@ object PipelineQueries {
     * materialized once (Materialize.cut) for its two consumers (df aggregate +
     * posting scan). */
   def qInvertedIndex(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val pairs = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok"))
       .distinct()
       // cut: measured — the df top-k and the posting pass each re-tokenize uncut: sf0.01 best 0.635 → 0.840 s
       .transform(graft.operators.Materialize.cut)
@@ -3242,11 +3099,10 @@ object PipelineQueries {
   }
 
   def qTokenCount(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
       .select(
         col("doc_id"),
-        size(expr("graft_tokens(text)")).cast("long").as("ws_tokens"),
+        size(Tokens.of(col("text"))).cast("long").as("ws_tokens"),
         TextFns.bpeTokenCount(col("text")).cast("long").as("bpe_tokens"))
       .orderBy("doc_id")
   }
@@ -3259,12 +3115,11 @@ object PipelineQueries {
     * divisions per group at the end, zero-guarded for languages the
     * word splitter can't segment. */
   def qTokenFertility(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val floor6 = (c: Column) => floor(c * 1000000.0d + 0.5d) / 1000000.0d
     Tables(s, d, "documents")
       .select(
         col("lang"),
-        size(expr("graft_tokens(text)")).cast("long").as("w"),
+        size(Tokens.of(col("text"))).cast("long").as("w"),
         TextFns.bpeTokenCount(col("text")).cast("long").as("b"),
         length(col("text")).cast("long").as("ch"))
       .groupBy("lang")
@@ -3297,12 +3152,11 @@ object PipelineQueries {
     * shuffle; `changed` counts how much of the corpus actually needed
     * fixing. */
   def qNormalize(s: SparkSession, d: String): DataFrame = {
-    graft.functions.expressions.NormalizeText.register(s)
     Tables(s, d, "documents")
       .select(
         col("doc_id"),
-        expr("graft_normalize(text)").as("norm_text"),
-        (expr("graft_normalize(text)") =!= col("text")).as("changed"))
+        NormalizeText.of(col("text")).as("norm_text"),
+        (NormalizeText.of(col("text")) =!= col("text")).as("changed"))
       .withColumn("n_chars_norm", length(col("norm_text")).cast("long"))
       .orderBy("doc_id")
   }
@@ -3422,34 +3276,10 @@ object PipelineQueries {
       Tables(s, d, "documents"), fenceDocs, "q_winnow_eval", "q_winnow_eval_sampled")
     val (kept, pinned) = winnowKept(s, d)
     val cand = winnowCandPairs(kept, pinned)
-      .withColumn("in_cand", lit(true))
     val exact = Dedup
       .ngramJaccard(Tables(s, d, "documents"), k = 3, threshold = 0.5)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_exact", lit(true))
-    cand
-      .join(exact, Seq("a_id", "b_id"), "full_outer")
-      .select(
-        coalesce(col("in_cand"), lit(false)).as("in_cand"),
-        coalesce(col("in_exact"), lit(false)).as("in_exact"))
-      .agg(
-        sum(when(col("in_cand"), 1L).otherwise(0L)).as("n_cand"),
-        sum(when(col("in_exact"), 1L).otherwise(0L)).as("n_exact"),
-        sum(when(col("in_cand") && col("in_exact"), 1L).otherwise(0L)).as("tp"))
-      .select(
-        col("n_cand"),
-        col("n_exact"),
-        col("tp"),
-        floor6(col("tp").cast("double") / col("n_cand").cast("double")).as("precision"),
-        floor6(col("tp").cast("double") / col("n_exact").cast("double")).as("recall"),
-        when(
-          col("tp") > 0L,
-          floor6(
-            lit(2.0d) * (col("tp").cast("double") / col("n_cand").cast("double")) *
-              (col("tp").cast("double") / col("n_exact").cast("double")) /
-              (col("tp").cast("double") / col("n_cand").cast("double") +
-                col("tp").cast("double") / col("n_exact").cast("double"))))
-          .otherwise(lit(0.0d)).as("f1"))
+    precisionRecallF1(confusion(cand, exact))
   }
 
   /** SAMPLED arm of [[qWinnowEval]] — the second of the two measured
@@ -3471,11 +3301,9 @@ object PipelineQueries {
       all.filter(graft.operators.Sampling.hashBucket(col("doc_id")) < cut)
     val (kept, pinned) = winnowKeptFrom(sampled, s)
     val cand = winnowCandPairs(kept, pinned)
-      .withColumn("in_cand", lit(true))
     val exact = Dedup
       .ngramJaccard(sampled, k = 3, threshold = 0.5)
       .select(col("a_id"), col("b_id"))
-      .withColumn("in_exact", lit(true))
     confusionWithCi(cand, exact)
   }
 
@@ -3572,13 +3400,7 @@ object PipelineQueries {
     graft.operators.Sampling
       .leakageSafeSplit(
         Tables(s, d, "documents"),
-        Dedup.duplicateClusters(
-          Dedup.minhashLsh(
-            Tables(s, d, "documents"),
-            k = 3,
-            numHashes = MinhashSeeds,
-            bands = MinhashBands,
-            threshold = 0.8)),
+        Dedup.duplicateClusters(dupPairs(s, d)),
         "doc_id",
         fraction = 0.8)
       .select("doc_id", "grp", "split")
@@ -3607,13 +3429,7 @@ object PipelineQueries {
     * source and overall (the `ALL` row). Exact integer sums, one IEEE
     * division per row. */
   def qDupTokenShare(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
-    val pairs = Dedup.minhashLsh(
-      Tables(s, d, "documents"),
-      k = 3,
-      numHashes = MinhashSeeds,
-      bands = MinhashBands,
-      threshold = 0.8)
+    val pairs = dupPairs(s, d)
     // one explode pass, not a two-select union (see qDupRateBySource)
     val dupIds = pairs
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
@@ -3622,7 +3438,7 @@ object PipelineQueries {
       .select(
         col("doc_id"),
         col("source"),
-        size(expr("graft_tokens(text)")).cast("long").as("tok"))
+        size(Tokens.of(col("text"))).cast("long").as("tok"))
       .join(dupIds.withColumn("dup", lit(1L)), Seq("doc_id"), "left")
     // ONE rollup pass: the per-source rows and the ALL row are grand
     // totals of the same integer sums (r14 — the old per-source +
@@ -3663,9 +3479,8 @@ object PipelineQueries {
     * single ln calls, emitted through the established quantize rule —
     * no float accumulates). */
   def qHeapsLaw(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val toks = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok"))
     val mx = Tables(s, d, "documents").agg(max("doc_id").as("mx"))
     // checkpoint index of a doc id: 1..HeapsCheckpoints, upper-inclusive
     def ck(name: String): Column =
@@ -3736,9 +3551,8 @@ object PipelineQueries {
     * of FLOOR-QUANTIZED square roots (int64) — never a float sum —
     * and each weight is one IEEE division of exact integers. */
   def qTempMix(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val src = Tables(s, d, "documents")
-      .select(col("source"), size(expr("graft_tokens(text)")).cast("long").as("tok"))
+      .select(col("source"), size(Tokens.of(col("text"))).cast("long").as("tok"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("tok").as("n_tokens"))
       .withColumn(
@@ -3872,11 +3686,9 @@ object PipelineQueries {
     * within the MG guarantees, so this is spec-verified against exact
     * counts (PipelineSpec) rather than hash-compared to an oracle. */
   def qHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
-    graft.functions.expressions.TopKSketch.register(s)
     Tables(s, d, "documents")
-      .select(explode(expr("graft_tokens(text)")).as("tok"))
-      .agg(expr(s"graft_topk(tok, $HeavyK)").as("hh"))
+      .select(explode(Tokens.of(col("text"))).as("tok"))
+      .agg(TopKSketch.of(col("tok"), HeavyK).as("hh"))
       .select(posexplode(col("hh")).as(Seq("rank", "e")))
       .select(
         (col("rank") + 1).cast("long").as("rank"),
@@ -3907,9 +3719,8 @@ object PipelineQueries {
     * the only thing two corpora need exchange to compare frequency
     * profiles — counters are mergeable by addition. */
   def qCmsCounts(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val tf = Tables(s, d, "documents")
-      .select(explode(expr("graft_tokens(text)")).as("tok"))
+      .select(explode(Tokens.of(col("text"))).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).as("tf"))
       // cut: measured — the depth-way union and top-k each re-run it uncut: sf0.01 best 0.917 → 1.213 s
@@ -3957,12 +3768,11 @@ object PipelineQueries {
     * .DeflateLen]]); zlib output is not cross-engine portable →
     * rows-only at the driver gate, invariants spec-asserted. */
   def qCompressRatio(s: SparkSession, d: String): DataFrame = {
-    graft.functions.expressions.DeflateLen.register(s)
     Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("n_chars"),
-        expr("graft_deflate_len(text)").as("deflate_len"))
+        DeflateLen.of(col("text")).as("deflate_len"))
       .withColumn("ratio", round(col("deflate_len") / col("n_chars"), 4))
       .orderBy("doc_id")
   }
@@ -3976,9 +3786,8 @@ object PipelineQueries {
     * the dedup cost — for per-source dedup at 100 TB use the two-phase
     * [[graft.operators.Skew.countDistinct]] shape instead). */
   def qSourceReport(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("source"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("source"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("source"),
         md5(col("text")).as("h"),
@@ -4072,14 +3881,13 @@ object PipelineQueries {
     * so the domain average is engine-exact. One corpus pass, one
     * domain-sized aggregate. */
   def qDomainReport(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val withUrl = Tables(s, d, "documents")
       .select(
         col("doc_id"),
         col("source"),
         col("text"),
         expr(SyntheticUrlSpark).as("url"),
-        expr("graft_tokens(text)").as("t"))
+        Tokens.of(col("text")).as("t"))
     val normed = withUrl.select(
       TextFns.urlDomain(TextFns.normalizeUrl(col("url"))).as("domain"),
       TextFns.normalizeUrl(col("url")).as("norm_url"),
@@ -4190,9 +3998,8 @@ object PipelineQueries {
     * bigram table on token keys — hot tokens have one vocab row, so no
     * row explosion; totals are one-row broadcasts. */
   def qPmiTerms(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val toks = Tables(s, d, "documents")
-      .select(expr("graft_tokens(text)").as("t"))
+      .select(Tokens.of(col("text")).as("t"))
       // cut: measured — the unigram and bigram counts each re-tokenize uncut: sf0.01 best 0.770 → 0.996 s
       .transform(graft.operators.Materialize.cut)
     val uni = toks
@@ -4249,10 +4056,9 @@ object PipelineQueries {
     * WindowGroupLimit pushdown, so no doc's full term list crosses the
     * final shuffle. */
   def qTfidfTerms(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val base = Tables(s, d, "documents")
     val pairs = base
-      .select(col("doc_id"), explode(expr("graft_tokens(text)")).as("tok"))
+      .select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok"))
     val tf = pairs
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("tf"))
@@ -4431,9 +4237,8 @@ object PipelineQueries {
     * cutoff's covered mass is a conditional sum in the SAME final
     * aggregate — no per-cutoff pass, no window over the corpus. */
   def qVocabCoverage(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val counts = Tables(s, d, "documents")
-      .select(explode(expr("graft_tokens(text)")).as("tok"))
+      .select(explode(Tokens.of(col("text"))).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).as("c"))
     val ranked = counts.withColumn(
@@ -4459,10 +4264,9 @@ object PipelineQueries {
     * split expressions feeding one narrow aggregate; integer sums,
     * float only in the two final ratios. */
   def qSyllables(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val perDoc = Tables(s, d, "documents").select(
       col("source"),
-      size(expr("graft_tokens(text)")).cast("long").as("words"),
+      size(Tokens.of(col("text"))).cast("long").as("words"),
       regexp_count(lower(col("text")), lit("[aeiouy]+")).cast("long").as("syllables"))
     val sylPerWord = col("syl").cast("double") / col("w")
     val wordsPerDoc = col("w").cast("double") / col("n_docs")
@@ -4703,14 +4507,13 @@ object PipelineQueries {
     * comparison ranks on identically-computed doubles, so both engines
     * pick the same winner. */
   def qDedupKeepBest(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val norm = trim(
       regexp_replace(
         regexp_replace(lower(col("text")), TextFns.PunctClass, " "),
         "\\s+",
         " "))
     Tables(s, d, "documents")
-      .select(col("doc_id"), col("source"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("doc_id"), col("source"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("doc_id"),
         col("source"),
@@ -4749,9 +4552,8 @@ object PipelineQueries {
     * the corpus); the only floating arithmetic is the final fixed-order
     * shrinkage formula. */
   def qQualityShrunk(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     val per = Tables(s, d, "documents")
-      .select(col("source"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("source"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("source"),
         round(
@@ -4784,9 +4586,8 @@ object PipelineQueries {
     * family ([[qScoreAuc]], [[qLiftTable]], [[qCalibration]]): each doc
     * as (positive = `lang = 'en'`, linear quality score). */
   private def scoredEn(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("lang"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("lang"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         (col("lang") === "en").cast("long").as("pos"),
         TextFns.qualityScore(
@@ -4908,9 +4709,8 @@ object PipelineQueries {
   /** (actual_lang, pred_lang) per doc under the q_lang_id heuristic —
     * shared by the confusion matrix and the kappa summary. */
   private def langidPred(s: SparkSession, d: String): DataFrame = {
-    Tokens.register(s)
     Tables(s, d, "documents")
-      .select(col("lang"), col("text"), expr("graft_tokens(text)").as("t"))
+      .select(col("lang"), col("text"), Tokens.of(col("text")).as("t"))
       .select(
         col("lang").as("actual_lang"),
         TextFns

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.expressions.{NormalizeText, Tokens}
 import graft.log.{EventLog, LogFs}
 
 /** Streaming-side of the engine: the reference's live produce/subscribe
@@ -1133,16 +1134,14 @@ object StreamLog {
   def prepareStream(
       docs: DataFrame,
       watermark: String = "10 minutes"): DataFrame = {
-    graft.functions.expressions.Tokens.register(docs.sparkSession)
-    graft.functions.expressions.NormalizeText.register(docs.sparkSession)
     val scored = docs
       // fix-encoding first (NFC + control collapse, no-copy on clean
       // rows), THEN the PII scrub — the scrub's regexes assume
       // canonical composition and real spaces
       .withColumn(
         "clean_text",
-        graft.functions.TextScrub.scrub(expr("graft_normalize(text)")))
-      .withColumn("t", expr("graft_tokens(clean_text)"))
+        graft.functions.TextScrub.scrub(NormalizeText.of(col("text"))))
+      .withColumn("t", Tokens.of(col("clean_text")))
       .withColumn(
         "score",
         graft.functions.TextFns.qualityScore(

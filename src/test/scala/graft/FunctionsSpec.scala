@@ -241,7 +241,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_normalize: NFC composition, control collapse, no-copy clean path") {
-    graft.functions.expressions.NormalizeText.register(spark)
+    GraftExtensions.register(spark)
     def norm(s: String): String = {
       import spark.implicits._
       Seq(s).toDF("t").selectExpr("graft_normalize(t)").collect().head.getString(0)

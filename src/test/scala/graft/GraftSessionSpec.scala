@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * builds a session, the spec harness's session carries every setting
   * the factory owns, no library code keeps state across queries or
   * changes the session's checkpoint dir, every lineage cut names the
-  * rule it is kept under, and no write appends to a live directory. */
+  * rule it is kept under, no write appends to a live directory, and
+  * native kernels are called as Columns, not through the registry. */
 class GraftSessionSpec extends SparkSpec {
 
   private def isComment(l: String): Boolean = {
@@ -71,6 +72,16 @@ class GraftSessionSpec extends SparkSpec {
       if !isComment(l) && append.findFirstIn(l).isDefined
     } yield s"$f:${i + 1}"
     assert(sites.isEmpty, s"append-mode writes (stage and LogFs.publish instead): ${sites.mkString(", ")}")
+  }
+
+  test("src/main calls graft's kernels as Columns: no graft_ SQL strings, one registration table") {
+    val kernel = "BpeTokens|DeflateLen|DotProduct|HilbertDistance|NormalizeText|Tokens|TopKSketch|WordShingles"
+    val old = ("(?:expr|selectExpr)\\s*\\(\\s*s?\"graft_|\\b(?:" + kernel +
+      ")\\s*\\.\\s*register\\s*\\(|createOrReplaceTempFunction\\s*\\(\\s*\"graft_").r
+    val sites = mainCode.flatMap { case (f, code) => old.findAllIn(code).map(m => s"$f: $m") }
+    assert(
+      sites.isEmpty,
+      s"call the kernel as a Column (e.g. Tokens.of), register only in GraftExtensions: ${sites.mkString(", ")}")
   }
 
   test("the spec session carries every factory setting, with 4 shuffle partitions") {

@@ -278,7 +278,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("graft_topk is exact when capacity covers the key space") {
-    graft.functions.expressions.TopKSketch.register(spark)
+    GraftExtensions.register(spark)
     val df = spark.range(0, 1000)
       .select(concat(lit("k"), (col("id") % 7)).as("tok"))
     val out = df.agg(expr("graft_topk(tok, 16)").as("hh"))
@@ -369,6 +369,31 @@ class PipelineSpec extends SparkSpec {
 
   private def words(prefix: String, n: Int): String =
     (1 to n).map(i => s"$prefix$i").mkString(" ")
+
+  test("the full evals answer NULL ratios, not DIVIDE_BY_ZERO, when one arm is empty") {
+    // doc 2 is doc 1 plus 300 new words: it shares every winnowed
+    // fingerprint of doc 1 (a winnow candidate) but its 3-shingle
+    // Jaccard is 98/398, below the 0.5 ground-truth threshold
+    val a = words("w", 100)
+    val dir = writeDocs(Seq((1L, a, "web"), (2L, s"$a ${words("x", 300)}", "web")))
+    val w = PipelineQueries.qWinnowEval(spark, dir).collect().head
+    assert((w.getAs[Long]("n_cand"), w.getAs[Long]("n_exact"), w.getAs[Long]("tp")) == ((1L, 0L, 0L)))
+    assert(w.getAs[Double]("precision") == 0.0)
+    assert(w.isNullAt(w.fieldIndex("recall")))
+    assert(w.getAs[Double]("f1") == 0.0)
+    // the other full evals run on the same corpus; a ratio is NULL
+    // exactly where its divisor is zero (or the fold saw no pair)
+    def guarded(df: org.apache.spark.sql.DataFrame, ratios: (String, String)*): Unit = {
+      val r = df.collect().head
+      for ((divisor, ratio) <- ratios) {
+        val zero = r.isNullAt(r.fieldIndex(divisor)) || r.getAs[Long](divisor) == 0L
+        assert(r.isNullAt(r.fieldIndex(ratio)) == zero, s"$ratio over $divisor")
+      }
+    }
+    guarded(PipelineQueries.qSimhashEval(spark, dir), "n_cand" -> "precision", "n_exact" -> "recall")
+    guarded(PipelineQueries.qSimhashEvalWide(spark, dir), "n_cand" -> "precision", "n_exact" -> "recall")
+    guarded(PipelineQueries.qLshEval(spark, dir), "n_cand" -> "cand_precision", "n_exact" -> "cand_recall")
+  }
 
   test("passage dedup drops cross-doc duplicated spans and reassembles in order") {
     val shared = words("dup", 10) // one exact 10-token passage in 3 docs

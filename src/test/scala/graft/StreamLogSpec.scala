@@ -1012,7 +1012,7 @@ class StreamLogSpec extends SparkSpec {
     // store between micro-batches (complete mode); with capacity
     // covering the key space the merged sketch is exact over ALL
     // batches seen so far
-    graft.functions.expressions.TopKSketch.register(spark)
+    GraftExtensions.register(spark)
     val mem = MemoryStream[String](spark)
     val q = mem
       .toDF()

@@ -8,6 +8,14 @@ hand.
 Usage:
   python3 tools/diff_bench.py NEW.json OLD.json \
       [--quiet BENCH_SCALING_sf01.json] [--threshold 1.5]
+  python3 tools/diff_bench.py --parent A1.json A2.json A3.json \
+      --change B1.json B2.json B3.json
+
+The multi-process mode (--parent/--change, one board per process of
+each tree) prints, per key both sides ran, each side's best (min) and
+median wall and the parent's own process-to-process spread (max - min).
+A best-to-best delta inside that spread is `unresolved`; outside it the
+key is `faster` or `slower`. Exit code 1 if any key is `slower`.
 
   # typical round close-out (old = prior round's committed board):
   git show HEAD~1:BENCH_FULL.json > /tmp/bench_prev.json
@@ -23,6 +31,7 @@ least one, 2 = usage/load error.
 """
 import argparse
 import json
+import statistics
 import sys
 
 
@@ -38,13 +47,44 @@ def load_queries(path):
     return {k: float(v) for k, v in q.items() if v is not None}
 
 
+def compare_processes(parent_files, change_files):
+    parent = [load_queries(f) for f in parent_files]
+    change = [load_queries(f) for f in change_files]
+    keys = sorted(set.intersection(*(set(q) for q in parent + change)))
+    print(
+        f"{'query':34s} {'par_best':>8s} {'par_med':>8s} {'spread':>7s} "
+        f"{'chg_best':>8s} {'chg_med':>8s} {'delta':>7s}  verdict"
+    )
+    slower = 0
+    for k in keys:
+        a = [q[k] for q in parent]
+        b = [q[k] for q in change]
+        spread = max(a) - min(a)
+        delta = min(b) - min(a)
+        verdict = "unresolved" if abs(delta) <= spread else "slower" if delta > 0 else "faster"
+        slower += verdict == "slower"
+        print(
+            f"{k:34s} {min(a):8.3f} {statistics.median(a):8.3f} {spread:7.3f} "
+            f"{min(b):8.3f} {statistics.median(b):8.3f} {delta:+7.3f}  {verdict}"
+        )
+    return 1 if slower else 0
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("new_file")
-    ap.add_argument("old_file")
+    ap.add_argument("new_file", nargs="?")
+    ap.add_argument("old_file", nargs="?")
     ap.add_argument("--quiet", help="quiet best-of-3 leg (BENCH_SCALING_sf01.json)")
     ap.add_argument("--threshold", type=float, default=1.5)
+    ap.add_argument("--parent", nargs="+", help="one board per parent-tree process")
+    ap.add_argument("--change", nargs="+", help="one board per change-tree process")
     args = ap.parse_args()
+    if args.parent or args.change:
+        if not (args.parent and args.change):
+            ap.error("--parent and --change go together")
+        return compare_processes(args.parent, args.change)
+    if not (args.new_file and args.old_file):
+        ap.error("NEW.json and OLD.json are required without --parent/--change")
 
     try:
         new = load_queries(args.new_file)
